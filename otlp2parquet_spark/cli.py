@@ -1179,8 +1179,11 @@ def main(argv: list[str] | None = None) -> int:
                         acct.agg({"rows": "sum"}).collect()[0][0] or 0
                     )
                 else:
+                    # counted on the write action itself: no extra job, and
+                    # only this run's rows, not earlier runs' under `root`
+                    df, obs = batch_ingest.observed(df, f"ingest-{name}")
                     writer.write_native(df, name, root, max_rows_per_file=cfg.batch["max_rows"])
-                    summary[name] = writer.read_table(spark, root, name, layout=layout).count()
+                    summary[name] = int(obs.get["records"])
             if "_union" in tables:
                 tables["_union"].unpersist()
             # D27 response-accounting twin

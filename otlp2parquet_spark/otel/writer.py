@@ -6,12 +6,12 @@ Two modes, per SURVEY.md §7 hard-part 4:
   ``{root}/{signal}/{service}/year=YYYY/month=MM/day=DD/hour=HH/{ts_us}-{uuid32}.parquet``
   including Snappy compression, schema-version footer metadata, field_ids and
   the uint32 TraceFlags column. Spark's `partitionBy` can produce neither the
-  bare `{service}` dir level nor custom file names, so each (service, hour)
-  group is written by `applyInArrow` with pyarrow (Arrow-native: no pandas
-  round-trip between the Spark batch and the parquet writer) — the write
-  itself runs ON THE EXECUTORS (one task per group, no driver collect), so it scales with
-  the number of (service, hour) groups. Group sizes are bounded by
-  `max_rows_per_file` (reference batch.max_rows default 200k, D17).
+  bare `{service}` dir level nor custom file names, so the rows are shuffled
+  once by (service, hour), sorted by time within each task, and each group
+  streams through the iterator form of `applyInArrow` into pyarrow — the
+  write runs ON THE EXECUTORS (no driver collect) and a task holds at most
+  one file's rows, however hot its group. A file is cut every
+  `max_rows_per_file` rows (reference batch.max_rows default 200k, D17).
 
 - **native mode** — idiomatic Spark layout
   ``{root}/{signal}/ServiceName=/year=/month=/day=/hour=/part-*.parquet``
@@ -23,17 +23,18 @@ Two modes, per SURVEY.md §7 hard-part 4:
 
 from __future__ import annotations
 
+import hashlib
 import os
 import uuid
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
-import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from otlp2parquet_spark.otel import schemas
 
@@ -109,22 +110,10 @@ def _resolve_fs(path: str):
     return pafs.FileSystem.from_uri(uri)
 
 
-def _to_golden_arrow(pdf: pd.DataFrame, table: str) -> pa.Table:
-    """pandas group (Spark types) -> pyarrow table with the golden schema
-    (incl. uint32 cast + field_ids + footer metadata). Kept for tests and
-    ad-hoc callers; the hot write path is the zero-copy Arrow variant."""
-    target = schemas.arrow_schema(table)
-    arrays = []
-    for f in target:
-        col = pdf[f.name]
-        if pa.types.is_timestamp(f.type):
-            arr = pa.Array.from_pandas(col, type=f.type)
-        elif pa.types.is_list(f.type):
-            arr = pa.array(col.tolist(), type=f.type)
-        else:
-            arr = pa.array(col.tolist(), type=f.type)
-        arrays.append(arr)
-    return pa.Table.from_arrays(arrays, schema=target)
+# the accounting frame write_partitioned returns (D27 partitions[] twin)
+_ACCT_SCHEMA = pa.schema(
+    [("path", pa.string(), False), ("rows", pa.int64(), False), ("service", pa.string())]
+)
 
 
 def _arrow_to_golden(tbl: pa.Table, table: str) -> pa.Table:
@@ -149,13 +138,17 @@ def write_partitioned(
     max_rows_per_file: int = DEFAULT_MAX_ROWS_PER_FILE,
     run_tag: str | None = None,
 ) -> DataFrame:
-    """Parity-mode write: one Parquet file per (service, time-bucket) group.
+    """Parity-mode write: each (service, time-bucket) group as one
+    time-sorted stream, cut into files of at most `max_rows_per_file` rows.
 
     `bucket` is "hour" for batch mode, "minute" for the streaming twin of the
     reference's (service, minute) BatchKey (D16, src/batch/mod.rs:24-44).
     Returns an accounting frame (path, rows, service) — the D27 partitions[]
-    response twin. Executes distributed: groupBy shuffles rows to one task
-    per group, each task writes its own file with pyarrow.
+    response twin. Plan: one Exchange on (service, bucket), one Sort on
+    (service, bucket, Timestamp nulls last), then the iterator form of
+    `applyInArrow`, which hands each group over as Arrow batches in that
+    order. A task buffers at most one file's rows, so a hot group costs
+    more files, not more memory.
 
     File names are always the deterministic `{run_tag}-{group-hash}-{chunk}`:
     the streaming sink passes `run_tag` = the epoch id so a replayed
@@ -163,49 +156,29 @@ def write_partitioned(
     draws ONE random tag on the driver at plan-build time so a retried or
     speculative task (or a re-evaluated accounting frame) re-derives the same
     paths and overwrites its own first attempt — task-retry-safe without an
-    object-store rename commit protocol. Distinct batch runs still get
-    distinct tags, so append semantics across runs are preserved.
+    object-store rename commit protocol. Chunk boundaries fall at fixed row
+    offsets of the time-sorted group, so a re-run cuts the same files.
+    Distinct batch runs still get distinct tags, so append semantics across
+    runs are preserved.
     """
     trunc = {"hour": "hour", "minute": "minute"}[bucket]
     if run_tag is None:
         run_tag = uuid.uuid4().hex[:16]  # driver-side, once per plan
-    out_schema = StructType(
-        [
-            StructField("path", StringType(), False),
-            StructField("rows", LongType(), False),
-            StructField("service", StringType(), True),
-        ]
-    )
 
-    def write_group(keys: tuple, tbl: pa.Table) -> pa.Table:
-        """Arrow-native group writer (applyInArrow): the Spark-Arrow batch
-        goes straight to the golden parquet via sort + column casts — the
-        pandas round-trip (Arrow->pandas on entry, .tolist()->Arrow on
-        write) was ~half the write-stage CPU at bench scale. Sort keeps
-        null timestamps last (pandas sort_values parity)."""
-        import hashlib
-        import pyarrow.compute as pc
-
-        tbl = tbl.drop_columns(
-            [c for c in ("__bucket", "__chunk") if c in tbl.column_names]
-        )
-        idx = pc.sort_indices(
-            tbl, sort_keys=[("Timestamp", "ascending")], null_placement="at_end"
-        )
-        tbl = tbl.take(idx)
-        # applyInArrow may hand keys as pyarrow scalars — normalize to
-        # Python values so path building and the group hash are stable
-        kp = tuple(k.as_py() if hasattr(k, "as_py") else k for k in keys)
+    def write_group(keys: tuple, batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        """Arrow-native group writer: batches arrive sorted by Timestamp
+        (nulls last) and go straight to golden parquet via column casts, one
+        file per `max_rows_per_file` rows."""
+        # applyInArrow hands keys as pyarrow scalars — normalize to Python
+        # values so path building and the group hash are stable
+        kp = tuple(k.as_py() for k in keys)
         service = kp[0]
         gh = hashlib.sha256(repr(kp).encode()).hexdigest()[:16]
-        paths: list[str] = []
-        nrows: list[int] = []
-        for ci, start in enumerate(range(0, tbl.num_rows, max_rows_per_file)):
-            chunk = tbl.slice(start, max_rows_per_file)
+
+        def write_chunk(ci: int, chunk: pa.Table) -> pa.RecordBatch:
             min_ts = pc.min(chunk.column("Timestamp"))
             min_ts_us = min_ts.value if min_ts.is_valid else 0
-            file_id = f"{run_tag}-{gh}-{ci}"
-            path = generate_parquet_path(root, table, service, min_ts_us, file_id)
+            path = generate_parquet_path(root, table, service, min_ts_us, f"{run_tag}-{gh}-{ci}")
             fs, where = _resolve_fs(path)
             if fs is None:
                 os.makedirs(os.path.dirname(path), exist_ok=True)
@@ -217,42 +190,30 @@ def write_partitioned(
                 filesystem=fs,
                 compression="snappy",  # reference golden footers, D23
             )
-            paths.append(path)
-            nrows.append(chunk.num_rows)
-        return pa.table(
-            {
-                "path": pa.array(paths, pa.string()),
-                "rows": pa.array(nrows, pa.int64()),
-                "service": pa.array([service] * len(paths), pa.string()),
-            }
-        )
+            return pa.RecordBatch.from_pydict(
+                {"path": [path], "rows": [chunk.num_rows], "service": [service]},
+                schema=_ACCT_SCHEMA,
+            )
 
-    bucketed = df.withColumn("__bucket", F.date_trunc(trunc, F.col("Timestamp")))
-    # Memory bound: applyInPandas materializes a whole group per task, so a
-    # hot (service, bucket) with 100M rows would OOM an executor. Salt any
-    # group beyond max_rows_per_file into ceil(n/max) sub-groups — each task
-    # then holds at most one file's worth of rows. The reference has the
-    # same invariant via its flush thresholds (D17). The group size comes
-    # from a COUNT window over (service, bucket) rather than a pre-count
-    # aggregate + join: an aggregate would re-evaluate the upstream frame —
-    # for the ingest path that means running the whole Python decode twice —
-    # while the window computes the salt in the same single pass (WindowExec
-    # spills oversized partitions to disk; only the post-salt applyInPandas
-    # groups must fit in memory, and those are bounded by construction).
-    wspec = Window.partitionBy("ServiceName", "__bucket")
-    bucketed = (
-        bucketed.withColumn("__n", F.count("*").over(wspec))
-        .withColumn(
-            "__chunk",
-            F.when(
-                F.col("__n") > max_rows_per_file,
-                F.pmod(F.xxhash64("Timestamp"), F.ceil(F.col("__n") / max_rows_per_file)),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("__n")
-    )
-    return bucketed.groupBy("ServiceName", "__bucket", "__chunk").applyInArrow(
-        write_group, out_schema
+        pending: list[pa.RecordBatch] = []
+        held = ci = 0
+        for batch in batches:
+            pending.append(batch.drop_columns(["__bucket"]))
+            held += batch.num_rows
+            while held >= max_rows_per_file:
+                buf = pa.Table.from_batches(pending)
+                yield write_chunk(ci, buf.slice(0, max_rows_per_file))
+                rest = buf.slice(max_rows_per_file)
+                pending, held, ci = rest.to_batches(), rest.num_rows, ci + 1
+        if held:
+            yield write_chunk(ci, pa.Table.from_batches(pending))
+
+    return (
+        df.withColumn("__bucket", F.date_trunc(trunc, F.col("Timestamp")))
+        .repartition("ServiceName", "__bucket")
+        .sortWithinPartitions("ServiceName", "__bucket", F.col("Timestamp").asc_nulls_last())
+        .groupBy("ServiceName", "__bucket")
+        .applyInArrow(write_group, from_arrow_schema(_ACCT_SCHEMA))
     )
 
 

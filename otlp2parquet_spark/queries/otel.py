@@ -11,6 +11,9 @@ binary-vs-hex TraceId bridge the reference glosses over (SURVEY §7 hard-part
 
 from __future__ import annotations
 
+from functools import reduce
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -19,16 +22,28 @@ from otlp2parquet_spark.otel import schemas, writer
 OTEL_TABLES = tuple(schemas.TABLE_COLUMNS)
 
 
+def _read_present(spark: SparkSession, root: str, table: str, layout: str) -> DataFrame | None:
+    """The written table, or None when it has no data files: its directory
+    does not exist (e.g. summary), or holds none (a native write of an
+    empty frame leaves only `_SUCCESS`). Any other failure — a corrupt or
+    truncated file — raises instead of reading as "not present"."""
+    try:
+        return writer.read_table(spark, root, table, layout=layout)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
 def register_otel_views(
     spark: SparkSession, root: str, *, layout: str = "parity", tables=None
 ) -> None:
     """`otel_logs` / `otel_traces` / `otel_metrics_*` temp views over a
     written layout (reference docs/querying.md preamble)."""
     for table in tables or OTEL_TABLES:
-        try:
-            writer.read_table(spark, root, table, layout=layout).createOrReplaceTempView(table)
-        except Exception:
-            pass  # table not present in this layout (e.g. summary)
+        df = _read_present(spark, root, table, layout)
+        if df is not None:
+            df.createOrReplaceTempView(table)
 
 
 def recent_logs(spark: SparkSession, limit: int = 10) -> DataFrame:
@@ -242,15 +257,13 @@ def logs_with_traces(spark: SparkSession) -> DataFrame:
 
 
 def table_counts(spark: SparkSession, root: str, *, layout: str = "parity") -> DataFrame:
-    """Q10 (reference tests/harness/mod.rs:207-249): per-table row counts."""
+    """Q10 (reference tests/harness/mod.rs:207-249): per-table row counts;
+    an empty frame when no table is present under `root`."""
     dfs = []
     for table in OTEL_TABLES:
-        try:
-            df = writer.read_table(spark, root, table, layout=layout)
-        except Exception:
-            continue
-        dfs.append(df.agg(F.count("*").alias("n")).select(F.lit(table).alias("table_name"), "n"))
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionAll(d)
-    return out.orderBy("table_name")
+        df = _read_present(spark, root, table, layout)
+        if df is not None:
+            dfs.append(df.agg(F.count("*").alias("n")).select(F.lit(table).alias("table_name"), "n"))
+    if not dfs:
+        return spark.createDataFrame([], "table_name string, n long")
+    return reduce(DataFrame.unionAll, dfs).orderBy("table_name")
