@@ -69,6 +69,18 @@ def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _stub_decode(payload) -> tuple[int, int, int, str, bytes]:
+    """STUB_DECODER shared by decode_features and the fused resize and
+    frame-sample kernels: a real decoder (PIL.Image.open / av.open /
+    soundfile.read) is not a dependency of this package, so deterministic
+    fake (width, height, n_frames, feature_hash) derive from the payload's
+    sha256. The digest is returned too: the resize stub tiles it as its
+    output bytes. The x5 SQL oracles replay this formula, so it must stay
+    the one copy."""
+    h = hashlib.sha256(bytes(payload or b"")).digest()
+    return 64 + h[0] % 192, 64 + h[1] % 192, 1 + h[2] % 32, h.hex()[:16], h
+
+
 def decode_features(media: DataFrame, *, keep_payload: bool = False) -> DataFrame:
     """Arrow-batched decode/feature-extract over binary payloads.
 
@@ -94,14 +106,11 @@ def decode_features(media: DataFrame, *, keep_payload: bool = False) -> DataFram
                 "feature_hash": [],
             }
             for payload in pdf["payload"]:
-                # STUB_DECODER: real decode (PIL.Image.open / av.open /
-                # soundfile.read) is unavailable in this container; derive
-                # deterministic fake dims from the content hash instead.
-                h = hashlib.sha256(bytes(payload or b"")).digest()
-                out["width"].append(64 + h[0] % 192)
-                out["height"].append(64 + h[1] % 192)
-                out["n_frames"].append(1 + h[2] % 32)
-                out["feature_hash"].append(h.hex()[:16])
+                w, h, n_frames, fhash, _ = _stub_decode(payload)
+                out["width"].append(w)
+                out["height"].append(h)
+                out["n_frames"].append(n_frames)
+                out["feature_hash"].append(fhash)
             if keep_payload:
                 out["payload"] = pdf["payload"]
             yield pd.DataFrame(out)
@@ -199,7 +208,7 @@ def resize_media(media: DataFrame, max_side: int = 128) -> DataFrame:
     form flowed the payload THROUGH decode_features (keep_payload=True) into
     a second kernel, so every payload byte crossed the JVM<->Python boundary
     three times (in to decode, out with features, in again to resize). The
-    decode body here is decode_features' STUB_DECODER verbatim (sha256-derived
+    decode body here is the shared STUB_DECODER (`_stub_decode`, sha256-derived
     width/height) — a real PIL decode would hand its Image object straight to
     .resize() the same single-pass way; still no second scan of the media
     source and no shuffle of payload bytes on media_id (the pre-r12 join-back
@@ -215,11 +224,7 @@ def resize_media(media: DataFrame, max_side: int = 128) -> DataFrame:
                 "resized_payload": [],
             }
             for payload in pdf["payload"]:
-                # STUB_DECODER (same formula as decode_features): derive
-                # deterministic fake dims from the content hash
-                seed = hashlib.sha256(bytes(payload or b"")).digest()
-                w = 64 + seed[0] % 192
-                h = 64 + seed[1] % 192
+                w, h, _, _, seed = _stub_decode(payload)
                 m = max(w, h)
                 # integer arithmetic: float scale factors round 128.0 down to
                 # 127 for the clamped side (and disagree with the SQL oracle)
@@ -400,7 +405,7 @@ def sample_frames(media: DataFrame, every: int = 8) -> DataFrame:
     form chained decode_features' kernel into a second sampling kernel, so
     every batch crossed the JVM<->Python boundary twice (payload in, features
     out, features in again, frames out) and paid two ArrowEval stages. The
-    decode body here is decode_features' STUB_DECODER verbatim (sha256-derived
+    decode body here is the shared STUB_DECODER (`_stub_decode`, sha256-derived
     n_frames/feature_hash) — a real av.open decoder would expose its frame
     iterator the same single-pass way, which is exactly why fusing is the
     production shape: the decoded stream feeds the sampler without ever
@@ -410,11 +415,7 @@ def sample_frames(media: DataFrame, every: int = 8) -> DataFrame:
         for pdf in batches:
             ids, idxs, tss, shas = [], [], [], []
             for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                # STUB_DECODER (same formula as decode_features): derive
-                # deterministic fake dims from the content hash
-                h = hashlib.sha256(bytes(payload or b"")).digest()
-                n_frames = 1 + h[2] % 32
-                fhash = h.hex()[:16]
+                _, _, n_frames, fhash, _ = _stub_decode(payload)
                 for i in range(0, n_frames, every):
                     ids.append(mid)
                     idxs.append(i)

@@ -1043,19 +1043,26 @@ def x6_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shiftleft wraps silently at 64 (Java shift semantics are mod-64), so
     # a >64-source corpus must fail LOUDLY, not corrupt masks — the same
     # contract the old driver-side NotImplementedError enforced, now
-    # raised at execution from inside the plan
-    guarded_sidx = F.when(F.col("sidx") < 64, F.col("sidx")).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(
-                    "x6_source_overlap's single-lane bitmask form supports "
-                    "<= 64 sources; shard source-group pairs across lanes "
-                    "(offending source: "
-                ),
-                F.col("source"),
-                F.lit(")"),
-            )
+    # raised at execution from inside the plan. A NULL-source document
+    # fails the same way: no source can own its grams, and an inner join
+    # on source would drop it unnoticed, so the index join below is a left
+    # join that keeps it for this check.
+    lanes_exceeded = F.concat(
+        F.lit(
+            "x6_source_overlap's single-lane bitmask form supports "
+            "<= 64 sources; shard source-group pairs across lanes "
+            "(offending source: "
+        ),
+        F.col("source"),
+        F.lit(")"),
+    )
+    guarded_sidx = (
+        F.when(
+            F.col("source").isNull(),
+            F.raise_error(F.lit("x6_source_overlap: a document has a NULL source")),
         )
+        .when(F.col("sidx") < 64, F.col("sidx"))
+        .otherwise(F.raise_error(lanes_exceeded))
     )
     toks = F.split(normalized_text(F.col("text")), " ")
     gram_key = F.conv(F.substring(F.md5(F.col("gram")), 1, 15), 16, 10).cast("long")
@@ -1064,7 +1071,7 @@ def x6_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per doc and cost ~0.9 s at sf0.1 — guide §3.3 "explode before a join
     # multiplies the shuffle", here it multiplied the probe)
     per_doc = (
-        d.join(F.broadcast(sidx_frame), "source")
+        d.join(F.broadcast(sidx_frame), "source", "left")
         .select(
             guarded_sidx.alias("sidx"),
             F.explode(F.array_distinct(gram3_expr(toks))).alias("gram"),

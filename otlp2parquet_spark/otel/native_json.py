@@ -1,19 +1,22 @@
-"""Pure-Catalyst OTLP/JSON logs decode — the JSONL fast path (SURVEY §7
-hard-part 7: "consider the JSONL fast path via native from_json … no Python
-needed").
+"""Pure-Catalyst OTLP/JSON logs and traces decode — the JSONL fast path
+(SURVEY §7 hard-part 7: "consider the JSONL fast path via native from_json …
+no Python needed").
 
 The general codec (otlp_json.py + flatten.py via mapInArrow) handles every
 OTLP shape at ~14k rows/s/core of Python. This module decodes the HOT shape —
-log records whose attribute/body values are scalars (string/int/double/bool),
-which is the overwhelming share of real log traffic — entirely with Spark
-built-ins: `from_json` -> `explode` -> higher-order functions. Whole-stage
-codegen applies; no Python worker, no Arrow transfer.
+log records and spans whose attribute/body values are scalars
+(string/int/double/bool), which is the overwhelming share of real traffic —
+entirely with Spark built-ins: `from_json` -> `explode` -> higher-order
+functions. Whole-stage codegen applies; no Python worker, no Arrow transfer.
+It covers logs and traces only: metrics JSON is decoded by the Python codec
+(fast_flatten.py), and protobuf of every signal by fast_wire.py (with
+wire.py + flatten.py as its reference).
 
-`decode_logs_json_auto` routes each line: payloads containing nested
-attribute values (`arrayValue`/`kvlistValue`/`bytesValue`) or other
-fast-path-unsupported constructs fall back to the general codec, and the two
-outputs union. Routing is textual-contains — conservative (false positives
-only cost speed, never correctness).
+`decode_logs_json_auto` / `decode_traces_json_auto` route each line:
+payloads containing nested attribute values (`arrayValue`/`kvlistValue`/
+`bytesValue`) or other fast-path-unsupported constructs fall back to the
+general codec, and the two outputs union. Routing is textual-contains —
+conservative (false positives only cost speed, never correctness).
 
 Canonical-encoding parity (verified against the Python codec cell-by-cell in
 tests):
@@ -36,7 +39,6 @@ from pyspark.sql.types import (
     ArrayType,
     BooleanType,
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -566,406 +568,3 @@ def decode_traces_json_auto(lines: DataFrame, line_col: str = "line") -> DataFra
         schemas.raw_spark_schema("otel_traces"),
     )
     return ingest.finalize(native_raw.unionAll(py_raw), "otel_traces")
-
-
-# ---------------------------------------------------------------------------
-# Metrics fast path: all five metric shapes (gauge/sum number points,
-# histogram, exponential histogram, summary) decode pure-Catalyst, including
-# the skipped.{summaries,missing_values,nan_values,infinity_values} counters,
-# which ride the same union frame as `MetricType='skipped'` rows. Only
-# payloads with complex attribute values / escape-sensitive text / snake_case
-# keys / literal NaN-Infinity tokens route to the general Python codec.
-
-_NUMBER_DP = StructType(
-    [
-        StructField("timeUnixNano", StringType()),
-        StructField("asDouble", DoubleType()),
-        StructField("asInt", StringType()),
-        StructField("attributes", ArrayType(_KV)),
-    ]
-)
-# proto3 JSON maps (u)int64 to strings; Jackson also tolerates bare numbers
-# into StringType, so count-like fields read as text and cast("long") later
-_HIST_DP = StructType(
-    [
-        StructField("timeUnixNano", StringType()),
-        StructField("attributes", ArrayType(_KV)),
-        StructField("count", StringType()),
-        StructField("sum", DoubleType()),
-        StructField("bucketCounts", ArrayType(StringType())),
-        StructField("explicitBounds", ArrayType(DoubleType())),
-        StructField("min", DoubleType()),
-        StructField("max", DoubleType()),
-    ]
-)
-_EXP_BUCKETS = StructType(
-    [StructField("offset", IntegerType()), StructField("bucketCounts", ArrayType(StringType()))]
-)
-_EXP_HIST_DP = StructType(
-    [
-        StructField("timeUnixNano", StringType()),
-        StructField("attributes", ArrayType(_KV)),
-        StructField("count", StringType()),
-        StructField("sum", DoubleType()),
-        StructField("scale", IntegerType()),
-        StructField("zeroCount", StringType()),
-        StructField("positive", _EXP_BUCKETS),
-        StructField("negative", _EXP_BUCKETS),
-        StructField("min", DoubleType()),
-        StructField("max", DoubleType()),
-    ]
-)
-_QUANTILE = StructType(
-    [StructField("quantile", DoubleType()), StructField("value", DoubleType())]
-)
-_SUMMARY_DP = StructType(
-    [
-        StructField("timeUnixNano", StringType()),
-        StructField("attributes", ArrayType(_KV)),
-        StructField("count", StringType()),
-        StructField("sum", DoubleType()),
-        StructField("quantileValues", ArrayType(_QUANTILE)),
-    ]
-)
-_METRIC = StructType(
-    [
-        StructField("name", StringType()),
-        StructField("description", StringType()),
-        StructField("unit", StringType()),
-        StructField("gauge", StructType([StructField("dataPoints", ArrayType(_NUMBER_DP))])),
-        StructField(
-            "sum",
-            StructType(
-                [
-                    StructField("dataPoints", ArrayType(_NUMBER_DP)),
-                    StructField("aggregationTemporality", StringType()),
-                    StructField("isMonotonic", BooleanType()),
-                ]
-            ),
-        ),
-        StructField("histogram", StructType([StructField("dataPoints", ArrayType(_HIST_DP))])),
-        StructField(
-            "exponentialHistogram",
-            StructType([StructField("dataPoints", ArrayType(_EXP_HIST_DP))]),
-        ),
-        StructField("summary", StructType([StructField("dataPoints", ArrayType(_SUMMARY_DP))])),
-    ]
-)
-METRICS_REQUEST_SCHEMA = StructType(
-    [
-        StructField(
-            "resourceMetrics",
-            ArrayType(
-                StructType(
-                    [
-                        StructField(
-                            "resource",
-                            StructType([StructField("attributes", ArrayType(_KV))]),
-                        ),
-                        StructField(
-                            "scopeMetrics",
-                            ArrayType(
-                                StructType(
-                                    [
-                                        StructField("scope", _SCOPE),
-                                        StructField("metrics", ArrayType(_METRIC)),
-                                    ]
-                                )
-                            ),
-                        ),
-                    ]
-                )
-            ),
-        )
-    ]
-)
-
-METRICS_FALLBACK_MARKERS = (
-    "\\u00",
-    "\\U00",
-    '"arrayValue"',
-    '"kvlistValue"',
-    # NOTE: no NaN/Infinity markers — Jackson parses the literal tokens
-    # (allowNonNumericNumbers) exactly like Python's json, and _number_rows'
-    # native skip lane counts nan/infinity/missing values; a NaN inside an
-    # attribute double still routes via the "doubleValue" marker below
-    '"bytesValue"',
-    '"doubleValue"',
-    # snake_case payloads
-    "resource_metrics",
-    "scope_metrics",
-    "data_points",
-    "time_unix_nano",
-    "_value",
-    "as_double",
-    "as_int",
-)
-
-_TEMPORALITY = {
-    "AGGREGATION_TEMPORALITY_UNSPECIFIED": 0,
-    "AGGREGATION_TEMPORALITY_DELTA": 1,
-    "AGGREGATION_TEMPORALITY_CUMULATIVE": 2,
-}
-
-
-# uint64 histogram/exp-histogram count, zeroCount, and bucketCounts entries
-# with >=19 digits may exceed int64: the fast path's long cast would null
-# them while the general Python codec keeps the arbitrary-precision value —
-# lane-dependent output for the same payload (ADVICE r3). Route such lines
-# to the general codec, mirroring _BIG_INT_RE for attribute intValue.
-_BIG_COUNT_RE = (
-    '"(count|zeroCount)"\\s*:\\s*"?[0-9]{19}'
-    '|"bucketCounts"\\s*:\\s*\\[[^\\]]*[0-9]{19}'
-)
-
-
-def needs_fallback_metrics(line: Column) -> Column:
-    cond = _risky_int(line) | line.rlike(_BIG_COUNT_RE)
-    for marker in METRICS_FALLBACK_MARKERS:
-        cond = cond | line.contains(marker)
-    return cond
-
-
-def _number_rows(sm_df, kind: str):
-    """Explode one number-metric kind (gauge|sum) to union-frame rows."""
-    m = sm_df.filter(F.col(f"m.{kind}").isNotNull())
-    dp = m.select(
-        "rattrs",
-        "svc",
-        "scope",
-        F.col("m.name").alias("mname"),
-        F.col("m.description").alias("mdesc"),
-        F.col("m.unit").alias("munit"),
-        *(
-            [
-                F.col("m.sum.aggregationTemporality").alias("temp_raw"),
-                F.coalesce(F.col("m.sum.isMonotonic"), F.lit(False)).alias("IsMonotonic"),
-            ]
-            if kind == "sum"
-            else [F.lit(None).cast("string").alias("temp_raw"), F.lit(None).cast("boolean").alias("IsMonotonic")]
-        ),
-        F.explode(F.col(f"m.{kind}.dataPoints")).alias("dp"),
-    )
-    # as_double wins the oneof when both appear; as_int coerced to double
-    val = F.coalesce(F.col("dp.asDouble"), F.col("dp.asInt").cast("double"))
-    # flatten._number_points parity (flatten.py:326-339): a valueless /
-    # NaN / infinite point becomes a skipped.* counter row instead of a
-    # data row — same frame, so the payload is still parsed exactly once
-    skip_reason = (
-        F.when(val.isNull(), F.lit("missing_values"))
-        .when(F.isnan(val), F.lit("nan_values"))
-        .when(F.abs(val) == F.lit(float("inf")), F.lit("infinity_values"))
-    )
-    keep = lambda c: F.when(skip_reason.isNull(), c)  # noqa: E731
-    temp_num = F.when(F.col("temp_raw").rlike("^[0-9]+$"), F.col("temp_raw").cast("int"))
-    temp_named = F.try_element_at(
-        F.create_map(*[F.lit(x) for kv in _TEMPORALITY.items() for x in kv]), F.col("temp_raw")
-    )
-    # numeric temporality must be in the spec enum {0,1,2} — the general
-    # codec (flatten.flatten_metrics) hard-errors outside it, so the fast
-    # path must too, or the same payload is lane-dependent (ADVICE r1)
-    temp_ok = (
-        F.col("temp_raw").isNull()
-        | F.coalesce(temp_num.isin(0, 1, 2), F.lit(False))
-        | temp_named.isNotNull()
-    )
-    temp_checked = F.assert_true(
-        temp_ok, F.concat(F.lit("invalid aggregation temporality: "), F.col("temp_raw"))
-    )
-    return dp.select(
-        keep(
-            F.expr("CAST(coalesce(CAST(dp.timeUnixNano AS LONG), 0L) div 1000 AS LONG)")
-        ).alias("Timestamp"),
-        keep(F.coalesce(F.col("svc"), F.lit(""))).alias("ServiceName"),
-        # metrics KEEP service.* inside ResourceAttributes (§1.3.6)
-        keep(_attrs_to_json(F.col("rattrs"))).alias("ResourceAttributes"),
-        keep(F.nullif(F.col("scope.name"), F.lit(""))).alias("ScopeName"),
-        keep(F.nullif(F.col("scope.version"), F.lit(""))).alias("ScopeVersion"),
-        keep(F.coalesce(F.col("mname"), F.lit(""))).alias("MetricName"),
-        keep(F.nullif(F.col("mdesc"), F.lit(""))).alias("MetricDescription"),
-        keep(F.nullif(F.col("munit"), F.lit(""))).alias("MetricUnit"),
-        keep(_attrs_to_json(F.col("dp.attributes"))).alias("Attributes"),
-        keep(val).alias("Value"),
-        # the temporality assert rides every row (skip rows included, hence
-        # temp_checked as the left AND operand — codegen evaluates it first):
-        # the general codec parses the metric's temporality before looking
-        # at any data point, so an invalid enum hard-errors on both lanes
-        F.when(
-            temp_checked.isNull() & skip_reason.isNull(),
-            F.coalesce(temp_num, temp_named, F.lit(0)),
-        ).alias("AggregationTemporality"),
-        keep(F.col("IsMonotonic")).alias("IsMonotonic"),
-        F.when(skip_reason.isNull(), F.lit(kind)).otherwise(F.lit("skipped")).alias("MetricType"),
-        skip_reason.alias("SkipReason"),
-        F.when(skip_reason.isNotNull(), F.lit(1).cast("long")).alias("SkipCount"),
-    )
-
-
-def _metric_prefix_cols(kind: str, wrap=None):
-    """The shared 9-column metrics prefix (§1.3.6: service.* stays in
-    ResourceAttributes) + MetricType tag. `wrap` (Column -> Column) lets a
-    caller null the prefix out on rows it repurposes as skip counters."""
-    w = wrap or (lambda c: c)
-    return [
-        w(
-            F.expr("CAST(coalesce(CAST(dp.timeUnixNano AS LONG), 0L) div 1000 AS LONG)")
-        ).alias("Timestamp"),
-        w(F.coalesce(F.col("svc"), F.lit(""))).alias("ServiceName"),
-        w(_attrs_to_json(F.col("rattrs"))).alias("ResourceAttributes"),
-        w(F.nullif(F.col("scope.name"), F.lit(""))).alias("ScopeName"),
-        w(F.nullif(F.col("scope.version"), F.lit(""))).alias("ScopeVersion"),
-        w(F.coalesce(F.col("m.name"), F.lit(""))).alias("MetricName"),
-        w(F.nullif(F.col("m.description"), F.lit(""))).alias("MetricDescription"),
-        w(F.nullif(F.col("m.unit"), F.lit(""))).alias("MetricUnit"),
-        w(_attrs_to_json(F.col("dp.attributes"))).alias("Attributes"),
-        w(F.lit(kind)).alias("MetricType"),
-    ]
-
-
-def _counts_to_longs(col: Column) -> Column:
-    """uint64-as-string bucket counts -> array<long> ([] when absent, like
-    flatten's `[int(c) for c in dp.get(..., [])]`)."""
-    return F.coalesce(
-        F.transform(col, lambda c: c.cast("long")), F.array().cast("array<long>")
-    )
-
-
-def _histogram_rows(sm_df):
-    """Explode histogram metrics to union-frame rows (flatten.py:262-273
-    parity: count/sum default 0, bucket arrays default empty, min/max null)."""
-    m = sm_df.filter(F.col("m.histogram").isNotNull())
-    dp = m.select("rattrs", "svc", "scope", "m", F.explode("m.histogram.dataPoints").alias("dp"))
-    return dp.select(
-        *_metric_prefix_cols("histogram"),
-        F.coalesce(F.col("dp.count").cast("long"), F.lit(0)).alias("Count"),
-        F.coalesce(F.col("dp.sum"), F.lit(0.0)).alias("Sum"),
-        _counts_to_longs(F.col("dp.bucketCounts")).alias("BucketCounts"),
-        F.coalesce(F.col("dp.explicitBounds"), F.array().cast("array<double>")).alias(
-            "ExplicitBounds"
-        ),
-        F.col("dp.min").alias("Min"),
-        F.col("dp.max").alias("Max"),
-    )
-
-
-def _exp_histogram_rows(sm_df):
-    """Explode exponentialHistogram metrics to union-frame rows
-    (flatten.py:274-292 parity)."""
-    m = sm_df.filter(F.col("m.exponentialHistogram").isNotNull())
-    dp = m.select(
-        "rattrs", "svc", "scope", "m", F.explode("m.exponentialHistogram.dataPoints").alias("dp")
-    )
-    return dp.select(
-        *_metric_prefix_cols("exponential_histogram"),
-        F.coalesce(F.col("dp.count").cast("long"), F.lit(0)).alias("Count"),
-        F.coalesce(F.col("dp.sum"), F.lit(0.0)).alias("Sum"),
-        F.coalesce(F.col("dp.scale"), F.lit(0)).alias("Scale"),
-        F.coalesce(F.col("dp.zeroCount").cast("long"), F.lit(0)).alias("ZeroCount"),
-        F.coalesce(F.col("dp.positive.offset"), F.lit(0)).alias("PositiveOffset"),
-        _counts_to_longs(F.col("dp.positive.bucketCounts")).alias("PositiveBucketCounts"),
-        F.coalesce(F.col("dp.negative.offset"), F.lit(0)).alias("NegativeOffset"),
-        _counts_to_longs(F.col("dp.negative.bucketCounts")).alias("NegativeBucketCounts"),
-        F.col("dp.min").alias("Min"),
-        F.col("dp.max").alias("Max"),
-    )
-
-
-def _summary_rows(sm_df):
-    """Explode summary metrics to union-frame rows (flatten.py:294-307
-    parity): each data point yields its decoded summary row AND one
-    `skipped.summaries` counter row — summaries are decoded but not
-    persisted by the default 4-table pipeline, and the skip accounting
-    rides the same frame so the payload is still parsed exactly once."""
-    m = sm_df.filter(F.col("m.summary").isNotNull())
-    dp = m.select(
-        "rattrs", "svc", "scope", "m", F.explode("m.summary.dataPoints").alias("dp")
-    ).select("*", F.explode(F.array(F.lit(False), F.lit(True))).alias("is_skip"))
-    keep = lambda c: F.when(~F.col("is_skip"), c)  # noqa: E731
-    qv = F.coalesce(F.col("dp.quantileValues"), F.array().cast(_SUMMARY_DP["quantileValues"].dataType))
-    return dp.select(
-        *_metric_prefix_cols("summary", wrap=keep)[:-1],
-        F.when(F.col("is_skip"), F.lit("skipped")).otherwise(F.lit("summary")).alias("MetricType"),
-        F.when(F.col("is_skip"), F.lit("summaries")).alias("SkipReason"),
-        F.when(F.col("is_skip"), F.lit(1).cast("long")).alias("SkipCount"),
-        keep(F.coalesce(F.col("dp.count").cast("long"), F.lit(0))).alias("Count"),
-        keep(F.coalesce(F.col("dp.sum"), F.lit(0.0))).alias("Sum"),
-        # absent per-quantile fields default to 0.0 (float(q.get(..., 0.0)))
-        keep(F.transform(qv, lambda q: F.coalesce(q["value"], F.lit(0.0)))).alias(
-            "QuantileValues"
-        ),
-        keep(F.transform(qv, lambda q: F.coalesce(q["quantile"], F.lit(0.0)))).alias(
-            "QuantileQuantiles"
-        ),
-    )
-
-
-def decode_metrics_json_native(lines: DataFrame, line_col: str = "line") -> DataFrame:
-    """One OTLP/JSON metrics export request per row -> gauge/sum/histogram/
-    exponential-histogram rows in the metrics-union layout
-    (ingest.METRICS_UNION_SCHEMA columns)."""
-    parsed = lines.select(
-        F.from_json(F.col(line_col), METRICS_REQUEST_SCHEMA, {"mode": "FAILFAST"}).alias("req")
-    )
-    return metrics_union_from_req(parsed)
-
-
-def metrics_union_from_req(parsed: DataFrame) -> DataFrame:
-    """camelCase metrics request struct (column `req`, METRICS_REQUEST_SCHEMA
-    shape — from_json here, or the JVM protobuf lane's snake->camel adapter
-    in jvm_codec) -> metrics-union rows. Source-agnostic so the protobuf
-    lane reuses the entire native pipeline."""
-    from otlp2parquet_spark.otel import ingest as ing
-
-    rm = parsed.select(F.explode("req.resourceMetrics").alias("rm"))
-    sm = rm.select(
-        F.col("rm.resource.attributes").alias("rattrs"),
-        F.explode("rm.scopeMetrics").alias("sm"),
-    ).select(
-        "rattrs",
-        F.col("sm.scope").alias("scope"),
-        F.explode("sm.metrics").alias("m"),
-    )
-    sm = sm.withColumn("svc", _attr_lookup(F.col("rattrs"), "service.name"))
-
-    def to_union(rows: DataFrame) -> DataFrame:
-        # project to the union schema (absent type-specific columns -> NULL)
-        cols = []
-        have = set(rows.columns)
-        for f in ing.METRICS_UNION_SCHEMA.fields:
-            if f.name in have:
-                c = F.col(f.name)
-                cols.append(
-                    (c if isinstance(f.dataType, ArrayType) else c.cast(f.dataType)).alias(f.name)
-                )
-            else:
-                cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-        return rows.select(*cols)
-
-    parts = [
-        to_union(_number_rows(sm, "gauge")),
-        to_union(_number_rows(sm, "sum")),
-        to_union(_histogram_rows(sm)),
-        to_union(_exp_histogram_rows(sm)),
-        to_union(_summary_rows(sm)),
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionAll(p)
-    return out
-
-
-def decode_metrics_json_auto(lines: DataFrame, line_col: str = "line") -> DataFrame:
-    """Route + union in the metrics-union layout (pair with
-    ingest.metrics_table / ingest.skipped_metrics for per-table frames)."""
-    from otlp2parquet_spark.otel import ingest as ing
-
-    simple = lines.filter(~needs_fallback_metrics(F.col(line_col)))
-    complex_ = lines.filter(needs_fallback_metrics(F.col(line_col)))
-    native_rows = decode_metrics_json_native(simple, line_col)
-    py_payloads = complex_.select(
-        F.lit("").alias("path"),
-        F.encode(F.col(line_col), "UTF-8").alias("content"),
-        F.lit("json").alias("fmt"),
-    )
-    py_rows = ing.decode_metrics_union(py_payloads)
-    return native_rows.unionAll(py_rows)

@@ -18,15 +18,13 @@ import struct
 from typing import Any
 
 
-# Scale note (VERDICT r1 #2): the preferred 100 TB pb lane would be JVM-side
-# `pyspark.sql.protobuf.functions.from_protobuf` with a compiled public
-# opentelemetry-proto descriptor set, routed through the Catalyst flatten
-# (the native_json.py pattern). That module needs the spark-protobuf jar,
-# which does NOT ship with pip pyspark and cannot be fetched in this
-# environment (no network) — so this pure-Python wire decoder IS the pb
-# lane, optimized accordingly (offset-based, tag-dispatch, ~2x the naive
-# form). It is embarrassingly parallel (one task per landing file, no
-# shuffle before the sink), so cluster throughput = per-core rate x cores.
+# Scale note: protobuf payloads of every signal are decoded in Python only.
+# The ingest paths run the fused walkers in fast_wire.py; this module and
+# flatten.py are the two-step reference they are tested against. A
+# JVM-side protobuf decode would need the spark-protobuf jar, which does
+# not ship with pip pyspark. The decode is embarrassingly parallel (one
+# task per landing file, no shuffle before the sink), so cluster throughput
+# = per-core rate x cores.
 
 
 class OtlpDecodeError(ValueError):

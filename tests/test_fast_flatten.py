@@ -121,6 +121,22 @@ _BAD_TRACES = [
 ]
 
 
+def test_severity_enum_values():
+    """The SeverityNumber name table every JSON decoder shares must carry
+    the full public 0..24 range with the official names (TRACE=1..4,
+    DEBUG=5..8, ..., FATAL=21..24)."""
+    vals = otlp_json.SEVERITY_NUMBER
+    assert vals["SEVERITY_NUMBER_UNSPECIFIED"] == 0
+    assert vals["SEVERITY_NUMBER_TRACE"] == 1
+    assert vals["SEVERITY_NUMBER_DEBUG"] == 5
+    assert vals["SEVERITY_NUMBER_INFO"] == 9
+    assert vals["SEVERITY_NUMBER_WARN"] == 13
+    assert vals["SEVERITY_NUMBER_ERROR"] == 17
+    assert vals["SEVERITY_NUMBER_FATAL"] == 21
+    assert vals["SEVERITY_NUMBER_FATAL4"] == 24
+    assert len(vals) == 25
+
+
 @pytest.mark.parametrize("doc", _BAD_LOGS)
 def test_bad_logs_rejected_by_both(doc):
     with pytest.raises(OtlpDecodeError):
@@ -195,7 +211,7 @@ def test_metrics_fused_matches_slow_snake(tree):
 def test_metrics_fused_exotic_and_fixture_parity():
     import copy as _copy
 
-    from test_jvm_metrics_exotic import _gen_tree
+    from test_metrics_exotic import _gen_tree
 
     # exotic trees rendered to protobuf-JSON (exemplars stripped — the
     # canonical strategy shape only; pb-side exemplars are covered in
@@ -216,6 +232,67 @@ def test_metrics_fused_exotic_and_fixture_parity():
             ) == _slow_metrics_json(doc), (seed, render.__name__)
 
 
+def test_metrics_skip_counters_and_big_counts():
+    """Valueless, literal-NaN, literal-Infinity and overflowing (1e400)
+    number points and summary points become skipped.* counters, and 19-digit
+    uint64 counts keep their exact value, on both JSON walkers."""
+    big = 1234567890123456789  # 19 digits, fits int64
+    doc = json.dumps(
+        {
+            "resourceMetrics": [
+                {
+                    "scopeMetrics": [
+                        {
+                            "metrics": [
+                                {
+                                    "name": "g",
+                                    "gauge": {
+                                        "dataPoints": [
+                                            {"timeUnixNano": "1000"},
+                                            {"timeUnixNano": "2000", "asDouble": 1.5},
+                                        ]
+                                    },
+                                },
+                                {
+                                    "name": "s",
+                                    "summary": {
+                                        "dataPoints": [{"count": "4", "quantileValues": [{"value": 1.0}]}]
+                                    },
+                                },
+                                {
+                                    "name": "h",
+                                    "histogram": {
+                                        "dataPoints": [{"count": str(big), "bucketCounts": [str(big), "2"]}]
+                                    },
+                                },
+                                {
+                                    "name": "eh",
+                                    "exponentialHistogram": {
+                                        "dataPoints": [{"count": "1", "zeroCount": str(big)}]
+                                    },
+                                },
+                            ]
+                        }
+                    ]
+                }
+            ]
+        }
+    )
+    # literal NaN / Infinity / 1e400 are valid input for json.loads
+    doc = doc.replace(
+        '"asDouble": 1.5', '"asDouble": 1.5}, {"asDouble": NaN}, '
+        '{"asDouble": -Infinity}, {"asDouble": 1e400', 1
+    )
+    fused = fast_flatten.flatten_metrics_json(json.loads(doc))
+    assert fused == _slow_metrics_json(doc)
+    per_type, skipped = fused
+    assert skipped == {"missing_values": 1, "nan_values": 1, "infinity_values": 2, "summaries": 1}
+    assert [r["Value"] for r in per_type["gauge"]] == [1.5]
+    (hist,) = per_type["histogram"]
+    assert hist["Count"] == big and hist["BucketCounts"] == [big, 2]
+    assert per_type["exponential_histogram"][0]["ZeroCount"] == big
+
+
 def test_bad_metrics_rejected_not_crashed():
     """Malformed metrics payloads must raise OtlpDecodeError (the class the
     ingest quarantine catches), never a bare AttributeError/TypeError that
@@ -224,6 +301,7 @@ def test_bad_metrics_rejected_not_crashed():
         '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"summary":{"dataPoints":[{"quantileValues":[1]}]}}]}]}]}',
         '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"gauge":{"dataPoints":[7]}}]}]}]}',
         '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"sum":{"aggregationTemporality":"BOGUS"}}]}]}]}',
+        '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"sum":{"aggregationTemporality":7}}]}]}]}',
         '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"histogram":{"dataPoints":[{"bucketCounts":7}]}}]}]}]}',
         '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"sum":{"isMonotonic":3}}]}]}]}',
         '{"resourceMetrics":[{"scopeMetrics":[{"metrics":[{"gauge":{"dataPoints":[{"asDouble":{}}]}}]}]}]}',

@@ -195,14 +195,14 @@ def test_metrics_fixture_and_exotic_parity():
     import copy
     import glob
 
-    from test_jvm_metrics_exotic import _encode_request, _gen_tree
+    from test_metrics_exotic import _encode_request, _gen_tree
 
     for fx in sorted(glob.glob("/root/reference/testdata/metrics_*.pb")):
         pb = open(fx, "rb").read()
         assert fast_wire.flatten_metrics_pb(pb) == _slow_metrics(pb), fx
         assert fast_wire.flatten_metrics_pb(pb * 3) == _slow_metrics(pb * 3), fx
     # exotic seeds: exp-histogram geometry, exemplars, min/max presence,
-    # multi-member nesting — the same generator the JVM adapter sweep uses
+    # multi-member nesting — the same generator the Spark frame-path sweep uses
     for seed in range(40):
         pb = _encode_request(copy.deepcopy(_gen_tree(seed)))
         assert fast_wire.flatten_metrics_pb(pb) == _slow_metrics(pb), seed

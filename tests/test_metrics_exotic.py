@@ -1,35 +1,29 @@
-"""Exotic-shape differential sweep for the JVM metrics adapter (judge r4
-ask #6): seeded-random requests covering exponential-histogram bucket
-geometry (negative offsets/scales, empty/asymmetric positive-negative
-buckets), exemplars on every data-point type (which from_protobuf
-materializes — pb_descriptor.py declares them — and the adapter must
-ignore), histogram min/max presence (absent vs explicit 0.0), summary
-quantiles, and multi-member resource/scope nesting.
+"""Exotic-shape metrics sweep: seeded-random requests covering
+exponential-histogram bucket geometry (negative offsets/scales,
+empty/asymmetric positive-negative buckets), exemplars on every data-point
+type (which the decoders must skip: wire.py has no Exemplar entry, so this
+exercises its unknown-field skip), histogram min/max presence (absent vs
+explicit 0.0), summary quantiles, and multi-member resource/scope nesting.
 
-Both lanes decode the SAME payload: the Python wire codec reads the
-encoded protobuf bytes (exemplar submessages spliced in via a descriptor
-overlay — wire.py intentionally has no Exemplar entry, so the Python lane
-exercises its unknown-field skip there), while the JVM-local lane feeds
-the reconstructed snake_case struct (exemplars included, as the real
-from_protobuf output would carry) through camel_metrics_req +
-metrics_union_from_req. Tables must match cell-for-cell, batched across
+The generator and the exemplar-splicing encoder are shared with
+test_fast_wire and test_fast_flatten. The sweep here decodes the SAME
+protobuf bytes two ways: through the Spark frame path the ingest uses
+(`ingest.decode_metrics_union` -> `metrics_table` / `skipped_metrics`) and
+through the two-step reference pair (`wire.parse_request_pb` +
+`flatten.flatten_metrics`). Tables must match cell-for-cell, batched across
 all seeds in one comparison per metric type.
 """
 
 from __future__ import annotations
 
-import json
+import copy
 import random
 import struct as _struct
+from collections import Counter
 
-from pyspark.sql import functions as F
+from otlp2parquet_spark.otel import flatten, ingest, schemas, wire
 
-from otlp2parquet_spark.otel import ingest, wire
-from otlp2parquet_spark.otel.jvm_codec import camel_metrics_req
-from otlp2parquet_spark.otel.native_json import metrics_union_from_req
-
-from test_jvm_flatten import _b64ify, _metrics_req_schema
-from test_wire_property import _enc_varint, _enc_zigzag, encode_message
+from test_wire_property import _enc_varint, encode_message
 
 # Exemplar per the official opentelemetry-proto (metrics.proto): wire.py has
 # no Exemplar descriptor by design (the tables keep no exemplar columns), so
@@ -149,9 +143,8 @@ def _gen_exemplar(rng: random.Random) -> dict:
 
 
 def _gen_attrs(rng: random.Random) -> list[dict]:
-    # string/int/bool only: nested, bytes AND double attr values all route
-    # to the Python codec by design (payload_complex_expr_metrics /
-    # _attrs_complex — JSON-lane marker parity) and are covered elsewhere
+    # string/int/bool only: nested, bytes and double attribute values are
+    # covered by the property strategies in test_wire_property
     vals = [
         {"string_value": "s" + str(rng.randrange(100))},
         {"int_value": rng.randrange(-(2**50), 2**50)},
@@ -291,65 +284,40 @@ def _gen_tree(seed: int) -> dict:
     }
 
 
-def _exemplars_to_struct(obj):
-    """__exemplars__ -> exemplars member, the spelling the real
-    from_protobuf struct carries."""
-    if isinstance(obj, dict):
-        out = {}
-        for k, v in obj.items():
-            out["exemplars" if k == "__exemplars__" else k] = _exemplars_to_struct(v)
-        return out
-    if isinstance(obj, list):
-        return [_exemplars_to_struct(v) for v in obj]
-    return obj
-
-
 SEEDS = range(20)
 
 
-def test_exotic_metrics_adapter_matches_python_codec(spark):
-    import copy
-
-    trees = [_gen_tree(s) for s in SEEDS]
+def test_exotic_metrics_frame_matches_slow_pair(spark):
     # deepcopy: _encode_request pops __exemplars__ from dp dicts in place
-    payload_rows = [
-        ("", bytearray(_encode_request(copy.deepcopy(t))), "pb") for t in trees
-    ]
-    union_py = ingest.decode_metrics_union(
-        spark.createDataFrame(payload_rows, "path string, content binary, fmt string")
+    pbs = [_encode_request(copy.deepcopy(_gen_tree(s))) for s in SEEDS]
+    union = ingest.decode_metrics_union(
+        spark.createDataFrame(
+            [("", bytearray(pb), "pb") for pb in pbs], "path string, content binary, fmt string"
+        )
     )
 
-    struct_rows = [(json.dumps(_b64ify(_exemplars_to_struct(t))),) for t in trees]
-    struct_df = spark.createDataFrame(struct_rows, "line string").select(
-        F.from_json("line", _metrics_req_schema(), {"mode": "FAILFAST"}).alias("req")
-    )
-    union_jvm = metrics_union_from_req(
-        struct_df.select(camel_metrics_req(F.col("req")).alias("req"))
-    )
+    slow_rows: dict[str, list] = {}
+    slow_skipped: Counter = Counter()
+    for pb in pbs:
+        per_type, skipped = flatten.flatten_metrics(wire.parse_request_pb(pb, "metrics"))
+        for mt, rows in per_type.items():
+            slow_rows.setdefault(mt, []).extend(rows)
+        slow_skipped.update(skipped)
 
     for mt in ("gauge", "sum", "histogram", "exponential_histogram"):
-        a = sorted(map(tuple, ingest.metrics_table(union_jvm, mt).collect()), key=repr)
-        b = sorted(map(tuple, ingest.metrics_table(union_py, mt).collect()), key=repr)
-        assert a == b, f"{mt}: adapter diverges from Python codec"
+        table = schemas.METRIC_TABLES[mt]
+        raw = schemas.raw_spark_schema(table)
+        slow = ingest.finalize(
+            spark.createDataFrame(
+                [tuple(r.get(f.name) for f in raw.fields) for r in slow_rows[mt]], raw
+            ),
+            table,
+        )
+        a = sorted(map(tuple, ingest.metrics_table(union, mt).collect()), key=repr)
+        b = sorted(map(tuple, slow.collect()), key=repr)
+        assert a == b, f"{mt}: Spark frame path diverges from wire + flatten"
         # the sweep must actually exercise each type
         assert b, f"{mt}: no rows generated — strategy regression"
-    sk_a = {r.reason: r["count"] for r in ingest.skipped_metrics(union_jvm).collect()}
-    sk_b = {r.reason: r["count"] for r in ingest.skipped_metrics(union_py).collect()}
-    assert sk_a == sk_b
-    assert sk_b.get("summaries", 0) > 0, "no summary points generated"
-
-
-def test_exotic_payloads_not_flagged_complex(spark):
-    """Scalar-attribute exotic shapes (exemplars included) stay on the JVM
-    route — the complexity detector must not false-positive on them."""
-    from otlp2parquet_spark.otel.jvm_codec import payload_complex_expr_metrics
-
-    trees = [_gen_tree(s) for s in SEEDS]
-    struct_rows = [(json.dumps(_b64ify(_exemplars_to_struct(t))),) for t in trees]
-    struct_df = spark.createDataFrame(struct_rows, "line string").select(
-        F.from_json("line", _metrics_req_schema(), {"mode": "FAILFAST"}).alias("req")
-    )
-    flags = struct_df.select(
-        F.coalesce(payload_complex_expr_metrics(F.col("req")), F.lit(False)).alias("c")
-    ).collect()
-    assert not any(r.c for r in flags)
+    sk_frame = {r.reason: r["count"] for r in ingest.skipped_metrics(union).collect()}
+    assert sk_frame == {k: v for k, v in slow_skipped.items() if v}
+    assert sk_frame.get("summaries", 0) > 0, "no summary points generated"

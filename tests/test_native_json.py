@@ -342,60 +342,6 @@ def test_property_native_logs_equals_python(spark, trees):
     assert a == _python_rows(spark, df)
 
 
-# ---------------------------------------------------------------------------
-# Metrics fast path (gauge/sum native; other kinds route to the general codec)
-
-
-@pytest.mark.parametrize(
-    "fixture",
-    [
-        "metrics_gauge",
-        "metrics_sum",
-        "metrics_mixed",
-        "metrics_histogram",
-        "metrics_exponential_histogram",
-        "metrics_summary",
-    ],
-)
-def test_metrics_native_matches_python(spark, fixture):
-    lines = (
-        spark.read.text(f"{TD}/{fixture}.jsonl")
-        .filter(F.length(F.trim("value")) > 0)
-        .select(F.col("value").alias("line"))
-    )
-    union_native = native_json.decode_metrics_json_auto(lines)
-    payloads = lines.select(
-        F.lit("").alias("path"), F.encode("line", "UTF-8").alias("content"), F.lit("json").alias("fmt")
-    )
-    union_py = ingest.decode_metrics_union(payloads)
-    for mt in ["gauge", "sum", "histogram", "exponential_histogram"]:
-        a = sorted(map(tuple, ingest.metrics_table(union_native, mt).collect()), key=repr)
-        b = sorted(map(tuple, ingest.metrics_table(union_py, mt).collect()), key=repr)
-        assert a == b, (fixture, mt)
-    # skip accounting (summaries) survives the fallback routing
-    sk_a = {r.reason: r["count"] for r in ingest.skipped_metrics(union_native).collect()}
-    sk_b = {r.reason: r["count"] for r in ingest.skipped_metrics(union_py).collect()}
-    assert sk_a == sk_b
-
-
-def test_metrics_native_pure_lane_counts(spark):
-    """All five metric shapes (summary included, with its native skip
-    counters) stay fully on the native lane."""
-    for fixture, expect_fb in [
-        ("metrics_gauge", 0),
-        ("metrics_histogram", 0),
-        ("metrics_exponential_histogram", 0),
-        ("metrics_summary", 0),
-    ]:
-        lines = (
-            spark.read.text(f"{TD}/{fixture}.jsonl")
-            .filter(F.length(F.trim("value")) > 0)
-            .select(F.col("value").alias("line"))
-        )
-        fb = lines.filter(native_json.needs_fallback_metrics(F.col("line"))).count()
-        assert (fb > 0) == (expect_fb > 0), fixture
-
-
 def test_big_intvalue_routes_to_fallback(spark):
     """ADVICE r1: an intValue beyond int64 would null out under Catalyst's
     long cast (silently dropping the attribute); such lines must take the
@@ -416,190 +362,3 @@ def test_big_intvalue_routes_to_fallback(spark):
     assert rows == _python_rows(spark, df)
     attrs = rows[0][COLS.index("LogAttributes")]
     assert str(big) in attrs
-
-
-def _sum_metric_req(temporality):
-    return json.dumps(
-        {
-            "resourceMetrics": [
-                {
-                    "resource": {"attributes": []},
-                    "scopeMetrics": [
-                        {
-                            "scope": {"name": "s"},
-                            "metrics": [
-                                {
-                                    "name": "m",
-                                    "sum": {
-                                        "aggregationTemporality": temporality,
-                                        "isMonotonic": True,
-                                        "dataPoints": [
-                                            {"timeUnixNano": "1700000000000000000", "asInt": "1"}
-                                        ],
-                                    },
-                                }
-                            ],
-                        }
-                    ],
-                }
-            ]
-        }
-    )
-
-
-def test_metrics_native_skip_counters_match_python(spark):
-    """The native lane's skipped.* counter rows (missing / literal-NaN /
-    literal-Infinity / numeric-overflow values, summary points) aggregate
-    identically to the general codec's — and none of these shapes routes to
-    the Python lane anymore."""
-    line = json.dumps(
-        {
-            "resourceMetrics": [
-                {
-                    "resource": {
-                        "attributes": [
-                            {"key": "service.name", "value": {"stringValue": "s"}}
-                        ]
-                    },
-                    "scopeMetrics": [
-                        {
-                            "metrics": [
-                                {
-                                    "name": "g",
-                                    "gauge": {
-                                        "dataPoints": [
-                                            {"timeUnixNano": "1000"},
-                                            {"timeUnixNano": "2000", "asDouble": 1.5},
-                                        ]
-                                    },
-                                },
-                                {
-                                    "name": "s",
-                                    "summary": {
-                                        "dataPoints": [
-                                            {
-                                                "timeUnixNano": "3000",
-                                                "count": "4",
-                                                "sum": 10.0,
-                                                "quantileValues": [
-                                                    {"value": 1.0},
-                                                    {"quantile": 0.5, "value": 2.0},
-                                                ],
-                                            }
-                                        ]
-                                    },
-                                },
-                            ]
-                        }
-                    ],
-                }
-            ]
-        }
-    )
-    # literal NaN / Infinity / 1e400 are valid for both json.loads and Jackson
-    line = line.replace('"asDouble": 1.5', '"asDouble": 1.5}, {"asDouble": NaN}, '
-                        '{"asDouble": -Infinity}, {"asDouble": 1e400', 1)
-    df = _lines_df(spark, [line])
-    assert df.filter(native_json.needs_fallback_metrics(F.col("line"))).count() == 0
-    union_native = native_json.decode_metrics_json_auto(df)
-    payloads = df.select(
-        F.lit("").alias("path"),
-        F.encode("line", "UTF-8").alias("content"),
-        F.lit("json").alias("fmt"),
-    )
-    union_py = ingest.decode_metrics_union(payloads)
-    sk_n = {r.reason: r["count"] for r in ingest.skipped_metrics(union_native).collect()}
-    sk_p = {r.reason: r["count"] for r in ingest.skipped_metrics(union_py).collect()}
-    assert sk_n == sk_p == {
-        "missing_values": 1,
-        "nan_values": 1,
-        "infinity_values": 2,
-        "summaries": 1,
-    }
-    for mt in ("gauge", "summary"):
-        a = sorted(map(tuple, ingest.metrics_table(union_native, mt).collect()), key=repr)
-        b = sorted(map(tuple, ingest.metrics_table(union_py, mt).collect()), key=repr)
-        assert a == b, mt
-
-
-def _histogram_req(count, bucket_counts, zero=None):
-    dp = {
-        "timeUnixNano": "1700000000000000000",
-        "count": str(count),
-        "sum": 1.5,
-        "bucketCounts": [str(c) for c in bucket_counts],
-        "explicitBounds": [1.0],
-    }
-    metric = {"name": "h", "histogram": {"aggregationTemporality": 2, "dataPoints": [dp]}}
-    if zero is not None:
-        metric = {
-            "name": "eh",
-            "exponentialHistogram": {
-                "aggregationTemporality": 2,
-                "dataPoints": [
-                    {
-                        "timeUnixNano": "1700000000000000000",
-                        "count": str(count),
-                        "zeroCount": str(zero),
-                        "scale": 0,
-                        "positive": {"offset": 0, "bucketCounts": [str(c) for c in bucket_counts]},
-                    }
-                ],
-            },
-        }
-    return json.dumps(
-        {
-            "resourceMetrics": [
-                {
-                    "resource": {"attributes": []},
-                    "scopeMetrics": [{"scope": {"name": "s"}, "metrics": [metric]}],
-                }
-            ]
-        }
-    )
-
-
-def test_big_counts_route_to_fallback(spark):
-    """ADVICE r3: uint64 count/zeroCount/bucketCounts with >=19 digits would
-    null out under the fast lane's long cast while the general codec keeps
-    the value — such lines must take the general codec so both lanes agree."""
-    in_range_19 = 1234567890123456789  # 19 digits, fits int64
-    for line in (
-        _histogram_req(in_range_19, [1, 2]),
-        _histogram_req(1, [in_range_19, 2]),
-        _histogram_req(1, [1], zero=in_range_19),
-    ):
-        df = _lines_df(spark, [line])
-        assert df.filter(native_json.needs_fallback_metrics(F.col("line"))).count() == 1
-        union_native = native_json.decode_metrics_json_auto(df)
-        payloads = df.select(
-            F.lit("").alias("path"),
-            F.encode("line", "UTF-8").alias("content"),
-            F.lit("json").alias("fmt"),
-        )
-        union_py = ingest.decode_metrics_union(payloads)
-        found = False
-        for mt in ("histogram", "exponential_histogram"):
-            a = sorted(map(tuple, ingest.metrics_table(union_native, mt).collect()), key=repr)
-            b = sorted(map(tuple, ingest.metrics_table(union_py, mt).collect()), key=repr)
-            assert a == b, mt
-            found = found or str(in_range_19) in repr(a)
-        # the 19-digit value itself survives end-to-end (not nulled)
-        assert found
-    # 18-digit counts stay on the pure native lane
-    small = _lines_df(spark, [_histogram_req(123456789012345678, [1])])
-    assert small.filter(native_json.needs_fallback_metrics(F.col("line"))).count() == 0
-
-
-def test_metrics_native_invalid_temporality_hard_errors(spark):
-    """ADVICE r1: numeric temporality outside {0,1,2} must hard-error on the
-    fast lane exactly like the general codec — not be silently persisted."""
-    bad = _lines_df(spark, [_sum_metric_req(7)])
-    assert bad.filter(native_json.needs_fallback_metrics(F.col("line"))).count() == 0
-    union = native_json.decode_metrics_json_auto(bad)
-    with pytest.raises(Exception, match="temporality"):
-        ingest.metrics_table(union, "sum").collect()
-    ok = _lines_df(spark, [_sum_metric_req(2)])
-    union_ok = native_json.decode_metrics_json_auto(ok)
-    rows = ingest.metrics_table(union_ok, "sum").collect()
-    assert len(rows) == 1 and rows[0].AggregationTemporality == 2

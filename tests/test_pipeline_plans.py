@@ -5,6 +5,8 @@ the executed plan, not just hoped for."""
 
 from __future__ import annotations
 
+import pytest
+
 from otlp2parquet_spark.queries.registry import all_specs
 from tests.conftest import SF_ORACLE
 
@@ -158,3 +160,19 @@ def test_dsir_upweights_target_like_docs(spark, tmp_path):
     assert min(a_like) > max(b_docs)
     assert all(keep[i] for i in range(10, 15))  # planted docs survive the gate
     assert not any(keep[i] for i in range(15, 50))
+
+
+def test_source_overlap_null_source_raises(spark, tmp_path):
+    """A document with a NULL source must fail the query in-plan, like the
+    > 64-source guard, not drop out of the source-index join."""
+    rows = [
+        (0, "alpha beta gamma delta", "en", "src0", 22),
+        (1, "alpha beta gamma epsilon", "en", "src1", 24),
+        (2, "beta gamma delta zeta", "en", None, 21),
+    ]
+    df = spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+    with pytest.raises(Exception, match="NULL source"):
+        SPECS["x6_source_overlap"].build(spark, str(tmp_path)).collect()
