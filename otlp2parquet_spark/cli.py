@@ -1,11 +1,17 @@
 """CLI entry point (reference src/main.rs:33-130 twin, Spark-flavored).
 
-Subcommands:
+Subcommands (``--help`` lists them all):
 - ``ingest``  — batch ingest a landing dir for one signal into the
   partitioned layout (the reference's serve+POST dataflow, batch-mode);
 - ``stream``  — continuous Structured-Streaming ingest with checkpointing;
-- ``connect`` — emit client config templates (D29);
-- ``validate-config`` — load + validate the layered config and print it.
+- ``serve``, ``compact``, ``zorder``, ``connect`` (client config templates,
+  D29) and ``validate-config`` (load + validate the layered config, print it);
+- the ``*train`` commands, which build the frozen artifacts the deploy
+  lanes score against;
+- the stream-lane commands (neardup, xdedup, hh, annindex, badmit,
+  dsirselect, dcscore, lmscore, qscore, funnel, wp95, whll), which come
+  from the lane table ``_LANES``: drain the landing dir once
+  (availableNow), optionally compact, print a one-line JSON summary.
 
 Global flags mirror the reference: ``--config FILE``, ``--output DIR``,
 ``--log-level LEVEL`` (reference --port applies to the out-of-engine HTTP
@@ -16,7 +22,10 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
+from collections.abc import Callable
+from typing import NamedTuple
 
 
 def _positive_int(s: str) -> int:
@@ -332,8 +341,6 @@ def _file_sink_has_commits(out_dir: str) -> bool:
     batch can leave uncommitted part files a walk would count as data while
     the metadata-aware read (correctly) ignores them. Shared by the wp95
     (T16) and whll (T19) lanes."""
-    import os
-
     meta_dir = os.path.join(out_dir, "_spark_metadata")
     return os.path.isdir(meta_dir) and any(
         os.path.getsize(os.path.join(meta_dir, f)) > 0
@@ -350,22 +357,314 @@ def _epoch_table(spark, table_dir: str, schema: str):
     the ledger verdict; see streaming.pipeline.first_epoch_rows). `schema`
     must name the `epoch int` partition column.
 
-    Returns None when the table has no committed epoch yet (dir absent,
-    or no epoch= children — e.g. an empty landing dir that never flushed):
-    the caller's zero-summary path. The guard lives HERE so the whole
-    epoch-table read contract has one owner (r12 review finding)."""
-    import os
+    A table with no committed epoch yet (dir absent, or no epoch= children
+    — e.g. an empty landing dir that never flushed) reads as an EMPTY
+    frame, so its summary is the zero summary. The guard lives HERE so the
+    whole epoch-table read contract has one owner (r12 review finding)."""
+    from otlp2parquet_spark.streaming.pipeline import _epochs, first_epoch_rows
 
-    from otlp2parquet_spark.streaming.pipeline import first_epoch_rows
+    if _epochs(table_dir):
+        df = spark.read.schema(schema).parquet(table_dir)
+    else:
+        df = spark.createDataFrame([], schema)
+    return first_epoch_rows(df, ("doc_id",))
 
-    if not (
-        os.path.isdir(table_dir)
-        and any(d.startswith("epoch=") for d in os.listdir(table_dir))
-    ):
-        return None
-    return first_epoch_rows(
-        spark.read.schema(schema).parquet(table_dir), ("doc_id",)
+
+def _aggregate(df, **aggs: str) -> dict:
+    """Named SQL aggregates over `df` in one job, in keyword order."""
+    return dict(zip(aggs, df.selectExpr(*aggs.values()).first()))
+
+
+def _sum(flag: str) -> str:
+    return f"coalesce(sum(cast({flag} AS bigint)), 0)"
+
+
+def _codes_table(spark, index: str):
+    """annindex's codes table; empty when no epoch ever flushed."""
+    from otlp2parquet_spark.extensions.similarity import IVFPQ_CODES_SCHEMA
+
+    codes_dir = os.path.join(index, "codes")
+    if os.path.isdir(codes_dir):
+        return spark.read.schema(IVFPQ_CODES_SCHEMA).parquet(codes_dir)
+    return spark.createDataFrame([], IVFPQ_CODES_SCHEMA)
+
+
+def _heavy_hitters(P, spark, a) -> dict:
+    """hh: EXACT heavy hitters over everything ingested, from the candidate
+    state (one candidate-bounded recount of the landing dir)."""
+    if not os.path.isdir(os.path.join(a.state, "cands")):
+        # empty landing dir: no epoch flushed, nothing to extract
+        return {"heavy_hitters": 0, "top": []}
+    docs = spark.read.schema(P.DOCS_SCHEMA).parquet(a.landing_dir)
+    hh = P.heavy_hitters_from_state(spark, a.state, docs).collect()
+    return {
+        "heavy_hitters": len(hh),
+        "top": [{"token": r.token, "cnt": int(r.cnt)} for r in hh[: a.top]],
+    }
+
+
+def _sealed_counts(spark, out: str, walk) -> tuple[int, int]:
+    """(rows, distinct windows) of walk(everything sealed under `out`)."""
+    # empty landing dir / nothing sealed: the file sink may never have
+    # written a footer — summarize zero instead of raising on the read
+    if not _file_sink_has_commits(out):
+        return 0, 0
+    from pyspark.errors import AnalysisException
+
+    try:
+        # one job for both integers — the walk (window functions + a
+        # groupBy) is the expensive part of the lane
+        return (
+            walk(spark.read.parquet(out))
+            .selectExpr("count(*)", "count(DISTINCT window_start)")
+            .first()
+        )
+    except AnalysisException:
+        # a commit log whose every batch sealed zero windows lists no
+        # files -> nothing to infer a schema from
+        return 0, 0
+
+
+class _Lane(NamedTuple):
+    """One stream-lane subcommand, run by _run_lane. Every callable takes
+    the streaming.pipeline module first (imported only when a lane runs,
+    so the Spark-free subcommands stay light), then the session and the
+    parsed args."""
+
+    start: Callable  # (P, spark, args) -> StreamingQuery
+    summarize: Callable  # (P, spark, args, compacted) -> summary dict
+    compact_flag: str | None = None  # the option that turns compaction on
+    compact: Callable | None = None  # (P, spark, args) -> tuple of epochs removed
+    no_compact: tuple = (0,)  # `compacted` when the option is off
+    before_config: bool = False  # runs before, and without, config loading
+
+
+def _dedup_lane(stream: str, compact_index: str, schema: str, flag: str, key: str) -> _Lane:
+    """neardup (T11) and xdedup (T15): flag each doc against a persistent
+    index under --state (pipeline.<stream>), verdicts under STATE/flags.
+    --compact-index merges the index (pipeline.<compact_index>) and the
+    flags epochs, reported as separate fields: summing them under the
+    pre-existing key would silently change its meaning (round-8 review)."""
+    return _Lane(
+        start=lambda P, s, a: getattr(P, stream)(
+            s, a.landing_dir, a.state, a.checkpoint
+        ),
+        compact_flag="compact_index",
+        compact=lambda P, s, a: (
+            getattr(P, compact_index)(s, a.state),
+            P.compact_epochs(s, os.path.join(a.state, "flags")),
+        ),
+        no_compact=(0, 0),
+        summarize=lambda P, s, a, c: {
+            **_aggregate(
+                _epoch_table(s, os.path.join(a.state, "flags"), schema),
+                docs_flagged_total="count(*)",
+                **{key: _sum(flag)},
+            ),
+            "index_epochs_compacted": c[0],
+            "flags_epochs_compacted": c[1],
+            "state": a.state,
+        },
     )
+
+
+def _deploy_lane(
+    scorer: str, artifact: str, schema: str, key: str, agg: str, compacted: str
+) -> _Lane:
+    """dsirselect (T14), dcscore (T20), lmscore (T18), qscore (T13): score
+    each doc against the frozen artifact named by option `artifact`
+    (pipeline.deploy_stream with pipeline.<scorer>), verdicts under --out."""
+    return _Lane(
+        start=lambda P, s, a: P.deploy_stream(
+            s,
+            a.landing_dir,
+            a.out,
+            a.checkpoint,
+            getattr(P, scorer)(s, getattr(a, artifact)),
+        ),
+        compact_flag="compact",
+        compact=lambda P, s, a: (P.compact_epochs(s, a.out),),
+        summarize=lambda P, s, a, c: {
+            **_aggregate(
+                _epoch_table(s, a.out, schema), docs_scored="count(*)", **{key: agg}
+            ),
+            compacted: c[0],
+            "out": a.out,
+        },
+    )
+
+
+def _sealed_lane(sketch: str, walk: str, rows_key: str) -> _Lane:
+    """wp95 (T16) and whll (T19): append watermark-sealed per-(5-min
+    window, event_type) sketch rows (pipeline.<sketch>) to a parquet file
+    sink under --out, then summarize pipeline.<walk> over everything
+    sealed so far."""
+    return _Lane(
+        start=lambda P, s, a: (
+            getattr(P, sketch)(P.events_stream(s, a.landing_dir))
+            .writeStream.format("parquet")
+            .option("path", a.out)
+            .option("checkpointLocation", a.checkpoint)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        ),
+        summarize=lambda P, s, a, c: dict(
+            zip((rows_key, "windows_sealed"), _sealed_counts(s, a.out, getattr(P, walk))),
+            out=a.out,
+        ),
+        before_config=True,
+    )
+
+
+_LANES = {
+    "neardup": _dedup_lane(
+        "neardup_stream",
+        "compact_band_index",
+        "doc_id long, is_neardup boolean, epoch int",
+        "is_neardup",
+        "near_dups",
+    ),
+    "xdedup": _dedup_lane(
+        "exactdedup_stream",
+        "compact_hash_index",
+        "doc_id long, content_hash string, is_duplicate boolean, "
+        "dup_of long, epoch int",
+        "is_duplicate",
+        "exact_dups",
+    ),
+    "hh": _Lane(
+        start=lambda P, s, a: P.heavyhitters_stream(
+            s, a.landing_dir, a.state, a.checkpoint
+        ),
+        compact_flag="compact_state",
+        compact=lambda P, s, a: P.compact_hh_state(s, a.state),
+        no_compact=(0, 0),
+        summarize=lambda P, s, a, c: {
+            **_heavy_hitters(P, s, a),
+            "cands_epochs_compacted": c[0],
+            "totals_epochs_compacted": c[1],
+            "state": a.state,
+        },
+    ),
+    "annindex": _Lane(
+        start=lambda P, s, a: P.ivfpq_index_stream(
+            s, a.landing_dir, a.index, a.checkpoint
+        ),
+        compact_flag="compact_codes",
+        compact=lambda P, s, a: (P.compact_codes_index(s, a.index),),
+        summarize=lambda P, s, a, c: {
+            **_aggregate(
+                _codes_table(s, a.index),
+                vectors_encoded="count(DISTINCT vec_id)",
+                code_rows="count(*)",
+            ),
+            "codes_epochs_compacted": c[0],
+            "index": a.index,
+        },
+    ),
+    "badmit": _Lane(
+        start=lambda P, s, a: P.budget_admit_stream(
+            s, a.landing_dir, a.state, a.budget, a.checkpoint
+        ),
+        compact_flag="compact",
+        compact=lambda P, s, a: (
+            P.compact_epochs(s, os.path.join(a.state, "verdicts")),
+        ),
+        summarize=lambda P, s, a, c: {
+            **_aggregate(
+                _epoch_table(
+                    s,
+                    os.path.join(a.state, "verdicts"),
+                    "doc_id long, n_tok long, admitted boolean, epoch int",
+                ),
+                docs_seen="count(*)",
+                docs_admitted=_sum("admitted"),
+                tokens_admitted="coalesce(sum(if(admitted, n_tok, 0)), 0)",
+            ),
+            "budget": a.budget,
+            "verdict_epochs_compacted": c[0],
+            "state": a.state,
+        },
+    ),
+    "dsirselect": _deploy_lane(
+        "dsir_scorer",
+        "model",
+        "doc_id long, liw_micro long, n_tok long, keep boolean, epoch int",
+        "selected",
+        _sum("keep"),
+        "verdict_epochs_compacted",
+    ),
+    "dcscore": _deploy_lane(
+        "decontam_scorer",
+        "benchset",
+        "doc_id long, n_grams long, n_hits long, "
+        "contamination double, contaminated boolean, epoch int",
+        "contaminated",
+        _sum("contaminated"),
+        "verdict_epochs_compacted",
+    ),
+    "lmscore": _deploy_lane(
+        "lm_scorer",
+        "model",
+        "doc_id long, source string, n_bigrams long, lm_score double, epoch int",
+        "mean_lm_score",
+        "round(avg(lm_score), 4)",
+        "score_epochs_compacted",
+    ),
+    "qscore": _deploy_lane(
+        "quality_scorer",
+        "model",
+        "doc_id long, y int, z long, pred int, epoch int",
+        "predicted_quality",
+        _sum("pred"),
+        "score_epochs_compacted",
+    ),
+    "funnel": _Lane(
+        start=lambda P, s, a: P.ingest_funnel_stream(
+            s, a.landing_dir, a.state, a.qc_model, a.benchset, a.checkpoint
+        ),
+        compact_flag="compact",
+        compact=lambda P, s, a: P.compact_ingest_funnel(s, a.state),
+        no_compact=(0, 0, 0),
+        summarize=lambda P, s, a, c: {
+            **_aggregate(
+                _epoch_table(
+                    s,
+                    os.path.join(a.state, "verdicts"),
+                    "doc_id long, source string, k1 boolean, k2 boolean, "
+                    "k3 boolean, k4 boolean, epoch int",
+                ),
+                docs_ingested="count(*)",
+                kept_exact=_sum("k1"),
+                kept_neardup=_sum("k2"),
+                kept_quality=_sum("k3"),
+                kept_clean=_sum("k4"),
+            ),
+            "compacted": dict(zip(("hash_epochs", "band_epochs", "verdict_epochs"), c)),
+            "state": a.state,
+        },
+    ),
+    "wp95": _sealed_lane("exp_hist_buckets", "exp_p95_from_buckets", "sealed_rows"),
+    "whll": _sealed_lane(
+        "hll_reg_buckets", "hll_estimate_from_registers", "sealed_estimates"
+    ),
+}
+
+
+def _run_lane(lane: _Lane, args) -> int:
+    """Drain the landing dir once, compact when the lane's option asks
+    for it, print the summary as one JSON line."""
+    from otlp2parquet_spark.session import get_spark
+    from otlp2parquet_spark.streaming import pipeline as P
+
+    spark = get_spark(app_name=f"otlp2parquet-{args.command}")
+    lane.start(P, spark, args).awaitTermination()
+    compacted = lane.no_compact
+    if lane.compact_flag and getattr(args, lane.compact_flag):
+        compacted = lane.compact(P, spark, args)
+    print(json.dumps(lane.summarize(P, spark, args, compacted)))
+    return 0
 
 
 def _load_cfg(args):
@@ -395,95 +694,9 @@ def main(argv: list[str] | None = None) -> int:
             return 2
         return 0
 
-    if args.command == "wp95":
-        import os
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-wp95")
-        stream = stream_pipeline.events_stream(spark, args.landing_dir)
-        q = (
-            stream_pipeline.exp_hist_buckets(stream)
-            .writeStream.format("parquet")
-            .option("path", args.out)
-            .option("checkpointLocation", args.checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # empty landing dir / nothing sealed: the file sink may never have
-        # written a footer — summarize zero instead of raising on the read
-        has_rows = _file_sink_has_commits(args.out)
-        rows = windows = 0
-        if has_rows:
-            from pyspark.sql import functions as F
-            from pyspark.errors import AnalysisException
-
-            try:
-                walked = stream_pipeline.exp_p95_from_buckets(
-                    spark.read.parquet(args.out)
-                )
-                # one job for both summary integers — the walk (two window
-                # functions + a groupBy) is the expensive part of the lane
-                rows, windows = walked.agg(
-                    F.count("*"), F.countDistinct("window_start")
-                ).first()
-            except AnalysisException:
-                # a commit log whose every batch sealed zero windows lists
-                # no files -> nothing to infer a schema from
-                rows = windows = 0
-        print(
-            json.dumps(
-                {"sealed_rows": rows, "windows_sealed": windows, "out": args.out}
-            )
-        )
-        return 0
-
-    if args.command == "whll":
-        import os
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-whll")
-        stream = stream_pipeline.events_stream(spark, args.landing_dir)
-        q = (
-            stream_pipeline.hll_reg_buckets(stream)
-            .writeStream.format("parquet")
-            .option("path", args.out)
-            .option("checkpointLocation", args.checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        has_rows = _file_sink_has_commits(args.out)
-        rows = windows = 0
-        if has_rows:
-            from pyspark.sql import functions as F
-            from pyspark.errors import AnalysisException
-
-            try:
-                est = stream_pipeline.hll_estimate_from_registers(
-                    spark.read.parquet(args.out)
-                )
-                rows, windows = est.agg(
-                    F.count("*"), F.countDistinct("window_start")
-                ).first()
-            except AnalysisException:
-                rows = windows = 0
-        print(
-            json.dumps(
-                {
-                    "sealed_estimates": rows,
-                    "windows_sealed": windows,
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
+    lane = _LANES.get(args.command)
+    if lane is not None and lane.before_config:
+        return _run_lane(lane, args)
 
     try:
         cfg = _load_cfg(args)
@@ -542,179 +755,8 @@ def main(argv: list[str] | None = None) -> int:
         )
         return 0
 
-    if args.command == "neardup":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-neardup")
-        q = stream_pipeline.neardup_stream(
-            spark, args.landing_dir, args.state, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = flags_compacted = 0
-        if args.compact_index:
-            # both return 0 when no epoch ever flushed (empty landing dir);
-            # reported as SEPARATE fields — summing them under the
-            # pre-existing key would silently change its meaning for
-            # round-over-round comparisons (round-8 review)
-            compacted = stream_pipeline.compact_band_index(spark, args.state)
-            flags_compacted = stream_pipeline.compact_flags(spark, args.state)
-        flags_dir = os.path.join(args.state, "flags")
-        # first_epoch_rows: crash-window copies AND re-delivered docs
-        # (second verdict differs) resolve to the first epoch's row
-        flags = _epoch_table(
-            spark, flags_dir, "doc_id long, is_neardup boolean, epoch int"
-        )
-        if flags is not None:
-            n_total, n_dup = flags.agg(
-                F.count("*"), F.sum(F.col("is_neardup").cast("long"))
-            ).first()
-        else:
-            # empty landing dir: no epoch flushed, nothing to summarize
-            n_total, n_dup = 0, 0
-        print(
-            json.dumps(
-                {
-                    "docs_flagged_total": int(n_total),
-                    "near_dups": int(n_dup or 0),
-                    "index_epochs_compacted": compacted,
-                    "flags_epochs_compacted": flags_compacted,
-                    "state": args.state,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "xdedup":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-xdedup")
-        q = stream_pipeline.exactdedup_stream(
-            spark, args.landing_dir, args.state, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = flags_compacted = 0
-        if args.compact_index:
-            compacted = stream_pipeline.compact_hash_index(spark, args.state)
-            flags_compacted = stream_pipeline.compact_dedup_flags(
-                spark, args.state
-            )
-        flags_dir = os.path.join(args.state, "flags")
-        flags = _epoch_table(
-            spark,
-            flags_dir,
-            "doc_id long, content_hash string, is_duplicate boolean, "
-            "dup_of long, epoch int",
-        )
-        if flags is not None:
-            n_total, n_dup = flags.agg(
-                F.count("*"), F.sum(F.col("is_duplicate").cast("long"))
-            ).first()
-        else:
-            # empty landing dir: no epoch flushed, nothing to summarize
-            n_total, n_dup = 0, 0
-        print(
-            json.dumps(
-                {
-                    "docs_flagged_total": int(n_total),
-                    "exact_dups": int(n_dup or 0),
-                    "index_epochs_compacted": compacted,
-                    "flags_epochs_compacted": flags_compacted,
-                    "state": args.state,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "hh":
-        import os
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-hh")
-        q = stream_pipeline.heavyhitters_stream(
-            spark, args.landing_dir, args.state, args.checkpoint
-        )
-        q.awaitTermination()
-        cands_removed = totals_removed = 0
-        if args.compact_state:
-            cands_removed, totals_removed = stream_pipeline.compact_hh_state(
-                spark, args.state
-            )
-        if os.path.isdir(os.path.join(args.state, "cands")):
-            docs = spark.read.schema(stream_pipeline.DOCS_SCHEMA).parquet(
-                args.landing_dir
-            )
-            hh = stream_pipeline.heavy_hitters_from_state(
-                spark, args.state, docs
-            ).collect()
-            top = [{"token": r.token, "cnt": int(r.cnt)} for r in hh[: args.top]]
-            n_hh = len(hh)
-        else:
-            # empty landing dir: no epoch flushed, nothing to extract
-            top, n_hh = [], 0
-        print(
-            json.dumps(
-                {
-                    "heavy_hitters": n_hh,
-                    "top": top,
-                    "cands_epochs_compacted": cands_removed,
-                    "totals_epochs_compacted": totals_removed,
-                    "state": args.state,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "annindex":
-        import os
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-annindex")
-        q = stream_pipeline.ivfpq_index_stream(
-            spark, args.landing_dir, args.index, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact_codes:
-            # returns 0 when no epoch ever flushed (empty landing dir)
-            compacted = stream_pipeline.compact_codes_index(spark, args.index)
-        codes_dir = os.path.join(args.index, "codes")
-        n_codes = n_vecs = 0
-        if os.path.isdir(codes_dir):
-            from pyspark.sql import functions as F
-
-            from otlp2parquet_spark.extensions.similarity import (
-                IVFPQ_CODES_SCHEMA,
-            )
-
-            codes = spark.read.schema(IVFPQ_CODES_SCHEMA).parquet(codes_dir)
-            n_codes, n_vecs = codes.agg(
-                F.count("*"), F.countDistinct("vec_id")
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "vectors_encoded": int(n_vecs),
-                    "code_rows": int(n_codes),
-                    "codes_epochs_compacted": compacted,
-                    "index": args.index,
-                }
-            )
-        )
-        return 0
+    if lane is not None:
+        return _run_lane(lane, args)
 
     if args.command == "dsirtrain":
         from otlp2parquet_spark.extensions.pipeline import (
@@ -733,88 +775,6 @@ def main(argv: list[str] | None = None) -> int:
                     "model_buckets": model.count(),
                     "threshold_micro": int(th),
                     "model": args.model,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "badmit":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-badmit")
-        q = stream_pipeline.budget_admit_stream(
-            spark, args.landing_dir, args.state, args.budget, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_budget_verdicts(spark, args.state)
-        n_total = n_adm = 0
-        tok_adm = 0
-        v = _epoch_table(
-            spark,
-            os.path.join(args.state, "verdicts"),
-            "doc_id long, n_tok long, admitted boolean, epoch int",
-        )
-        if v is not None:
-            n_total, n_adm, tok_adm = v.agg(
-                F.count("*"),
-                F.sum(F.col("admitted").cast("long")),
-                F.sum(F.when(F.col("admitted"), F.col("n_tok")).otherwise(0)),
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_seen": int(n_total),
-                    "docs_admitted": int(n_adm or 0),
-                    "tokens_admitted": int(tok_adm or 0),
-                    "budget": args.budget,
-                    "verdict_epochs_compacted": compacted,
-                    "state": args.state,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "dsirselect":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-dsirselect")
-        q = stream_pipeline.dsir_select_stream(
-            spark, args.landing_dir, args.model, args.out, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_dsir_verdicts(spark, args.out)
-        n_total = n_keep = 0
-        v = _epoch_table(
-            spark,
-            args.out,
-            "doc_id long, liw_micro long, n_tok long, keep boolean, "
-            "epoch int",
-        )
-        if v is not None:
-            n_total, n_keep = v.agg(
-                F.count("*"), F.sum(F.col("keep").cast("long"))
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_scored": int(n_total),
-                    "selected": int(n_keep or 0),
-                    "verdict_epochs_compacted": compacted,
-                    "out": args.out,
                 }
             )
         )
@@ -868,48 +828,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"bench_grams": int(n), "benchset": args.benchset}))
         return 0
 
-    if args.command == "dcscore":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.extensions.pipeline import decontam_read_benchset
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-dcscore")
-        q = stream_pipeline.decontam_stream(
-            spark, args.landing_dir, args.benchset, args.out, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_decontam_verdicts(spark, args.out)
-        n_total = n_bad = 0
-        # explicit schema: rowless epochs (a zero-gram drain) must
-        # summarize zero, not fail schema inference
-        v = _epoch_table(
-            spark,
-            args.out,
-            "doc_id long, n_grams long, n_hits long, "
-            "contamination double, contaminated boolean, epoch int",
-        )
-        if v is not None:
-            n_total, n_bad = v.agg(
-                F.count("*"), F.sum(F.col("contaminated").cast("long"))
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_scored": int(n_total),
-                    "contaminated": int(n_bad or 0),
-                    "verdict_epochs_compacted": compacted,
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
-
     if args.command == "lmtrain":
         from otlp2parquet_spark.extensions.text import lm_read_model, lm_write_model
         from otlp2parquet_spark.session import get_spark
@@ -924,147 +842,6 @@ def main(argv: list[str] | None = None) -> int:
                     "model_bigram_types": int(n_model),
                     "sources": vocab.count(),
                     "model": args.model,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "lmscore":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-lmscore")
-        q = stream_pipeline.lmscore_stream(
-            spark, args.landing_dir, args.model, args.out, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_lm_scores(spark, args.out)
-        n_total = 0
-        mean_score = None
-        # explicit schema: a drain whose every doc has <2 tokens writes
-        # rowless epochs (_SUCCESS only) that schema inference chokes on
-        scores = _epoch_table(
-            spark,
-            args.out,
-            "doc_id long, source string, n_bigrams long, "
-            "lm_score double, epoch int",
-        )
-        if scores is not None:
-            n_total, mean_score = scores.agg(
-                F.count("*"), F.round(F.avg("lm_score"), 4)
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_scored": int(n_total),
-                    "mean_lm_score": None if mean_score is None else float(mean_score),
-                    "score_epochs_compacted": compacted,
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "qscore":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-qscore")
-        q = stream_pipeline.quality_score_stream(
-            spark, args.landing_dir, args.model, args.out, args.checkpoint
-        )
-        q.awaitTermination()
-        compacted = 0
-        if args.compact:
-            compacted = stream_pipeline.compact_quality_scores(spark, args.out)
-        n_total = n_keep = 0
-        # first_epoch_rows: crash-window copies AND re-delivered docs
-        # (second verdict differs) resolve to the first epoch's row
-        scores = _epoch_table(
-            spark, args.out, "doc_id long, y int, z long, pred int, epoch int"
-        )
-        if scores is not None:
-            n_total, n_keep = scores.agg(
-                F.count("*"), F.sum(F.col("pred").cast("long"))
-            ).first()
-        print(
-            json.dumps(
-                {
-                    "docs_scored": int(n_total),
-                    "predicted_quality": int(n_keep or 0),
-                    "score_epochs_compacted": compacted,
-                    "out": args.out,
-                }
-            )
-        )
-        return 0
-
-    if args.command == "funnel":
-        import os
-
-        from pyspark.sql import functions as F
-
-        from otlp2parquet_spark.session import get_spark
-        from otlp2parquet_spark.streaming import pipeline as stream_pipeline
-
-        spark = get_spark(app_name="otlp2parquet-funnel")
-        q = stream_pipeline.ingest_funnel_stream(
-            spark,
-            args.landing_dir,
-            args.state,
-            args.qc_model,
-            args.benchset,
-            args.checkpoint,
-        )
-        q.awaitTermination()
-        compacted = (0, 0, 0)
-        if args.compact:
-            compacted = stream_pipeline.compact_ingest_funnel(spark, args.state)
-        counts = {"n_docs": 0, "k1": 0, "k2": 0, "k3": 0, "k4": 0}
-        # explicit schema (rowless epochs) + first_epoch_rows: a doc
-        # re-delivered in a later landing file is verdicted AGAIN with
-        # different k1..k4 (the exact stage marks the replay a
-        # duplicate); an arbitrary-winner dedup makes the printed
-        # kept_* counts nondeterministic — keep the FIRST verdict
-        led = _epoch_table(
-            spark,
-            os.path.join(args.state, "verdicts"),
-            "doc_id long, source string, k1 boolean, k2 boolean, "
-            "k3 boolean, k4 boolean, epoch int",
-        )
-        if led is not None:
-            row = led.agg(
-                F.count("*"),
-                *[F.sum(F.col(k).cast("long")) for k in ("k1", "k2", "k3", "k4")],
-            ).first()
-            counts = {
-                "n_docs": int(row[0]),
-                **{k: int(row[i + 1] or 0) for i, k in enumerate(("k1", "k2", "k3", "k4"))},
-            }
-        print(
-            json.dumps(
-                {
-                    "docs_ingested": counts["n_docs"],
-                    "kept_exact": counts["k1"],
-                    "kept_neardup": counts["k2"],
-                    "kept_quality": counts["k3"],
-                    "kept_clean": counts["k4"],
-                    "compacted": {
-                        "hash_epochs": compacted[0],
-                        "band_epochs": compacted[1],
-                        "verdict_epochs": compacted[2],
-                    },
-                    "state": args.state,
                 }
             )
         )

@@ -936,7 +936,7 @@ def x4_kn3_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # score any corpus against the frozen counts — the CCNet production loop
 # (train KenLM offline, score at ingest). Shared by the batch twin
 # (streaming/batch_twins.py t18_lm_score_frozen) and the live lane
-# (streaming/pipeline.py lmscore_stream), so the scoring expression exists
+# (streaming/pipeline.py lm_scorer), so the scoring expression exists
 # exactly once. Unlike x4_ngram_lm_score (which models each doc's OWN
 # corpus), the frozen form must score OOV events totally: unseen bigram ->
 # c_bg=0 (the +1 smoothing handles it), unseen prefix word -> c_w1=0,
@@ -2138,7 +2138,7 @@ def qc_write_model(
     path/weights plus a one-row path/meta stamping the training
     provenance (shards, rounds) — the x3 persisted-index lifecycle
     applied to the classifier: train once offline, deploy the artifact
-    to the streaming scorer (streaming/pipeline.py quality_score_stream).
+    to the streaming scorer (streaming/pipeline.py quality_scorer).
     Scoring needs only the weights; the stamped shard count is what lets
     a replay/audit reproduce the training run bit-for-bit (IPM's result
     depends on the sharding)."""

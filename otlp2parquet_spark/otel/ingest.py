@@ -609,17 +609,6 @@ def skipped_metrics(union_df: DataFrame) -> DataFrame:
     )
 
 
-def decode_metrics(
-    payloads: DataFrame, on_error: str = "raise", include_summary: bool = False
-) -> dict[str, DataFrame]:
-    """{metric_type: golden-typed DataFrame} for the persisted types
-    (+ 'summary' when include_summary — the schema exists, the server
-    pipeline drops the rows; reference tests/e2e.rs:114-126)."""
-    union_df = decode_metrics_union(payloads, on_error)
-    types = list(schemas.PERSISTED_METRIC_TYPES) + (["summary"] if include_summary else [])
-    return {t: metrics_table(union_df, t) for t in types}
-
-
 # ---------------------------------------------------------------------------
 # Ingest observability + response accounting (D26/D27)
 

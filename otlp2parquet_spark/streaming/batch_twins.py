@@ -782,7 +782,7 @@ def t18_lm_score_frozen(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigram LM trained on the deterministic even-doc_id half of the corpus
     — the CCNet train-offline / score-at-ingest loop (their frozen KenLM),
     and the exact recomputation the live lane (streaming/pipeline.py
-    lmscore_stream) must reproduce batch-for-batch. Unlike
+    lm_scorer) must reproduce batch-for-batch. Unlike
     x4_ngram_lm_score (each doc scored under its own corpus's model), the
     frozen form is the DEPLOY shape: OOV bigrams/prefixes/sources score
     via total COALESCE fallbacks, so arriving data can never throw.

@@ -17,15 +17,14 @@ availableNow must reproduce the batch twin's results exactly).
 | T10| gap+count-capped sessions         | capped_sessions (applyInPandasWithState, event-time timeout) |
 | T11| streaming near-dup dedup at ingest| neardup_stream (foreachBatch + persistent LSH band index) |
 | T12| streaming ANN index maintenance   | ivfpq_index_stream (frozen-quantizer encode-at-ingest) |
-| T13| streaming quality scoring at ingest| quality_score_stream (frozen persisted classifier)     |
-| T14| streaming DSIR selection at ingest | dsir_select_stream (frozen persisted selection model)  |
+| T13| streaming quality scoring at ingest| deploy_stream + quality_scorer (frozen classifier) |
+| T14| streaming DSIR selection at ingest | deploy_stream + dsir_scorer (frozen selection model) |
 | T15| streaming exact dedup at ingest    | exactdedup_stream (persistent bucketed content-hash index) |
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -583,14 +582,15 @@ def _hash_bucket(nb: int):
     return F.pmod(F.xxhash64(F.col("h")), F.lit(nb))
 
 
-def _band_epochs(bands_dir: str) -> list[int]:
+def _epochs(table_dir: str) -> list[int]:
+    """Sorted epoch ids of an epoch-partitioned table dir ([] if absent)."""
     import os
 
-    if not os.path.isdir(bands_dir):
+    if not os.path.isdir(table_dir):
         return []
     return sorted(
         int(d.split("=", 1)[1])
-        for d in os.listdir(bands_dir)
+        for d in os.listdir(table_dir)
         if d.startswith("epoch=")
     )
 
@@ -657,7 +657,7 @@ def history_probe_paths(
     import os
 
     paths: list[str] = []
-    for e in _band_epochs(bands_dir):
+    for e in _epochs(bands_dir):
         if e >= before_epoch:
             continue
         ed = os.path.join(bands_dir, f"epoch={e}")
@@ -687,6 +687,33 @@ def _epoch_leaves(epoch_dir: str) -> list[str]:
         if d.startswith("bucket=")
     ]
     return buckets or [epoch_dir]
+
+
+def _drain(
+    spark: SparkSession,
+    schema: StructType,
+    landing_dir: str,
+    checkpoint_dir: str,
+    flush,
+    max_files_per_trigger: int = 1,
+):
+    """Start the stream every foreachBatch lane here runs: a parquet file
+    source over landing_dir (max_files_per_trigger files per micro-batch),
+    each micro-batch handed to flush(batch_df, epoch_id) via foreachBatch,
+    progress kept in checkpoint_dir, drained once with availableNow.
+    Every lane's flush writes per-epoch directory OVERWRITES keyed by the
+    epoch id, so a micro-batch replayed after a crash (foreachBatch is
+    at-least-once) rewrites exactly its own partitions: exactly-once at
+    the file level, the discipline of stream_ingest's run_tag=epoch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(landing_dir)
+        .writeStream.foreachBatch(flush)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def make_neardup_flush(
@@ -728,7 +755,6 @@ def neardup_stream(
     state_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     rows_per_bucket: int = BAND_ROWS_PER_BUCKET,
 ):
     """Streaming first-seen MinHash-LSH dedup: the live form of batch
@@ -738,10 +764,7 @@ def neardup_stream(
 
     State is a parquet band index under {state_dir}/bands, epoch-partitioned;
     per-doc verdicts land under {state_dir}/flags, epoch-partitioned. Both
-    writes are per-epoch directory OVERWRITES keyed by the Spark epoch id, so
-    a micro-batch replayed after a crash (foreachBatch's at-least-once
-    contract) rewrites exactly its own partitions: exactly-once at the file
-    level, same discipline as stream_ingest's run_tag=epoch. The history
+    writes are per-epoch directory overwrites (see _drain). The history
     read filters epoch < current so a replayed batch never sees its OWN
     half-written bands as history (which would flag first-seen docs against
     themselves).
@@ -762,17 +785,14 @@ def neardup_stream(
     compaction re-buckets (measured flat in BASELINE.md r8; before r8 the
     probe scanned the whole corpus-sized index every micro-batch). Epochs
     compact like any streaming lake table (compact_band_index)."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
+    return _drain(
+        spark,
+        DOCS_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        make_neardup_flush(spark, state_dir, rows_per_bucket=rows_per_bucket),
+        max_files_per_trigger,
     )
-    ws = stream.writeStream.foreachBatch(
-        make_neardup_flush(spark, state_dir, rows_per_bucket=rows_per_bucket)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        ws = ws.trigger(availableNow=True)
-    return ws.start()
 
 
 def compact_band_index(
@@ -844,7 +864,7 @@ def _compact_epoch_index(
     tmp = os.path.join(index_dir, "_compact_tmp")
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)  # pre-publish crash debris; inputs are intact
-    epochs = _band_epochs(index_dir)
+    epochs = _epochs(index_dir)
     if not epochs:
         return 0  # no index yet (e.g. an empty landing dir never flushed)
     old = [e for e in epochs if e < epochs[-1]]
@@ -956,16 +976,8 @@ def ivfpq_index_stream(
         finally:
             batch.unpersist()
 
-    stream = (
-        spark.readStream.schema(EMBED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, EMBED_SCHEMA, landing_dir, checkpoint_dir, flush, max_files_per_trigger
     )
 
 
@@ -998,16 +1010,18 @@ def first_epoch_rows(
     )
 
 
-def _compact_union_epochs(
+def compact_epochs(
     spark: SparkSession,
     table_dir: str,
-    key_cols: tuple[str, ...],
-    sort_cols: tuple[str, ...],
+    key_cols: tuple[str, ...] = ("doc_id",),
+    sort_cols: tuple[str, ...] = ("doc_id",),
 ) -> int:
-    """Shared epoch-consolidation for APPEND-ONLY epoch-partitioned tables
-    (each row belongs to exactly one epoch): merge all epochs STRICTLY
-    BELOW the newest into one partition, DEDUPLICATED on key_cols and
-    sorted within partitions by sort_cols for row-group locality.
+    """Epoch consolidation for APPEND-ONLY epoch-partitioned tables (each
+    row belongs to exactly one epoch): merge all epochs STRICTLY BELOW the
+    newest into one partition, DEDUPLICATED on key_cols and sorted within
+    partitions by sort_cols for row-group locality. The defaults fit every
+    per-doc verdict/score table the lanes write (neardup and exact-dedup
+    flags, deploy_stream verdicts, budget verdicts, the funnel ledger).
 
     The dedup is what makes the crash contract actually converge (round-8
     review): a crash between the publish rename and the stale-dir removal
@@ -1030,10 +1044,11 @@ def _compact_union_epochs(
     import os
     import shutil
 
+    _require_local_state(table_dir, "compact_epochs")
     tmp = os.path.join(table_dir, "_compact_tmp")
     if os.path.isdir(tmp):
         shutil.rmtree(tmp)  # pre-publish crash debris; inputs are intact
-    epochs = _band_epochs(table_dir)  # generic epoch-dir lister
+    epochs = _epochs(table_dir)
     if not epochs:
         return 0
     old = [e for e in epochs if e < epochs[-1]]
@@ -1075,11 +1090,10 @@ def compact_codes_index(spark: SparkSession, index_path: str) -> int:
     for the T11 lane. Codes are append-only per-vector rows (each vec_id
     is encoded by exactly one epoch); rows sort by (cluster_id, m) so
     probed-cell reads cluster into few row groups. Contract:
-    _compact_union_epochs."""
+    compact_epochs."""
     import os
 
-    _require_local_state(index_path, "compact_codes_index")
-    return _compact_union_epochs(
+    return compact_epochs(
         spark,
         os.path.join(index_path, "codes"),
         key_cols=("vec_id", "m"),
@@ -1087,167 +1101,109 @@ def compact_codes_index(spark: SparkSession, index_path: str) -> int:
     )
 
 
-def compact_flags(spark: SparkSession, state_dir: str) -> int:
-    """Compact neardup_stream's epoch-partitioned per-doc verdicts — flags
-    are append-only (each doc is verdicted by exactly one epoch), so the
-    same plain-union consolidation as the codes table applies; rows sort
-    by doc_id for range locality. Contract: _compact_union_epochs."""
-    import os
-
-    _require_local_state(state_dir, "compact_flags")
-    return _compact_union_epochs(
-        spark,
-        os.path.join(state_dir, "flags"),
-        key_cols=("doc_id",),
-        sort_cols=("doc_id",),
-    )
-
-
 # ---------------------------------------------------------------------------
-# T13: streaming quality scoring at ingest (frozen classifier deploy)
+# Frozen-artifact deploy lanes: T13 quality scoring, T14 DSIR selection,
+# T18 LM perplexity and T20 benchmark decontamination at ingest
 # ---------------------------------------------------------------------------
 
 
-def quality_score_stream(
+def deploy_stream(
     spark: SparkSession,
     landing_dir: str,
-    model_path: str,
     out_dir: str,
     checkpoint_dir: str,
+    score,
     max_files_per_trigger: int = 1,
 ):
-    """Deploy a trained quality classifier to the ingest path: every
-    arriving documents batch is scored map-only against the FROZEN weight
-    vector persisted by qc_write_model (extensions/text.py) — the
-    train-offline / score-at-ingest loop a production pipeline runs
-    (T12's frozen-quantizer pattern applied to the x4_quality_classifier
-    artifact). Verdicts (doc_id, y, z, pred) land per-epoch under
-    out_dir/epoch=N.
+    """Deploy a trained artifact to the ingest path: every arriving
+    documents micro-batch is scored by score(batch_df) -> DataFrame, and
+    its per-doc verdicts land per-epoch under out_dir/epoch=N. `score`
+    closes over a FROZEN artifact read once at setup — quality_scorer,
+    dsir_scorer, lm_scorer or decontam_scorer — so this is the
+    train-offline / score-at-ingest loop a production pipeline runs.
 
-    Equivalence contract (tests/test_streaming_quality.py): scores are
-    exact integer dot products against a frozen artifact, so the union of
-    all epoch partitions is BIT-IDENTICAL to batch qc_score over the
-    union of the inputs — across any micro-batch slicing and any
-    stop/restart. Writes are per-epoch directory overwrites (the
-    neardup_stream file-level exactly-once discipline); epochs compact
-    like any append-only verdict table (compact_quality_scores).
+    Equivalence contract (tests/test_streaming_{quality,dsir,lmscore,
+    decontam}.py): each kernel is a pure function of (doc, frozen
+    artifact) in exact integer or DECIMAL arithmetic, so the union of all
+    epoch partitions is BIT-IDENTICAL to the batch kernel over the union
+    of the inputs, across any micro-batch slicing and any stop/restart.
+    Writes are per-epoch directory overwrites (see _drain); epochs compact
+    with compact_epochs(spark, out_dir).
 
-    Scale shape per micro-batch: one tokenize pass over the batch, one
-    batch-sized (doc,bucket) count agg, a broadcast join against the
-    (B+1)-row weight table — no state beyond the frozen model, no
-    corpus-sized anything."""
+    Scale shape per micro-batch: one tokenize pass over the batch, a
+    batch-sized aggregation and a broadcast join against the artifact —
+    no state beyond the frozen artifact, no corpus-sized anything."""
     import os
 
-    from otlp2parquet_spark.extensions.text import qc_read_model, qc_score
-
-    _require_local_state(out_dir, "quality_score_stream")
-    w = qc_read_model(spark, model_path)  # frozen artifact, read once
+    _require_local_state(out_dir, "deploy_stream")
 
     def flush(batch_df: DataFrame, epoch_id: int) -> None:
-        qc_score(batch_df.select("doc_id", "text"), w).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
+        score(batch_df).write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"epoch={int(epoch_id)}")
+        )
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark, DOCS_SCHEMA, landing_dir, checkpoint_dir, flush, max_files_per_trigger
     )
 
 
-def compact_quality_scores(spark: SparkSession, out_dir: str) -> int:
-    """Compact quality_score_stream's epoch-partitioned verdicts — the
-    same append-only consolidation as the T11 flags table (each doc is
-    scored by exactly one epoch); rows sort by doc_id for range locality.
-    Contract: _compact_union_epochs."""
-    _require_local_state(out_dir, "compact_quality_scores")
-    return _compact_union_epochs(
-        spark, out_dir, key_cols=("doc_id",), sort_cols=("doc_id",)
-    )
+def quality_scorer(spark: SparkSession, model_path: str):
+    """T13: (doc_id, y, z, pred) verdicts — exact integer dot products
+    against the weight vector persisted by text.qc_write_model (the
+    x4_quality_classifier artifact, T12's frozen-quantizer pattern)."""
+    from otlp2parquet_spark.extensions.text import qc_read_model, qc_score
+
+    w = qc_read_model(spark, model_path)
+    return lambda batch: qc_score(batch.select("doc_id", "text"), w)
 
 
-# ---------------------------------------------------------------------------
-# T14: streaming DSIR selection at ingest (frozen selection-model deploy)
-# ---------------------------------------------------------------------------
+def dsir_scorer(spark: SparkSession, model_path: str):
+    """T14: (doc_id, liw_micro, n_tok, keep) verdicts against the (bk,
+    lr_i) table + threshold persisted by pipeline.dsir_write_model — the
+    selection-at-ingest loop of continued pretraining. dsir_score with a
+    model built from a corpus reproduces registry op x6_dsir_sample's
+    (liw_micro, keep) on it. The <= B+1 row table is collected to the
+    driver and recreated as a local relation: no executor-storage persist
+    leaks across repeated stream starts in one session."""
+    from otlp2parquet_spark.extensions.pipeline import dsir_read_model, dsir_score
 
-
-def dsir_select_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    model_path: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-):
-    """Deploy a trained DSIR selection model to the ingest path: every
-    arriving documents batch is scored map-only against the FROZEN
-    (bk, lr_i) table + threshold persisted by dsir_write_model
-    (extensions/pipeline.py) and keep/drop verdicts land per-epoch under
-    out_dir/epoch=N — the selection-at-ingest loop a continued-pretraining
-    pipeline runs (the paper trains the importance model once on a
-    reference pool, then filters the incoming crawl with it).
-
-    Equivalence contract (tests/test_streaming_dsir.py): weights are exact
-    integer sums against frozen artifacts, so the union of epoch
-    partitions is BIT-IDENTICAL to batch dsir_score over the union of the
-    inputs, across slicings and restarts; and dsir_score with a model
-    built from a corpus reproduces the registry op x6_dsir_sample's
-    (liw_micro, keep) on that corpus — deploy == registry, structurally.
-
-    Scale shape per micro-batch: one tokenize pass, one batch-sized
-    (doc,bucket) count agg, one broadcast join against the B-row model —
-    no state beyond the frozen artifacts. Writes are per-epoch directory
-    overwrites (the file-level exactly-once discipline); epochs compact
-    via compact_dsir_verdicts."""
-    import os
-
-    from otlp2parquet_spark.extensions.pipeline import (
-        dsir_read_model,
-        dsir_score,
-    )
-
-    _require_local_state(out_dir, "dsir_select_stream")
-    # Frozen artifact, read ONCE: collect the <= B+1 row table to the
-    # driver and recreate it as a local relation (the T13 weight-vector
-    # discipline) — no executor-storage persist to leak across repeated
-    # stream invocations in one session (the restart pattern).
     persisted, th = dsir_read_model(spark, model_path)
     model = spark.createDataFrame(
         [(int(r.bk), int(r.lr_i)) for r in persisted.collect()],
         "bk long, lr_i long",
     )
+    return lambda batch: dsir_score(batch.select("doc_id", "text"), model, th)
 
-    def flush(batch_df: DataFrame, epoch_id: int) -> None:
-        dsir_score(batch_df.select("doc_id", "text"), model, th).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
 
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
+def lm_scorer(spark: SparkSession, artifact_dir: str):
+    """T18, the CCNet deploy loop: (doc_id, source, n_bigrams, lm_score)
+    against the add-one bigram counts persisted by text.lm_write_model. A
+    doc's bigrams never straddle batches and the per-doc sum runs in
+    DECIMAL; lm_read_model measures the join route once here, never per
+    batch. With the artifact trained on the even-doc_id half, the verdict
+    union equals the t18_lm_score_frozen batch twin row for row."""
+    from otlp2parquet_spark.extensions.text import lm_read_model, lm_score_frozen
+
+    model, prefix, vocab, n_model, n_prefix = lm_read_model(spark, artifact_dir)
+    return lambda batch: lm_score_frozen(
+        batch.select("doc_id", "text", "source"),
+        model, prefix, vocab, n_model, n_prefix,
     )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
-def compact_dsir_verdicts(spark: SparkSession, out_dir: str) -> int:
-    """Compact dsir_select_stream's epoch-partitioned verdicts — append-only
-    per-doc rows, same contract as the T13 score table."""
-    _require_local_state(out_dir, "compact_dsir_verdicts")
-    return _compact_union_epochs(
-        spark, out_dir, key_cols=("doc_id",), sort_cols=("doc_id",)
+def decontam_scorer(spark: SparkSession, benchset_dir: str):
+    """T20: (doc_id, n_grams, n_hits, contamination, contaminated)
+    verdicts — exact trigram overlap counts against the benchmark set
+    persisted by pipeline.decontam_write_benchset, the filter a training
+    pipeline runs before data enters the corpus. The set is
+    benchmark-bounded by construction, so its broadcast join is cheap."""
+    from otlp2parquet_spark.extensions.pipeline import (
+        decontam_read_benchset,
+        decontam_score,
     )
+
+    bench = decontam_read_benchset(spark, benchset_dir)
+    return lambda batch: decontam_score(batch.select("doc_id", "text"), bench)
 
 
 # ---------------------------------------------------------------------------
@@ -1441,7 +1397,6 @@ def exactdedup_stream(
     state_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     rows_per_bucket: int = BAND_ROWS_PER_BUCKET,
 ):
     """Streaming first-seen EXACT dedup: the live form of batch
@@ -1470,17 +1425,14 @@ def exactdedup_stream(
     compaction re-buckets (the measured-flat T11 property; the index and
     probe layouts are the same code paths). Epochs compact via
     compact_hash_index."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
+    return _drain(
+        spark,
+        DOCS_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        make_exactdedup_flush(spark, state_dir, rows_per_bucket=rows_per_bucket),
+        max_files_per_trigger,
     )
-    ws = stream.writeStream.foreachBatch(
-        make_exactdedup_flush(spark, state_dir, rows_per_bucket=rows_per_bucket)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        ws = ws.trigger(availableNow=True)
-    return ws.start()
 
 
 def compact_hash_index(
@@ -1501,20 +1453,6 @@ def compact_hash_index(
         rows_per_bucket,
         "compact_hash_index",
         "h string, first_id long",
-    )
-
-
-def compact_dedup_flags(spark: SparkSession, state_dir: str) -> int:
-    """Compact exactdedup_stream's epoch-partitioned verdicts — append-only
-    per-doc rows, the T11 flags contract."""
-    import os
-
-    _require_local_state(state_dir, "compact_dedup_flags")
-    return _compact_union_epochs(
-        spark,
-        os.path.join(state_dir, "flags"),
-        key_cols=("doc_id",),
-        sort_cols=("doc_id",),
     )
 
 
@@ -1580,7 +1518,6 @@ def heavyhitters_stream(
     state_dir: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
 ):
     """Streaming heavy-hitter candidate maintenance: the live form of
     x4_heavy_hitters' pass 1 (extensions/text.py). Every arriving
@@ -1601,17 +1538,14 @@ def heavyhitters_stream(
     row written per epoch — state growth is epochs x K-bounded, never
     vocab-bounded, and compact_hh_state collapses history to the distinct
     candidate union."""
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
+    return _drain(
+        spark,
+        DOCS_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        make_heavyhitters_flush(spark, state_dir),
+        max_files_per_trigger,
     )
-    ws = stream.writeStream.foreachBatch(
-        make_heavyhitters_flush(spark, state_dir)
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        ws = ws.trigger(availableNow=True)
-    return ws.start()
 
 
 def heavy_hitters_from_state(
@@ -1669,86 +1603,16 @@ def compact_hh_state(spark: SparkSession, state_dir: str) -> tuple[int, int]:
     epochs removed, total epochs removed)."""
     import os
 
-    _require_local_state(state_dir, "compact_hh_state")
-    c = _compact_union_epochs(
+    c = compact_epochs(
         spark, os.path.join(state_dir, "cands"), key_cols=("t",), sort_cols=("t",)
     )
-    t = _compact_union_epochs(
+    t = compact_epochs(
         spark,
         os.path.join(state_dir, "totals"),
         key_cols=("src_epoch",),
         sort_cols=("src_epoch",),
     )
     return c, t
-
-
-# ---------------------------------------------------------------------------
-# T18: frozen-LM perplexity scoring at ingest (r10) — the CCNet deploy loop
-# ---------------------------------------------------------------------------
-
-
-def lmscore_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    artifact_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-):
-    """Deploy a FROZEN add-one bigram LM to the ingest path: every arriving
-    documents batch is scored against the artifact persisted by
-    text.lm_write_model — the CCNet production loop (train KenLM offline,
-    perplexity-score at ingest), T13's frozen-artifact pattern applied to
-    the LM family. Verdicts (doc_id, source, n_bigrams, lm_score) land
-    per-epoch under out_dir/epoch=N.
-
-    Equivalence contract (tests/test_streaming_lmscore.py): scores are a
-    pure function of (doc, frozen counts) — a doc's bigrams never straddle
-    batches and the per-doc sum runs in DECIMAL — so the union of all
-    epoch partitions is BIT-IDENTICAL to lm_score_frozen over the union of
-    the inputs, across any micro-batch slicing and any stop/restart; with
-    the artifact trained on the even-doc_id half, that union equals the
-    t18_lm_score_frozen batch twin row for row.
-
-    Scale shape per micro-batch: one tokenize pass over the batch and the
-    lm_model_route-d joins against the frozen frames — the route count is
-    measured ONCE at stream setup (lm_read_model), never per batch; no
-    state beyond the artifact."""
-    import os
-
-    from otlp2parquet_spark.extensions.text import lm_read_model, lm_score_frozen
-
-    _require_local_state(out_dir, "lmscore_stream")
-    model, prefix, vocab, n_model, n_prefix = lm_read_model(spark, artifact_dir)
-
-    def flush(batch_df: DataFrame, epoch_id: int) -> None:
-        lm_score_frozen(
-            batch_df.select("doc_id", "text", "source"),
-            model, prefix, vocab, n_model, n_prefix,
-        ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"epoch={int(epoch_id)}")
-        )
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_lm_scores(spark: SparkSession, out_dir: str) -> int:
-    """Compact lmscore_stream's epoch-partitioned verdicts — append-only
-    per-doc rows, the T13 contract."""
-    _require_local_state(out_dir, "compact_lm_scores")
-    return _compact_union_epochs(
-        spark, out_dir, key_cols=("doc_id",), sort_cols=("doc_id",)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1844,76 +1708,6 @@ def hll_estimate_from_registers(
     ).otherwise(e_raw)
     return per.withColumn("s", s).select(
         *keys, (F.floor(e * 10000.0 + 0.5) / 10000.0).alias("n_approx")
-    )
-
-
-# ---------------------------------------------------------------------------
-# T20: streaming benchmark decontamination at ingest (r10) — flag arriving
-# documents against a FROZEN benchmark gram set, the filter every training
-# pipeline runs before data enters the corpus (the reverse direction of
-# x6_contamination's batch audit, deployed T13-style).
-# ---------------------------------------------------------------------------
-
-
-def decontam_stream(
-    spark: SparkSession,
-    landing_dir: str,
-    benchset_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-):
-    """Score every arriving documents batch against the benchmark trigram
-    set persisted by extensions.pipeline.decontam_write_benchset: per-doc
-    (n_grams, n_hits, contamination, contaminated) verdicts land per-epoch
-    under out_dir/epoch=N — keep/drop is then a filter on `contaminated`.
-
-    Equivalence contract (tests/test_streaming_decontam.py): verdicts are
-    exact integer overlap counts against a frozen artifact plus one
-    quantized division, so the union of all epoch partitions is
-    BIT-IDENTICAL to batch decontam_score over the union of the inputs,
-    across any micro-batch slicing and stop/restart; epochs compact like
-    any append-only verdict table.
-
-    Scale shape per micro-batch: one tokenize+distinct pass over the batch
-    and a broadcast join against the benchmark grams (benchmark-bounded BY
-    CONSTRUCTION — thousands of eval items, never corpus-scale; that
-    asymmetry is what makes decontamination-at-ingest cheap). No state
-    beyond the artifact."""
-    import os
-
-    from otlp2parquet_spark.extensions.pipeline import (
-        decontam_read_benchset,
-        decontam_score,
-    )
-
-    _require_local_state(out_dir, "decontam_stream")
-    bench = decontam_read_benchset(spark, benchset_dir)  # frozen, read once
-
-    def flush(batch_df: DataFrame, epoch_id: int) -> None:
-        decontam_score(batch_df.select("doc_id", "text"), bench).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(out_dir, f"epoch={int(epoch_id)}"))
-
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(flush)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_decontam_verdicts(spark: SparkSession, out_dir: str) -> int:
-    """Compact decontam_stream's epoch-partitioned verdicts — append-only
-    per-doc rows, the T13 contract."""
-    _require_local_state(out_dir, "compact_decontam_verdicts")
-    return _compact_union_epochs(
-        spark, out_dir, key_cols=("doc_id",), sort_cols=("doc_id",)
     )
 
 
@@ -2089,20 +1883,15 @@ def ingest_funnel_stream(
     # t21_funnel_skeleton form; see make_ingest_funnel_flush)
     w = None if qc_model_path is None else qc_read_model(spark, qc_model_path)
     bench = decontam_read_benchset(spark, benchset_dir)
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            make_ingest_funnel_flush(
-                spark, state_dir, w, bench, rows_per_bucket=rows_per_bucket
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark,
+        DOCS_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        make_ingest_funnel_flush(
+            spark, state_dir, w, bench, rows_per_bucket=rows_per_bucket
+        ),
+        max_files_per_trigger,
     )
 
 
@@ -2121,12 +1910,7 @@ def compact_ingest_funnel(
     _require_local_state(state_dir, "compact_ingest_funnel")
     n_h = compact_hash_index(spark, state_dir, rows_per_bucket=rows_per_bucket)
     n_b = compact_band_index(spark, state_dir, rows_per_bucket=rows_per_bucket)
-    n_v = _compact_union_epochs(
-        spark,
-        os.path.join(state_dir, "verdicts"),
-        key_cols=("doc_id",),
-        sort_cols=("doc_id",),
-    )
+    n_v = compact_epochs(spark, os.path.join(state_dir, "verdicts"))
     return n_h, n_b, n_v
 
 
@@ -2175,9 +1959,7 @@ def make_budget_admit_flush(spark: SparkSession, state_dir: str, budget: int):
     def flush(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
         offset = 0
-        if os.path.isdir(totals_dir) and any(
-            d.startswith("epoch=") for d in os.listdir(totals_dir)
-        ):
+        if _epochs(totals_dir):
             # explicit schema: a zero-doc drain writes a rowless epoch
             row = (
                 spark.read.schema("batch_toks long, epoch int")
@@ -2244,33 +2026,13 @@ def budget_admit_stream(
     union of the inputs, across slicings, restarts and replays — all
     quantities are exact integers."""
     _require_local_state(state_dir, "budget_admit_stream")
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(
-            make_budget_admit_flush(spark, state_dir, budget)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def compact_budget_verdicts(spark: SparkSession, state_dir: str) -> int:
-    """Compact budget_admit_stream's epoch-partitioned verdicts (totals
-    stay per-epoch: they ARE the replay state — one tiny row each — and
-    merging them would change every later epoch's offset derivation)."""
-    import os
-
-    _require_local_state(state_dir, "compact_budget_verdicts")
-    return _compact_union_epochs(
+    return _drain(
         spark,
-        os.path.join(state_dir, "verdicts"),
-        key_cols=("doc_id",),
-        sort_cols=("doc_id",),
+        DOCS_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        make_budget_admit_flush(spark, state_dir, budget),
+        max_files_per_trigger,
     )
 
 
@@ -2279,18 +2041,6 @@ def compact_budget_verdicts(spark: SparkSession, state_dir: str) -> int:
 # ---------------------------------------------------------------------------
 
 SAMPLE_K = 64
-
-
-def _sample_epochs(sample_dir: str) -> list[int]:
-    import os
-
-    if not os.path.isdir(sample_dir):
-        return []
-    return sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(sample_dir)
-        if d.startswith("epoch=")
-    )
 
 
 def make_sample_flush(spark: SparkSession, state_dir: str, k: int = SAMPLE_K):
@@ -2317,7 +2067,7 @@ def make_sample_flush(spark: SparkSession, state_dir: str, k: int = SAMPLE_K):
         cand = batch_df.select(
             "doc_id", F.md5(F.col("doc_id").cast("string")).alias("hv")
         )
-        prior = [p for p in _sample_epochs(sample_dir) if p < e]
+        prior = [p for p in _epochs(sample_dir) if p < e]
         if prior:
             prev = spark.read.schema("doc_id long, hv string").parquet(
                 os.path.join(sample_dir, f"epoch={prior[-1]}")
@@ -2350,16 +2100,13 @@ def sample_stream(
     batch twin over the union of the inputs (the hash order is a pure
     function of the docs), state is k rows regardless of corpus size."""
     _require_local_state(state_dir, "sample_stream")
-    stream = (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(landing_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(make_sample_flush(spark, state_dir, k))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _drain(
+        spark,
+        DOCS_SCHEMA,
+        landing_dir,
+        checkpoint_dir,
+        make_sample_flush(spark, state_dir, k),
+        max_files_per_trigger,
     )
 
 
@@ -2372,7 +2119,7 @@ def compact_sample_state(spark: SparkSession, state_dir: str) -> int:
 
     _require_local_state(state_dir, "compact_sample_state")
     sample_dir = os.path.join(state_dir, "sample")
-    epochs = _sample_epochs(sample_dir)
+    epochs = _epochs(sample_dir)
     for e in epochs[:-1]:
         shutil.rmtree(os.path.join(sample_dir, f"epoch={e}"))
     return max(0, len(epochs) - 1)

@@ -11,10 +11,8 @@ import pytest
 from otlp2parquet_spark.otel import connect
 from otlp2parquet_spark.otel.config import ConfigError, load_config
 
-# full tier (r13, verdict ask #4): heavy sweep/replay module, excluded
-# from the default `pytest tests/` tier so the grading driver's bounded
-# verification window completes; run with SPARK_GRAFT_FULL_TESTS=1
-pytestmark = pytest.mark.full
+# The Spark tests below are full tier (run with SPARK_GRAFT_FULL_TESTS=1);
+# the config and connect tests start no session and run in the default tier.
 
 
 def test_defaults():
@@ -123,6 +121,7 @@ def test_cli_connect_and_validate(tmp_path):
     assert json.loads(r.stdout)["storage"]["output"] == str(tmp_path)
 
 
+@pytest.mark.full
 def test_cli_batch_ingest_end_to_end(spark, tmp_path):
     """`ingest` subcommand: landing dir -> parity layout + D27 summary JSON
     (in-process; get_spark getOrCreate reuses the test session)."""
@@ -141,6 +140,7 @@ def test_cli_batch_ingest_end_to_end(spark, tmp_path):
     assert writer.read_table(spark, str(out), "otel_logs").count() == 81
 
 
+@pytest.mark.full
 def test_cli_stream_available_now(spark, tmp_path):
     """`stream` subcommand with --available-now drains the landing dir once."""
     import shutil
@@ -164,6 +164,7 @@ def test_cli_stream_available_now(spark, tmp_path):
     assert writer.read_table(spark, str(out), "otel_traces").count() == 19
 
 
+@pytest.mark.full
 def test_cli_neardup_end_to_end(spark, tmp_path):
     """`neardup` subcommand: documents landing dir -> per-epoch flags +
     compacted band index + summary JSON; verdicts equal the batch op."""
@@ -198,6 +199,7 @@ def test_cli_neardup_end_to_end(spark, tmp_path):
     assert live == batch
 
 
+@pytest.mark.full
 def test_cli_neardup_empty_landing_dir(spark, tmp_path, capsys):
     """r8 (round-7 review): an empty landing dir must produce a zero-count
     summary, not an AnalysisException on the never-created flags dir — and
@@ -227,6 +229,7 @@ def test_cli_neardup_empty_landing_dir(spark, tmp_path, capsys):
     assert out["index_epochs_compacted"] == 0
 
 
+@pytest.mark.full
 def test_cli_annindex_end_to_end(spark, tmp_path, capsys):
     """`annindex` subcommand (r8): embeddings landing dir -> frozen-quantizer
     artifacts + per-epoch codes + compaction + summary JSON; streamed codes
@@ -272,6 +275,7 @@ def test_cli_annindex_end_to_end(spark, tmp_path, capsys):
     assert got == expected
 
 
+@pytest.mark.full
 def test_cli_annindex_empty_landing_dir(spark, tmp_path, capsys):
     """annindex on an empty landing dir: zero-count summary, no crash."""
     import json as _json
@@ -297,6 +301,7 @@ def test_cli_annindex_empty_landing_dir(spark, tmp_path, capsys):
     assert out["codes_epochs_compacted"] == 0
 
 
+@pytest.mark.full
 def test_cli_wp95_end_to_end(spark, tmp_path, capsys):
     """The wp95 CLI drains an events landing dir into a sealed bucket table
     and its walked summary matches the batch twin restricted to the sealed
@@ -350,6 +355,7 @@ def test_cli_wp95_end_to_end(spark, tmp_path, capsys):
     assert summary["sealed_rows"] == 0 and summary["windows_sealed"] == 0
 
 
+@pytest.mark.full
 def test_cli_whll_end_to_end(spark, tmp_path, capsys):
     """The whll CLI drains an events landing dir into a sealed register
     table and its estimates match the batch twin restricted to the sealed

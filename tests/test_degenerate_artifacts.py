@@ -186,7 +186,7 @@ def test_compact_epoch_index_survives_rowless_epoch(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# epoch-union verdict tables (CLI summaries / _compact_union_epochs)
+# epoch-union verdict tables (CLI summaries / compact_epochs)
 
 
 def test_first_epoch_rows_resolves_redelivery_to_first_verdict(spark):
@@ -210,10 +210,10 @@ def test_first_epoch_rows_resolves_redelivery_to_first_verdict(spark):
 
 
 def test_compact_union_epochs_keeps_first_verdict(spark, tmp_path):
-    """_compact_union_epochs must bake in the FIRST epoch's verdict when a
+    """compact_epochs must bake in the FIRST epoch's verdict when a
     key appears in multiple epochs with different content (re-delivery),
     not an arbitrary winner."""
-    from otlp2parquet_spark.streaming.pipeline import _compact_union_epochs
+    from otlp2parquet_spark.streaming.pipeline import compact_epochs
 
     table = str(tmp_path / "verdicts")
     for e, rows in (
@@ -224,7 +224,7 @@ def test_compact_union_epochs_keeps_first_verdict(spark, tmp_path):
         spark.createDataFrame(rows, "doc_id long, keep boolean").write.mode(
             "overwrite"
         ).parquet(os.path.join(table, f"epoch={e}"))
-    removed = _compact_union_epochs(
+    removed = compact_epochs(
         spark, table, key_cols=("doc_id",), sort_cols=("doc_id",)
     )
     assert removed == 1

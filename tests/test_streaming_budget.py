@@ -15,7 +15,7 @@ from otlp2parquet_spark.extensions.dedup import token_count_expr
 from otlp2parquet_spark.queries.registry import all_specs
 from otlp2parquet_spark.session import load_table
 from otlp2parquet_spark.streaming.pipeline import (
-    compact_budget_verdicts,
+    compact_epochs,
     make_budget_admit_flush,
 )
 
@@ -118,7 +118,7 @@ def test_budget_admit_replay_idempotent_and_compacts(spark, tmp_path):
     flush(spark.createDataFrame(chunks[1], _SCHEMA), 1)
     assert _verdicts(spark, state) == want
     # compaction preserves the ledger (totals stay per-epoch by design)
-    removed = compact_budget_verdicts(spark, state)
+    removed = compact_epochs(spark, os.path.join(state, "verdicts"))
     assert removed >= 1
     assert _verdicts(spark, state) == want
     # a post-compaction epoch still derives the right offset

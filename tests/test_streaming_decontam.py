@@ -20,8 +20,9 @@ from otlp2parquet_spark.extensions.pipeline import (
 )
 from otlp2parquet_spark.session import load_table
 from otlp2parquet_spark.streaming.pipeline import (
-    compact_decontam_verdicts,
-    decontam_stream,
+    compact_epochs,
+    decontam_scorer,
+    deploy_stream,
 )
 
 import pytest
@@ -110,18 +111,22 @@ def test_live_equals_batch_and_catches_planted_contamination(spark, tmp_path):
     files = sorted(glob.glob(f"{flat}/*.parquet"))
     os.link(files[0], f"{part}/00000.parquet")
     out, ckpt = str(tmp_path / "verdicts"), str(tmp_path / "ckpt")
-    decontam_stream(spark, part, art, out, ckpt).awaitTermination()
+    deploy_stream(
+        spark, part, out, ckpt, decontam_scorer(spark, art)
+    ).awaitTermination()
     n1 = spark.read.parquet(out).count()
     assert 0 < n1 < len(want)
     for i, f in enumerate(files[1:], start=1):
         os.link(f, f"{part}/{i:05d}.parquet")
-    decontam_stream(spark, part, art, out, ckpt).awaitTermination()
+    deploy_stream(
+        spark, part, out, ckpt, decontam_scorer(spark, art)
+    ).awaitTermination()
 
     got = sorted(map(tuple, spark.read.parquet(out).select(*COLS).collect()))
     assert got == want
 
     # compaction preserves the verdicts bit-for-bit
-    removed = compact_decontam_verdicts(spark, out)
+    removed = compact_epochs(spark, out)
     assert removed >= 1
     assert sorted(map(tuple, spark.read.parquet(out).select(*COLS).collect())) == want
 

@@ -18,8 +18,9 @@ from otlp2parquet_spark.extensions.pipeline import (
 from otlp2parquet_spark.queries.registry import all_specs
 from otlp2parquet_spark.session import load_table
 from otlp2parquet_spark.streaming.pipeline import (
-    compact_dsir_verdicts,
-    dsir_select_stream,
+    compact_epochs,
+    deploy_stream,
+    dsir_scorer,
 )
 
 import pytest
@@ -82,18 +83,22 @@ def test_stream_verdicts_bit_identical_and_restartable(spark, tmp_path):
     files = sorted(glob.glob(f"{flat}/*.parquet"))
     os.link(files[0], f"{part}/00000.parquet")
     out, ckpt = str(tmp_path / "verdicts"), str(tmp_path / "ckpt")
-    dsir_select_stream(spark, part, model_path, out, ckpt).awaitTermination()
+    deploy_stream(
+        spark, part, out, ckpt, dsir_scorer(spark, model_path)
+    ).awaitTermination()
     assert 0 < spark.read.parquet(out).count() < 300
     for i, f in enumerate(files[1:], start=1):
         os.link(f, f"{part}/{i:05d}.parquet")
-    dsir_select_stream(spark, part, model_path, out, ckpt).awaitTermination()
+    deploy_stream(
+        spark, part, out, ckpt, dsir_scorer(spark, model_path)
+    ).awaitTermination()
 
     cols = ["doc_id", "liw_micro", "n_tok", "keep"]
     got = sorted(map(tuple, spark.read.parquet(out).select(*cols).collect()))
     want = sorted(map(tuple, dsir_score(docs, model, th).select(*cols).collect()))
     assert got == want
     # epochs accreted; compaction preserves the exact verdict set
-    removed = compact_dsir_verdicts(spark, out)
+    removed = compact_epochs(spark, out)
     assert removed >= 1
     assert sorted(map(tuple, spark.read.parquet(out).select(*cols).collect())) == want
 

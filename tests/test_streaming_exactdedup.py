@@ -18,7 +18,7 @@ from otlp2parquet_spark.session import load_table
 from otlp2parquet_spark.streaming.pipeline import (
     _BAND_MAXNB,
     _hash_bucket,
-    compact_dedup_flags,
+    compact_epochs,
     compact_hash_index,
     exactdedup_stream,
     history_probe_paths,
@@ -113,7 +113,7 @@ def test_live_equals_batch_across_slicings_and_restart(spark, tmp_path):
     assert any(r[2] for r in want)
 
     # flag compaction preserves the exact verdict set
-    removed = compact_dedup_flags(spark, state)
+    removed = compact_epochs(spark, os.path.join(state, "flags"))
     assert removed >= 1
     assert (
         sorted(map(tuple, spark.read.parquet(f"{state}/flags").select(*COLS).collect()))

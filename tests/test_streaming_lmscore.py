@@ -22,7 +22,7 @@ from otlp2parquet_spark.extensions.text import (
 )
 from otlp2parquet_spark.queries.registry import all_specs
 from otlp2parquet_spark.session import load_table
-from otlp2parquet_spark.streaming.pipeline import compact_lm_scores, lmscore_stream
+from otlp2parquet_spark.streaming.pipeline import compact_epochs, deploy_stream, lm_scorer
 import pytest
 
 # full tier (r13, verdict ask #4): heavy sweep/replay module, excluded
@@ -84,25 +84,25 @@ def test_live_equals_twin_across_slicings_and_restart(spark, tmp_path):
     files = sorted(glob.glob(f"{flat}/*.parquet"))
     os.link(files[0], f"{part}/00000.parquet")
     out, ckpt = str(tmp_path / "scores"), str(tmp_path / "ckpt")
-    lmscore_stream(spark, part, art, out, ckpt).awaitTermination()
+    deploy_stream(spark, part, out, ckpt, lm_scorer(spark, art)).awaitTermination()
     n1 = spark.read.parquet(out).count()
     assert 0 < n1 < len(want)
     for i, f in enumerate(files[1:], start=1):
         os.link(f, f"{part}/{i:05d}.parquet")
-    lmscore_stream(spark, part, art, out, ckpt).awaitTermination()
+    deploy_stream(spark, part, out, ckpt, lm_scorer(spark, art)).awaitTermination()
 
     got = sorted(map(tuple, spark.read.parquet(out).select(*COLS).collect()))
     assert got == want
 
     # a coarser slicing reaches the identical rows
     out2, ckpt2 = str(tmp_path / "scores2"), str(tmp_path / "ckpt2")
-    lmscore_stream(
-        spark, flat, art, out2, ckpt2, max_files_per_trigger=64
+    deploy_stream(
+        spark, flat, out2, ckpt2, lm_scorer(spark, art), max_files_per_trigger=64
     ).awaitTermination()
     assert sorted(map(tuple, spark.read.parquet(out2).select(*COLS).collect())) == want
 
     # compaction preserves the verdicts bit-for-bit
-    removed = compact_lm_scores(spark, out)
+    removed = compact_epochs(spark, out)
     assert removed >= 1
     assert sorted(map(tuple, spark.read.parquet(out).select(*COLS).collect())) == want
 

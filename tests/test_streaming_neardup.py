@@ -414,7 +414,7 @@ def test_compact_flags_preserves_verdicts(spark, dirs):
     for i, s in enumerate(slices[:3]):
         flush(_mkdf(spark, s), i)
     pre = _flags(spark, state)
-    assert P.compact_flags(spark, state) == 1
+    assert P.compact_epochs(spark, os.path.join(state, "flags")) == 1
     names = sorted(
         d for d in os.listdir(os.path.join(state, "flags")) if d.startswith("epoch=")
     )
@@ -459,7 +459,7 @@ def test_state_machinery_refuses_uri_schemed_paths(spark, tmp_path):
     for fn in (
         lambda: P.make_neardup_flush(spark, "s3a://bucket/state"),
         lambda: P.compact_band_index(spark, "s3a://bucket/state"),
-        lambda: P.compact_flags(spark, "hdfs://nn/state"),
+        lambda: P.compact_epochs(spark, "hdfs://nn/state/flags"),
         lambda: P.compact_codes_index(spark, "s3a://bucket/idx"),
     ):
         with pytest.raises(NotImplementedError):
@@ -484,7 +484,7 @@ def test_union_compaction_converges_after_publish_crash(spark, dirs):
     # exactly the on-disk state of a crash after publish, before cleanup
     for e in (0, 1):
         shutil.copytree(os.path.join(fdir, f"epoch={e}"), str(dirs[0]) + f"_snap{e}")
-    assert P.compact_flags(spark, state) == 1
+    assert P.compact_epochs(spark, os.path.join(state, "flags")) == 1
     for e in (0, 1):
         shutil.copytree(str(dirs[0]) + f"_snap{e}", os.path.join(fdir, f"epoch={e}"))
     # duplicated rows on disk now; the keyed view still equals pre
@@ -492,6 +492,6 @@ def test_union_compaction_converges_after_publish_crash(spark, dirs):
     assert dup_rows > len(pre)
     assert _flags(spark, state) == pre  # dict build collapses dup copies
     # next compaction converges: row count back to exact, verdicts intact
-    assert P.compact_flags(spark, state) == 2
+    assert P.compact_epochs(spark, os.path.join(state, "flags")) == 2
     assert spark.read.parquet(fdir).count() == len(pre)
     assert _flags(spark, state) == pre

@@ -18,8 +18,9 @@ from otlp2parquet_spark.extensions.text import (
 )
 from otlp2parquet_spark.session import load_table
 from otlp2parquet_spark.streaming.pipeline import (
-    compact_quality_scores,
-    quality_score_stream,
+    compact_epochs,
+    deploy_stream,
+    quality_scorer,
 )
 
 import pytest
@@ -75,7 +76,7 @@ def test_stream_scores_bit_identical_to_batch_and_compact(spark, tmp_path):
     flat = _landing(spark, tmp_path, n_files=5)
     out = str(tmp_path / "scores")
     ckpt = str(tmp_path / "ckpt")
-    q = quality_score_stream(spark, flat, model, out, ckpt)
+    q = deploy_stream(spark, flat, out, ckpt, quality_scorer(spark, model))
     q.awaitTermination()
     got = sorted(map(tuple, spark.read.parquet(out).select("doc_id", "y", "z", "pred").collect()))
     want = sorted(map(tuple, qc_score(_docs(spark), w).collect()))
@@ -83,7 +84,7 @@ def test_stream_scores_bit_identical_to_batch_and_compact(spark, tmp_path):
     # multiple epochs accreted; compaction preserves the exact verdict set
     epochs = {d for d in os.listdir(out) if d.startswith("epoch=")}
     assert len(epochs) >= 3
-    removed = compact_quality_scores(spark, out)
+    removed = compact_epochs(spark, out)
     assert removed >= 1
     assert sorted(map(tuple, spark.read.parquet(out).select("doc_id", "y", "z", "pred").collect())) == want
 
@@ -100,13 +101,17 @@ def test_stream_restart_resumes_exactly(spark, tmp_path):
     files = sorted(glob.glob(f"{flat}/*.parquet"))
     os.link(files[0], f"{part}/00000.parquet")
     out, ckpt = str(tmp_path / "scores"), str(tmp_path / "ckpt")
-    quality_score_stream(spark, part, model, out, ckpt).awaitTermination()
+    deploy_stream(
+        spark, part, out, ckpt, quality_scorer(spark, model)
+    ).awaitTermination()
     n_first = spark.read.parquet(out).count()
     assert 0 < n_first < 300
     # phase 2: the rest arrive; same checkpoint
     for i, f in enumerate(files[1:], start=1):
         os.link(f, f"{part}/{i:05d}.parquet")
-    quality_score_stream(spark, part, model, out, ckpt).awaitTermination()
+    deploy_stream(
+        spark, part, out, ckpt, quality_scorer(spark, model)
+    ).awaitTermination()
     got = sorted(map(tuple, spark.read.parquet(out).select("doc_id", "y", "z", "pred").collect()))
     want = sorted(map(tuple, qc_score(_docs(spark), w).collect()))
     assert got == want

@@ -13,7 +13,7 @@ from otlp2parquet_spark.queries.registry import all_specs
 from otlp2parquet_spark.session import load_table
 from otlp2parquet_spark.streaming.pipeline import (
     SAMPLE_K,
-    _sample_epochs,
+    _epochs,
     compact_sample_state,
     make_sample_flush,
 )
@@ -33,7 +33,7 @@ def _docs(spark, n=300):
 
 def _latest_sample(spark, state):
     sample_dir = os.path.join(state, "sample")
-    e = _sample_epochs(sample_dir)[-1]
+    e = _epochs(sample_dir)[-1]
     return sorted(
         map(
             tuple,
@@ -100,7 +100,7 @@ def test_sample_replay_and_compaction(spark, tmp_path):
     # snapshot compaction deletes superseded epochs, keeps the newest
     removed = compact_sample_state(spark, state)
     assert removed == 2
-    assert _sample_epochs(os.path.join(state, "sample")) == [2]
+    assert _epochs(os.path.join(state, "sample")) == [2]
     assert _latest_sample(spark, state) == want
     # a post-compaction epoch merges from the surviving snapshot
     extra = [(999_999, "omega", "en", "s", 5)]
