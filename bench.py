@@ -153,21 +153,16 @@ HEADLINE = [
 RUNS_PER_QUERY = 3
 
 INGEST_RECORDS = 100_000  # logs.jsonl fixture replicated across 32 landing files
-# the native lane is ~30x faster, so it needs ~10x the rows before per-job
-# fixed overhead stops dominating the rate (BASELINE.md measures it at 1M)
-NATIVE_RECORDS = 1_000_000
 
 
 def _ingest_metrics(spark) -> dict[str, float]:
     """Ingest throughput (BASELINE.md protocol): reference logs fixture
-    scaled to ~100k records; (a) Python codec decode + parity partitioned
-    write, (b) pure-Catalyst JSONL fast lane decode-only."""
+    scaled to ~100k records: Python codec decode + parity partitioned
+    write, then the protobuf lanes (_py_pb_metrics)."""
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
-    from otlp2parquet_spark.otel import ingest, native_json, writer
+    from otlp2parquet_spark.otel import ingest, writer
 
     src = open("/root/reference/testdata/logs.jsonl").read().strip().splitlines()
     reps = INGEST_RECORDS // len(src) + 1
@@ -193,34 +188,7 @@ def _ingest_metrics(spark) -> dict[str, float]:
             rows = sum(r.rows for r in acct)
             decode_write = max(decode_write, rows / (time.perf_counter() - t0))
 
-        # native lane at NATIVE_RECORDS: replicate the landing files so the
-        # measured window is decode-bound, not job-scheduling-bound
-        native_landing = tempfile.mkdtemp(prefix="bench_native_")
-        reps_native = NATIVE_RECORDS // len(all_lines) + 1
-        chunk = "\n".join(all_lines)
-        for i in range(reps_native):
-            with open(f"{native_landing}/n{i}.jsonl", "w") as f:
-                f.write(chunk)
-        lines = (
-            spark.read.text(native_landing)
-            .filter(F.length(F.trim("value")) > 0)
-            .select(F.col("value").alias("line"))
-        )
-        n = lines.count()
-        decoded = native_json.decode_logs_json_native(lines)
-        # noop write: count() would prune the HOF column-building and
-        # measure only parse+explode (the r1 anchor's flaw)
-        decoded.write.format("noop").mode("overwrite").save()  # warm
-        native_rate = 0.0
-        for _ in range(2):
-            t0 = time.perf_counter()
-            decoded.write.format("noop").mode("overwrite").save()
-            native_rate = max(native_rate, n / (time.perf_counter() - t0))
-        shutil.rmtree(native_landing, ignore_errors=True)
-        metrics = {
-            "ingest_decode_write_rows_per_s": round(decode_write),
-            "ingest_native_decode_rows_per_s": round(native_rate),
-        }
+        metrics = {"ingest_decode_write_rows_per_s": round(decode_write)}
         metrics.update(_py_pb_metrics(spark))
         return metrics
     finally:

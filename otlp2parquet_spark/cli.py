@@ -928,7 +928,7 @@ def main(argv: list[str] | None = None) -> int:
     if args.command in ("ingest", "stream"):
         from otlp2parquet_spark.otel import config as cfgmod
         from otlp2parquet_spark.otel import ingest as batch_ingest
-        from otlp2parquet_spark.otel import schemas, writer
+        from otlp2parquet_spark.otel import writer
         from otlp2parquet_spark.session import get_spark
 
         spark = get_spark(app_name=f"otlp2parquet-{args.command}")
@@ -944,23 +944,13 @@ def main(argv: list[str] | None = None) -> int:
                 max_payload_bytes=cfg.request["max_payload_bytes"],
                 quarantine_dir=args.quarantine,
             )
-            summary: dict[str, int] = {}
-            for name, df in tables.items():
-                if name.startswith("_"):
-                    continue
-                if layout == "parity":
-                    acct = writer.write_partitioned(
-                        df, name, root, max_rows_per_file=cfg.batch["max_rows"]
-                    )
-                    summary[name] = int(
-                        acct.agg({"rows": "sum"}).collect()[0][0] or 0
-                    )
-                else:
-                    # counted on the write action itself: no extra job, and
-                    # only this run's rows, not earlier runs' under `root`
-                    df, obs = batch_ingest.observed(df, f"ingest-{name}")
-                    writer.write_native(df, name, root, max_rows_per_file=cfg.batch["max_rows"])
-                    summary[name] = int(obs.get["records"])
+            summary = {
+                name: writer.write_table(
+                    df, name, root, layout=layout, max_rows_per_file=cfg.batch["max_rows"]
+                )
+                for name, df in tables.items()
+                if not name.startswith("_")
+            }
             if "_union" in tables:
                 tables["_union"].unpersist()
             # D27 response-accounting twin

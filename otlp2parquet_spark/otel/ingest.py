@@ -25,12 +25,13 @@ never double math).
 
 from __future__ import annotations
 
+import functools
 import gzip
 import os
 from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -67,28 +68,37 @@ def payload_format_col(path_col) -> "F.Column":
     return F.when(ext == "", F.lit(None)).otherwise(ext)
 
 
-def _landing_scan(
-    spark: SparkSession, path: str, max_payload_bytes: int, size_col, select_cols
-) -> tuple[DataFrame, DataFrame]:
-    """Shared landing-scan construction for both lanes: one place owns the
-    binaryFile options, the format dispatch, and the D4/D3 rejection rules,
-    so the content lane and the locality lane can never drift apart
-    (test_locality_lane_matches_content_lane holds by construction)."""
-    df = (
-        spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*")
-        .option("recursiveFileLookup", "true")
-        .load(path)
-        .select(*select_cols, payload_format_col(F.col("path")).alias("fmt"))
-    )
-    # binaryFile yields >= 1 scan partition per payload file, so the
-    # CPU-bound decode already parallelizes across files; no repartition
-    # (shuffling raw payload bytes costs more than it buys — measured).
+def _admission(df: DataFrame, max_payload_bytes: int, size_col, select_cols):
+    """The landing admission rule, shared by every landing scan (batch
+    content, batch locality and streaming), so none of them can drift:
+    tag each file's format (D3) and check the size guard (D4).
+
+    Returns (tagged frame, admitted predicate, reject reason)."""
+    df = df.select(*select_cols, payload_format_col(F.col("path")).alias("fmt"))
     ok = (size_col <= F.lit(max_payload_bytes)) & F.col("fmt").isNotNull()
     reason = (
         F.when(F.col("fmt").isNull(), F.lit("unknown format"))
         .when(size_col > F.lit(max_payload_bytes), F.lit("payload too large"))
     )
+    return df, ok, reason
+
+
+def _landing_scan(
+    spark: SparkSession, path: str, max_payload_bytes: int, size_col, select_cols
+) -> tuple[DataFrame, DataFrame]:
+    """Batch landing scan for both lanes -> (accepted, rejected)."""
+    df, ok, reason = _admission(
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*")
+        .option("recursiveFileLookup", "true")
+        .load(path),
+        max_payload_bytes,
+        size_col,
+        select_cols,
+    )
+    # binaryFile yields >= 1 scan partition per payload file, so the
+    # CPU-bound decode already parallelizes across files; no repartition
+    # (shuffling raw payload bytes costs more than it buys — measured).
     return df.filter(ok), df.filter(~ok).select("path", reason.alias("reason"))
 
 
@@ -211,12 +221,14 @@ def _read_payload_bytes(path: str) -> bytes:
         raise OtlpDecodeError(f"payload read failed: {e}") from e
 
 
-
 def _gunzip(content: bytes) -> bytes:
-    """gzip-decompress with the quarantine contract: corrupted/truncated
-    gzip (crashed uploader) raises OtlpDecodeError, never a bare
-    zlib.error/EOFError that would fail the whole Spark task (round-6
-    review finding — the float({}) guard's sibling)."""
+    """Decompress a gzip body (sniffed by its magic, D2) with the quarantine
+    contract: corrupted/truncated gzip (crashed uploader) raises
+    OtlpDecodeError, never a bare zlib.error/EOFError that would fail the
+    whole Spark task (round-6 review finding — the float({}) guard's
+    sibling). Other bodies pass through."""
+    if content[:2] != b"\x1f\x8b":
+        return content
     try:
         return gzip.decompress(content)
     except Exception as e:
@@ -225,8 +237,7 @@ def _gunzip(content: bytes) -> bytes:
 
 def _parse_payload(content: bytes, fmt: str, signal: str) -> list[dict[str, Any]]:
     """payload bytes -> list of canonical request dicts (D2/D5/D6/D7)."""
-    if content[:2] == b"\x1f\x8b":  # gzip magic (D2)
-        content = _gunzip(content)
+    content = _gunzip(content)
     if fmt == "pb":
         return [wire.parse_request_pb(content, signal)]
     if fmt == "json":
@@ -280,15 +291,9 @@ def _write_quarantine(
 def read_quarantine(spark: SparkSession, qdir: str) -> DataFrame:
     """Quarantined payload accounting: (path, code, error) rows from the
     sidecar files (D25/D27)."""
-    schema = StructType(
-        [
-            StructField("path", StringType(), True),
-            StructField("code", StringType(), True),
-            StructField("error", StringType(), True),
-        ]
-    )
     import glob
 
+    schema = "path STRING, code STRING, error STRING"
     files = glob.glob(os.path.join(qdir, "*.error.json"))
     if not files:
         return spark.createDataFrame([], schema)
@@ -318,25 +323,6 @@ def _handle_decode_error(
     # on_error == "skip": drop silently (caller opted out of accounting)
 
 
-def ingest_jsonl_fast(spark: SparkSession, path: str, signal: str = "logs") -> DataFrame:
-    """Bulk JSONL logs/traces -> otel table via the pure-Catalyst fast path
-    (otel/native_json.py): line-split text scan, from_json decode, automatic
-    fallback of nested-shaped lines to the general codec. ~1.8x the Python
-    codec's throughput on scalar-shaped corpora, zero Python in the hot loop."""
-    from otlp2parquet_spark.otel import native_json
-
-    lines = (
-        spark.read.text(path)
-        .filter(F.length(F.trim("value")) > 0)
-        .select(F.col("value").alias("line"))
-    )
-    if signal == "logs":
-        return native_json.decode_logs_json_auto(lines)
-    if signal == "traces":
-        return native_json.decode_traces_json_auto(lines)
-    raise ValueError(f"fast path supports logs|traces, got {signal!r}")
-
-
 def read_landing_lines(spark: SparkSession, path: str) -> DataFrame:
     """Line-splitting scan for large JSONL landing files (S3, `spark.read.text`).
 
@@ -358,19 +344,28 @@ def read_landing_lines(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def ingest_jsonl_fast(spark: SparkSession, path: str, signal: str = "logs") -> DataFrame:
+    """Bulk JSONL logs/traces -> otel table through the line-split scan
+    (`read_landing_lines`): every line decodes as its own payload with the
+    fused Python codec, so one big file spreads over `maxPartitionBytes`
+    ranges instead of decoding as one task. Rows equal the file-payload
+    path's (tests/test_ingest_paths.py)."""
+    if signal not in ("logs", "traces"):
+        raise ValueError(f"fast path supports logs|traces, got {signal!r}")
+    return _decode_table(read_landing_lines(spark, path), signal, "raise", None, None)
+
+
 # ---------------------------------------------------------------------------
-# Logs / traces decode
+# Decode: one mapInArrow kernel, one row function per signal
 
 
 def _flatten_payload(content: bytes, fmt: str, signal: str) -> list[dict[str, Any]]:
-    """payload bytes -> flat rows. JSON/JSONL logs+traces take the fused
+    """payload bytes -> flat logs/traces rows. JSON/JSONL take the fused
     single-pass walker (otel/fast_flatten.py, ~3x the two-step lane); pb
-    logs+traces take the fused wire walker (otel/fast_wire.py, ~2.4x).
-    Both are differentially verified against the slow pairs
-    (test_fast_flatten.py / test_fast_wire.py); pb metrics keep the
-    wire codec + flatten pair."""
-    if content[:2] == b"\x1f\x8b":  # gzip magic (D2)
-        content = _gunzip(content)
+    takes the fused wire walker (otel/fast_wire.py, ~2.4x). Both are
+    differentially verified against the slow pairs (test_fast_flatten.py /
+    test_fast_wire.py)."""
+    content = _gunzip(content)
     if fmt == "pb":
         if signal == "logs":
             return fast_wire.flatten_logs_pb(content)
@@ -380,24 +375,27 @@ def _flatten_payload(content: bytes, fmt: str, signal: str) -> list[dict[str, An
     return fast_flatten.flatten_request_jsonl(content, signal)
 
 
-def _decode_simple(
-    signal: str,
-    table: str,
+def _decode_kernel(
+    rows_of,
+    schema: StructType,
     on_error: str,
     quarantine_dir: str | None = None,
     quarantine_counter=None,
+    decode_counter=None,
 ):
-    """mapInArrow kernel: payload batches -> raw-row Arrow batches.
+    """mapInArrow kernel: payload batches -> Arrow batches of `schema`, with
+    `rows_of(content, fmt)` turning one payload into its rows.
 
-    Arrow end-to-end at the Python boundary: the walker's row dicts go
-    straight to `pa.Table.from_pylist` against the exact Arrow schema Spark
-    expects — measured 2.2x the pandas detour (rows -> pd.DataFrame ->
+    Arrow end-to-end at the Python boundary: the row dicts go straight to
+    `pa.Table.from_pylist` against the exact Arrow schema Spark expects —
+    measured 2.2x the pandas detour (rows -> pd.DataFrame ->
     RecordBatch.from_pandas), which was ~20% of worker time once the fused
-    walkers got fast (round-6; BASELINE.md fused-lane table)."""
+    walkers got fast (round-6; BASELINE.md fused-lane table). Columns a row
+    dict lacks are null."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    target = to_arrow_schema(schemas.raw_spark_schema(table))
+    target = to_arrow_schema(schema)
 
     def fn(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         for batch in batches:
@@ -410,6 +408,8 @@ def _decode_simple(
             )
             fmts = batch.column("fmt")
             for i in range(batch.num_rows):
+                if decode_counter is not None:
+                    decode_counter.add(1)
                 # None until the bytes are in hand: a locality-lane read
                 # failure must quarantine WITHOUT a (misleading, empty)
                 # payload copy (ADVICE r6)
@@ -420,7 +420,7 @@ def _decode_simple(
                         if contents is not None
                         else _read_payload_bytes(paths[i].as_py())
                     )
-                    rows.extend(_flatten_payload(content, fmts[i].as_py(), signal))
+                    rows.extend(rows_of(content, fmts[i].as_py()))
                 except OtlpDecodeError as e:
                     _handle_decode_error(
                         e, on_error, quarantine_dir, paths[i].as_py(), content,
@@ -450,17 +450,27 @@ def finalize(raw_df: DataFrame, table: str) -> DataFrame:
     return raw_df.select(*cols)
 
 
+def _decode_table(
+    payloads: DataFrame, signal: str, on_error: str, quarantine_dir, quarantine_counter
+) -> DataFrame:
+    """logs/traces payloads -> golden-typed `otel_{signal}` frame."""
+    table = f"otel_{signal}"
+    schema = schemas.raw_spark_schema(table)
+    rows_of = functools.partial(_flatten_payload, signal=signal)
+    raw = payloads.mapInArrow(
+        _decode_kernel(rows_of, schema, on_error, quarantine_dir, quarantine_counter),
+        schema,
+    )
+    return finalize(raw, table)
+
+
 def decode_logs(
     payloads: DataFrame,
     on_error: str = "raise",
     quarantine_dir: str | None = None,
     quarantine_counter=None,
 ) -> DataFrame:
-    raw = payloads.mapInArrow(
-        _decode_simple("logs", "otel_logs", on_error, quarantine_dir, quarantine_counter),
-        schemas.raw_spark_schema("otel_logs"),
-    )
-    return finalize(raw, "otel_logs")
+    return _decode_table(payloads, "logs", on_error, quarantine_dir, quarantine_counter)
 
 
 def decode_traces(
@@ -469,11 +479,7 @@ def decode_traces(
     quarantine_dir: str | None = None,
     quarantine_counter=None,
 ) -> DataFrame:
-    raw = payloads.mapInArrow(
-        _decode_simple("traces", "otel_traces", on_error, quarantine_dir, quarantine_counter),
-        schemas.raw_spark_schema("otel_traces"),
-    )
-    return finalize(raw, "otel_traces")
+    return _decode_table(payloads, "traces", on_error, quarantine_dir, quarantine_counter)
 
 
 # ---------------------------------------------------------------------------
@@ -510,8 +516,7 @@ def _flatten_metrics_payload(content: bytes, fmt: str):
     walker (otel/fast_flatten.py) — completing the fused decode matrix:
     every (signal x format) hot path is single-pass, each differentially
     verified against its two-step authority."""
-    if content[:2] == b"\x1f\x8b":  # gzip magic (D2)
-        content = _gunzip(content)
+    content = _gunzip(content)
     if fmt == "pb":
         return [fast_wire.flatten_metrics_pb(content)]
     if fmt == "json":
@@ -519,56 +524,19 @@ def _flatten_metrics_payload(content: bytes, fmt: str):
     return fast_flatten.flatten_metrics_request_jsonl(content)
 
 
-def _decode_metrics_fn(
-    on_error: str,
-    decode_counter=None,
-    quarantine_dir: str | None = None,
-    quarantine_counter=None,
-):
-    union_cols = [f.name for f in METRICS_UNION_SCHEMA.fields]
-
-    def fn(batches):
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        target = to_arrow_schema(METRICS_UNION_SCHEMA)
-        for batch in batches:
-            rows: list[dict[str, Any]] = []
-            paths = batch.column("path")
-            contents = (
-                batch.column("content") if "content" in batch.schema.names else None
-            )
-            fmts = batch.column("fmt")
-            for i in range(batch.num_rows):
-                if decode_counter is not None:
-                    decode_counter.add(1)
-                content: bytes | None = None
-                try:
-                    content = (
-                        contents[i].as_py()
-                        if contents is not None
-                        else _read_payload_bytes(paths[i].as_py())
-                    )
-                    for per_type, skipped in _flatten_metrics_payload(content, fmts[i].as_py()):
-                        for mtype, trows in per_type.items():
-                            for r in trows:
-                                r = r | {"MetricType": mtype}
-                                # every union column present (None for the
-                                # other metric types' columns)
-                                rows.append({c: r.get(c) for c in union_cols})
-                        for reason, cnt in skipped.items():
-                            if cnt:
-                                r = {"MetricType": _SKIP_TAG, "SkipReason": reason, "SkipCount": cnt}
-                                rows.append({c: r.get(c) for c in union_cols})
-                except OtlpDecodeError as e:
-                    _handle_decode_error(
-                        e, on_error, quarantine_dir, paths[i].as_py(), content,
-                        quarantine_counter,
-                    )
-            if rows:
-                yield from pa.Table.from_pylist(rows, schema=target).to_batches()
-
-    return fn
+def _metrics_union_rows(content: bytes, fmt: str) -> list[dict[str, Any]]:
+    """payload bytes -> union-frame rows: one per data point tagged with its
+    MetricType, plus one 'skipped' row per non-zero skip counter."""
+    rows: list[dict[str, Any]] = []
+    for per_type, skipped in _flatten_metrics_payload(content, fmt):
+        for mtype, trows in per_type.items():
+            rows.extend(r | {"MetricType": mtype} for r in trows)
+        rows.extend(
+            {"MetricType": _SKIP_TAG, "SkipReason": reason, "SkipCount": cnt}
+            for reason, cnt in skipped.items()
+            if cnt
+        )
+    return rows
 
 
 def decode_metrics_union(
@@ -584,7 +552,10 @@ def decode_metrics_union(
     used by tests to prove the fan-out runs exactly one decode job.
     `quarantine_counter` counts payloads dropped via quarantine/skip."""
     return payloads.mapInArrow(
-        _decode_metrics_fn(on_error, decode_counter, quarantine_dir, quarantine_counter),
+        _decode_kernel(
+            _metrics_union_rows, METRICS_UNION_SCHEMA, on_error, quarantine_dir,
+            quarantine_counter, decode_counter,
+        ),
         METRICS_UNION_SCHEMA,
     )
 
@@ -609,6 +580,14 @@ def skipped_metrics(union_df: DataFrame) -> DataFrame:
     )
 
 
+def split_metrics(union_df: DataFrame) -> dict[str, DataFrame]:
+    """The union frame's 4 persisted metric tables, by table name."""
+    return {
+        schemas.METRIC_TABLES[t]: metrics_table(union_df, t)
+        for t in schemas.PERSISTED_METRIC_TYPES
+    }
+
+
 # ---------------------------------------------------------------------------
 # Ingest observability + response accounting (D26/D27)
 
@@ -619,7 +598,7 @@ def observed(df: DataFrame, name: str):
     src/handlers.rs:102-103).
 
     Returns (df, Observation): the metrics ride the caller's own action (the
-    partitioned write, a count, ...) — no second job, unlike `ingest_summary`.
+    partitioned write, a count, ...) — no second job.
     `Observation.get` blocks until that action completes.
     """
     from pyspark.sql import Observation
@@ -635,15 +614,48 @@ def observed(df: DataFrame, name: str):
     return out, obs
 
 
-def ingest_summary(decoded: dict[str, "DataFrame | str"]) -> dict[str, int]:
-    """records-processed accounting dict (reference src/handlers.rs:191-198).
-    Batch-mode counts; in streaming this becomes `observe()` metrics.
-    Non-frame metadata entries (ingest_directory's '_lane') are skipped."""
-    return {
-        name: df.count()
-        for name, df in decoded.items()
-        if isinstance(df, DataFrame)
-    }
+# ---------------------------------------------------------------------------
+# Signal dispatch: the one place batch, streaming and CLI ingest map a
+# signal to its decoded frames
+
+
+def decode_signal(
+    payloads: DataFrame,
+    signal: str,
+    on_error: str = "raise",
+    decode_counter=None,
+    quarantine_dir: str | None = None,
+    quarantine_counter=None,
+) -> dict[str, DataFrame]:
+    """Landing payloads -> {table_name: decoded frame} for one signal.
+
+    Logs and traces give their one table. Metrics give the union frame as
+    '_union', its `split_metrics` tables and the '_skipped' accounting
+    frame; on a batch source the union is persisted, so the 4 table writes
+    + skip accounting run ONE decode job. A streaming union cannot be
+    persisted: the stream writes '_union' and splits each micro-batch with
+    `split_metrics` instead.
+
+    Passing `quarantine_dir` switches on_error to 'quarantine': invalid
+    payloads + typed-reason sidecars land in the bad-input dir while the
+    pipeline continues (D25)."""
+    if quarantine_dir:
+        on_error = "quarantine"
+    if signal in ("logs", "traces"):
+        return {
+            f"otel_{signal}": _decode_table(
+                payloads, signal, on_error, quarantine_dir, quarantine_counter
+            )
+        }
+    if signal == "metrics":
+        union_df = decode_metrics_union(
+            payloads, on_error, decode_counter, quarantine_dir, quarantine_counter
+        )
+        if not payloads.isStreaming:
+            union_df = union_df.persist(StorageLevel.MEMORY_AND_DISK)
+        skipped = skipped_metrics(union_df)
+        return {**split_metrics(union_df), "_skipped": skipped, "_union": union_df}
+    raise ValueError(f"unknown signal: {signal}")
 
 
 def ingest_directory(
@@ -656,62 +668,19 @@ def ingest_directory(
     decode_counter=None,
     quarantine_dir: str | None = None,
     quarantine_counter=None,
-    lane: str = "auto",
-) -> dict[str, "DataFrame | str"]:
+) -> dict[str, DataFrame]:
     """End-to-end decode of a landing dir for one signal.
 
-    Returns {table_name: DataFrame} (metrics contribute 4 tables + a
-    '_skipped' accounting frame). The metrics union frame is persisted so
-    the 5-way fan-out (4 table writes + skip accounting) runs ONE decode
-    job, mirroring streaming/ingest.py's micro-batch persist; it is exposed
-    as '_union' so callers can unpersist after their actions complete.
-    '_lane' records which landing reader ran.
-
-    `lane`: 'auto' (default — payload-locality for local/posix sources,
-    content/binaryFile for object stores; see read_landing_auto), or force
-    'locality' / 'content'.
-
-    Passing `quarantine_dir` switches on_error to 'quarantine': invalid
-    payloads + typed-reason sidecars land in the bad-input dir while the
-    pipeline continues (D25)."""
-    if quarantine_dir:
-        on_error = "quarantine"
-    if lane not in ("auto", "locality", "content"):
-        raise ValueError(f"unknown lane: {lane}")
-    if lane == "auto":
-        lane = (
-            "locality"
-            if is_local_or_posix(landing_dir, _default_fs_is_local(spark))
-            else "content"
-        )
-    reader = read_landing_meta if lane == "locality" else read_landing
-    payloads, rejected = reader(spark, landing_dir, max_payload_bytes=max_payload_bytes)
-    if signal == "logs":
-        return {
-            "otel_logs": decode_logs(payloads, on_error, quarantine_dir, quarantine_counter),
-            "_rejected": rejected,
-            "_lane": lane,
-        }
-    if signal == "traces":
-        return {
-            "otel_traces": decode_traces(payloads, on_error, quarantine_dir, quarantine_counter),
-            "_rejected": rejected,
-            "_lane": lane,
-        }
-    if signal == "metrics":
-        from pyspark import StorageLevel
-
-        union_df = decode_metrics_union(
-            payloads, on_error, decode_counter, quarantine_dir, quarantine_counter
-        )
-        union_df = union_df.persist(StorageLevel.MEMORY_AND_DISK)
-        out: dict[str, DataFrame] = {
-            schemas.METRIC_TABLES[t]: metrics_table(union_df, t)
-            for t in schemas.PERSISTED_METRIC_TYPES
-        }
-        out["_skipped"] = skipped_metrics(union_df)
-        out["_rejected"] = rejected
-        out["_union"] = union_df
-        out["_lane"] = lane
-        return out
-    raise ValueError(f"unknown signal: {signal}")
+    Returns `decode_signal`'s frames — {table_name: DataFrame}; metrics add
+    '_skipped' and the persisted '_union', which callers unpersist after
+    their actions complete — plus the '_rejected' admission side-output.
+    The reader is `read_landing_auto` (payload-locality lane for local/posix
+    sources, content lane for object stores)."""
+    payloads, rejected = read_landing_auto(
+        spark, landing_dir, max_payload_bytes=max_payload_bytes
+    )
+    out = decode_signal(
+        payloads, signal, on_error, decode_counter, quarantine_dir, quarantine_counter
+    )
+    out["_rejected"] = rejected
+    return out

@@ -250,6 +250,38 @@ def write_native(
     return path
 
 
+def write_table(
+    df: DataFrame,
+    table: str,
+    root: str,
+    *,
+    layout: str = "parity",
+    bucket: str = "hour",
+    max_rows_per_file: int = DEFAULT_MAX_ROWS_PER_FILE,
+    run_tag: str | None = None,
+) -> int:
+    """Write one decoded table in `layout` ('parity' or 'native') and return
+    the rows written — the one write call of batch, streaming and CLI ingest.
+
+    The count rides the write action itself: no extra job, and only this
+    write's rows, never earlier runs' under `root`. Parity sums its
+    accounting frame (one row per file); native counts through an
+    `ingest.observed` probe. `bucket` and `run_tag` apply to parity only
+    (see write_partitioned)."""
+    if layout == "parity":
+        acct = write_partitioned(
+            df, table, root, bucket=bucket, max_rows_per_file=max_rows_per_file,
+            run_tag=run_tag,
+        )
+        return sum(r["rows"] for r in acct.collect())
+    # imported here: parity write tasks unpickle this module and need no codecs
+    from otlp2parquet_spark.otel.ingest import observed
+
+    df, obs = observed(df, f"ingest-{table}")
+    write_native(df, table, root, max_rows_per_file=max_rows_per_file)
+    return int(obs.get["records"])
+
+
 def read_table(spark, root: str, table: str, *, layout: str = "parity") -> DataFrame:
     """Read-back of a written table (Q10).
 

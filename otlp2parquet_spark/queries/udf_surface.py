@@ -178,8 +178,8 @@ def u5_udtf_props_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def u4_mapinarrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U4: mapInArrow batch transform — whole Arrow RecordBatches enter the
     Python worker with ZERO pandas conversion (the cheapest Python boundary
-    Spark has; this is the same primitive every binary decode lane in
-    otel/ingest.py and otel/native_json.py is built on, declared here over
+    Spark has; this is the same primitive the OTLP decode kernel in
+    otel/ingest.py is built on, declared here over
     a synthetic table so the id has its own oracle row). The kernel is pure
     pyarrow.compute (vectorized, per-row Python never runs), the filter is
     applied BEFORE the Arrow stage so it pushes to the parquet scan, and

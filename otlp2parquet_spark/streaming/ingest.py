@@ -33,7 +33,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from otlp2parquet_spark.otel import ingest, schemas, writer
+from otlp2parquet_spark.otel import ingest, writer
 
 BINARYFILE_SCHEMA = StructType(
     [
@@ -52,7 +52,12 @@ def read_landing_stream(
     max_files_per_trigger: int | None = None,
     max_payload_bytes: int = ingest.DEFAULT_MAX_PAYLOAD_BYTES,
 ) -> DataFrame:
-    """Streaming twin of ingest.read_landing (S6).
+    """Streaming twin of ingest.read_landing (S6), with the batch scan's
+    admission rule (size guard D4, format dispatch D3).
+
+    Rejected payloads are counted, not silently dropped: the pre-filter
+    frame carries a `landing` observation whose `rejected` field rides each
+    micro-batch's own progress event (no extra job).
 
     `maxFilesPerTrigger` is the source-side rate limit standing in for the
     reference's backpressure bound (D18): a burst of landing files drains at
@@ -65,20 +70,10 @@ def read_landing_stream(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df = reader.load(landing_dir)
-    return (
-        df.select(
-            "path",
-            "content",
-            # same codegen regexp twin as the batch lane (otel/ingest.py):
-            # property-tested equal to the Python payload_format over
-            # adversarial paths, and keeps the package F.udf-free
-            ingest.payload_format_col(F.col("path")).alias("fmt"),
-        )
-        # size guard (D4) + format dispatch (D3); rejected payloads are
-        # dropped here — quarantine accounting is an observe() metric
-        .filter((F.length("content") <= F.lit(max_payload_bytes)) & F.col("fmt").isNotNull())
+    df, ok, _ = ingest._admission(
+        reader.load(landing_dir), max_payload_bytes, F.length("content"), ("path", "content")
     )
+    return df.observe("landing", F.count_if(~ok).alias("rejected")).filter(ok)
 
 
 def stream_ingest(
@@ -107,52 +102,34 @@ def stream_ingest(
     payloads = read_landing_stream(
         spark, landing_dir, max_files_per_trigger=max_files_per_trigger
     )
-
     # a poison payload must not kill the long-running query: with a
     # quarantine dir the bad input lands there (D25), otherwise fail loudly
-    on_error = "quarantine" if quarantine_dir else "raise"
-    if signal == "logs":
-        decoded = ingest.decode_logs(payloads, on_error, quarantine_dir)
-        tables = {"otel_logs": decoded}
-    elif signal == "traces":
-        decoded = ingest.decode_traces(payloads, on_error, quarantine_dir)
-        tables = {"otel_traces": decoded}
-    elif signal == "metrics":
-        union_df = ingest.decode_metrics_union(payloads, on_error, quarantine_dir=quarantine_dir)
-        tables = None  # split inside foreachBatch (one decode pass per batch)
-        decoded = union_df
+    frames = ingest.decode_signal(payloads, signal, quarantine_dir=quarantine_dir)
+    metrics = "_union" in frames
+    if metrics:
+        decoded = frames["_union"]  # one decode pass; split per micro-batch
     else:
-        raise ValueError(f"unknown signal: {signal}")
+        ((table, decoded),) = frames.items()
 
     def flush(batch_df: DataFrame, epoch_id: int) -> None:  # T7
-        if signal == "metrics":
+        if metrics:
             # persist the 4 server tables; summary rows counted-and-dropped
             batch_df = batch_df.persist()
-            try:
-                for mtype in schemas.PERSISTED_METRIC_TYPES:
-                    tdf = ingest.metrics_table(batch_df, mtype)
-                    _write(tdf, schemas.METRIC_TABLES[mtype], epoch_id)
-            finally:
+        tables = ingest.split_metrics(batch_df) if metrics else {table: batch_df}
+        try:
+            for name, df in tables.items():
+                # bucket="minute": one file per (service, minute) — D16
+                # BatchKey. run_tag=epoch makes file names deterministic, so
+                # a replayed micro-batch (crash between write and checkpoint
+                # commit) overwrites its own files: exactly-once at the
+                # file level.
+                writer.write_table(
+                    df, name, output_root, layout=layout, bucket="minute",
+                    max_rows_per_file=max_rows_per_file, run_tag=f"epoch{epoch_id}",
+                )
+        finally:
+            if metrics:
                 batch_df.unpersist()
-        else:
-            _write(batch_df, next(iter(tables)), epoch_id)
-
-    def _write(df: DataFrame, table: str, epoch_id: int) -> None:
-        if layout == "parity":
-            # bucket="minute": one file per (service, minute) — D16 BatchKey.
-            # run_tag=epoch makes file names deterministic, so a replayed
-            # micro-batch (crash between write and checkpoint commit)
-            # overwrites its own files: exactly-once at the file level.
-            writer.write_partitioned(
-                df,
-                table,
-                output_root,
-                bucket="minute",
-                max_rows_per_file=max_rows_per_file,
-                run_tag=f"epoch{epoch_id}",
-            ).collect()
-        else:
-            writer.write_native(df, table, output_root, max_rows_per_file=max_rows_per_file)
 
     ws = (
         decoded.observe("ingest", F.count(F.lit(1)).alias("records"))  # D26/D27

@@ -10,7 +10,7 @@ import base64
 import json
 
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 
 from otlp2parquet_spark.otel import fast_flatten, flatten, otlp_json, wire
 from otlp2parquet_spark.otel.wire import OtlpDecodeError
@@ -43,6 +43,40 @@ def render_json_snake(obj: dict, msg: str) -> dict:
     return out
 
 
+_HOSTILE = 'he said "hi"\\\twith\nnewlines \x01 é中文 😀'
+# hostile string escaping (keys and values), integral vs fractional doubles,
+# 19-digit intValues (one past int64), and ids: the camel rendering writes
+# them base64, the snake one hex
+_EDGE_LOGS = {
+    "resource_logs": [
+        {
+            "resource": {"attributes": [{"key": 'k"x\\', "value": {"string_value": _HOSTILE}}]},
+            "scope_logs": [
+                {
+                    "log_records": [
+                        {
+                            "time_unix_nano": 1760741572254301000,
+                            "severity_text": _HOSTILE,
+                            "body": {"string_value": _HOSTILE},
+                            "attributes": [
+                                {"key": "a", "value": {"double_value": 8589934592.0}},
+                                {"key": "b", "value": {"double_value": 0.25}},
+                                {"key": "c", "value": {"int_value": 42}},
+                                {"key": "d", "value": {"bool_value": True}},
+                                {"key": "e", "value": {"int_value": 1234567890123456789}},
+                                {"key": "f", "value": {"int_value": 2**63 + 5}},
+                            ],
+                            "trace_id": bytes.fromhex("a71f3d1a6d2d3cadb3669cbd50e165e4"),
+                            "span_id": bytes.fromhex("34249d8b829f4116"),
+                        }
+                    ]
+                }
+            ],
+        }
+    ]
+}
+
+
 def _slow_logs(doc: str):
     return flatten.flatten_logs(otlp_json.parse_request_json(doc, "logs"))
 
@@ -53,6 +87,7 @@ def _slow_traces(doc: str):
 
 @settings(max_examples=150, deadline=None)
 @given(_logs_request)
+@example(_EDGE_LOGS)
 def test_logs_fused_matches_slow_camel(tree):
     doc = json.dumps(render_json(tree, "ExportLogsServiceRequest"))
     assert fast_flatten.flatten_request_json(doc, "logs") == _slow_logs(doc)
@@ -60,6 +95,7 @@ def test_logs_fused_matches_slow_camel(tree):
 
 @settings(max_examples=150, deadline=None)
 @given(_logs_request)
+@example(_EDGE_LOGS)
 def test_logs_fused_matches_slow_snake(tree):
     doc = json.dumps(render_json_snake(tree, "ExportLogsServiceRequest"))
     assert fast_flatten.flatten_request_json(doc, "logs") == _slow_logs(doc)

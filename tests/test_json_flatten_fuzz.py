@@ -2,7 +2,7 @@
 tests/test_media_parser_fuzz.py): over arbitrary bytes, arbitrary JSON
 trees, and structured mutations of valid requests, every production decode
 entry point must either return rows or raise OtlpDecodeError — any other
-exception class escapes ingest._decode_simple's `except OtlpDecodeError`
+exception class escapes ingest._decode_kernel's `except OtlpDecodeError`
 clause and kills the whole Spark task instead of quarantining one payload
 (the D25 posture; reference testdata/invalid/README.md: "invalid data is
 properly rejected, no silent failures").
@@ -294,7 +294,7 @@ def test_mutated_valid_metrics(path_idx, junk):
 
 # ---------------------------------------------------------------------------
 # The kernel boundary itself: arbitrary BYTES through the exact functions
-# ingest._decode_simple / _decode_metrics_fn call — covers the gzip sniff,
+# ingest._decode_kernel calls (per signal) — covers the gzip sniff,
 # the utf-8 decode, json.loads, the pb wire walkers, and the JSONL split
 # in one property (everything between "payload bytes" and "rows")
 

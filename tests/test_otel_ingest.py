@@ -387,7 +387,7 @@ def test_metrics_fanout_single_decode_job(spark, landing):
         spark, str(landing / "metrics"), "metrics", decode_counter=counter
     )
     for name, df in out.items():
-        if name not in ("_union", "_lane"):
+        if name != "_union":
             df.count()  # one action per consumer, like the CLI write loop
     assert out["_union"].is_cached
     assert counter.value == n_payloads > 0
@@ -510,8 +510,7 @@ def test_auto_lane_routes_by_source_and_matches_content_lane(spark, landing):
     """read_landing_auto is the SHIPPED batch path (judge r6 ask #8):
     local/posix sources take the payload-locality lane (no content column
     through the JVM row channel), object-store URIs keep the binaryFile
-    content lane; ingest_directory's default routes the same way and the
-    auto-decoded rows equal the content lane's."""
+    content lane; the auto-decoded rows equal the content lane's."""
     assert ingest.is_local_or_posix("/data/landing")
     assert ingest.is_local_or_posix("file:/data/landing")
     assert ingest.is_local_or_posix("file:///data/landing")
@@ -526,16 +525,6 @@ def test_auto_lane_routes_by_source_and_matches_content_lane(spark, landing):
     a = sorted(map(tuple, ingest.decode_logs(auto).collect()), key=repr)
     b = sorted(map(tuple, ingest.decode_logs(content).collect()), key=repr)
     assert a == b and a
-
-    out = ingest.ingest_directory(spark, logs_dir, "logs")
-    assert out["_lane"] == "locality"
-    forced = ingest.ingest_directory(spark, logs_dir, "logs", lane="content")
-    assert forced["_lane"] == "content"
-    assert sorted(map(tuple, out["otel_logs"].collect()), key=repr) == sorted(
-        map(tuple, forced["otel_logs"].collect()), key=repr
-    )
-    with pytest.raises(ValueError, match="unknown lane"):
-        ingest.ingest_directory(spark, logs_dir, "logs", lane="warp")
 
 
 def test_locality_lane_quarantine_parity(spark, landing, tmp_path):
