@@ -11,6 +11,9 @@ queries measure their projections, not just the scan — and nothing crosses
 back to the driver. The machine's 1-minute load average is recorded
 alongside (BASELINE.md's load-sensitivity note: ingest anchors drop >3x at
 load avg ~7, so numbers are only comparable at similar load).
+
+Queries only: ingest throughput is measured by perfbench
+(`python3 perfbench/run.py --workload ingest --seed 1 --seconds 5`).
 """
 
 from __future__ import annotations
@@ -29,25 +32,6 @@ from otlp2parquet_spark.session import get_spark
 # fact-fact join, range join, window, explode-agg, dedup, LSH, ANN, sliding
 # window, text sweep, connected components, sampling, tf-idf, broadcast
 # decontamination, two-level packing).
-# r4 adds the X6 family + x2_dedup_clusters so the newest operators are
-# visible to round-over-round regression tracking (judge ask #9; BASELINE.md
-# notes the one-time suite-total reset this causes).
-# r6 adds x2_substring_dedup + x3_pq_ann (another small suite-total bump;
-# the stable cross-round comparables remain the 18-query pre-r4 subtotal
-# and the 28-query r4/r5 shared subtotal).
-# r7 adds x2_semantic_dedup_scaled (the SemDeDup axis, scale form) +
-# x3_ann_router (regime-routed ANN) — the r6 32-query subset stays the
-# round-over-round comparable.
-# r7 addendum adds x4_collocation_pmi (single-shuffle PMI phrase mining),
-# x1_bloom_dedup (broadcast-bitmap membership probe), x3_mmr_rerank
-# (shortlist-local diversification) and x6_source_overlap (source-pair
-# gram Jaccard) — the 36-query pre-addendum subset remains comparable.
-# r9 adds x5_jpeg_blocks (real baseline-JPEG pixel decode),
-# q08_exp_histogram_p95 (exponential-histogram percentile walk),
-# x4_heavy_hitters (MG-sketch-pruned exact frequent tokens),
-# x5_png_resize (real pixel resize) and x6_stratified_sample (exact
-# per-source quotas) — the r8 48-query subset stays the round-over-round
-# comparable.
 HEADLINE = [
     "a1_tpch_q1",
     "p1_project_compute",
@@ -65,12 +49,12 @@ HEADLINE = [
     "x2_minhash_lsh",
     "x2_embedding_neardup",
     "x2_dedup_clusters",
-    "x2_substring_dedup",  # r6: passage-level window-fingerprint dedup
-    "x2_semantic_dedup_scaled",  # r7: SemDeDup, corpus-sized K
-    "x3_pq_ann",  # r6: PQ compress + ADC shortlist + exact re-rank
-    "x3_ann_router",  # r7: measured-regime ANN family selection
-    "x2_phash_neardup",  # r7: image near-dup over the real PNG pixel lane
-    "a9_quantile_sketch",  # r7: GK quantile summary beside the exact percentile
+    "x2_substring_dedup",
+    "x2_semantic_dedup_scaled",
+    "x3_pq_ann",
+    "x3_ann_router",
+    "x2_phash_neardup",
+    "a9_quantile_sketch",
     "x3_cosine_topk",
     "x3_kmeans",
     "x3_knn_join",
@@ -85,170 +69,73 @@ HEADLINE = [
     "x6_seq_pack_sharded",
     "x6_data_mix",
     "x6_e2e_pipeline",
-    "x4_collocation_pmi",  # r7 addendum: single-shuffle PMI phrase mining
-    "x1_bloom_dedup",  # r7 addendum: broadcast-bitmap membership probe
-    "x3_mmr_rerank",  # r7 addendum: shortlist-local MMR diversification
-    "x6_source_overlap",  # r7 addendum: source-pair gram Jaccard audit
-    "w9_cohort_retention",  # r7 addendum: weekly retention triangle
-    "x2_minhash_firstseen",  # r7 addendum: hash-matched LSH first-seen dedup
-    "x4_repetition_score",  # r7 addendum: intra-doc repetition filter
-    "x3_ivfpq_ann",  # r7 addendum: IVF + residual-PQ ADC composition
-    "x6_epoch_shuffle",  # r7 addendum: deterministic training-order permutation
-    "x6_dedup_funnel",  # r7 addendum: sequential 3-axis dedup retention ledger
-    "w10_anomaly",  # r7 addendum: trailing z-score anomaly detection
-    "x4_perplexity_buckets",  # r7 addendum: CCNet head/middle/tail split
-    # r8 (the 48-query r7-addendum subset above stays the round-over-round
-    # comparable):
-    "x6_fuzzy_decontam",  # r8: MinHash-LSH benchmark decontamination
-    "u4_mapinarrow",  # r8: Arrow-batch transform primitive, oracle row
-    "t6_running_count",  # r8: two-level parallel prefix scan (hot-key fix)
-    "x6_dsir_sample",  # r8: DSIR hashed-n-gram importance resampling
-    "x4_quality_classifier",  # r8: IPM-trained linear quality filter
-    "x6_zorder_layout",  # r8: Morton clustering key (layout tier)
-    "x3_hard_negatives",  # r8: contrastive hard-negative mining
-    "x5_jpeg_blocks",  # r9: real baseline-JPEG pixel decode (per-block oracle)
-    "x5_h264_nals",  # r11: Annex-B NAL/slice-header bitstream parse
+    "x4_collocation_pmi",
+    "x1_bloom_dedup",
+    "x3_mmr_rerank",
+    "x6_source_overlap",
+    "w9_cohort_retention",
+    "x2_minhash_firstseen",
+    "x4_repetition_score",
+    "x3_ivfpq_ann",
+    "x6_epoch_shuffle",
+    "x6_dedup_funnel",
+    "w10_anomaly",
+    "x4_perplexity_buckets",
+    "x6_fuzzy_decontam",
+    "u4_mapinarrow",
+    "t6_running_count",
+    "x6_dsir_sample",
+    "x4_quality_classifier",
+    "x6_zorder_layout",
+    "x3_hard_negatives",
+    "x5_jpeg_blocks",
+    "x5_h264_nals",
     # t21_ingest_funnel is deliberately NOT benched: ~80% of its wall is
     # x4_quality_classifier's training, already measured above — timing the
     # same IPM kernel twice would add suite noise without information; the
     # funnel's own costs (stage composition) are covered by its stage ops
-    "q08_exp_histogram_p95",  # r9: exp-histogram percentile walk
-    "x4_heavy_hitters",  # r9: MG-sketch-pruned exact frequent tokens
-    "x5_png_resize",  # r9: real PNG pixel decode + NN resample
-    "x6_stratified_sample",  # r9: exact per-source quotas, threshold search
-    # r9 addendum (the 57-query subset above stays the round-over-round
-    # comparable):
-    "a10_tpch_q3",  # r9 addendum: 3-table top-k analytics
-    "a11_tpch_q5",  # r9 addendum: 6-table local-supplier volume
-    "a12_tpch_q18",  # r9 addendum: HAVING-gated large orders
-    "a13_tpch_q7",  # r9 addendum: bilateral nation-pair volume
-    "a14_tpch_q10",  # r9 addendum: returned-item top-20 customers
-    "a15_tpch_q6",  # r9 addendum: pure scan-pushdown global aggregate
-    "a16_tpch_q13",  # r9 addendum: outer-join order distribution
-    "a17_tpch_q14",  # r9 addendum: promo-share conditional aggregate
-    "a18_tpch_q17",  # r9 addendum: integer-exact correlated threshold
-    "a19_tpch_q22",  # r9 addendum: lapsed-customer anti-join
-    "a20_tpch_q15",  # r9 addendum: top-supplier view max on exact decimals
-    "x4_kn_lm_score",  # r9 addendum: interpolated Kneser-Ney bigram scoring
-    "x4_kn3_lm_score",  # r9 addendum: KN trigram with the full backoff recursion
-    "x4_domain_fit_score",  # r11: excess log-likelihood vs the pooled model
-    "t16_windowed_exp_p95",  # r9 addendum: windowed mergeable-sketch percentiles
-    "x6_weighted_sample",  # r9 addendum: ES weighted top-k, zero-shuffle
-    "x2_edit_neardup",  # r9 addendum: typo-level blocked Levenshtein pairs
-    "x2_cluster_keeper",  # r9 addendum: quality-aware cluster survivorship
-    # r10 (the 77-query subset above stays the round-over-round comparable):
-    "a21_tpch_q8",  # r10: 8-table national-market-share star join
-    "q08_exp_histogram_p95_signed",  # r10: signed exp-histogram walk
-    "t18_lm_score_frozen",  # r10: frozen-LM deploy scoring twin
-    "t19_windowed_hll_distinct",  # r10: deterministic windowed HLL, hash-matched
-    "x3_radius_search",  # r10: map-only range similarity search
-    # r12 (the 84-query subset above stays the round-over-round comparable):
-    "t21_funnel_skeleton",  # r12: composed 3-stage funnel, DuckDB-matched
-    "x6_token_budget_fill",  # r12: global token-budget fill, threshold search
-    "t22_budget_admit",  # r12: arrival-order budget admission, distributed prefix sum
-    "t19_hll_rollup",  # r12: sketch-merge rollup, never rescans raw events
-    "t23_stream_sample",  # r12: deterministic top-K sample, TakeOrdered
+    "q08_exp_histogram_p95",
+    "x4_heavy_hitters",
+    "x5_png_resize",
+    "x6_stratified_sample",
+    "a10_tpch_q3",
+    "a11_tpch_q5",
+    "a12_tpch_q18",
+    "a13_tpch_q7",
+    "a14_tpch_q10",
+    "a15_tpch_q6",
+    "a16_tpch_q13",
+    "a17_tpch_q14",
+    "a18_tpch_q17",
+    "a19_tpch_q22",
+    "a20_tpch_q15",
+    "x4_kn_lm_score",
+    "x4_kn3_lm_score",
+    "x4_domain_fit_score",
+    "t16_windowed_exp_p95",
+    "x6_weighted_sample",
+    "x2_edit_neardup",
+    "x2_cluster_keeper",
+    "a21_tpch_q8",
+    "q08_exp_histogram_p95_signed",
+    "t18_lm_score_frozen",
+    "t19_windowed_hll_distinct",
+    "x3_radius_search",
+    "t21_funnel_skeleton",
+    "x6_token_budget_fill",
+    "t22_budget_admit",
+    "t19_hll_rollup",
+    "t23_stream_sample",
 ]
 
 RUNS_PER_QUERY = 3
 
-INGEST_RECORDS = 100_000  # logs.jsonl fixture replicated across 32 landing files
-
-
-def _ingest_metrics(spark) -> dict[str, float]:
-    """Ingest throughput (BASELINE.md protocol): reference logs fixture
-    scaled to ~100k records: Python codec decode + parity partitioned
-    write, then the protobuf lanes (_py_pb_metrics)."""
-    import shutil
-    import tempfile
-
-    from otlp2parquet_spark.otel import ingest, writer
-
-    src = open("/root/reference/testdata/logs.jsonl").read().strip().splitlines()
-    reps = INGEST_RECORDS // len(src) + 1
-    all_lines = src * reps
-    landing = tempfile.mkdtemp(prefix="bench_landing_")
-    out = tempfile.mkdtemp(prefix="bench_out_")
-    try:
-        per = len(all_lines) // 32 + 1
-        for i in range(32):
-            with open(f"{landing}/c{i}.jsonl", "w") as f:
-                f.write("\n".join(all_lines[i * per : (i + 1) * per]))
-
-        # the shipped batch-ingest path (read_landing_auto): local/posix
-        # source -> payload-locality lane, object store -> content lane
-        payloads, _ = ingest.read_landing_auto(spark, landing)
-        ingest.decode_logs(payloads).count()  # warm codec workers
-        decode_write = 0.0
-        for run in range(2):
-            t0 = time.perf_counter()
-            acct = writer.write_partitioned(
-                ingest.decode_logs(payloads), "otel_logs", f"{out}/r{run}"
-            ).collect()
-            rows = sum(r.rows for r in acct)
-            decode_write = max(decode_write, rows / (time.perf_counter() - t0))
-
-        metrics = {"ingest_decode_write_rows_per_s": round(decode_write)}
-        metrics.update(_py_pb_metrics(spark))
-        return metrics
-    finally:
-        shutil.rmtree(landing, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def _pb_lane_rate(spark, decode_fn, payload_reps: int, reader=None) -> float:
-    """Shared pb-lane timing protocol: replicate logs.pb via protobuf
-    message concatenation into 32 payload files (one task per core), warm,
-    best-of-2 noop-write rows/s. `reader` defaults to the content-shipping
-    read_landing; pass ingest.read_landing_meta for the payload-locality
-    lane (bytes read executor-side, never through the JVM row channel)."""
-    import shutil
-    import tempfile
-    import time as _time
-
-    from otlp2parquet_spark.otel import ingest
-
-    raw = open("/root/reference/testdata/logs.pb", "rb").read()
-    payload = raw * payload_reps
-    landing = tempfile.mkdtemp(prefix="bench_pb_")
-    try:
-        for i in range(32):
-            with open(f"{landing}/p{i}.pb", "wb") as f:
-                f.write(payload)
-        payloads, _ = (reader or ingest.read_landing)(spark, landing)
-        decoded = decode_fn(payloads)
-        n = decoded.count()  # warm codec workers + row count
-        rate = 0.0
-        for _ in range(2):
-            t0 = _time.perf_counter()
-            decoded.write.format("noop").mode("overwrite").save()
-            rate = max(rate, n / (_time.perf_counter() - t0))
-        return rate
-    finally:
-        shutil.rmtree(landing, ignore_errors=True)
-
-
-def _py_pb_metrics(spark) -> dict[str, float]:
-    """Pure-Python protobuf lane decode throughput through Spark — the
-    fused wire walker (otel/fast_wire.py)."""
-    from otlp2parquet_spark.otel import ingest
-
-    rate = _pb_lane_rate(spark, ingest.decode_logs, payload_reps=200)
-    local = _pb_lane_rate(
-        spark, ingest.decode_logs, payload_reps=200, reader=ingest.read_landing_meta
-    )
-    return {
-        "ingest_py_pb_decode_rows_per_s": round(rate),
-        "ingest_py_pb_localread_rows_per_s": round(local),
-    }
-
-
 # Load gate (r8, judge ask #3): headline numbers are only comparable at low
 # ambient load (measured ~70% per-query inflation at load>10; the r7 bench
 # regressions were ambient noise that cost a round of analysis). Rather than
-# refuse — the round driver must always get a BENCH file — the run WAITS for
-# the 1-minute load to drop below the gate (up to a bounded budget) and then
-# stamps the result "pass"/"exceeded" so a noisy run is machine-detectable.
+# refuse, the run WAITS for the 1-minute load to drop below the gate (up to
+# a bounded budget) and then stamps the result "pass"/"exceeded" so a noisy
+# run is machine-detectable.
 LOAD_GATE_MAX = float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0"))
 LOAD_GATE_WAIT_S = int(os.environ.get("SPARK_GRAFT_LOAD_WAIT_S", "600"))
 
@@ -332,31 +219,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_specs()
 
-    # Pre-ingest warm-up: o5_distinct warms JVM + parquet footer caches so
-    # the ingest measurement starts on a warm session.
-    specs["o5_distinct"].build(spark, sf_dir).count()
-
-    # ingest first: it is the load-sensitive measurement (32 forked Python
-    # codec workers + per-file parquet writes), so it runs while the machine
-    # is still at ambient load instead of after the query suite's burn
-    ingest_metrics = _ingest_metrics(spark)
-    # let the codec workers / GC / run queue settle before timing queries —
-    # measured ~70% per-query inflation when the suite starts at load>10
-    time.sleep(20)
-
-    # Warm-up (r10 verdict ask #3, moved + extended r13 per the r12 verdict
-    # ask #2): the first MEASURED queries absorb whole-stage-codegen JIT +
-    # noop-write-path compilation (a1/p1 oscillated 0.77-2.43 s across ten
-    # rounds purely by suite position; r12's schema pinning removed the
-    # ~150 inference jobs that used to soak that up, and a1/p1/u3/u4 blew
-    # the 2x anchor gate on the r12 closing bench). So the opening queries
-    # run ONCE unmeasured through the exact noop-write path the timing loop
-    # uses — IMMEDIATELY before the timed loop (r12 ran this warm-up before
-    # the multi-minute ingest phase, which let the JIT/code-cache state
-    # drift again before the first timed query), and the list now includes
-    # u3/u4 so the Python-worker + Arrow-runner lane is also warm. Their
-    # best-of-3 then measures the plan, not the JIT. Timing protocol
-    # (best-of-3, noop sink, load gate, cal kernel) is unchanged.
+    # Warm-up: the first MEASURED queries would absorb whole-stage-codegen
+    # JIT + noop-write-path compilation (a1/p1 oscillated 0.77-2.43 s purely
+    # by suite position). So the opening queries run ONCE unmeasured through
+    # the exact noop-write path the timing loop uses, immediately before it,
+    # and u3/u4 warm the Python-worker + Arrow-runner lane. Their best-of-3
+    # then measures the plan, not the JIT.
     for warm_name in (*HEADLINE[:2], "u3_grouped_agg_pandas_udf", "u4_mapinarrow"):
         specs[warm_name].build(spark, sf_dir).write.format("noop").mode(
             "overwrite"
@@ -402,14 +270,10 @@ def main() -> None:
         # empty violations with status "checked" is the passing signal,
         # so stamp the failure loudly instead (r12 review finding)
         anchor_gate_status = f"skipped: {type(e).__name__}"
-    # Key order (r12 verdict ask #8 — PERF comparability): the round
-    # driver's capture keeps only the TAIL of stdout, and BENCH_r11's
-    # truncated head made the whole line unparseable. The bulky per-query
-    # map therefore goes FIRST and every summary scalar (value, noise,
-    # gates) AFTER it, so a tail-truncated capture still contains the
-    # fields a salvage parser needs; the committed BENCH_self_r{N}.json
-    # below carries the full line either way. Full-line JSON semantics are
-    # unchanged (object keys are unordered).
+    # Key order: a capture that keeps only the TAIL of stdout would lose a
+    # truncated head, so the bulky per-query map goes FIRST and every
+    # summary scalar (value, noise, gates) AFTER it. Full-line JSON
+    # semantics are unchanged (object keys are unordered).
     payload = json.dumps(
         {
                 "metric": f"headline suite wall sec (best-of-{RUNS_PER_QUERY} per query, noop-write forced)",
@@ -424,7 +288,6 @@ def main() -> None:
                 "cal_kernel_s_after": round(cal_after, 4),
                 "cal_ref_s": CAL_REF_S,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                **ingest_metrics,
                 # context for cross-round comparability (BASELINE.md
                 # load-sensitivity note): ambient 1m load before Spark
                 # started, and after the suite (includes our own burn)
@@ -451,22 +314,6 @@ def main() -> None:
             }
     )
     print(payload)
-    # capture-proof copy (r9 VERDICT ask #3): the driver's BENCH_r{N}.json
-    # keeps only the last ~2,000 chars of stdout, which truncated the JSON
-    # head (noise_index and the first ~15 query timings) — so the same line
-    # is also written to a checked-in artifact that survives its capture
-    # pipeline. ROUND names it when the driver exports one; "self" otherwise.
-    # With ROUND unset the artifact is plain BENCH_self.json (not
-    # "BENCH_self_rself.json" — the r10 ADVICE litter), overwritten per
-    # local run so ad-hoc benches never accumulate root-dir files.
-    tag = os.environ.get("ROUND")
-    fname = f"BENCH_self_r{tag}.json" if tag else "BENCH_self.json"
-    out_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), fname)
-    try:
-        with open(out_path, "w") as f:
-            f.write(payload + "\n")
-    except OSError:
-        pass  # a read-only checkout must not fail the bench
 
 
 if __name__ == "__main__":

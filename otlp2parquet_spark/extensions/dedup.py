@@ -130,8 +130,8 @@ def with_tokens(docs: DataFrame, cols: tuple[str, ...] = ("doc_id",)) -> DataFra
     projection whose non-cheap expressions would be duplicated, so a plain
     `.select()` already keeps the tokenize chain evaluated once per row
     whenever `toks` is referenced more than once downstream — verified in
-    the committed plans (plans/r12/*_after.txt: the split+regexp chain
-    appears in exactly one Project; no Exchange above the scan). Callers
+    the physical plans (the split+regexp chain appears in exactly one
+    Project; no Exchange above the scan). Callers
     that filtered on `size(toks)` before exploding were restructured to
     when()-guards so predicate pushdown cannot re-inline the tokenizer
     below the projection. Downstream groupBys that previously reused the
@@ -465,10 +465,10 @@ def cc_star_forest(
 ) -> tuple[list[tuple[int, int]] | None, DataFrame]:
     """Alternating large-star/small-star contraction over a canonical
     (hi, lo) edge frame (hi > lo, distinct, checkpointed) — the connected-
-    components kernel of cluster_assignments, factored out so the
-    skew/scale benches (scripts/cc_skew_bench.py) can drive ADVERSARIAL
-    edge sets (giant component, Zipf hub degrees) directly, without
-    synthesizing text that survives the Jaccard pair generator's df cap.
+    components kernel of cluster_assignments, factored out so a caller
+    can drive ADVERSARIAL edge sets (giant component, Zipf hub degrees)
+    directly, without synthesizing text that survives the Jaccard pair
+    generator's df cap.
 
     Returns (mapping, E): either a bounded node -> component-min list
     (small-remainder endgame fired) with E undefined for labeling, or
@@ -477,12 +477,11 @@ def cc_star_forest(
     a fixed 16): the Kiveris O(log^2 n) worst case needs more than the ~3
     rounds fixture graphs take — a 5M-node path measures 24 rounds, which
     the old cap would have exited HALF-CONTRACTED, returning wrong labels
-    SILENTLY (the convergence check never fired). The cc_skew_bench
-    asserts label exactness for exactly this reason; converged results
-    are unchanged by the cap raise, so every hash-matched oracle row is
+    SILENTLY (the convergence check never fired). Converged results are
+    unchanged by the cap raise, so every hash-matched oracle row is
     untouched.
     `stats` (optional dict) receives {"rounds": N, "endgame": bool} for
-    the bench's round accounting."""
+    the caller's round accounting."""
     prev_sig, mapping = None, None
     rounds = 0
     converged = False

@@ -1567,8 +1567,7 @@ def x6_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs for (user x time) box queries: rows close in BOTH dimensions
     land in the same row groups, so footer min/max stats prune boxes in
     either or both dimensions (measured in BASELINE.md r8 via
-    layout.zorder_write + scripts/layout_bench.py; skipping gates in
-    tests/test_zorder_layout.py).
+    layout.zorder_write; skipping gates in tests/test_zorder_layout.py).
 
     Hash-matched: grid coordinates are exact int64 arithmetic against ONE
     extremes aggregate broadcast back (non-negative operands, so DIV ==
@@ -1638,7 +1637,7 @@ def x6_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     plane — the better-locality sibling of x6_zorder_layout (a contiguous
     Hilbert range is one connected region, so 2-D boxes touch fewer
     false-positive row groups than under Morton's quadrant seams; measured
-    head-to-head in BASELINE.md r8 via scripts/layout_bench.py --hilbert).
+    head-to-head in BASELINE.md r8).
 
     Hash-matched: the 16 rot/swap levels run as named intermediate columns
     (layout.hilbert16) and the oracle's CTE chain (layout.hilbert16_sql)

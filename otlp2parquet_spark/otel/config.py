@@ -39,7 +39,7 @@ DEFAULTS = {
         "path_style": True,
     },
     "server": {"port": 4318, "log_level": "info"},
-    "engine": {"layout": "parity", "shuffle_partitions": 0},  # 0 = spark default
+    "engine": {"layout": "parity"},
 }
 
 
@@ -94,7 +94,6 @@ _ENV_MAP = {
     "OTLP2PARQUET_PORT": ("server", "port", int),
     "OTLP2PARQUET_LOG_LEVEL": ("server", "log_level", str),
     "OTLP2PARQUET_LAYOUT": ("engine", "layout", str),
-    "OTLP2PARQUET_SHUFFLE_PARTITIONS": ("engine", "shuffle_partitions", int),
 }
 
 

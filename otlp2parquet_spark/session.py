@@ -211,7 +211,7 @@ def spread(df, multiplier: int = 1):
     target = df.sparkSession.sparkContext.defaultParallelism * multiplier
     try:
         est = _estimated_scan_partitions(df)
-    except Exception:
+    except ValueError:  # not a leaf scan: only the exact probe is reliable
         est = df.rdd.getNumPartitions()
     if est >= target:
         return df

@@ -1,32 +1,18 @@
-"""ANN recall gate at the scale the wall-clock rows are measured (r9,
-judge ask #6): the recall/quality gates in tests/test_approx_quality.py run
-at fixture SFs; this script re-asserts recall@k >= 0.8 for every ANN family
-on the SAME 100x replica scale_bench uses for wall-clock factors, so index
-quality is proven at scale, not just speed.
+"""Score-based recall@k for the ANN families, over an Fx offset replica.
 
-Replica structure note: plain replication makes every base vector appear
-F times (offset vec_ids, identical embeddings) — a duplicate-heavy corpus,
+Replica structure: plain replication makes every base vector appear F
+times (offset vec_ids, identical embeddings), a duplicate-heavy corpus,
 the regime real crawl embeddings are in. Exact top-k under F-fold ties is
 id-ambiguous, so recall is SCORE-based (standard for tie-heavy corpora):
     recall@k(q) = |{a in approx_topk(q) : cos(a) >= kth exact cos(q)}| / k
 with the cosines ROUND(·,4)-pinned like the operators themselves.
-
-Usage: python scripts/ann_recall_bench.py [--factor 100] [--keep]
-Prints one JSON line per family and exits 1 if any family gates below 0.8.
 """
 
 from __future__ import annotations
 
-import argparse
-import json
 import os
-import sys
-import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-from scale_bench import build_replica  # noqa: E402  (sibling script)
+ID_SPAN = 10_000_000
 
 # (family, its emitted top-k, its score column: cosine desc / L2^2 asc)
 FAMILIES = [
@@ -40,14 +26,36 @@ FAMILIES = [
 GATE = 0.8
 
 
+def build_replica(base: str, out: str, factor: int) -> None:
+    """Write an Fx replica of `embeddings` (the only table the ANN families
+    read) into `out`: one part file per replica, so Fx data comes with Fx
+    scan splits as in production, and vec_id offset by k*ID_SPAN in
+    replica k so replicated rows stay distinct. Other tables are symlinked."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    os.makedirs(out, exist_ok=True)
+    for fn in os.listdir(base):
+        if fn.endswith(".parquet") and fn != "embeddings.parquet":
+            os.symlink(os.path.join(base, fn), os.path.join(out, fn))
+    t = pq.read_table(os.path.join(base, "embeddings.parquet"))
+    dst = os.path.join(out, "embeddings.parquet")
+    os.makedirs(dst)
+    i = t.schema.get_field_index("vec_id")
+    for k in range(factor):
+        ids = pc.add(t.column(i), k * ID_SPAN)
+        pq.write_table(
+            t.set_column(i, "vec_id", ids), os.path.join(dst, f"part-{k:03d}.parquet")
+        )
+
+
 def compute_recalls(spark, replica: str) -> list[dict]:
     """Score-based recall@k per ANN family over `replica` (see module
-    docstring for the tie-robust definition). Shared by the CLI (100x
-    replica, BASELINE evidence) and the in-suite pytest gate
-    (tests/test_ann_recall.py, small replica, CI cadence)."""
+    docstring for the tie-robust definition)."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from otlp2parquet_spark.extensions.similarity import cosine_expr
     from otlp2parquet_spark.queries.registry import all_specs
     from otlp2parquet_spark.session import load_table
 
@@ -56,8 +64,6 @@ def compute_recalls(spark, replica: str) -> list[dict]:
     # exact per-query k-th best score for BOTH metrics (cosine desc, L2^2
     # asc), brute force over the full replica — 5 broadcast queries x F*n
     # corpus rows, one pass each
-    from otlp2parquet_spark.extensions.similarity import cosine_expr
-
     kmax = max(k for _, k, _ in FAMILIES)
     e = load_table(spark, replica, "embeddings")
     q = e.filter(F.col("vec_id") < 5).select(
@@ -120,38 +126,3 @@ def compute_recalls(spark, replica: str) -> list[dict]:
             }
         )
     return out
-
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--factor", type=int, default=100)
-    ap.add_argument("--base", default="/root/testdata/sf0.1")
-    ap.add_argument("--replica-dir", default=None)
-    ap.add_argument("--keep", action="store_true")
-    args = ap.parse_args()
-
-    from otlp2parquet_spark.session import get_spark
-
-    own_replica = args.replica_dir is None
-    replica = args.replica_dir or tempfile.mkdtemp(
-        prefix=f"annrecall{args.factor}x_"
-    )
-    build_replica(args.base, replica, args.factor)
-    spark = get_spark(app_name="otlp2parquet-ann-recall")
-    spark.sparkContext.setLogLevel("ERROR")
-    results = compute_recalls(spark, replica)
-    failures = 0
-    for rec in results:
-        failures += 0 if rec["pass"] else 1
-        print(json.dumps({**rec, "factor": args.factor}))
-    # only remove a tempdir WE created — never a caller-provided
-    # --replica-dir, --keep or not (r9 review finding)
-    if own_replica and not args.keep:
-        import shutil
-
-        shutil.rmtree(replica, ignore_errors=True)
-    return 1 if failures else 0
-
-
-if __name__ == "__main__":
-    sys.exit(main())

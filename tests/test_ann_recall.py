@@ -1,27 +1,20 @@
-"""In-suite ANN recall gate (r9 VERDICT ask #7): the score-based recall@k
-methodology of scripts/ann_recall_bench.py, run every CI pass on a SMALL
-duplicate-heavy replica (10x sf0.01 — same construction as the 100x
-BASELINE row, two orders of magnitude cheaper), so a recall regression in
-any ANN family fails the suite instead of waiting for a human to re-run
-the script. The 100x proof stays script-side per round."""
+"""In-suite ANN recall gate: the score-based recall@k of
+tests/ann_recall_util.py, run every CI pass on a SMALL duplicate-heavy
+replica (10x sf0.01), so a recall regression in any ANN family fails the
+suite."""
 
 from __future__ import annotations
 
-import sys
+import shutil
 import tempfile
 
 import pytest
 
-sys.path.insert(0, "scripts")
+from tests.ann_recall_util import build_replica, compute_recalls
 
 
 @pytest.fixture(scope="module")
 def recalls(spark):
-    from scripts.ann_recall_bench import compute_recalls
-    from scripts.scale_bench import build_replica
-
-    import shutil
-
     replica = tempfile.mkdtemp(prefix="annrecall_ci_")
     try:
         build_replica("/root/testdata/sf0.01", replica, 10)

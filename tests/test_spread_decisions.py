@@ -98,3 +98,17 @@ def test_spread_decision_unchanged_on_narrow_scan(spark):
     assert spread(d).rdd.getNumPartitions() >= min(
         target, max(_exact(d), target)
     ) or _exact(d) >= target
+
+
+def test_estimator_fault_propagates(spark, monkeypatch):
+    """Only the estimator's "not a leaf scan" ValueError routes to the
+    exact probe; any other fault must surface, not become a silent
+    fallback."""
+    import otlp2parquet_spark.session as session
+
+    def broken(df):
+        raise RuntimeError("estimator fault")
+
+    monkeypatch.setattr(session, "_estimated_scan_partitions", broken)
+    with pytest.raises(RuntimeError, match="estimator fault"):
+        spread(load_table(spark, SF_SMOKE, "documents"))
