@@ -13,7 +13,10 @@ src/lib.rs:244-305) onto Spark Structured Streaming (SURVEY.md §7 M5):
 | backpressure 8x max_bytes D18               | maxFilesPerTrigger source cap  |
 | periodic expiry flush task D19              | trigger(processingTime=...)    |
 | shutdown drain + graceful exit D20          | checkpoint + query.stop():     |
-|                                             | restart resumes exactly-once   |
+|                                             | restart replays the open epoch:|
+|                                             | exactly-once in the parity     |
+|                                             | layout, at-least-once in the   |
+|                                             | native one (see stream_ingest) |
 | per-request accounting D27                  | df.observe() + progress events |
 
 The micro-batch sink is the SAME parity/native writer the batch path uses
@@ -96,8 +99,15 @@ def stream_ingest(
     micro-batch through the parity writer with minute buckets — the exact
     (service, minute) clustering of the reference's BatchKey (D16) — or the
     native Hive writer. Checkpointing makes restart/shutdown drain-free
-    (replaces D19/D20): an interrupted batch replays, files are re-written
-    idempotently at the Spark-commit level.
+    (replaces D19/D20): an interrupted batch replays. What the replay
+    guarantees depends on the layout:
+
+    - parity: exactly-once. File names derive from the epoch
+      (`run_tag=f"epoch{epoch_id}"`), so a replayed epoch overwrites its own
+      files.
+    - native: at-least-once. `write_native` appends under fresh file names,
+      so an epoch replayed after a crash between its write and its
+      checkpoint commit lands its rows twice.
     """
     payloads = read_landing_stream(
         spark, landing_dir, max_files_per_trigger=max_files_per_trigger
@@ -122,7 +132,7 @@ def stream_ingest(
                 # BatchKey. run_tag=epoch makes file names deterministic, so
                 # a replayed micro-batch (crash between write and checkpoint
                 # commit) overwrites its own files: exactly-once at the
-                # file level.
+                # file level. The native layout ignores run_tag and appends.
                 writer.write_table(
                     df, name, output_root, layout=layout, bucket="minute",
                     max_rows_per_file=max_rows_per_file, run_tag=f"epoch{epoch_id}",

@@ -11,6 +11,7 @@ import pytest
 
 from otlp2parquet_spark.otel import writer
 from otlp2parquet_spark.streaming import ingest as sing
+from tests.test_writer_idempotence import logs_payload
 
 TD = "/root/reference/testdata"
 
@@ -67,6 +68,38 @@ def test_stream_incremental_checkpoint(spark, dirs):
     _wait(q2)
     # 81 (a.pb) + 81 (b.jsonl) — a.pb NOT reprocessed
     assert writer.read_table(spark, out, "otel_logs").count() == 162
+
+
+def test_stream_batch_tasks_capped_at_cores(spark, dirs):
+    """A micro-batch over many landed files runs no stage wider than the
+    session's cores: the file source's re-listing of the batch's own files
+    (one task per file past 32 paths at Spark's default listing
+    parallelism) is capped at the cores, and every record lands once."""
+    landing, out, ckpt = dirs
+    n_files, per_file = 40, 3
+    for i in range(n_files):
+        (landing / f"req{i:02d}.pb").write_bytes(logs_payload({f"svc{i:02d}": per_file}))
+    q = sing.stream_ingest(
+        spark, str(landing), "logs", out, ckpt, layout="parity", available_now=True
+    )
+    _wait(q)
+    tracker = spark.sparkContext.statusTracker()
+    stages = [
+        tracker.getStageInfo(sid)
+        for jid in tracker.getJobIdsForGroup(str(q.runId))
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    tasks = [(s.name, s.numTasks) for s in stages if s is not None]
+    cap = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
+    assert tasks and max(n for _, n in tasks) <= cap, (cap, tasks)
+    per_service = {
+        r.ServiceName: r["count"]
+        for r in writer.read_table(spark, out, "otel_logs").groupBy("ServiceName").count().collect()
+    }
+    assert per_service == {f"svc{i:02d}": per_file for i in range(n_files)}
 
 
 def test_stream_metrics_type_split(spark, dirs):
