@@ -1,16 +1,26 @@
-"""Benchmark harness: runs the headline query suite at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
-line: {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
-"sf": ...}.
+"""Query benchmark: times the headline query suite, or a named subset, at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
+and prints ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
+"queries": {name: wall_s}, "layers": {...}, "noise": {...}, "sf": ...}.
 
-Protocol (BASELINE.md): per query, best of 3 consecutive runs (the first run
-pays JVM/codegen warmup; the later ones are the steady-state number a resident
-cluster would see). Results are forced with a `noop`-format write: unlike
-count(), Catalyst cannot prune computed columns under it, so map-only
+    python bench.py                                  # the HEADLINE suite
+    python bench.py x3_knn_join x6_source_overlap    # just these queries
+
+A subset run says so in `metric`, so it cannot pass for a suite run.
+
+Protocol (BASELINE.md): per query, best of 3 consecutive reps (the first rep
+pays JVM/codegen warmup; the later ones are the steady-state number a
+resident cluster would see). Results are forced with a `noop`-format write:
+unlike count(), Catalyst cannot prune computed columns under it, so map-only
 queries measure their projections, not just the scan — and nothing crosses
-back to the driver. The machine's 1-minute load average is recorded
-alongside (BASELINE.md's load-sensitivity note: ingest anchors drop >3x at
-load avg ~7, so numbers are only comparable at similar load).
+back to the driver.
+
+Each rep runs as two spans of perfbench's Tracer with Spark counters on:
+`build` covers spec.build() (planning plus any eager jobs), `exec` the noop
+write. `layers` gives the best rep's build_s, exec_s, jobs, tasks,
+shuffle_write_bytes and python_bytes_sent; `noise` stamps each query with
+hypervisor steal and the 1-minute load over its own reps. The calibration
+kernel and the steal reader are perfbench's (perfbench/noise.py).
 
 Queries only: ingest throughput is measured by perfbench
 (`python3 perfbench/run.py --workload ingest --seed 1 --seconds 5`).
@@ -25,8 +35,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from otlp2parquet_spark.queries.registry import all_specs
-from otlp2parquet_spark.session import get_spark
+from otlp2parquet_spark.queries.registry import all_specs  # noqa: E402
+from otlp2parquet_spark.session import get_spark  # noqa: E402
+from perfbench import noise  # noqa: E402
+from perfbench.spans import COUNTERS, Tracer  # noqa: E402
 
 # Headline suite: one representative per cost class (scan-agg, star join,
 # fact-fact join, range join, window, explode-agg, dedup, LSH, ANN, sliding
@@ -139,64 +151,30 @@ RUNS_PER_QUERY = 3
 LOAD_GATE_MAX = float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0"))
 LOAD_GATE_WAIT_S = int(os.environ.get("SPARK_GRAFT_LOAD_WAIT_S", "600"))
 
-# In-run CPU calibration kernel (r9, judge ask #3): the load gate bounds
-# GUEST noise but cannot see HOST neighbors (r8: gate passed at load 1.77,
-# run ended at 7.9 with ~1.2-1.5x uniform per-query inflation and zero plan
-# changes; the builder's idle-guest afternoon runs showed +25-58%). A fixed
-# single-threaded SHA-256 pass over a deterministic buffer, timed before
-# and after the suite, turns ambient contention into a measured
-# coefficient: noise_index = mean(two kernel walls) / CAL_REF_S, with
-# CAL_REF_S the same kernel's wall measured on this box at load < 0.5 (r9
-# quiet anchor). Round-over-round comparisons cite
-# value_noise_normalized = value / noise_index, so "the box was busy" is a
-# number, never prose. Best-of-3 inside each measurement filters transient
-# spikes while keeping sustained contention visible.
-CAL_KERNEL_MB = 512
-CAL_REF_S = 0.288  # r9 quiet anchor: best observed on this container at
-# true idle (load_1m 0.2, pre-suite). A post-burn "quiet" measurement read
-# 0.334 — the kernel sees frequency scaling, which is part of what it is
-# for: noise_index > 1 means the suite ran on effectively slower cores,
-# whatever the cause (neighbors, thermal, scheduling).
+# Host-noise coefficient: the load gate bounds GUEST noise but cannot see
+# HOST neighbors, so perfbench's single-core calibration kernel is timed
+# (best of 3) before and after the timed loop, and
+# noise_index = mean(the two) / CAL_REF_S. CAL_REF_S is the kernel's best of
+# 3 on a quiet 4-vCPU box (load_1m 0.1). noise_index > 1 means the suite ran
+# on effectively slower cores, whatever the cause (neighbors, thermal,
+# scheduling); compare runs on value_noise_normalized.
+CAL_REF_S = 0.125
 
 
-def _cal_kernel() -> float:
-    import hashlib
-
-    buf = bytes(range(256)) * 4096  # 1 MiB, deterministic
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        h = hashlib.sha256()
-        for _ in range(CAL_KERNEL_MB):
-            h.update(buf)
-        h.hexdigest()
-        best = min(best, time.perf_counter() - t0)
-    return best
+def _cal() -> float:
+    return min(noise.cal_kernel() for _ in range(3))
 
 
-def _cpu_stat() -> list[int] | None:
-    """Aggregate jiffies from /proc/stat (user..steal); None off-Linux or
-    when the cpu line stops short of the steal column."""
-    try:
-        with open("/proc/stat") as f:
-            fields = [int(x) for x in f.readline().split()[1:9]]
-    except (OSError, ValueError):
-        return None
-    return fields if len(fields) >= 8 else None
-
-
-def _steal_pct(before: list[int] | None, after: list[int] | None) -> float | None:
-    """Hypervisor steal over the interval as % of ALL cpu time (r13): the
-    load gate and cal kernel see guest-visible slowness, but a vCPU that is
-    runnable-yet-unscheduled shows up ONLY in the steal counter — measured
-    bursts on this container inflate multi-task sub-second queries 1.5-3x
-    while the single-threaded cal kernel moves far less. Reported so a run
-    with a steal burst is machine-detectable next to its gate fields."""
+def _steal(before: list[int] | None) -> float | None:
+    """Hypervisor steal since `before`, in % of all cpu time; None when
+    either /proc/stat sample is missing, which noise.steal_pct would report
+    as a quiet 0.0. A vCPU that is runnable but unscheduled shows up only
+    here: steal bursts inflate multi-task sub-second queries 1.5-3x while
+    the single-threaded cal kernel moves far less."""
+    after = noise.cpu_times()
     if before is None or after is None:
         return None
-    d = [b - a for a, b in zip(before, after)]
-    total = sum(d)
-    return round(100.0 * d[7] / total, 2) if total > 0 else None
+    return round(noise.steal_pct(before, after), 2)
 
 
 def _await_quiet() -> tuple[float, float, int]:
@@ -210,14 +188,79 @@ def _await_quiet() -> tuple[float, float, int]:
     return ambient, os.getloadavg()[0], waited
 
 
-def main() -> None:
+def _noop(df) -> None:
+    # noop write: full materialization of every output column (count() lets
+    # Catalyst prune computed columns), zero driver transfer, zero disk
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _rep(tracer: Tracer, spark, spec, sf_dir: str) -> tuple[float, dict]:
+    """One timed rep: (wall, layers). The wall leaves out the two spans'
+    counter reads, as each span's own wall does."""
+    reads, t0 = tracer.counter_s, time.perf_counter()
+    with tracer.span("build", query=spec.name) as build:
+        df = spec.build(spark, sf_dir)
+    with tracer.span("exec", query=spec.name) as exec_:
+        _noop(df)
+    wall = time.perf_counter() - t0 - (tracer.counter_s - reads)
+    layers = {"build_s": round(build.seconds, 3), "exec_s": round(exec_.seconds, 3)}
+    layers.update({c: build.attrs[c] + exec_.attrs[c] for c in COUNTERS})
+    return wall, layers
+
+
+def _anchor_gate(timings: dict[str, float], noise_index: float) -> dict:
+    """Machine-checked 2x gate against the frozen anchor (bench_anchor.json),
+    on NORMALIZED values so host noise doesn't fake a regression. Queries
+    without an anchor row are reported, not gated."""
+    violations: dict[str, list[float]] = {}
+    unanchored: list[str] = []
+    status = "checked"
+    try:
+        with open(
+            os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_anchor.json")
+        ) as f:
+            anchors = json.load(f)["anchors_normalized_s"]
+        for name, raw in timings.items():
+            a = anchors.get(name)
+            if a is None:
+                unanchored.append(name)
+            elif raw / noise_index > 2.0 * a:
+                violations[name] = [round(raw / noise_index, 3), a]
+    except (OSError, KeyError, ValueError) as e:
+        # a missing/corrupt anchor file must NOT read as "gate holds" —
+        # empty violations with status "checked" is the passing signal
+        status = f"skipped: {type(e).__name__}"
+    return {
+        # {query: [normalized_s, anchor_s]} for queries over 2x the anchor;
+        # empty means the gate holds ONLY when the status is "checked"
+        "anchor_gate_status": status,
+        "anchor_gate_violations": violations,
+        "anchor_gate_unanchored": sorted(unanchored),
+    }
+
+
+def main(names: list[str]) -> None:
+    specs = all_specs()
+    unknown = [n for n in names if n not in specs]
+    if unknown:
+        raise SystemExit(f"unknown queries: {' '.join(unknown)}")
+    subset = bool(names)
+    names = names or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     load_ambient, load_start, load_waited = _await_quiet()
-    cpu_stat_start = _cpu_stat()
-    cal_before = _cal_kernel()
-    spark = get_spark(app_name="otlp2parquet-bench")
+    cpu_start = noise.cpu_times()
+    cal_before = _cal()
+    # The tracer reads each span's stages and SQL executions from Spark's
+    # status stores, which keep 1000 of each by default and evict SKIPPED
+    # stages first, even the current job's; a suite run makes thousands.
+    spark = get_spark(
+        app_name="otlp2parquet-bench",
+        extra_conf={
+            "spark.ui.retainedStages": "100000",
+            "spark.sql.ui.retainedExecutions": "100000",
+        },
+    )
     spark.sparkContext.setLogLevel("ERROR")
-    specs = all_specs()
 
     # Warm-up: the first MEASURED queries would absorb whole-stage-codegen
     # JIT + noop-write-path compilation (a1/p1 oscillated 0.77-2.43 s purely
@@ -226,95 +269,68 @@ def main() -> None:
     # and u3/u4 warm the Python-worker + Arrow-runner lane. Their best-of-3
     # then measures the plan, not the JIT.
     for warm_name in (*HEADLINE[:2], "u3_grouped_agg_pandas_udf", "u4_mapinarrow"):
-        specs[warm_name].build(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        _noop(specs[warm_name].build(spark, sf_dir))
 
+    tracer = Tracer(spark, counters=True)
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        best = float("inf")
-        for _ in range(RUNS_PER_QUERY):
-            t0 = time.perf_counter()
-            # noop write: full materialization of every output column
-            # (count() lets Catalyst prune computed columns), zero driver
-            # transfer, zero disk
-            specs[name].build(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-        timings[name] = round(best, 3)
+    layers: dict[str, dict] = {}
+    stamps: dict[str, dict] = {}
+    for name in names:
+        cpu = noise.cpu_times()
+        reps = [_rep(tracer, spark, specs[name], sf_dir) for _ in range(RUNS_PER_QUERY)]
+        wall, layers[name] = min(reps, key=lambda r: r[0])
+        timings[name] = round(wall, 3)
+        stamps[name] = {"steal_pct": _steal(cpu), "load_1m": round(os.getloadavg()[0], 2)}
 
     total = round(sum(timings.values()), 3)
-    cal_after = _cal_kernel()
+    cal_after = _cal()
     noise_index = round((cal_before + cal_after) / 2.0 / CAL_REF_S, 3)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    # Machine-checked 2x gate against the frozen r11 84-query anchor
-    # (bench_anchor.json; BASELINE.md "Re-anchored per-query bench gate"):
-    # compare NORMALIZED values so host noise doesn't fake a regression.
-    # New queries without an anchor row are reported, not gated — they get
-    # anchored at the next freeze.
-    gate_violations: dict[str, list[float]] = {}
-    unanchored: list[str] = []
-    anchor_gate_status = "checked"
-    try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench_anchor.json")
-        ) as f:
-            _anchors = json.load(f)["anchors_normalized_s"]
-        for name, raw in timings.items():
-            a = _anchors.get(name)
-            if a is None:
-                unanchored.append(name)
-            elif raw / noise_index > 2.0 * a:
-                gate_violations[name] = [round(raw / noise_index, 3), a]
-    except (OSError, KeyError, ValueError) as e:
-        # a missing/corrupt anchor file must NOT read as "gate holds" —
-        # empty violations with status "checked" is the passing signal,
-        # so stamp the failure loudly instead (r12 review finding)
-        anchor_gate_status = f"skipped: {type(e).__name__}"
+    protocol = f"best-of-{RUNS_PER_QUERY} per query, noop-write forced"
+    metric = (
+        f"query subset wall sec ({len(names)} named queries, not a suite run; {protocol})"
+        if subset
+        else f"headline suite wall sec ({protocol})"
+    )
     # Key order: a capture that keeps only the TAIL of stdout would lose a
-    # truncated head, so the bulky per-query map goes FIRST and every
-    # summary scalar (value, noise, gates) AFTER it. Full-line JSON
-    # semantics are unchanged (object keys are unordered).
-    payload = json.dumps(
-        {
-                "metric": f"headline suite wall sec (best-of-{RUNS_PER_QUERY} per query, noop-write forced)",
+    # truncated head, so the bulky per-query maps go FIRST and every
+    # summary scalar (value, noise, gates) AFTER them.
+    print(
+        json.dumps(
+            {
+                "metric": metric,
                 "unit": "sec",
                 "queries": timings,
+                "layers": layers,
+                "noise": stamps,
                 "value": total,
-                # host-noise coefficient (see _cal_kernel): 1.0 = the quiet
-                # anchor; compare rounds on value_noise_normalized
+                "build_s": round(sum(q["build_s"] for q in layers.values()), 3),
+                "jobs": sum(q["jobs"] for q in layers.values()),
+                # 1.0 = the quiet reference; compare runs on
+                # value_noise_normalized
                 "noise_index": noise_index,
                 "value_noise_normalized": round(total / noise_index, 3),
                 "cal_kernel_s_before": round(cal_before, 4),
                 "cal_kernel_s_after": round(cal_after, 4),
                 "cal_ref_s": CAL_REF_S,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-                # context for cross-round comparability (BASELINE.md
-                # load-sensitivity note): ambient 1m load before Spark
-                # started, and after the suite (includes our own burn)
+                # ambient 1m load before Spark started, and after the suite
+                # (includes our own burn)
                 "load_avg_1m_start": round(load_start, 2),
                 "load_avg_1m_end": round(os.getloadavg()[0], 2),
-                # load gate (r8): a run stamped "exceeded" started hot and
-                # its per-query walls are NOT round-over-round comparable
+                # a run stamped "exceeded" started hot and its per-query
+                # walls are NOT comparable across runs
                 "load_gate": "pass" if load_start <= LOAD_GATE_MAX else "exceeded",
                 "load_gate_max": LOAD_GATE_MAX,
                 "load_gate_ambient": round(load_ambient, 2),
                 "load_gate_waited_s": load_waited,
-                # {query: [normalized_s, anchor_s]} for queries over 2x the
-                # frozen r11 anchor; empty means the gate holds ONLY when
-                # anchor_gate_status == "checked"
-                "anchor_gate_status": anchor_gate_status,
-                "anchor_gate_violations": gate_violations,
-                "anchor_gate_unanchored": sorted(unanchored),
-                # hypervisor steal over the whole run (r13, additive): the
-                # share of cpu time the host denied this guest — bursts
-                # inflate tiny multi-task queries far beyond what the
-                # single-threaded cal kernel corrects, so a violation row
-                # next to high steal is contention, not code
-                "cpu_steal_pct_run": _steal_pct(cpu_stat_start, _cpu_stat()),
+                **_anchor_gate(timings, noise_index),
+                # a violation row next to high steal is contention, not code
+                "cpu_steal_pct_run": _steal(cpu_start),
             }
+        )
     )
-    print(payload)
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

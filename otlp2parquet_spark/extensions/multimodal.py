@@ -29,16 +29,6 @@ from pyspark.sql.types import (
 from otlp2parquet_spark.queries.registry import T, query
 from otlp2parquet_spark.session import spread
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), True),
-        StructField("media_type", StringType(), True),
-        StructField("byte_len", LongType(), True),
-        StructField("content_sha256", StringType(), True),
-    ]
-)
-
 FEATURE_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -826,9 +816,6 @@ AVI_META_SCHEMA = StructType(
 )
 
 _AVI_RATES = (10, 15, 24, 30)
-
-# (media_id, payload) synth-table schema shared by the PNG and AVI fixtures
-MEDIA_PAYLOAD_SCHEMA = PNG_SCHEMA
 
 
 def _avi_chunk(fourcc: bytes, data: bytes) -> bytes:
@@ -2055,7 +2042,6 @@ def x5_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: map-only mapInPandas over the payload column, ~n_frames rows
 # out per asset — no shuffle before the output sort.
 
-_H264_RATES = (24, 25, 30, 60)
 # forced RBSP tail: every 2-zero run is followed by a byte <= 3, so EPB
 # insertion fires three times per slice on the wire
 _H264_TAIL = b"\x00\x00\x01\x00\x00\x02\x00\x00\x03"

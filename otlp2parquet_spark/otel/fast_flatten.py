@@ -47,7 +47,7 @@ _ZERO8 = b"\x00" * 8
 def _decode_guard(fn):
     """Per-request guard matching flatten_logs_pb: any non-OtlpDecodeError
     escaping the walk (e.g. TypeError from float({}) on {"doubleValue": {}})
-    becomes an OtlpDecodeError, so ingest's on_error=quarantine contract is
+    becomes an OtlpDecodeError, so ingest's quarantine contract is
     format-consistent — a malformed payload quarantines one request instead
     of failing the whole Spark task. Once per request, not per row, so the
     hot-path cost is nil."""

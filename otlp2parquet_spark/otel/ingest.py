@@ -201,8 +201,8 @@ def _read_payload_bytes(path: str) -> bytes:
     the writer's FileSystem resolution (one owner for s3a normalization +
     credential handling). Read failures (file rotated away between the
     listing scan and the decode task, transient object-store errors)
-    surface as OtlpDecodeError so on_error="quarantine" keeps its
-    one-payload blast radius."""
+    surface as OtlpDecodeError so quarantine keeps its one-payload blast
+    radius."""
     from urllib.parse import unquote, urlparse
 
     try:
@@ -302,25 +302,21 @@ def read_quarantine(spark: SparkSession, qdir: str) -> DataFrame:
 
 def _handle_decode_error(
     err: OtlpDecodeError,
-    on_error: str,
     quarantine_dir: str | None,
     path: str,
     content: bytes | None,
     quarantine_counter=None,
 ) -> None:
-    if on_error == "raise":
+    """Quarantine the payload when a quarantine dir is set; raise otherwise."""
+    if not quarantine_dir:
         raise err
-    # Count every dropped payload (quarantined OR skipped) so a sudden
-    # quarantine-rate spike from a parser regression is observable without
-    # grepping the quarantine dir (ADVICE r6: the broad _decode_guard makes
-    # codec bugs drain into quarantine — this counter is the tripwire).
+    # Count every quarantined payload so a sudden quarantine-rate spike from
+    # a parser regression is observable without grepping the quarantine dir
+    # (ADVICE r6: the broad _decode_guard makes codec bugs drain into
+    # quarantine — this counter is the tripwire).
     if quarantine_counter is not None:
         quarantine_counter.add(1)
-    if on_error == "quarantine":
-        if not quarantine_dir:
-            raise ValueError("on_error='quarantine' requires quarantine_dir")
-        _write_quarantine(quarantine_dir, path, content, err)
-    # on_error == "skip": drop silently (caller opted out of accounting)
+    _write_quarantine(quarantine_dir, path, content, err)
 
 
 def read_landing_lines(spark: SparkSession, path: str) -> DataFrame:
@@ -352,7 +348,7 @@ def ingest_jsonl_fast(spark: SparkSession, path: str, signal: str = "logs") -> D
     path's (tests/test_ingest_paths.py)."""
     if signal not in ("logs", "traces"):
         raise ValueError(f"fast path supports logs|traces, got {signal!r}")
-    return _decode_table(read_landing_lines(spark, path), signal, "raise", None, None)
+    return _decode_table(read_landing_lines(spark, path), signal, None, None)
 
 
 # ---------------------------------------------------------------------------
@@ -378,7 +374,6 @@ def _flatten_payload(content: bytes, fmt: str, signal: str) -> list[dict[str, An
 def _decode_kernel(
     rows_of,
     schema: StructType,
-    on_error: str,
     quarantine_dir: str | None = None,
     quarantine_counter=None,
     decode_counter=None,
@@ -423,12 +418,10 @@ def _decode_kernel(
                     rows.extend(rows_of(content, fmts[i].as_py()))
                 except OtlpDecodeError as e:
                     _handle_decode_error(
-                        e, on_error, quarantine_dir, paths[i].as_py(), content,
-                        quarantine_counter,
+                        e, quarantine_dir, paths[i].as_py(), content, quarantine_counter
                     )
-            # no yield when every payload in the batch was skipped/
-            # quarantined — mapInArrow's declared schema covers the
-            # empty-partition case
+            # no yield when every payload in the batch was quarantined —
+            # mapInArrow's declared schema covers the empty-partition case
             if rows:
                 yield from pa.Table.from_pylist(rows, schema=target).to_batches()
 
@@ -451,14 +444,14 @@ def finalize(raw_df: DataFrame, table: str) -> DataFrame:
 
 
 def _decode_table(
-    payloads: DataFrame, signal: str, on_error: str, quarantine_dir, quarantine_counter
+    payloads: DataFrame, signal: str, quarantine_dir, quarantine_counter
 ) -> DataFrame:
     """logs/traces payloads -> golden-typed `otel_{signal}` frame."""
     table = f"otel_{signal}"
     schema = schemas.raw_spark_schema(table)
     rows_of = functools.partial(_flatten_payload, signal=signal)
     raw = payloads.mapInArrow(
-        _decode_kernel(rows_of, schema, on_error, quarantine_dir, quarantine_counter),
+        _decode_kernel(rows_of, schema, quarantine_dir, quarantine_counter),
         schema,
     )
     return finalize(raw, table)
@@ -466,20 +459,18 @@ def _decode_table(
 
 def decode_logs(
     payloads: DataFrame,
-    on_error: str = "raise",
     quarantine_dir: str | None = None,
     quarantine_counter=None,
 ) -> DataFrame:
-    return _decode_table(payloads, "logs", on_error, quarantine_dir, quarantine_counter)
+    return _decode_table(payloads, "logs", quarantine_dir, quarantine_counter)
 
 
 def decode_traces(
     payloads: DataFrame,
-    on_error: str = "raise",
     quarantine_dir: str | None = None,
     quarantine_counter=None,
 ) -> DataFrame:
-    return _decode_table(payloads, "traces", on_error, quarantine_dir, quarantine_counter)
+    return _decode_table(payloads, "traces", quarantine_dir, quarantine_counter)
 
 
 # ---------------------------------------------------------------------------
@@ -541,7 +532,6 @@ def _metrics_union_rows(content: bytes, fmt: str) -> list[dict[str, Any]]:
 
 def decode_metrics_union(
     payloads: DataFrame,
-    on_error: str = "raise",
     decode_counter=None,
     quarantine_dir: str | None = None,
     quarantine_counter=None,
@@ -550,10 +540,10 @@ def decode_metrics_union(
 
     `decode_counter` (a SparkContext accumulator) counts payload decodes —
     used by tests to prove the fan-out runs exactly one decode job.
-    `quarantine_counter` counts payloads dropped via quarantine/skip."""
+    `quarantine_counter` counts quarantined payloads."""
     return payloads.mapInArrow(
         _decode_kernel(
-            _metrics_union_rows, METRICS_UNION_SCHEMA, on_error, quarantine_dir,
+            _metrics_union_rows, METRICS_UNION_SCHEMA, quarantine_dir,
             quarantine_counter, decode_counter,
         ),
         METRICS_UNION_SCHEMA,
@@ -622,7 +612,6 @@ def observed(df: DataFrame, name: str):
 def decode_signal(
     payloads: DataFrame,
     signal: str,
-    on_error: str = "raise",
     decode_counter=None,
     quarantine_dir: str | None = None,
     quarantine_counter=None,
@@ -636,20 +625,18 @@ def decode_signal(
     persisted: the stream writes '_union' and splits each micro-batch with
     `split_metrics` instead.
 
-    Passing `quarantine_dir` switches on_error to 'quarantine': invalid
-    payloads + typed-reason sidecars land in the bad-input dir while the
-    pipeline continues (D25)."""
-    if quarantine_dir:
-        on_error = "quarantine"
+    Without `quarantine_dir` an invalid payload fails the job. With it,
+    invalid payloads + typed-reason sidecars land in the bad-input dir while
+    the pipeline continues (D25)."""
     if signal in ("logs", "traces"):
         return {
             f"otel_{signal}": _decode_table(
-                payloads, signal, on_error, quarantine_dir, quarantine_counter
+                payloads, signal, quarantine_dir, quarantine_counter
             )
         }
     if signal == "metrics":
         union_df = decode_metrics_union(
-            payloads, on_error, decode_counter, quarantine_dir, quarantine_counter
+            payloads, decode_counter, quarantine_dir, quarantine_counter
         )
         if not payloads.isStreaming:
             union_df = union_df.persist(StorageLevel.MEMORY_AND_DISK)
@@ -664,7 +651,6 @@ def ingest_directory(
     signal: str,
     *,
     max_payload_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
-    on_error: str = "raise",
     decode_counter=None,
     quarantine_dir: str | None = None,
     quarantine_counter=None,
@@ -679,8 +665,6 @@ def ingest_directory(
     payloads, rejected = read_landing_auto(
         spark, landing_dir, max_payload_bytes=max_payload_bytes
     )
-    out = decode_signal(
-        payloads, signal, on_error, decode_counter, quarantine_dir, quarantine_counter
-    )
+    out = decode_signal(payloads, signal, decode_counter, quarantine_dir, quarantine_counter)
     out["_rejected"] = rejected
     return out

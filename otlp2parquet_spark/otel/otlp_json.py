@@ -278,7 +278,7 @@ def parse_request_json(body: str | bytes, signal: str) -> dict[str, Any]:
 
     Any non-OtlpDecodeError escaping the walk (e.g. TypeError from
     float({}) on {"doubleValue": {}}) is re-raised as OtlpDecodeError so
-    the ingest on_error=quarantine contract holds for JSON exactly as the
+    the ingest quarantine contract holds for JSON exactly as the
     pb lane's flatten_logs_pb guarantees it for protobuf — a malformed
     payload quarantines one request, never fails the whole Spark task."""
     try:

@@ -46,9 +46,10 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # unset or empty: the cores this process may run on
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
+    shuffle = shuffle_partitions or int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)

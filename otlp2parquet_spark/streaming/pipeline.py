@@ -103,13 +103,6 @@ def exp_idx(value_col) -> "F.Column":
     ).otherwise(F.ceil(4 * F.log2(value_col)).cast("bigint") - 1)
 
 
-# the DuckDB twin of exp_idx, for composition into oracle CTEs
-SQL_EXP_IDX = (
-    "CASE WHEN {v} IS NULL OR isnan({v}) OR {v} <= 1.0 THEN -100000 "
-    "ELSE CAST(CEIL(4 * log2({v})) AS BIGINT) - 1 END"
-)
-
-
 def sgn_exp_idx(value_col) -> "F.Column":
     """SIGNED exponential-histogram bucket index at scale 2 — the full OTel
     data model (negative buckets hold measurements < -1, mirroring the

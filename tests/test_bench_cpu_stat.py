@@ -1,6 +1,5 @@
-"""bench.py: the /proc/stat reader (a cpu line without the steal column
-must read as "no data", not as a short list that _steal_pct indexes past),
-and a smoke run of main() on the smallest SF."""
+"""bench.py: a missing steal sample reads as null, not as a quiet 0.0, and a
+smoke run of a two-query subset on the smallest SF."""
 
 from __future__ import annotations
 
@@ -16,39 +15,28 @@ import bench
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _fake_stat(monkeypatch, line: str) -> None:
-    monkeypatch.setattr(bench, "open", lambda *a, **k: io.StringIO(line), raising=False)
-
-
 def test_short_cpu_line_reads_as_none(monkeypatch):
-    _fake_stat(monkeypatch, "cpu  10 0 5 100 0 0 1\n")  # 7 fields, no steal
-    assert bench._cpu_stat() is None
-    assert bench._steal_pct(bench._cpu_stat(), bench._cpu_stat()) is None
-
-
-def test_full_cpu_line_reports_steal(monkeypatch):
-    _fake_stat(monkeypatch, "cpu  10 0 5 100 0 0 1 4 0 0\n")
-    before = bench._cpu_stat()
-    assert before == [10, 0, 5, 100, 0, 0, 1, 4]
-    _fake_stat(monkeypatch, "cpu  20 0 10 160 0 0 2 8 0 0\n")
-    assert bench._steal_pct(before, bench._cpu_stat()) == 5.0
+    """A cpu line without the steal column (7 fields) is no sample: bench
+    prints null steal where perfbench.noise.steal_pct would give 0.0."""
+    stat = lambda *a, **k: io.StringIO("cpu  10 0 5 100 0 0 1\n")  # noqa: E731
+    monkeypatch.setattr(bench.noise, "open", stat, raising=False)
+    assert bench.noise.steal_pct(bench.noise.cpu_times(), bench.noise.cpu_times()) == 0.0
+    assert bench._steal(bench.noise.cpu_times()) is None
 
 
 def test_bench_main_smoke():
-    """bench.main() finishes from this repository alone: one JSON line whose
-    value is the sum of its per-query walls, no ingest keys, and no file
-    left in the repo root. A subprocess keeps the shared session's confs
-    untouched."""
-    code = (
-        "import bench\n"
-        "bench.HEADLINE[:] = ['a1_tpch_q1', 'p1_project_compute']\n"
-        "bench.LOAD_GATE_WAIT_S = 0\n"
-        "bench.CAL_KERNEL_MB = 8\n"
-        "bench.main()\n"
-    )
-    env = {**os.environ, "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001"}
+    """`python bench.py a1_tpch_q1 p1_project_compute` finishes from this
+    repository alone: one JSON line marked as a subset, holding only those
+    two queries, whose value is the sum of their walls; each query's build
+    and exec spans tile its wall, and it carries its own steal/load stamp."""
+    names = ["a1_tpch_q1", "p1_project_compute"]
+    env = {
+        **os.environ,
+        "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
+        "SPARK_GRAFT_LOAD_WAIT_S": "0",
+    }
     proc = subprocess.run(
-        [sys.executable, "-c", code],
+        [sys.executable, "bench.py", *names],
         cwd=REPO,
         env=env,
         capture_output=True,
@@ -59,7 +47,12 @@ def test_bench_main_smoke():
     lines = proc.stdout.splitlines()
     assert len(lines) == 1, proc.stdout
     rec = json.loads(lines[0])
-    assert set(rec["queries"]) == {"a1_tpch_q1", "p1_project_compute"}
+    assert "subset" in rec["metric"]
+    assert set(rec["queries"]) == set(rec["layers"]) == set(rec["noise"]) == set(names)
     assert rec["value"] == round(sum(rec["queries"].values()), 3)
-    assert not [k for k in rec if k.startswith("ingest_")]
+    for name, wall in rec["queries"].items():
+        layers = rec["layers"][name]
+        assert abs(layers["build_s"] + layers["exec_s"] - wall) <= 0.05 * wall, (name, layers)
+        assert layers["jobs"] >= 1
+        assert set(rec["noise"][name]) == {"steal_pct", "load_1m"}
     assert not glob.glob(os.path.join(REPO, "BENCH_self*.json"))

@@ -454,15 +454,6 @@ def test_quarantine_counter_observability(spark, tmp_path):
     )
     assert out["otel_logs"].count() > 0
     assert counter.value == 2
-    # on_error='skip' (no accounting dir) still counts drops
-    counter2 = spark.sparkContext.accumulator(0)
-    n = ingest.decode_logs(
-        ingest.read_landing(spark, str(d))[0],
-        on_error="skip",
-        quarantine_counter=counter2,
-    ).count()
-    assert n > 0
-    assert counter2.value == 2
 
 
 def test_quarantine_same_basename_no_clobber(tmp_path):
@@ -483,11 +474,21 @@ def test_quarantine_same_basename_no_clobber(tmp_path):
     assert len([p for p in os.listdir(qdir) if not p.endswith(".error.json")]) == 2
 
 
-def test_quarantine_requires_dir():
-    with pytest.raises(ValueError, match="quarantine_dir"):
-        ingest._handle_decode_error(
-            wire.OtlpDecodeError("x"), "quarantine", None, "p", b""
-        )
+def test_decode_error_raises_without_quarantine_dir(tmp_path):
+    """No quarantine dir: the payload's error propagates, nothing is
+    counted. With one: it is quarantined and counted, not raised."""
+    class Counter:  # the accumulator's one method
+        value = 0
+
+        def add(self, n):
+            self.value += n
+
+    err, counter = wire.OtlpDecodeError("x"), Counter()
+    with pytest.raises(wire.OtlpDecodeError) as raised:
+        ingest._handle_decode_error(err, None, "p", b"", counter)
+    assert raised.value is err and counter.value == 0
+    ingest._handle_decode_error(err, str(tmp_path), "p", b"", counter)
+    assert counter.value == 1 and os.listdir(tmp_path)
 
 
 def test_locality_lane_matches_content_lane(spark, landing):
@@ -539,7 +540,7 @@ def test_locality_lane_quarantine_parity(spark, landing, tmp_path):
     ):
         payloads, _ = reader(spark, str(bad_dir))
         qdir = str(tmp_path / qname)
-        n = ingest.decode_logs(payloads, on_error="quarantine", quarantine_dir=qdir).count()
+        n = ingest.decode_logs(payloads, quarantine_dir=qdir).count()
         assert n == 81  # the good payload decoded
         qfiles = sorted(os.path.basename(p) for p in __import__("glob").glob(f"{qdir}/*"))
         assert any(f.startswith("bad.pb") and f.endswith(".error.json") for f in qfiles), qfiles
@@ -560,7 +561,7 @@ def test_locality_read_failure_quarantines_without_empty_payload(spark, tmp_path
     assert meta.count() == 2  # listing done, bytes not yet read
     doomed.unlink()  # rotate the file away before the decode task runs
     qdir = str(tmp_path / "q")
-    n = ingest.decode_logs(meta, on_error="quarantine", quarantine_dir=qdir).count()
+    n = ingest.decode_logs(meta, quarantine_dir=qdir).count()
     meta.unpersist()
     assert n == 81  # the good payload decoded; pipeline continued
     files = sorted(os.listdir(qdir))
@@ -587,7 +588,7 @@ def test_corrupt_gzip_and_bad_utf8_quarantine_not_crash(spark, tmp_path):
     (bad_dir / "bad_utf8.jsonl").write_bytes(b'{"resourceLogs": []}\n\xff\xfe{')
     payloads, _ = ingest.read_landing(spark, str(bad_dir))
     qdir = str(tmp_path / "quarantine")
-    n = ingest.decode_logs(payloads, on_error="quarantine", quarantine_dir=qdir).count()
+    n = ingest.decode_logs(payloads, quarantine_dir=qdir).count()
     assert n == 81  # only the good payload's rows
     import glob as _glob
 
