@@ -976,6 +976,7 @@ def main(argv: list[str] | None = None) -> int:
             available_now=args.available_now,
             max_rows_per_file=cfg.batch["max_rows"],
             quarantine_dir=args.quarantine,
+            max_payload_bytes=cfg.request["max_payload_bytes"],
         )
         q.awaitTermination()
         return 0

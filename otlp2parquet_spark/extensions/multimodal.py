@@ -1,6 +1,7 @@
 """Multimodal column handling (SURVEY §2.3 X5): image/audio/video payloads as
 opaque binary columns with typed metadata, plus the decode/feature-extract
-plumbing as Arrow-batched mapInPandas stages.
+plumbing: every decode, transform and fixture synthesizer is a per-row
+function run by one Arrow-batched `mapInArrow` kernel (`_row_kernel`).
 
 The container ships no image/video codecs, so those decode kernels are
 clearly-marked deterministic stubs (STUB_DECODER) — the Spark-side contract
@@ -12,9 +13,14 @@ containers with the stdlib `wave` reader and is DuckDB-oracle-matched.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import io
+import math
+import struct
+import wave
+import zlib
+from collections.abc import Callable, Iterator
 
-import pandas as pd
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -28,6 +34,91 @@ from pyspark.sql.types import (
 
 from otlp2parquet_spark.queries.registry import T, query
 from otlp2parquet_spark.session import spread
+
+# The malformed-input classes of each modality's parser: a payload raising
+# one of them nulls its row instead of failing the task (D25 posture), and
+# the parser fuzz suite asserts that nothing else escapes.
+# wave also raises RuntimeError / struct.error on some corrupt shapes
+# (found by the parser fuzz suite).
+WAV_ERRORS = (wave.Error, EOFError, ValueError, RuntimeError, struct.error)
+PNG_ERRORS = (ValueError, KeyError, zlib.error, struct.error)
+AVI_META_ERRORS = (ValueError, struct.error)
+# parse_avi_frames uses only slicing + int.from_bytes, so ValueError is
+# provably its complete set
+AVI_FRAMES_ERRORS = (ValueError,)
+JPEG_ERRORS = (ValueError, KeyError, IndexError, struct.error)  # IndexError: truncated scan
+# parse_h264_nals nulls a malformed NAL's own row and walks on
+H264_ERRORS = (ValueError, IndexError)
+
+# the (media_id, payload) shape of every synthesized fixture table
+MEDIA_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType(), False),
+        StructField("payload", BinaryType(), True),
+    ]
+)
+
+
+def _row_kernel(
+    media: DataFrame,
+    fn: Callable[..., list[tuple]],
+    schema: StructType,
+    errors: tuple[type[Exception], ...] = (),
+    keys: tuple[str, ...] = ("media_id",),
+    payload: str = "payload",
+) -> DataFrame:
+    """The one Python boundary of the x5 lanes: a mapInArrow kernel that
+    passes the `keys` columns through and calls `fn(payload, *keys[1:])`
+    on each row, getting back the row's output tuples (the fields of
+    `schema` after the keys): one for a decode, several for a 1->N
+    explode (blocks, frames, NALs), none to drop the row. A NULL payload
+    is read as b"", and a payload raising one of the lane's `errors`
+    becomes one all-null row (the D25 quarantine posture, column edition).
+
+    Arrow end to end, the idiom of ingest's `_decode_kernel`: the output
+    tuples are transposed straight into typed Arrow columns, with no
+    pandas frame in between."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    out_types = [f.type for f in target][len(keys) :]
+    nulls = (None,) * len(out_types)
+
+    def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            extra = [batch.column(k).to_pylist() for k in keys[1:]]
+            take: list[int] = []
+            rows: list[tuple] = []
+            for i, p in enumerate(batch.column(payload).to_pylist()):
+                try:
+                    out = fn(b"" if p is None else p, *(e[i] for e in extra))
+                except errors:
+                    out = [nulls]
+                take += [i] * len(out)
+                rows += out
+            idx = pa.array(take, pa.int64())
+            cols = [batch.column(k).take(idx).cast(target.field(k).type) for k in keys]
+            outputs = list(zip(*rows)) or [()] * len(out_types)  # rows -> columns
+            cols += [pa.array(c, t) for c, t in zip(outputs, out_types)]
+            yield pa.RecordBatch.from_arrays(cols, schema=target)
+
+    return media.select(*dict.fromkeys((*keys, payload))).mapInArrow(kernel, schema)
+
+
+def _synth_table(
+    spark: SparkSession, sf_dir: str, modality: int, synth: Callable[[int], bytes]
+) -> DataFrame:
+    """(media_id, payload) fixture: `synth(doc_id)` for every documents row
+    of one media_table modality (doc_id % 3: 0 image, 1 audio, 2 video)."""
+    d = spread(T(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == modality)
+    return _row_kernel(
+        d.select(F.col("doc_id").alias("media_id")),
+        lambda doc_id: [(synth(doc_id),)],
+        MEDIA_SCHEMA,
+        payload="media_id",
+    )
+
 
 FEATURE_SCHEMA = StructType(
     [
@@ -71,47 +162,19 @@ def _stub_decode(payload) -> tuple[int, int, int, str, bytes]:
     return 64 + h[0] % 192, 64 + h[1] % 192, 1 + h[2] % 32, h.hex()[:16], h
 
 
-def decode_features(media: DataFrame, *, keep_payload: bool = False) -> DataFrame:
+def decode_features(media: DataFrame) -> DataFrame:
     """Arrow-batched decode/feature-extract over binary payloads.
 
-    The per-batch kernel is where PIL/ffmpeg/torchaudio would run; here it is
-    a deterministic stub deriving fake dimensions from the payload hash. The
-    mapInPandas plumbing (schema contract, batch shape, memory profile) is the
-    production dataflow.
-
-    `keep_payload=True` flows the binary payload THROUGH the kernel so a
-    downstream transform stage (resize, re-encode) composes as one narrow
-    pipeline — joining the payload back by media_id would re-scan the media
-    source and shuffle every payload byte on the join key.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "media_type": pdf["media_type"],
-                "width": [],
-                "height": [],
-                "n_frames": [],
-                "feature_hash": [],
-            }
-            for payload in pdf["payload"]:
-                w, h, n_frames, fhash, _ = _stub_decode(payload)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_frames"].append(n_frames)
-                out["feature_hash"].append(fhash)
-            if keep_payload:
-                out["payload"] = pdf["payload"]
-            yield pd.DataFrame(out)
-
-    cols = ["media_id", "media_type", "payload"]
-    schema = FEATURE_SCHEMA
-    if keep_payload:
-        schema = StructType(
-            FEATURE_SCHEMA.fields + [StructField("payload", BinaryType(), True)]
-        )
-    return media.select(*cols).mapInPandas(kernel, schema=schema)
+    The row function is where PIL/ffmpeg/torchaudio would run; here it is
+    the STUB_DECODER deriving fake dimensions from the payload hash. The
+    `_row_kernel` plumbing (schema contract, batch shape, memory profile)
+    is the production dataflow."""
+    return _row_kernel(
+        media,
+        lambda payload, _media_type: [_stub_decode(payload)[:4]],
+        FEATURE_SCHEMA,
+        keys=("media_id", "media_type"),
+    )
 
 
 @query(
@@ -162,14 +225,14 @@ def x5_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x5_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decode/feature-extraction pipeline over ARBITRARY binary media columns
-    via Arrow-batched mapInPandas — the generic-binary fallback lane. The
+    via the Arrow-batched row kernel — the generic-binary fallback lane. The
     REAL decode paths are x5_media_meta (WAV/PNG/AVI container parsers over
     spec-valid payloads, oracle-matched), x5_jpeg_blocks (r9: full
     baseline-JPEG pixel decode, per-block oracle-matched) and x5_h264_nals
     (r11: Annex-B NAL/slice-header bitstream parse, oracle-matched); this
     op keeps the clearly-marked deterministic-stub kernel as the
     generic-binary plumbing exercise. The oracle replays the STUB's own
-    sha256-derived formula — what it hash-proves is the mapInPandas
+    sha256-derived formula — what it hash-proves is the mapInArrow
     dataflow (Arrow binary transfer, schema contract, row alignment), NOT
     a decode; the real-decode proofs live in the three lanes above."""
     return decode_features(media_table(spark, sf_dir)).orderBy("media_id")
@@ -186,57 +249,58 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_media(media: DataFrame, max_side: int = 128) -> DataFrame:
-    """Resize stage: clamp the longer side to `max_side` preserving aspect
-    ratio (integer floor), emit the transformed payload.
+RESIZE_MAX_SIDE = 128  # x5_resize's clamp, kernel and oracle alike
+PNG_RESIZE_MAX_SIDE = 16  # x5_png_resize's clamp, kernel and oracle alike
 
-    The kernel is where PIL.Image.resize / ffmpeg scale would run; the stub
-    emits a deterministic `out_width*out_height`-byte payload derived from
-    the content hash.
 
-    Decode + resize run as ONE mapInPandas kernel (r13, guide §4): the old
-    form flowed the payload THROUGH decode_features (keep_payload=True) into
-    a second kernel, so every payload byte crossed the JVM<->Python boundary
-    three times (in to decode, out with features, in again to resize). The
-    decode body here is the shared STUB_DECODER (`_stub_decode`, sha256-derived
-    width/height) — a real PIL decode would hand its Image object straight to
-    .resize() the same single-pass way; still no second scan of the media
-    source and no shuffle of payload bytes on media_id (the pre-r12 join-back
-    shape did both)."""
+def _clamp(w: int, h: int, max_side: int) -> tuple[int, int]:
+    """Aspect-preserving clamp of the longer side to `max_side`, integer
+    floor: float scale factors round 128.0 down to 127 for the clamped
+    side (and disagree with the SQL oracle, `_sql_clamp`)."""
+    m = max(w, h)
+    return (w, h) if m <= max_side else (w * max_side // m, h * max_side // m)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "out_width": [],
-                "out_height": [],
-                "resized_len": [],
-                "resized_payload": [],
-            }
-            for payload in pdf["payload"]:
-                w, h, _, _, seed = _stub_decode(payload)
-                m = max(w, h)
-                # integer arithmetic: float scale factors round 128.0 down to
-                # 127 for the clamped side (and disagree with the SQL oracle)
-                ow, oh = (w, h) if m <= max_side else (w * max_side // m, h * max_side // m)
-                n = ow * oh
-                # a real kernel returns the re-encoded image; the stub tiles
-                # the sha256 of the source payload to size n
-                body = (seed * (n // len(seed) + 1))[:n]
-                out["out_width"].append(ow)
-                out["out_height"].append(oh)
-                out["resized_len"].append(n)
-                out["resized_payload"].append(body)
-            yield pd.DataFrame(out)
 
-    return media.select("media_id", "payload").mapInPandas(
-        kernel, schema=RESIZE_SCHEMA
+def _sql_clamp(side: str, max_side: int) -> str:
+    """DuckDB twin of `_clamp` for one side, over columns w and h."""
+    return (
+        f"CASE WHEN greatest(w, h) <= {max_side} THEN {side}"
+        f" ELSE ({side} * {max_side}) // greatest(w, h) END"
     )
+
+
+def _resize_stub(payload: bytes) -> list[tuple]:
+    w, h, _, _, seed = _stub_decode(payload)
+    ow, oh = _clamp(w, h, RESIZE_MAX_SIDE)
+    n = ow * oh
+    # a real kernel returns the re-encoded image; the stub tiles the sha256
+    # of the source payload to size n
+    return [(ow, oh, n, (seed * (n // len(seed) + 1))[:n])]
+
+
+def resize_media(media: DataFrame) -> DataFrame:
+    """Resize stage: clamp the longer side to RESIZE_MAX_SIDE preserving
+    aspect ratio (integer floor), emit the transformed payload.
+
+    The row function is where PIL.Image.resize / ffmpeg scale would run;
+    the stub emits a deterministic `out_width*out_height`-byte payload
+    derived from the content hash.
+
+    Decode + resize run as ONE row function (r13, guide §4): the old form
+    flowed the payload THROUGH decode_features into a second kernel, so
+    every payload byte crossed the JVM<->Python boundary three times (in to
+    decode, out with features, in again to resize). The decode body here is
+    the shared STUB_DECODER (`_stub_decode`, sha256-derived width/height) —
+    a real PIL decode would hand its Image object straight to .resize() the
+    same single-pass way; still no second scan of the media source and no
+    shuffle of payload bytes on media_id (the pre-r12 join-back shape did
+    both)."""
+    return _row_kernel(media, _resize_stub, RESIZE_SCHEMA)
 
 
 @query(
     "x5_resize",
-    oracle="""
+    oracle=f"""
     WITH dims AS (
       SELECT doc_id AS media_id,
              64 + CAST(('0x' || substr(sha256(text), 1, 2)) AS INT) % 192 AS w,
@@ -244,10 +308,8 @@ def resize_media(media: DataFrame, max_side: int = 128) -> DataFrame:
       FROM documents
     )
     SELECT media_id,
-           CASE WHEN greatest(w, h) <= 128 THEN w
-                ELSE (w * 128) // greatest(w, h) END AS out_width,
-           CASE WHEN greatest(w, h) <= 128 THEN h
-                ELSE (h * 128) // greatest(w, h) END AS out_height
+           {_sql_clamp("w", RESIZE_MAX_SIDE)} AS out_width,
+           {_sql_clamp("h", RESIZE_MAX_SIDE)} AS out_height
     FROM dims
     ORDER BY media_id
     """,
@@ -277,47 +339,26 @@ PNG_RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_png_pixels(media: DataFrame, max_side: int = 16) -> DataFrame:
+def _png_resize_row(payload: bytes) -> list[tuple]:
+    g = parse_png_pixels(payload)
+    h, w = g.shape
+    ow, oh = _clamp(w, h, PNG_RESIZE_MAX_SIDE)
+    r = g[np.ix_((np.arange(oh) * h) // oh, (np.arange(ow) * w) // ow)]
+    return [(ow, oh, int(r.sum()), int(r.min()), int(r.max()))]
+
+
+def resize_png_pixels(media: DataFrame) -> DataFrame:
     """REAL pixel resize: full PNG decode (parse_png_pixels — CRC walk,
     inflate, unfilter) then nearest-neighbor resampling to clamp the longer
-    side at max_side (integer source indices sx = x*w//ow, sy = y*h//oh,
-    the canonical floor NN map), emitting exact integer pixel stats of the
-    RESIZED plane. Malformed payloads null out (D25 posture)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("out_width", "out_height", "px_sum", "px_min", "px_max")
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"], **{c: [] for c in cols}}
-            for payload in pdf["payload"]:
-                try:
-                    g = parse_png_pixels(bytes(payload or b""))
-                except (ValueError, KeyError, zlib.error, struct.error):
-                    for c in cols:
-                        out[c].append(None)
-                    continue
-                h, w = g.shape
-                m = max(w, h)
-                ow, oh = (
-                    (w, h)
-                    if m <= max_side
-                    else (w * max_side // m, h * max_side // m)
-                )
-                r = g[np.ix_((np.arange(oh) * h) // oh, (np.arange(ow) * w) // ow)]
-                vals = (ow, oh, int(r.sum()), int(r.min()), int(r.max()))
-                for c, v in zip(cols, vals):
-                    out[c].append(v)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=PNG_RESIZE_SCHEMA)
+    side at PNG_RESIZE_MAX_SIDE (integer source indices sx = x*w//ow,
+    sy = y*h//oh, the canonical floor NN map), emitting exact integer pixel
+    stats of the RESIZED plane. Malformed payloads null out (D25 posture)."""
+    return _row_kernel(media, _png_resize_row, PNG_RESIZE_SCHEMA, PNG_ERRORS)
 
 
 @query(
     "x5_png_resize",
-    oracle="""
+    oracle=f"""
     WITH dims AS (
       SELECT doc_id,
              16 + doc_id % 48 AS w,
@@ -327,10 +368,8 @@ def resize_png_pixels(media: DataFrame, max_side: int = 16) -> DataFrame:
       FROM documents WHERE doc_id % 3 = 0
     ), sized AS (
       SELECT *,
-             CASE WHEN greatest(w, h) <= 16 THEN w
-                  ELSE (w * 16) // greatest(w, h) END AS ow,
-             CASE WHEN greatest(w, h) <= 16 THEN h
-                  ELSE (h * 16) // greatest(w, h) END AS oh
+             {_sql_clamp("w", PNG_RESIZE_MAX_SIDE)} AS ow,
+             {_sql_clamp("h", PNG_RESIZE_MAX_SIDE)} AS oh
       FROM dims
     ), px AS (
       SELECT doc_id, ow, oh,
@@ -361,10 +400,10 @@ def x5_png_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image resize, oracle-matched at the PIXEL level (r9): spec-valid
     PNGs whose scanlines rotate with the row index (pixel byte (y, i) =
     digest[(i + y) % 32], so the image varies in BOTH axes), decoded by the
-    full unfiltering pixel parser, nearest-neighbor-resampled to a 16-px
-    clamp, and the resized plane's exact integer stats (sum/min/max) must
-    equal DuckDB's re-derivation of the sampled pixels from the synthesis
-    formula — a wrong sx/sy floor map, a transposed axis, an off-by-one
+    full unfiltering pixel parser, nearest-neighbor-resampled to a
+    PNG_RESIZE_MAX_SIDE (16-px) clamp, and the resized plane's exact
+    integer stats (sum/min/max) must equal DuckDB's re-derivation of the
+    sampled pixels from the synthesis formula — a wrong sx/sy floor map, a transposed axis, an off-by-one
     in the clamp, or any decode defect breaks the hash. This retires the
     resize stub for the format with a real decoder; x5_resize keeps the
     generic-binary fallback shape. Scale: embarrassingly parallel map-only
@@ -385,49 +424,43 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def sample_frames(media: DataFrame, every: int = 8) -> DataFrame:
+FRAME_SAMPLE_EVERY = 8  # x5_frame_sample's stride, kernel and oracle alike
+
+
+def _frame_sample_rows(payload: bytes) -> list[tuple]:
+    _, _, n_frames, fhash, _ = _stub_decode(payload)
+    return [
+        (i, i * 40, hashlib.sha256(f"{fhash}:{i}".encode()).hexdigest()[:16])  # 25 fps
+        for i in range(0, n_frames, FRAME_SAMPLE_EVERY)
+    ]
+
+
+def sample_frames(media: DataFrame) -> DataFrame:
     """Frame-sampling stage: one input video row expands to ceil(n_frames /
-    every) frame rows (row-explosion inside mapInPandas — the same 1->N batch
+    FRAME_SAMPLE_EVERY) frame rows (a 1->N row function — the same batch
     shape an av.open frame iterator produces). 25 fps assumed for frame
     timestamps.
 
-    Decode + sample run as ONE mapInPandas kernel (r13, guide §4): the old
-    form chained decode_features' kernel into a second sampling kernel, so
-    every batch crossed the JVM<->Python boundary twice (payload in, features
-    out, features in again, frames out) and paid two ArrowEval stages. The
-    decode body here is the shared STUB_DECODER (`_stub_decode`, sha256-derived
-    n_frames/feature_hash) — a real av.open decoder would expose its frame
-    iterator the same single-pass way, which is exactly why fusing is the
-    production shape: the decoded stream feeds the sampler without ever
-    re-serializing."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, tss, shas = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                _, _, n_frames, fhash, _ = _stub_decode(payload)
-                for i in range(0, n_frames, every):
-                    ids.append(mid)
-                    idxs.append(i)
-                    tss.append(i * 40)  # 25 fps
-                    shas.append(hashlib.sha256(f"{fhash}:{i}".encode()).hexdigest()[:16])
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "frame_ts_ms": tss, "frame_sha": shas}
-            )
-
+    Decode + sample run as ONE row function (r13, guide §4): the old form
+    chained decode_features' kernel into a second sampling kernel, so every
+    batch crossed the JVM<->Python boundary twice (payload in, features
+    out, features in again, frames out) and paid two Python eval stages.
+    The decode body here is the shared STUB_DECODER (`_stub_decode`,
+    sha256-derived n_frames/feature_hash) — a real av.open decoder would
+    expose its frame iterator the same single-pass way, which is exactly
+    why fusing is the production shape: the decoded stream feeds the
+    sampler without ever re-serializing."""
     # filter BEFORE the decode stage: Catalyst cannot push a predicate
-    # through a mapInPandas eval barrier, so the selection must be staged by
+    # through a mapInArrow eval barrier, so the selection must be staged by
     # hand or every non-video payload pays the Arrow transfer + decode
-    return (
-        media.filter(F.col("media_type") == "video/mp4")
-        .select("media_id", "payload")
-        .mapInPandas(kernel, schema=FRAME_SCHEMA)
+    return _row_kernel(
+        media.filter(F.col("media_type") == "video/mp4"), _frame_sample_rows, FRAME_SCHEMA
     )
 
 
 @query(
     "x5_frame_sample",
-    oracle="""
+    oracle=f"""
     WITH vids AS (
       SELECT doc_id AS media_id,
              1 + CAST(('0x' || substr(sha256(text), 5, 2)) AS INT) % 32 AS n_frames
@@ -435,7 +468,7 @@ def sample_frames(media: DataFrame, every: int = 8) -> DataFrame:
       WHERE doc_id % 3 = 2
     )
     SELECT media_id, CAST(f.i AS INT) AS frame_idx, CAST(f.i * 40 AS BIGINT) AS frame_ts_ms
-    FROM vids, LATERAL (SELECT unnest(range(0, n_frames, 8)) AS i) f
+    FROM vids, LATERAL (SELECT unnest(range(0, n_frames, {FRAME_SAMPLE_EVERY})) AS i) f
     ORDER BY media_id, frame_idx
     """,
     tags=("X5", "U4", "U5"),
@@ -458,13 +491,6 @@ def x5_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the DuckDB oracle independently predicts them from the synthesis formula.
 # A wrong parser (endianness, header offsets, frame math) fails the oracle.
 
-WAV_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), True),
-    ]
-)
-
 WAV_META_SCHEMA = StructType(
     [
         StructField("media_id", LongType(), False),
@@ -479,38 +505,30 @@ WAV_META_SCHEMA = StructType(
 _WAV_RATES = (8000, 16000, 22050, 44100)
 
 
-def wav_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio fixture: one real PCM WAV container per audio-typed media row
-    (doc_id % 3 == 1, the media_table type assignment), synthesized
-    deterministically from doc_id — rate/channels/length are doc_id
+def _synth_wav(doc_id: int) -> bytes:
+    """One real PCM WAV container; rate/channels/length are doc_id
     arithmetic so the oracle can predict them without parsing binaries."""
-    import io
-    import wave
+    rate = _WAV_RATES[doc_id % 4]
+    channels = 1 + doc_id % 2
+    n_samples = 100 + doc_id % 900
+    pcm = hashlib.sha256(str(doc_id).encode()).digest()
+    body = (pcm * (n_samples * channels * 2 // len(pcm) + 1))[
+        : n_samples * channels * 2
+    ]
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as w:
+        w.setnchannels(channels)
+        w.setsampwidth(2)
+        w.setframerate(rate)
+        w.writeframes(body)
+    return buf.getvalue()
 
-    d = spread(T(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 1)
 
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                rate = _WAV_RATES[doc_id % 4]
-                channels = 1 + doc_id % 2
-                n_samples = 100 + doc_id % 900
-                pcm = hashlib.sha256(str(doc_id).encode()).digest()
-                body = (pcm * (n_samples * channels * 2 // len(pcm) + 1))[
-                    : n_samples * channels * 2
-                ]
-                buf = io.BytesIO()
-                with wave.open(buf, "wb") as w:
-                    w.setnchannels(channels)
-                    w.setsampwidth(2)
-                    w.setframerate(rate)
-                    w.writeframes(body)
-                payloads.append(buf.getvalue())
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    return d.select("doc_id").mapInPandas(synth, schema=WAV_SCHEMA)
+def wav_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Audio fixture: one real PCM WAV container (`_synth_wav`) per
+    audio-typed media row (doc_id % 3 == 1, the media_table type
+    assignment), synthesized deterministically from doc_id."""
+    return _synth_table(spark, sf_dir, 1, _synth_wav)
 
 
 def parse_wav_meta(payload: bytes) -> tuple:
@@ -518,12 +536,9 @@ def parse_wav_meta(payload: bytes) -> tuple:
     unified x5_media_meta dispatch, and the parser fuzz suite — a single
     parse path so the fuzzed code IS the kernel code). Returns
     (rate, channels, sample_width, n_frames, duration_ms); raises one of
-    the kernel-declared malformed classes otherwise. Fields destined for
+    WAV_ERRORS otherwise. Fields destined for
     IntegerType columns are bounded to int32 here — a corrupt u32 header
     value must null the ROW, not explode at the Arrow boundary."""
-    import io
-    import wave
-
     with wave.open(io.BytesIO(payload), "rb") as w:
         rate, ch = w.getframerate(), w.getnchannels()
         width, n = w.getsampwidth(), w.getnframes()
@@ -540,45 +555,10 @@ def decode_wav_meta(media: DataFrame) -> DataFrame:
     """REAL decode kernel: parse each RIFF/WAVE payload with the stdlib
     `wave` reader (parse_wav_meta) and emit its header/frame metadata;
     malformed payloads yield null metadata instead of failing the batch
-    (the D25 quarantine posture, column edition). Same Arrow-batched
-    mapInPandas contract as decode_features — this is the production
-    dataflow with a real codec."""
-    import struct
-    import wave
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "sample_rate": [],
-                "n_channels": [],
-                "sample_width": [],
-                "n_samples": [],
-                "duration_ms": [],
-            }
-            for payload in pdf["payload"]:
-                try:
-                    rate, ch, width, n, dur = parse_wav_meta(bytes(payload or b""))
-                    out["sample_rate"].append(rate)
-                    out["n_channels"].append(ch)
-                    out["sample_width"].append(width)
-                    out["n_samples"].append(n)
-                    out["duration_ms"].append(dur)
-                # wave also raises RuntimeError / struct.error on some
-                # corrupt shapes (found by the parser fuzz suite) — all
-                # malformed classes must null the ROW, not kill the task
-                except (wave.Error, EOFError, ValueError, RuntimeError, struct.error):
-                    for k in (
-                        "sample_rate",
-                        "n_channels",
-                        "sample_width",
-                        "n_samples",
-                        "duration_ms",
-                    ):
-                        out[k].append(None)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=WAV_META_SCHEMA)
+    (the D25 quarantine posture, column edition). Same `_row_kernel`
+    contract as decode_features — this is the production dataflow with a
+    real codec."""
+    return _row_kernel(media, lambda p: [parse_wav_meta(p)], WAV_META_SCHEMA, WAV_ERRORS)
 
 
 @query(
@@ -604,7 +584,7 @@ def decode_wav_meta(media: DataFrame) -> DataFrame:
 def x5_wav_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio metadata extraction with a REAL WAV decode kernel: genuine
     RIFF/WAVE containers are parsed by the stdlib `wave` reader inside
-    mapInPandas; the oracle predicts rate/channels/frames/duration from the
+    the row kernel; the oracle predicts rate/channels/frames/duration from the
     fixture's synthesis formula, so any header/frame-math parsing error
     breaks the hash match. (Replaces the rows-only stub posture for one
     modality; image/video decode remains stubbed — no codecs in-env.)"""
@@ -620,13 +600,6 @@ def x5_wav_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 # a real image-container decode, not a stub. The lossy image codec got its
 # own real lane in r9 (x5_jpeg_blocks below); only H.264 remains
 # env-stubbed.
-
-PNG_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), True),
-    ]
-)
 
 PNG_META_SCHEMA = StructType(
     [
@@ -644,9 +617,6 @@ _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 
 def _png_chunk(ctype: bytes, data: bytes) -> bytes:
-    import struct
-    import zlib
-
     return (
         struct.pack(">I", len(data))
         + ctype
@@ -655,12 +625,38 @@ def _png_chunk(ctype: bytes, data: bytes) -> bytes:
     )
 
 
+def _synth_png(doc_id: int, y_shift: bool = False) -> bytes:
+    """One spec-valid PNG (signature, IHDR, zlib IDAT, CRCs); dimensions and
+    color type derived from doc_id so the oracle predicts them without
+    parsing binaries. See png_media_table for `y_shift`."""
+    width = 16 + doc_id % 48
+    height = 16 + doc_id % 37
+    color_type = 0 if doc_id % 2 == 0 else 2  # gray / RGB
+    channels = 1 if color_type == 0 else 3
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
+    stream = hashlib.sha256(str(doc_id).encode()).digest()
+    row_len = width * channels
+    tiled = stream * (row_len // len(stream) + 2)
+    if y_shift:
+        raw = b"".join(
+            b"\x00" + tiled[y % 32 : y % 32 + row_len]
+            for y in range(height)
+        )
+    else:
+        raw = (b"\x00" + tiled[:row_len]) * height
+    return (
+        _PNG_SIG
+        + _png_chunk(b"IHDR", ihdr)
+        + _png_chunk(b"IDAT", zlib.compress(raw))
+        + _png_chunk(b"IEND", b"")
+    )
+
+
 def png_media_table(
     spark: SparkSession, sf_dir: str, y_shift: bool = False
 ) -> DataFrame:
-    """Image fixture: one spec-valid PNG per image-typed media row
-    (doc_id % 3 == 0), dimensions/color type derived from doc_id so the
-    oracle predicts them without parsing binaries.
+    """Image fixture: one spec-valid PNG (`_synth_png`) per image-typed
+    media row (doc_id % 3 == 0).
 
     y_shift=True rotates each scanline's byte stream by its row index
     (pixel byte (y, i) = digest[(i + y) % 32]) so the image VARIES in both
@@ -668,48 +664,12 @@ def png_media_table(
     (the default all-rows-identical form would let a wrong y-mapping pass
     unnoticed). The historical oracles (x5_png_meta etc.) keep the
     default."""
-    import struct
-    import zlib
-
-    d = spread(T(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 0)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                width = 16 + doc_id % 48
-                height = 16 + doc_id % 37
-                color_type = 0 if doc_id % 2 == 0 else 2  # gray / RGB
-                channels = 1 if color_type == 0 else 3
-                ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
-                stream = hashlib.sha256(str(doc_id).encode()).digest()
-                row_len = width * channels
-                tiled = stream * (row_len // len(stream) + 2)
-                if y_shift:
-                    raw = b"".join(
-                        b"\x00" + tiled[y % 32 : y % 32 + row_len]
-                        for y in range(height)
-                    )
-                else:
-                    raw = (b"\x00" + tiled[:row_len]) * height
-                payloads.append(
-                    _PNG_SIG
-                    + _png_chunk(b"IHDR", ihdr)
-                    + _png_chunk(b"IDAT", zlib.compress(raw))
-                    + _png_chunk(b"IEND", b"")
-                )
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    return d.select("doc_id").mapInPandas(synth, schema=PNG_SCHEMA)
+    return _synth_table(spark, sf_dir, 0, lambda doc_id: _synth_png(doc_id, y_shift))
 
 
 def parse_png_meta(payload: bytes):
     """Module-level PNG chunk-walk parser (shared by decode_png_meta and
     the unified x5_media_meta dispatch kernel)."""
-    import struct
-    import zlib
-
     if payload[: len(_PNG_SIG)] != _PNG_SIG:
         raise ValueError("bad signature")
     pos = len(_PNG_SIG)
@@ -745,25 +705,7 @@ def decode_png_meta(media: DataFrame) -> DataFrame:
     read IHDR geometry, inflate the concatenated IDATs and verify the
     filter-prefixed scanline length. Malformed payloads yield null metadata
     instead of failing the batch (D25 posture, column edition)."""
-    import struct
-    import zlib
-
-    parse = parse_png_meta
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("width", "height", "bit_depth", "n_channels", "n_pixels", "raw_bytes")
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"], **{c: [] for c in cols}}
-            for payload in pdf["payload"]:
-                try:
-                    vals = parse(bytes(payload or b""))
-                except (ValueError, KeyError, zlib.error, struct.error):
-                    vals = (None,) * 6
-                for c, v in zip(cols, vals):
-                    out[c].append(v)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=PNG_META_SCHEMA)
+    return _row_kernel(media, lambda p: [parse_png_meta(p)], PNG_META_SCHEMA, PNG_ERRORS)
 
 
 @query(
@@ -819,8 +761,6 @@ _AVI_RATES = (10, 15, 24, 30)
 
 
 def _avi_chunk(fourcc: bytes, data: bytes) -> bytes:
-    import struct
-
     pad = b"\x00" if len(data) % 2 else b""
     return fourcc + struct.pack("<I", len(data)) + data + pad
 
@@ -829,73 +769,64 @@ def _avi_list(listtype: bytes, payload: bytes) -> bytes:
     return _avi_chunk(b"LIST", listtype + payload)
 
 
+def _synth_avi(doc_id: int) -> bytes:
+    """One spec-valid RIFF/AVI container; geometry/rate/frames derived from
+    doc_id so the oracle predicts them without parsing binaries."""
+    width = 64 + doc_id % 128
+    height = 48 + doc_id % 96
+    fps = _AVI_RATES[doc_id % 4]
+    n_frames = 10 + doc_id % 90
+    # avih: microsec/frame, maxbytes, padding, flags, frames,
+    # initial, streams, bufsize, width, height, reserved[4]
+    avih = struct.pack(
+        "<10I16x",
+        1_000_000 // fps,
+        0,
+        0,
+        0,
+        n_frames,
+        0,
+        1,
+        0,
+        width,
+        height,
+    )
+    strh = struct.pack("<4s4s3I5I2HI8x", b"vids", b"\x00" * 4,
+                       0, 0, 0, 1, fps, 0, n_frames, 0, 0, 0, 0)
+    hdrl = _avi_list(
+        b"hdrl",
+        _avi_chunk(b"avih", avih)
+        + _avi_list(b"strl", _avi_chunk(b"strh", strh)),
+    )
+    # one REAL '00dc' chunk per declared frame (avih count and the movi
+    # stream agree); each frame body is the 64-byte ascii sha256 hex of
+    # "doc_id:idx" so the demux oracle can reproduce it in pure SQL
+    # (x5_video_frames)
+    movi = _avi_list(
+        b"movi",
+        b"".join(
+            _avi_chunk(
+                b"00dc",
+                hashlib.sha256(
+                    f"{doc_id}:{i}".encode()
+                ).hexdigest().encode(),
+            )
+            for i in range(n_frames)
+        ),
+    )
+    body = b"AVI " + hdrl + movi
+    return b"RIFF" + struct.pack("<I", len(body)) + body
+
+
 def avi_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video fixture: one spec-valid RIFF/AVI container per video-typed
-    media row (doc_id % 3 == 2), geometry/rate/frames derived from doc_id
-    so the oracle predicts them without parsing binaries."""
-    import struct
-
-    d = spread(T(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 2)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id in pdf["doc_id"]:
-                doc_id = int(doc_id)
-                width = 64 + doc_id % 128
-                height = 48 + doc_id % 96
-                fps = _AVI_RATES[doc_id % 4]
-                n_frames = 10 + doc_id % 90
-                # avih: microsec/frame, maxbytes, padding, flags, frames,
-                # initial, streams, bufsize, width, height, reserved[4]
-                avih = struct.pack(
-                    "<10I16x",
-                    1_000_000 // fps,
-                    0,
-                    0,
-                    0,
-                    n_frames,
-                    0,
-                    1,
-                    0,
-                    width,
-                    height,
-                )
-                strh = struct.pack("<4s4s3I5I2HI8x", b"vids", b"\x00" * 4,
-                                   0, 0, 0, 1, fps, 0, n_frames, 0, 0, 0, 0)
-                hdrl = _avi_list(
-                    b"hdrl",
-                    _avi_chunk(b"avih", avih)
-                    + _avi_list(b"strl", _avi_chunk(b"strh", strh)),
-                )
-                # one REAL '00dc' chunk per declared frame (avih count and
-                # the movi stream agree); each frame body is the 64-byte
-                # ascii sha256 hex of "doc_id:idx" so the demux oracle can
-                # reproduce it in pure SQL (x5_video_frames)
-                movi = _avi_list(
-                    b"movi",
-                    b"".join(
-                        _avi_chunk(
-                            b"00dc",
-                            hashlib.sha256(
-                                f"{doc_id}:{i}".encode()
-                            ).hexdigest().encode(),
-                        )
-                        for i in range(n_frames)
-                    ),
-                )
-                body = b"AVI " + hdrl + movi
-                payloads.append(b"RIFF" + struct.pack("<I", len(body)) + body)
-            yield pd.DataFrame({"media_id": pdf["doc_id"], "payload": payloads})
-
-    return d.select("doc_id").mapInPandas(synth, schema=PNG_SCHEMA)
+    """Video fixture: one spec-valid RIFF/AVI container (`_synth_avi`) per
+    video-typed media row (doc_id % 3 == 2)."""
+    return _synth_table(spark, sf_dir, 2, _synth_avi)
 
 
 def parse_avi_meta(payload: bytes):
     """Module-level RIFF/AVI hdrl/avih parser (shared by decode_avi_meta
     and the unified x5_media_meta dispatch kernel)."""
-    import struct
-
     if payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
         raise ValueError("not an AVI")
     (riff_len,) = struct.unpack("<I", payload[4:8])
@@ -941,24 +872,7 @@ def decode_avi_meta(media: DataFrame) -> DataFrame:
     """REAL decode kernel: walk the RIFF chunk tree, find hdrl/avih and
     read geometry, frame count and frame timing. Malformed payloads yield
     null metadata (D25 posture, column edition)."""
-    import struct
-
-    parse = parse_avi_meta
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("width", "height", "n_frames", "fps", "duration_ms")
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"], **{c: [] for c in cols}}
-            for payload in pdf["payload"]:
-                try:
-                    vals = parse(bytes(payload or b""))
-                except (ValueError, struct.error):
-                    vals = (None,) * 5
-                for c, v in zip(cols, vals):
-                    out[c].append(v)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=AVI_META_SCHEMA)
+    return _row_kernel(media, lambda p: [parse_avi_meta(p)], AVI_META_SCHEMA, AVI_META_ERRORS)
 
 
 @query(
@@ -1019,13 +933,6 @@ MEDIA_META_SCHEMA = StructType(
 # Out of scope (documented, not hidden): chroma subsampling != 4:4:4,
 # progressive scans, restart markers — and H.264 remains the one
 # env-stubbed codec (x5_decode_features).
-
-JPEG_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), True),
-    ]
-)
 
 JPEG_BLOCKS_SCHEMA = StructType(
     [
@@ -1090,8 +997,6 @@ class _JpegBitWriter:
 
 
 def _jpeg_seg(marker: int, payload: bytes) -> bytes:
-    import struct
-
     return struct.pack(">HH", marker, len(payload) + 2) + payload
 
 
@@ -1108,8 +1013,6 @@ def _synth_jpeg(doc_id: int) -> bytes:
     the oracle formulas (y = (id*31+bi*17)%256, cb = (id*7+bi*3)%256,
     cr = (id*11+bi*5)%256); unit quant table so DC-only blocks round-trip
     bit-exactly. Grayscale for even ids, 3-component 4:4:4 for odd."""
-    import struct
-
     wb = 2 + doc_id % 6
     hb = 2 + doc_id % 5
     width, height = 8 * wb, 8 * hb
@@ -1157,22 +1060,12 @@ def _synth_jpeg(doc_id: int) -> bytes:
 
 
 def jpeg_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image fixture, lossy-codec edition: one spec-valid baseline JPEG per
-    image-typed media row (doc_id % 3 == 0, the media_table modality
-    convention); geometry and per-block planes derived from doc_id so the
-    oracle predicts the DECODED pixels without parsing binaries."""
-    d = spread(T(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 0)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [_synth_jpeg(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    return d.select("doc_id").mapInPandas(synth, schema=JPEG_SCHEMA)
+    """Image fixture, lossy-codec edition: one spec-valid baseline JPEG
+    (`_synth_jpeg`) per image-typed media row (doc_id % 3 == 0, the
+    media_table modality convention); geometry and per-block planes derived
+    from doc_id so the oracle predicts the DECODED pixels without parsing
+    binaries."""
+    return _synth_table(spark, sf_dir, 0, _synth_jpeg)
 
 
 class _JpegBitReader:
@@ -1239,10 +1132,6 @@ _ZIGZAG = [
 
 
 def _idct_basis():
-    import math
-
-    import numpy as np
-
     c = np.ones(8) / 2.0
     c[0] = 1.0 / (2.0 * math.sqrt(2.0))
     n = np.arange(8)
@@ -1261,10 +1150,6 @@ def parse_jpeg_blocks(payload: bytes):
     restart (rejected explicitly, never misdecoded). A block mean that
     lands non-integral reports None (visible as a hash break, never a
     silent round)."""
-    import struct
-
-    import numpy as np
-
     if payload[:2] != b"\xff\xd8":
         raise ValueError("bad SOI")
     pos = 2
@@ -1357,37 +1242,20 @@ def parse_jpeg_blocks(payload: bytes):
     return w, h, nc, means
 
 
+def _jpeg_block_rows(payload: bytes) -> list[tuple]:
+    _w, _h, nc, means = parse_jpeg_blocks(payload)
+    rows = []
+    for bi, y in enumerate(means[0]):
+        cb, cr = (means[1][bi], means[2][bi]) if nc == 3 else (None, None)
+        rows.append((bi, nc, y, cb, cr))
+    return rows
+
+
 def decode_jpeg_blocks(media: DataFrame) -> DataFrame:
     """Arrow-batched baseline-JPEG decode: one row per 8x8 block per media
     with the decoded per-plane integer values. Malformed/unsupported
     payloads yield a single null row (D25 posture, column edition)."""
-
-    import struct
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": [], "block_idx": [], "n_components": [],
-                "y": [], "cb": [], "cr": [],
-            }
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    _w, _h, nc, means = parse_jpeg_blocks(bytes(payload or b""))
-                except (ValueError, KeyError, IndexError, struct.error):
-                    out["media_id"].append(int(mid))
-                    for k in ("block_idx", "n_components", "y", "cb", "cr"):
-                        out[k].append(None)
-                    continue
-                for bi in range(len(means[0])):
-                    out["media_id"].append(int(mid))
-                    out["block_idx"].append(bi)
-                    out["n_components"].append(nc)
-                    out["y"].append(means[0][bi])
-                    out["cb"].append(means[1][bi] if nc == 3 else None)
-                    out["cr"].append(means[2][bi] if nc == 3 else None)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=JPEG_BLOCKS_SCHEMA)
+    return _row_kernel(media, _jpeg_block_rows, JPEG_BLOCKS_SCHEMA, JPEG_ERRORS)
 
 
 @query(
@@ -1472,56 +1340,34 @@ def media_meta_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wav.unionByName(png).unionByName(avi).unionByName(jpg)
 
 
+def _media_meta_row(payload: bytes, media_type: str) -> list[tuple]:
+    if media_type == "audio/wav":
+        rate, _ch, _w, n, dur = parse_wav_meta(payload)
+        return [(None, None, n, rate, dur)]
+    if media_type == "image/png":
+        w, h, _depth, _ch, n_pixels, _raw = parse_png_meta(payload)
+        return [(w, h, n_pixels, None, None)]
+    if media_type == "video/avi":
+        return [parse_avi_meta(payload)]
+    if media_type == "image/jpeg":
+        w, h, _nc, means = parse_jpeg_blocks(payload)
+        return [(w, h, len(means[0]), None, None)]
+    return [(None,) * 5]
+
+
 def decode_media_meta(media: DataFrame) -> DataFrame:
     """ONE Arrow-batched kernel dispatching per row on media_type to the
-    three real container parsers — the production decode_features shape
-    with no stub left in the path. Unknown types / malformed payloads
-    yield null metadata (D25 posture)."""
-    import io
-    import struct
-    import wave
-    import zlib
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("width", "height", "n_units", "rate", "duration_ms")
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "media_type": pdf["media_type"],
-                **{c: [] for c in cols},
-            }
-            for mt, payload in zip(pdf["media_type"], pdf["payload"]):
-                vals = (None,) * 5
-                try:
-                    b = bytes(payload or b"")
-                    if mt == "audio/wav":
-                        rate, _ch, _w, n, dur = parse_wav_meta(b)
-                        vals = (None, None, n, rate, dur)
-                    elif mt == "image/png":
-                        w, h, _depth, _ch, n_pixels, _raw = parse_png_meta(b)
-                        vals = (w, h, n_pixels, None, None)
-                    elif mt == "video/avi":
-                        w, h, n_frames, fps, dur = parse_avi_meta(b)
-                        vals = (w, h, n_frames, fps, dur)
-                    elif mt == "image/jpeg":
-                        w, h, _nc, means = parse_jpeg_blocks(b)
-                        vals = (w, h, len(means[0]), None, None)
-                except (
-                    ValueError,
-                    KeyError,
-                    IndexError,  # JPEG truncated-scan path
-                    wave.Error,
-                    EOFError,
-                    RuntimeError,  # wave's corrupt-fmt path (fuzz-found)
-                    zlib.error,
-                    struct.error,
-                ):
-                    vals = (None,) * 5
-                for c, v in zip(cols, vals):
-                    out[c].append(v)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=MEDIA_META_SCHEMA)
+    real container parsers — the production decode_features shape with no
+    stub left in the path. Unknown types / malformed payloads yield null
+    metadata (D25 posture); the malformed classes are the union of the
+    four modalities' own."""
+    return _row_kernel(
+        media,
+        _media_meta_row,
+        MEDIA_META_SCHEMA,
+        WAV_ERRORS + PNG_ERRORS + AVI_META_ERRORS + JPEG_ERRORS,
+        keys=("media_id", "media_type"),
+    )
 
 
 @query(
@@ -1595,51 +1441,31 @@ WAV_FEAT_SCHEMA = StructType(
 )
 
 
+def _wav_features_row(payload: bytes) -> list[tuple]:
+    with wave.open(io.BytesIO(payload), "rb") as w:
+        if w.getsampwidth() != 2:
+            raise ValueError("non-16-bit pcm")
+        frames = w.readframes(w.getnframes())
+    v = np.frombuffer(frames, dtype="<i2").astype(np.int64)
+    if v.size == 0:
+        raise ValueError("empty frame stream")
+    nonneg = v >= 0
+    return [
+        (
+            int(v.size),
+            int(np.sum(v * v)),
+            int(np.max(np.abs(v))),
+            int(np.count_nonzero(nonneg[1:] != nonneg[:-1])),
+        )
+    ]
+
+
 def decode_wav_features(media: DataFrame) -> DataFrame:
     """REAL frame decode: parse RIFF/WAVE with stdlib `wave`, interpret the
     frame bytes as interleaved little-endian int16, and emit integer-exact
     sample statistics (energy = sum v^2 as int64, peak |v|, zero crossings
     with sign(v) := v >= 0). Malformed payloads null out (D25 posture)."""
-    import io
-    import struct
-    import wave
-
-    import numpy as np
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {
-                "media_id": pdf["media_id"],
-                "n_vals": [],
-                "energy_sumsq": [],
-                "peak_abs": [],
-                "zero_crossings": [],
-            }
-            for payload in pdf["payload"]:
-                try:
-                    with wave.open(io.BytesIO(bytes(payload or b"")), "rb") as w:
-                        if w.getsampwidth() != 2:
-                            raise ValueError("non-16-bit pcm")
-                        frames = w.readframes(w.getnframes())
-                    v = np.frombuffer(frames, dtype="<i2").astype(np.int64)
-                    if v.size == 0:
-                        raise ValueError("empty frame stream")
-                    nonneg = v >= 0
-                    out["n_vals"].append(int(v.size))
-                    out["energy_sumsq"].append(int(np.sum(v * v)))
-                    out["peak_abs"].append(int(np.max(np.abs(v))))
-                    out["zero_crossings"].append(
-                        int(np.count_nonzero(nonneg[1:] != nonneg[:-1]))
-                    )
-                # wave also raises RuntimeError / struct.error on some
-                # corrupt shapes (found by the parser fuzz suite) — all
-                # malformed classes must null the ROW, not kill the task
-                except (wave.Error, EOFError, ValueError, RuntimeError, struct.error):
-                    for k in ("n_vals", "energy_sumsq", "peak_abs", "zero_crossings"):
-                        out[k].append(None)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=WAV_FEAT_SCHEMA)
+    return _row_kernel(media, _wav_features_row, WAV_FEAT_SCHEMA, WAV_ERRORS)
 
 
 @query(
@@ -1692,7 +1518,7 @@ def x5_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula (sha256 hex repeated, little-endian pairs, two's complement),
     so the decoder's frame math is pinned end-to-end, not just headers.
 
-    Scale shape: identical to every x5 lane — Arrow-batched mapInPandas
+    Scale shape: identical to every x5 lane — the Arrow-batched row kernel
     over the payload column, one narrow pass, per-file reduction inside
     the kernel (nothing per-sample ever leaves the worker)."""
     return decode_wav_features(wav_media_table(spark, sf_dir)).orderBy("media_id")
@@ -1744,6 +1570,14 @@ def parse_avi_frames(payload: bytes) -> list[bytes]:
     return frames
 
 
+def _avi_frame_rows(payload: bytes) -> list[tuple]:
+    try:
+        frames = parse_avi_frames(payload)
+    except AVI_FRAMES_ERRORS:
+        return []  # drop the file
+    return [(i, len(body), hashlib.md5(body).hexdigest()) for i, body in enumerate(frames)]
+
+
 def decode_avi_frames(media: DataFrame) -> DataFrame:
     """REAL 1->N demux kernel: each payload explodes into one row per video
     frame chunk (index, byte length, content md5). Malformed containers
@@ -1751,23 +1585,7 @@ def decode_avi_frames(media: DataFrame) -> DataFrame:
     posture is drop-the-file, not a null row per absent frame (the file's
     absence is visible as a missing media_id, which the accounting ops
     surface)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "frame_idx": [], "frame_len": [], "frame_md5": []}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    frames = parse_avi_frames(bytes(payload or b""))
-                except ValueError:
-                    continue
-                for i, body in enumerate(frames):
-                    rows["media_id"].append(int(media_id))
-                    rows["frame_idx"].append(i)
-                    rows["frame_len"].append(len(body))
-                    rows["frame_md5"].append(hashlib.md5(body).hexdigest())
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(kernel, schema=VIDEO_FRAME_SCHEMA)
+    return _row_kernel(media, _avi_frame_rows, VIDEO_FRAME_SCHEMA)
 
 
 @query(
@@ -1793,7 +1611,7 @@ def x5_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula in pure SQL, so chunk offsets, pad bytes, stream order and
     frame boundaries are all pinned by the hash match.
 
-    Scale shape: map-only mapInPandas, 1->N inside the kernel — the same
+    Scale shape: map-only mapInArrow, 1->N inside the kernel — the same
     posture as every x5 lane; at 100 TB frames land partitioned by
     media_id for downstream (env-gated) pixel decode."""
     return decode_avi_frames(avi_media_table(spark, sf_dir)).orderBy(
@@ -1826,11 +1644,6 @@ def parse_png_pixels(payload: bytes):
     an (h, w) uint8 GRAYSCALE array (gray = channel mean via floor division
     for color images). 8-bit depth, color types 0/2/4/6 (palette needs PLTE
     state the fixture never produces — raises like any malformed input)."""
-    import struct
-    import zlib
-
-    import numpy as np
-
     if payload[: len(_PNG_SIG)] != _PNG_SIG:
         raise ValueError("bad signature")
     pos = len(_PNG_SIG)
@@ -1905,8 +1718,6 @@ def average_hash(gray) -> tuple[str, int]:
     block-mean grid (floor-division means, so every step is integer-exact),
     threshold at the floor-mean of the 64 cell means, MSB-first bit order.
     Returns (16-char hex, set-bit count). Needs h >= 8 and w >= 8."""
-    import numpy as np
-
     h, w = gray.shape
     if h < 8 or w < 8:
         raise ValueError("image smaller than hash grid")
@@ -1924,28 +1735,16 @@ def average_hash(gray) -> tuple[str, int]:
     return format(val, "016x"), int(bits.sum())
 
 
+def _phash_row(payload: bytes) -> list[tuple]:
+    gray = parse_png_pixels(payload)
+    hx, nset = average_hash(gray)
+    return [(gray.shape[1], gray.shape[0], hx, nset)]
+
+
 def decode_image_phash(media: DataFrame) -> DataFrame:
-    """mapInPandas kernel: PNG payload -> (geometry, 64-bit aHash). Malformed
-    payloads null out (D25 posture, column edition)."""
-    import struct
-    import zlib
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("width", "height", "phash_hex", "n_set_bits")
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"], **{c: [] for c in cols}}
-            for payload in pdf["payload"]:
-                try:
-                    gray = parse_png_pixels(bytes(payload or b""))
-                    hx, nset = average_hash(gray)
-                    vals = (gray.shape[1], gray.shape[0], hx, nset)
-                except (ValueError, KeyError, zlib.error, struct.error):
-                    vals = (None,) * 4
-                for c, v in zip(cols, vals):
-                    out[c].append(v)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=PHASH_SCHEMA)
+    """PNG payload -> (geometry, 64-bit aHash) through the row kernel.
+    Malformed payloads null out (D25 posture, column edition)."""
+    return _row_kernel(media, _phash_row, PHASH_SCHEMA, PNG_ERRORS)
 
 
 def _sql_byte(j: str) -> str:
@@ -2014,7 +1813,7 @@ def x5_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture's synthesis formula in pure SQL and the hash match pins filter
     reconstruction, luma math, block boundaries, threshold and bit order.
 
-    Scale shape: map-only mapInPandas over the payload column (same posture
+    Scale shape: map-only mapInArrow over the payload column (same posture
     as every x5 lane); downstream dedup bands on substrings of phash_hex —
     exact-dup images collide on the full hash, near-dups within Hamming
     distance share a band with LSH probability, so the join is a uniform
@@ -2039,7 +1838,7 @@ def x5_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hash, not decorative. Out of scope (documented, not hidden): slice DATA
 # entropy decode (CAVLC/CABAC residuals -> pixels) — that is the one H.264
 # stage that genuinely needs a codec; everything up to it is real here.
-# Scale shape: map-only mapInPandas over the payload column, ~n_frames rows
+# Scale shape: map-only mapInArrow over the payload column, ~n_frames rows
 # out per asset — no shuffle before the output sort.
 
 # forced RBSP tail: every 2-zero run is followed by a byte <= 3, so EPB
@@ -2154,19 +1953,8 @@ def _synth_h264(doc_id: int) -> bytes:
 
 def h264_media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Video fixture on the video-typed slice (doc_id % 3 == 2), one
-    Annex-B H.264 elementary stream per row."""
-    d = spread(T(spark, sf_dir, "documents")).filter(F.col("doc_id") % 3 == 2)
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "payload": [_synth_h264(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    return d.select("doc_id").mapInPandas(synth, schema=PNG_SCHEMA)
+    Annex-B H.264 elementary stream (`_synth_h264`) per row."""
+    return _synth_table(spark, sf_dir, 2, _synth_h264)
 
 
 class _BitReader:
@@ -2316,7 +2104,7 @@ def parse_h264_nals(payload: bytes) -> list[tuple]:
                 (idx, ntype, ref_idc, len(rbsp), slice_type, frame_num,
                  width, height, body_sha)
             )
-        except (ValueError, IndexError):
+        except H264_ERRORS:
             rows.append((idx, None, None, None, None, None, None, None, None))
     return rows
 
@@ -2338,21 +2126,8 @@ H264_NALS_SCHEMA = StructType(
 
 
 def decode_h264_nals(media: DataFrame) -> DataFrame:
-    """mapInPandas kernel over Annex-B payloads -> one row per NAL unit."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("nal_idx", "nal_type", "nal_ref_idc", "rbsp_len",
-                "slice_type", "frame_num", "width", "height", "body_sha")
-        for pdf in batches:
-            out = {"media_id": [], **{c: [] for c in cols}}
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                for row in parse_h264_nals(bytes(payload or b"")):
-                    out["media_id"].append(media_id)
-                    for c, v in zip(cols, row):
-                        out[c].append(v)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(kernel, schema=H264_NALS_SCHEMA)
+    """Row kernel over Annex-B payloads -> one row per NAL unit."""
+    return _row_kernel(media, parse_h264_nals, H264_NALS_SCHEMA)
 
 
 # SPS RBSP bit budget (see _synth_h264): 24 profile/flags/level + 1 sps_id

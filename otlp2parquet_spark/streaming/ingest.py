@@ -92,6 +92,7 @@ def stream_ingest(
     max_files_per_trigger: int | None = None,
     max_rows_per_file: int = writer.DEFAULT_MAX_ROWS_PER_FILE,
     quarantine_dir: str | None = None,
+    max_payload_bytes: int = ingest.DEFAULT_MAX_PAYLOAD_BYTES,
 ):
     """Landing dir -> decoded -> partitioned Parquet, continuously.
 
@@ -108,9 +109,16 @@ def stream_ingest(
     - native: at-least-once. `write_native` appends under fresh file names,
       so an epoch replayed after a crash between its write and its
       checkpoint commit lands its rows twice.
+
+    A landing file over `max_payload_bytes` (request.max_payload_bytes, the
+    limit the receiver acknowledged it under) is rejected and counted in
+    the `landing` observation, as in the batch scan.
     """
     payloads = read_landing_stream(
-        spark, landing_dir, max_files_per_trigger=max_files_per_trigger
+        spark,
+        landing_dir,
+        max_files_per_trigger=max_files_per_trigger,
+        max_payload_bytes=max_payload_bytes,
     )
     # a poison payload must not kill the long-running query: with a
     # quarantine dir the bad input lands there (D25), otherwise fail loudly

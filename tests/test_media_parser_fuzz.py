@@ -17,11 +17,20 @@ import hashlib
 import io
 import struct
 import wave
+import zlib
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+# the exception classes the decode kernels catch, per lane, imported from
+# the module that catches them: the property being tested is "nothing
+# escapes the kernel's clause"
 from otlp2parquet_spark.extensions.multimodal import (
+    AVI_FRAMES_ERRORS,
+    AVI_META_ERRORS,
+    JPEG_ERRORS,
+    PNG_ERRORS,
+    WAV_ERRORS,
     _synth_jpeg,
     average_hash,
     parse_avi_frames,
@@ -31,20 +40,6 @@ from otlp2parquet_spark.extensions.multimodal import (
     parse_png_pixels,
     parse_wav_meta,
 )
-
-# the exception classes the decode kernels catch, per lane — these sets
-# MUST mirror the kernels' except clauses (multimodal.py): the property
-# being tested is "nothing escapes the kernel's clause"
-import zlib
-
-_WAV_OK = (wave.Error, EOFError, ValueError, RuntimeError, struct.error)
-_PNG_OK = (ValueError, KeyError, zlib.error, struct.error)
-_AVI_META_OK = (ValueError, struct.error)
-# decode_avi_frames catches bare ValueError — parse_avi_frames uses only
-# slicing + int.from_bytes, so ValueError is provably its complete set;
-# the fuzz property must be exactly as strict as the kernel clause
-_AVI_FRAMES_OK = (ValueError,)
-_JPEG_OK = (ValueError, KeyError, IndexError, struct.error)
 
 
 def _wav_bytes(doc_id: int = 7) -> bytes:
@@ -120,12 +115,12 @@ def _mutate(good: bytes, muts, cut: int) -> bytes:
 @settings(max_examples=300, deadline=None)
 def test_parsers_never_crash_on_arbitrary_bytes(data):
     for parse, ok in (
-        (_wav_parse, _WAV_OK),
-        (parse_png_meta, _PNG_OK),
-        (parse_png_pixels, _PNG_OK),
-        (parse_avi_meta, _AVI_META_OK),
-        (parse_avi_frames, _AVI_FRAMES_OK),
-        (parse_jpeg_blocks, _JPEG_OK),
+        (_wav_parse, WAV_ERRORS),
+        (parse_png_meta, PNG_ERRORS),
+        (parse_png_pixels, PNG_ERRORS),
+        (parse_avi_meta, AVI_META_ERRORS),
+        (parse_avi_frames, AVI_FRAMES_ERRORS),
+        (parse_jpeg_blocks, JPEG_ERRORS),
     ):
         try:
             parse(data)
@@ -137,13 +132,13 @@ def test_parsers_never_crash_on_arbitrary_bytes(data):
 @settings(max_examples=300, deadline=None)
 def test_parsers_never_crash_on_corrupted_containers(muts, cut):
     for good, parse, ok in (
-        (_wav_bytes(), _wav_parse, _WAV_OK),
-        (_png_bytes(), parse_png_meta, _PNG_OK),
-        (_png_bytes(), parse_png_pixels, _PNG_OK),
-        (_avi_bytes(), parse_avi_meta, _AVI_META_OK),
-        (_avi_bytes(), parse_avi_frames, _AVI_FRAMES_OK),
-        (_synth_jpeg(3), parse_jpeg_blocks, _JPEG_OK),
-        (_synth_jpeg(6), parse_jpeg_blocks, _JPEG_OK),
+        (_wav_bytes(), _wav_parse, WAV_ERRORS),
+        (_png_bytes(), parse_png_meta, PNG_ERRORS),
+        (_png_bytes(), parse_png_pixels, PNG_ERRORS),
+        (_avi_bytes(), parse_avi_meta, AVI_META_ERRORS),
+        (_avi_bytes(), parse_avi_frames, AVI_FRAMES_ERRORS),
+        (_synth_jpeg(3), parse_jpeg_blocks, JPEG_ERRORS),
+        (_synth_jpeg(6), parse_jpeg_blocks, JPEG_ERRORS),
     ):
         try:
             parse(_mutate(good, muts, cut))
@@ -161,6 +156,26 @@ def test_fixture_containers_roundtrip():
     w, h, nc, means = parse_jpeg_blocks(_synth_jpeg(3))
     assert (w, h, nc) == (40, 40, 3)
     assert means[0][0] == (3 * 31) % 256 and means[2][1] == (3 * 11 + 5) % 256
+
+
+def test_png_resize_of_zero_area_image_raises_a_declared_class():
+    """A spec-valid PNG of height 0 decodes to an empty plane, whose pixel
+    stats have no min: the resize row must raise a PNG_ERRORS class there,
+    so the kernel nulls the row instead of failing the task."""
+    import pytest
+
+    from otlp2parquet_spark.extensions import multimodal as M
+
+    ihdr = struct.pack(">IIBBBBB", 4, 0, 8, 0, 0, 0, 0)
+    png = (
+        M._PNG_SIG
+        + M._png_chunk(b"IHDR", ihdr)
+        + M._png_chunk(b"IDAT", zlib.compress(b""))
+        + M._png_chunk(b"IEND", b"")
+    )
+    assert parse_png_pixels(png).shape == (0, 4)
+    with pytest.raises(PNG_ERRORS):
+        M._png_resize_row(png)
 
 
 def _png_filtered(pix, ftype: int, channels: int = 1) -> bytes:

@@ -42,3 +42,28 @@ def test_absent_tables_skip_but_corrupt_table_raises(spark, tmp_path):
         oq.register_otel_views(spark, root, tables=["otel_traces"])
     with pytest.raises(Exception, match="(?i)parquet"):
         oq.table_counts(spark, root)
+
+
+def test_logs_last_hour_keeps_only_the_last_hour(spark, tmp_path):
+    """Q2: records 30 minutes old come back, records 2 hours old do not."""
+    import time
+
+    from perfbench.gen import RequestFactory, render
+
+    now_ns = time.time_ns()
+    fac = RequestFactory(seed=5)
+    requests = [
+        fac.logs(5, service="recent", ts_ns=now_ns - 30 * 60 * 10**9),
+        fac.logs(4, service="old", ts_ns=now_ns - 2 * 3600 * 10**9),
+    ]
+    payloads = spark.createDataFrame(
+        [(f"{rid}.pb", bytearray(render(tree, "logs", "pb")), "pb") for rid, tree in requests],
+        "path string, content binary, fmt string",
+    )
+    root = str(tmp_path / "lake")
+    writer.write_partitioned(ingest.decode_logs(payloads), "otel_logs", root).collect()
+    oq.register_otel_views(spark, root, tables=["otel_logs"])
+
+    assert spark.table("otel_logs").count() == 9
+    last_hour = oq.logs_last_hour(spark).groupBy("ServiceName").count().collect()
+    assert {r.ServiceName: r["count"] for r in last_hour} == {"recent": 5}

@@ -177,3 +177,49 @@ def test_stream_landing_format_tag_matches_python_twin(spark, dirs):
     }
     want = {n: payload_format(n) for n in names if payload_format(n) is not None}
     assert got == want, (got, want)
+
+
+def test_stream_rejects_payloads_over_the_configured_limit(spark, dirs):
+    """`stream_ingest` applies the configured payload limit, not the 8 MiB
+    default: a landing file over it is counted in `landing.rejected` and
+    none of its rows land, while a file under it is written."""
+    landing, out, ckpt = dirs
+    small = logs_payload({"small": 3})
+    big = logs_payload({"big": 40})
+    (landing / "small.pb").write_bytes(small)
+    (landing / "big.pb").write_bytes(big)
+    limit = (len(small) + len(big)) // 2
+    q = sing.stream_ingest(
+        spark, str(landing), "logs", out, ckpt, available_now=True, max_payload_bytes=limit
+    )
+    _wait(q)
+    observed = [p["observedMetrics"] for p in q.recentProgress]
+    assert sum(m["landing"]["rejected"] for m in observed if "landing" in m) == 1
+    per_service = {
+        r.ServiceName: r["count"]
+        for r in writer.read_table(spark, out, "otel_logs").groupBy("ServiceName").count().collect()
+    }
+    assert per_service == {"small": 3}
+
+
+def test_cli_stream_forwards_max_payload_bytes(spark, tmp_path, monkeypatch):
+    """`cli stream` passes request.max_payload_bytes to `stream_ingest`, as
+    `cli ingest` and `serve` do."""
+    from otlp2parquet_spark import cli
+
+    seen = {}
+
+    class _Done:
+        def awaitTermination(self):
+            pass
+
+    def fake_stream_ingest(*args, **kwargs):
+        seen.update(kwargs)
+        return _Done()
+
+    monkeypatch.setattr(sing, "stream_ingest", fake_stream_ingest)
+    monkeypatch.setenv("OTLP2PARQUET_MAX_PAYLOAD_BYTES", "12345678")
+    argv = ["--output", str(tmp_path / "out"), "stream", str(tmp_path), "logs",
+            "--checkpoint", str(tmp_path / "ckpt"), "--available-now"]
+    assert cli.main(argv) == 0
+    assert seen["max_payload_bytes"] == 12345678
