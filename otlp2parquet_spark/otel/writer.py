@@ -279,6 +279,11 @@ def write_table(
 
     df, obs = observed(df, f"ingest-{table}")
     write_native(df, table, root, max_rows_per_file=max_rows_per_file)
+    # A frame the planner proves empty runs no probe: its observation
+    # completes with an empty row, which `Observation.get` cannot convert.
+    # Any frame with rows runs the probe, so the empty row means 0.
+    if obs._jo.getRow().length() == 0:
+        return 0
     return int(obs.get["records"])
 
 

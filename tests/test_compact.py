@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 
 from otlp2parquet_spark.otel import compact, ingest, writer
+from otlp_fixtures import testdata_dir
 import pytest
 
 # full tier (r13, verdict ask #4): heavy sweep/replay module, excluded
@@ -15,7 +16,7 @@ import pytest
 # verification window completes; run with SPARK_GRAFT_FULL_TESTS=1
 pytestmark = pytest.mark.full
 
-FIX = "/root/reference/testdata/logs.pb"
+FIX = f"{testdata_dir()}/logs.pb"
 
 
 def _ingest_once(spark, out, run):

@@ -10,6 +10,7 @@ import pytest
 
 from otlp2parquet_spark.otel import connect
 from otlp2parquet_spark.otel.config import ConfigError, load_config
+from otlp_fixtures import testdata_dir
 
 # The Spark tests below are full tier (run with SPARK_GRAFT_FULL_TESTS=1);
 # the config and connect tests start no session and run in the default tier.
@@ -131,7 +132,7 @@ def test_cli_batch_ingest_end_to_end(spark, tmp_path):
 
     landing = tmp_path / "landing"
     landing.mkdir()
-    shutil.copy("/root/reference/testdata/logs.pb", landing / "logs.pb")
+    shutil.copy(f"{testdata_dir()}/logs.pb", landing / "logs.pb")
     out = tmp_path / "out"
     rc = cli.main(["--output", str(out), "ingest", str(landing), "logs"])
     assert rc == 0
@@ -150,7 +151,7 @@ def test_cli_stream_available_now(spark, tmp_path):
 
     landing = tmp_path / "landing"
     landing.mkdir()
-    shutil.copy("/root/reference/testdata/traces.pb", landing / "traces.pb")
+    shutil.copy(f"{testdata_dir()}/traces.pb", landing / "traces.pb")
     out = tmp_path / "out"
     rc = cli.main(
         [

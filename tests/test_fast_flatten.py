@@ -15,6 +15,7 @@ from hypothesis import example, given, settings
 from otlp2parquet_spark.otel import fast_flatten, flatten, otlp_json, wire
 from otlp2parquet_spark.otel.wire import OtlpDecodeError
 
+from otlp_fixtures import testdata_dir
 from test_wire_property import (
     _INT64_KINDS,
     _logs_request,
@@ -116,13 +117,13 @@ def test_traces_fused_matches_slow_snake(tree):
 
 
 def test_reference_fixture_parity():
-    body = open("/root/reference/testdata/logs.jsonl").read()
+    body = open(f"{testdata_dir()}/logs.jsonl").read()
     slow = []
     for req in otlp_json.parse_request_jsonl(body, "logs"):
         slow.extend(flatten.flatten_logs(req))
     assert fast_flatten.flatten_request_jsonl(body, "logs") == slow
 
-    tr = open("/root/reference/testdata/trace.json").read()
+    tr = open(f"{testdata_dir()}/trace.json").read()
     assert fast_flatten.flatten_request_json(tr, "traces") == _slow_traces(tr)
 
 

@@ -13,6 +13,7 @@ from hypothesis import given, settings
 
 from otlp2parquet_spark.otel import fast_wire, flatten, wire
 
+from otlp_fixtures import testdata_dir
 from test_wire_property import _enc_varint, _logs_request, encode_message
 
 
@@ -67,7 +68,7 @@ def test_fused_pb_matches_slow_reversed_order(tree):
 
 
 def test_reference_fixture_parity():
-    pb = open("/root/reference/testdata/logs.pb", "rb").read()
+    pb = open(f"{testdata_dir()}/logs.pb", "rb").read()
     assert fast_wire.flatten_logs_pb(pb) == _slow(pb)
     # concatenated payloads parse as one request with repeated resource_logs
     assert fast_wire.flatten_logs_pb(pb * 3) == _slow(pb * 3)
@@ -128,7 +129,7 @@ def test_wrong_wire_type_field_skipped():
 def test_truncated_payload_rejected_by_both():
     import pytest
 
-    pb = open("/root/reference/testdata/logs.pb", "rb").read()
+    pb = open(f"{testdata_dir()}/logs.pb", "rb").read()
     for cut in (pb[: len(pb) // 2], pb[:-1], b"\x0a\xff\xff\xff\xff\x7f"):
         slow_err = fast_err = None
         try:
@@ -165,7 +166,7 @@ def test_fused_traces_pb_matches_slow_reversed_order(tree):
 
 def test_traces_fixture_parity():
     for fx in ("traces.pb", "trace.pb"):
-        pb = open(f"/root/reference/testdata/{fx}", "rb").read()
+        pb = open(f"{testdata_dir()}/{fx}", "rb").read()
         assert fast_wire.flatten_traces_pb(pb) == _slow_traces(pb)
         assert fast_wire.flatten_traces_pb(pb * 2) == _slow_traces(pb * 2)
 
@@ -197,7 +198,9 @@ def test_metrics_fixture_and_exotic_parity():
 
     from test_metrics_exotic import _encode_request, _gen_tree
 
-    for fx in sorted(glob.glob("/root/reference/testdata/metrics_*.pb")):
+    fixtures = sorted(glob.glob(f"{testdata_dir()}/metrics_*.pb"))
+    assert len(fixtures) == 6, fixtures  # gauge, sum, histogram, exp, summary, mixed
+    for fx in fixtures:
         pb = open(fx, "rb").read()
         assert fast_wire.flatten_metrics_pb(pb) == _slow_metrics(pb), fx
         assert fast_wire.flatten_metrics_pb(pb * 3) == _slow_metrics(pb * 3), fx
@@ -235,7 +238,7 @@ def test_truncated_traces_and_metrics_rejected_by_both():
         ("traces.pb", fast_wire.flatten_traces_pb, _slow_traces),
         ("metrics_mixed.pb", fast_wire.flatten_metrics_pb, _slow_metrics),
     ):
-        pb = open(f"/root/reference/testdata/{fx}", "rb").read()
+        pb = open(f"{testdata_dir()}/{fx}", "rb").read()
         for cut in (pb[: len(pb) // 2], pb[:-1], pb[:-7]):
             slow_err = fast_err = None
             try:

@@ -12,8 +12,9 @@ from pyspark.sql import functions as F
 
 from otlp2parquet_spark.otel import ingest, writer
 from otlp2parquet_spark.queries import otel as oq
+from otlp_fixtures import testdata_dir
 
-TD = "/root/reference/testdata"
+TD = testdata_dir()
 
 
 @pytest.fixture(scope="module")

@@ -16,8 +16,9 @@ import urllib.request
 import pytest
 
 from otlp2parquet_spark.otel import ingest, receiver
+from otlp_fixtures import testdata_dir
 
-TD = "/root/reference/testdata"
+TD = testdata_dir()
 
 
 @pytest.fixture()

@@ -14,8 +14,9 @@ import pyarrow.parquet as pq
 import pytest
 
 from otlp2parquet_spark.otel import ingest, schemas, writer
+from otlp_fixtures import testdata_dir
 
-TD = "/root/reference/testdata"
+TD = testdata_dir()
 
 
 def _logs_df(spark, tmp_path):

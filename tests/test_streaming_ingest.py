@@ -11,9 +11,10 @@ import pytest
 
 from otlp2parquet_spark.otel import writer
 from otlp2parquet_spark.streaming import ingest as sing
+from otlp_fixtures import testdata_dir
 from tests.test_writer_idempotence import logs_payload
 
-TD = "/root/reference/testdata"
+TD = testdata_dir()
 
 
 @pytest.fixture()
