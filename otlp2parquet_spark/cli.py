@@ -951,10 +951,19 @@ def main(argv: list[str] | None = None) -> int:
                 for name, df in tables.items()
                 if not name.startswith("_")
             }
+            # D27 response-accounting twin: nothing read is dropped unsaid.
+            # The rejections rode the writes (the `_landing` observation).
+            landing = writer.observation_row(tables["_landing"])
+            resp = {
+                "written": summary,
+                "output": root,
+                "rejected": {r: n for r, n in landing.items() if n},
+            }
             if "_union" in tables:
+                # read off the persisted union before it is released
+                skipped = tables["_skipped"].collect()
+                resp["skipped"] = {r.reason: int(r["count"]) for r in skipped}
                 tables["_union"].unpersist()
-            # D27 response-accounting twin
-            resp = {"written": summary, "output": root}
             if args.quarantine:
                 qdf = batch_ingest.read_quarantine(spark, args.quarantine)
                 resp["quarantined"] = {

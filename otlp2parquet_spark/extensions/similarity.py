@@ -700,104 +700,6 @@ def _q4_sim(col: Column) -> Column:
     return F.round(col, 4).alias("cos_sim")
 
 
-def kmeans_iterate(
-    embeddings: DataFrame,
-    k: int = 8,
-    max_iters: int = 10,
-    tol: float = 1e-4,
-) -> tuple[DataFrame, list[tuple[int, list[float]]], int]:
-    """Production Lloyd's loop — the multi-round driver of the single
-    oracle-matched round in x3_kmeans (same quantized update, same
-    deterministic seeding).
-
-    Each round is ONE Spark job: broadcast the current centroids, assign
-    every vector (argmax cosine, ties to lower cid), aggregate the
-    1e-4-integer-grid component sums per (cluster, dim) two-phase, and
-    collect only k*dim tiny rows to the driver, where the next centroid
-    set and the movement norm are computed. Convergence = max absolute
-    centroid movement < tol (the standard driver-side criterion — k*dim
-    scalars, no data-sized comparison). The corpus is re-scanned per round
-    exactly like MLlib's kmeans; callers iterating many rounds should
-    .persist() their input.
-
-    Returns (final assignment DataFrame(vec_id, cluster_id, sim),
-    centroids as [(cid, [component,...])], rounds executed)."""
-    seed_rows = (
-        embeddings.orderBy("vec_id")
-        .limit(k)
-        .select("vec_id", _as_double(F.col("embedding")).alias("cent"))
-        .collect()
-    )
-    cents: list[tuple[int, list[float]]] = [
-        (int(r.vec_id), list(r.cent)) for r in seed_rows
-    ]
-    spark = embeddings.sparkSession
-
-    def assign_round(cents_rows):
-        cents_df = spark.createDataFrame(cents_rows, "cid long, cent array<double>")
-        scored = embeddings.join(F.broadcast(cents_df)).select(
-            "vec_id",
-            "embedding",
-            "cid",
-            cosine_expr(F.col("embedding"), F.col("cent")).alias("sim"),
-        )
-        w = Window.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
-        return (
-            scored.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .select("vec_id", "embedding", F.col("cid").alias("cluster_id"), "sim")
-        )
-
-    rounds = 0
-    for _ in range(max_iters):
-        rounds += 1
-        assign = assign_round(cents)
-        dims = (
-            assign.select(
-                "cluster_id", F.posexplode(F.col("embedding")).alias("pos", "v")
-            )
-            .select(
-                "cluster_id",
-                "pos",
-                F.floor(F.col("v").cast("double") * 10000.0 + 0.5)
-                .cast("long")
-                .alias("qv"),
-            )
-            .groupBy("cluster_id", "pos")
-            .agg(F.sum("qv").alias("s"), F.count("*").alias("n"))
-            .collect()
-        )
-        new_map: dict[int, dict[int, float]] = {}
-        for r in dims:
-            new_map.setdefault(int(r.cluster_id), {})[int(r.pos)] = r.s / (
-                r.n * 10000.0
-            )
-        # empty-cluster policy: KEEP the previous centroid (k never shrinks
-        # — MLlib-style; a dropped member would also fake convergence by
-        # vanishing from the movement norm)
-        new_cents = [
-            (
-                cid,
-                [new_map[cid][p] for p in sorted(new_map[cid])]
-                if cid in new_map
-                else vec,
-            )
-            for cid, vec in cents
-        ]
-        move = max(
-            (
-                max(abs(a - b) for a, b in zip(new_vec, old_vec))
-                for (cid, new_vec), (_, old_vec) in zip(new_cents, cents)
-            ),
-            default=0.0,
-        )
-        cents = new_cents
-        if move < tol:
-            break
-    final = assign_round(cents).select("vec_id", "cluster_id", "sim")
-    return final, cents, rounds
-
-
 # ---------------------------------------------------------------------------
 # x3_pq_ann — product-quantization ANN (ADC shortlist + exact re-rank)
 

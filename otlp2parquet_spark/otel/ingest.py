@@ -18,9 +18,9 @@ Reference dataflow D1-D15 re-expressed Spark-first (SURVEY.md §3.1):
   is `spark.sql.files.maxPartitionBytes`-driven and the codec stays
   embarrassingly parallel (no shuffle before the write).
 
-Decoded output uses raw schemas (epoch-µs longs); `finalize()` converts to
-the golden column types JVM-side via `timestamp_micros` (exact integer µs,
-never double math).
+Decoded frames carry the golden schemas (`schemas.spark_schema`): the
+walkers emit exact epoch-µs ints (ns div 1000, never double math) and the
+kernel's Arrow batches take them as `timestamp[us, UTC]` unchanged.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from collections.abc import Iterator
 from typing import Any
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -42,6 +42,7 @@ from otlp2parquet_spark.otel.wire import OtlpDecodeError
 DEFAULT_MAX_PAYLOAD_BYTES = 8 * 1024 * 1024  # reference src/config/platform.rs:19
 
 _FORMATS = ("pb", "json", "jsonl")
+_REJECT_REASONS = ("payload too large", "unknown format")
 
 
 def payload_format(path: str) -> str | None:
@@ -84,9 +85,19 @@ def _admission(df: DataFrame, max_payload_bytes: int, size_col, select_cols):
 
 
 def _landing_scan(
-    spark: SparkSession, path: str, max_payload_bytes: int, size_col, select_cols
-) -> tuple[DataFrame, DataFrame]:
-    """Batch landing scan for both lanes -> (accepted, rejected)."""
+    spark: SparkSession, path: str, max_payload_bytes: int, local: bool
+) -> tuple[DataFrame, DataFrame, Observation]:
+    """Batch landing scan -> (accepted, rejected, landing). The content lane
+    ships (path, content, fmt); the locality lane (`local`) reads file
+    statuses only and ships (path, fmt).
+
+    `landing` observes the pre-filter frame: rejected files by reason
+    (_REJECT_REASONS), filled by the first action over either side — the
+    decode — so a summary of the rejections costs no job of its own (the
+    batch twin of the streaming scan's `landing` observation)."""
+    size_col, cols = (
+        (F.col("length"), ("path", "length")) if local else (F.length("content"), ("path", "content"))
+    )
     df, ok, reason = _admission(
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*")
@@ -94,12 +105,15 @@ def _landing_scan(
         .load(path),
         max_payload_bytes,
         size_col,
-        select_cols,
+        cols,
     )
+    landing = Observation()
+    df = df.observe(landing, *[F.count_if(reason == r).alias(r) for r in _REJECT_REASONS])
     # binaryFile yields >= 1 scan partition per payload file, so the
     # CPU-bound decode already parallelizes across files; no repartition
     # (shuffling raw payload bytes costs more than it buys — measured).
-    return df.filter(ok), df.filter(~ok).select("path", reason.alias("reason"))
+    accepted = df.filter(ok).select("path", "fmt") if local else df.filter(ok)
+    return accepted, df.filter(~ok).select("path", reason.alias("reason")), landing
 
 
 def read_landing(
@@ -113,9 +127,7 @@ def read_landing(
     Returns binaryFile rows (path, content, fmt); `rejected` carries
     oversized payloads (D4: HTTP 413 twin) and unknown-extension files.
     """
-    return _landing_scan(
-        spark, path, max_payload_bytes, F.length("content"), ("path", "content")
-    )
+    return _landing_scan(spark, path, max_payload_bytes, local=False)[:2]
 
 
 def read_landing_meta(
@@ -137,10 +149,7 @@ def read_landing_meta(
     This is the writer's executor-side pyarrow I/O lane in reverse; the
     size guard (D4) uses binaryFile's `length` metadata (same semantics:
     pre-decompression byte size)."""
-    accepted, rejected = _landing_scan(
-        spark, path, max_payload_bytes, F.col("length"), ("path", "length")
-    )
-    return accepted.select("path", "fmt"), rejected
+    return _landing_scan(spark, path, max_payload_bytes, local=True)[:2]
 
 
 def is_local_or_posix(path: str, default_fs_local: bool = True) -> bool:
@@ -190,9 +199,13 @@ def read_landing_auto(
     Bare paths route by Spark's LIVE fs.defaultFS (what binaryFile resolves
     them against): with fs.defaultFS=hdfs://... a bare '/landing' is remote
     and keeps the content lane."""
+    return _auto_scan(spark, path, max_payload_bytes)[:2]
+
+
+def _auto_scan(spark: SparkSession, path: str, max_payload_bytes: int):
+    """read_landing_auto's lane choice -> `_landing_scan`'s triple."""
     local = is_local_or_posix(path, _default_fs_is_local(spark))
-    reader = read_landing_meta if local else read_landing
-    return reader(spark, path, max_payload_bytes=max_payload_bytes)
+    return _landing_scan(spark, path, max_payload_bytes, local)
 
 
 def _read_payload_bytes(path: str) -> bytes:
@@ -305,17 +318,10 @@ def _handle_decode_error(
     quarantine_dir: str | None,
     path: str,
     content: bytes | None,
-    quarantine_counter=None,
 ) -> None:
     """Quarantine the payload when a quarantine dir is set; raise otherwise."""
     if not quarantine_dir:
         raise err
-    # Count every quarantined payload so a sudden quarantine-rate spike from
-    # a parser regression is observable without grepping the quarantine dir
-    # (ADVICE r6: the broad _decode_guard makes codec bugs drain into
-    # quarantine — this counter is the tripwire).
-    if quarantine_counter is not None:
-        quarantine_counter.add(1)
     _write_quarantine(quarantine_dir, path, content, err)
 
 
@@ -348,36 +354,45 @@ def ingest_jsonl_fast(spark: SparkSession, path: str, signal: str = "logs") -> D
     path's (tests/test_ingest_paths.py)."""
     if signal not in ("logs", "traces"):
         raise ValueError(f"fast path supports logs|traces, got {signal!r}")
-    return _decode_table(read_landing_lines(spark, path), signal, None, None)
+    return _decode_table(read_landing_lines(spark, path), signal)
 
 
 # ---------------------------------------------------------------------------
-# Decode: one mapInArrow kernel, one row function per signal
+# Decode: one mapInArrow kernel, one walker per (signal, format)
 
 
-def _flatten_payload(content: bytes, fmt: str, signal: str) -> list[dict[str, Any]]:
-    """payload bytes -> flat logs/traces rows. JSON/JSONL take the fused
-    single-pass walker (otel/fast_flatten.py, ~3x the two-step lane); pb
-    takes the fused wire walker (otel/fast_wire.py, ~2.4x). Both are
-    differentially verified against the slow pairs (test_fast_flatten.py /
-    test_fast_wire.py)."""
-    content = _gunzip(content)
+def _walker(signal: str, fmt: str):
+    """The fused single-pass walker of one (signal, format) cell: pb takes
+    the wire walker (otel/fast_wire.py, ~2.4x the two-step lane), JSON and
+    JSONL the JSON walker (otel/fast_flatten.py, ~3x). Each is
+    differentially verified against its two-step authority
+    (test_fast_wire.py / test_fast_flatten.py). Logs and traces walkers
+    return flat rows; metrics walkers return one (per_type rows, skipped
+    counters) pair per request."""
+    if signal == "metrics":
+        if fmt == "jsonl":
+            return fast_flatten.flatten_metrics_request_jsonl
+        one = fast_wire.flatten_metrics_pb if fmt == "pb" else fast_flatten.flatten_metrics_request_json
+        return lambda body: [one(body)]
     if fmt == "pb":
-        if signal == "logs":
-            return fast_wire.flatten_logs_pb(content)
-        return fast_wire.flatten_traces_pb(content)
+        return fast_wire.flatten_logs_pb if signal == "logs" else fast_wire.flatten_traces_pb
     if fmt == "json":
-        return fast_flatten.flatten_request_json(content, signal)
-    return fast_flatten.flatten_request_jsonl(content, signal)
+        return functools.partial(fast_flatten.flatten_request_json, signal=signal)
+    return functools.partial(fast_flatten.flatten_request_jsonl, signal=signal)
 
 
-def _decode_kernel(
-    rows_of,
-    schema: StructType,
-    quarantine_dir: str | None = None,
-    quarantine_counter=None,
-    decode_counter=None,
-):
+def _flatten_payload(content: bytes, fmt: str, signal: str) -> list:
+    """payload bytes -> its (signal, fmt) walker's output; gzip bodies are
+    sniffed and inflated first (D2)."""
+    return _walker(signal, fmt)(_gunzip(content))
+
+
+# the metrics cell of _flatten_payload, [(per_type rows, skipped counters)];
+# perfbench's pb/JSON decode-parity test calls it by this name
+_flatten_metrics_payload = functools.partial(_flatten_payload, signal="metrics")
+
+
+def _decode_kernel(rows_of, schema: StructType, quarantine_dir: str | None = None):
     """mapInArrow kernel: payload batches -> Arrow batches of `schema`, with
     `rows_of(content, fmt)` turning one payload into its rows.
 
@@ -386,7 +401,7 @@ def _decode_kernel(
     measured 2.2x the pandas detour (rows -> pd.DataFrame ->
     RecordBatch.from_pandas), which was ~20% of worker time once the fused
     walkers got fast (round-6; BASELINE.md fused-lane table). Columns a row
-    dict lacks are null."""
+    dict lacks are null; epoch-µs ints fill timestamp columns as they are."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -403,8 +418,6 @@ def _decode_kernel(
             )
             fmts = batch.column("fmt")
             for i in range(batch.num_rows):
-                if decode_counter is not None:
-                    decode_counter.add(1)
                 # None until the bytes are in hand: a locality-lane read
                 # failure must quarantine WITHOUT a (misleading, empty)
                 # payload copy (ADVICE r6)
@@ -417,9 +430,7 @@ def _decode_kernel(
                     )
                     rows.extend(rows_of(content, fmts[i].as_py()))
                 except OtlpDecodeError as e:
-                    _handle_decode_error(
-                        e, quarantine_dir, paths[i].as_py(), content, quarantine_counter
-                    )
+                    _handle_decode_error(e, quarantine_dir, paths[i].as_py(), content)
             # no yield when every payload in the batch was quarantined —
             # mapInArrow's declared schema covers the empty-partition case
             if rows:
@@ -428,49 +439,17 @@ def _decode_kernel(
     return fn
 
 
-def finalize(raw_df: DataFrame, table: str) -> DataFrame:
-    """Raw (µs-long) frame -> golden-typed frame, JVM-side conversion only."""
-    cols = []
-    ts_cols = dict(schemas.timestamp_columns(table))
-    for f in schemas.spark_schema(table).fields:
-        c = F.col(f.name)
-        if f.name in ts_cols:
-            if ts_cols[f.name]:
-                c = F.transform(c, lambda x: F.timestamp_micros(x))
-            else:
-                c = F.timestamp_micros(c)
-        cols.append(c.alias(f.name))
-    return raw_df.select(*cols)
-
-
 def _decode_table(
-    payloads: DataFrame, signal: str, quarantine_dir, quarantine_counter
+    payloads: DataFrame, signal: str, quarantine_dir: str | None = None
 ) -> DataFrame:
     """logs/traces payloads -> golden-typed `otel_{signal}` frame."""
-    table = f"otel_{signal}"
-    schema = schemas.raw_spark_schema(table)
+    schema = schemas.spark_schema(f"otel_{signal}")
     rows_of = functools.partial(_flatten_payload, signal=signal)
-    raw = payloads.mapInArrow(
-        _decode_kernel(rows_of, schema, quarantine_dir, quarantine_counter),
-        schema,
-    )
-    return finalize(raw, table)
+    return payloads.mapInArrow(_decode_kernel(rows_of, schema, quarantine_dir), schema)
 
 
-def decode_logs(
-    payloads: DataFrame,
-    quarantine_dir: str | None = None,
-    quarantine_counter=None,
-) -> DataFrame:
-    return _decode_table(payloads, "logs", quarantine_dir, quarantine_counter)
-
-
-def decode_traces(
-    payloads: DataFrame,
-    quarantine_dir: str | None = None,
-    quarantine_counter=None,
-) -> DataFrame:
-    return _decode_table(payloads, "traces", quarantine_dir, quarantine_counter)
+def decode_logs(payloads: DataFrame, quarantine_dir: str | None = None) -> DataFrame:
+    return _decode_table(payloads, "logs", quarantine_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -489,7 +468,7 @@ def _metrics_union_schema() -> StructType:
     """
     seen: dict[str, StructField] = {}
     for table in schemas.METRIC_TABLES.values():
-        for f in schemas.raw_spark_schema(table).fields:
+        for f in schemas.spark_schema(table).fields:
             seen.setdefault(f.name, StructField(f.name, f.dataType, True))
     fields = list(seen.values())
     fields.append(StructField("MetricType", StringType(), False))
@@ -501,25 +480,11 @@ def _metrics_union_schema() -> StructType:
 METRICS_UNION_SCHEMA = _metrics_union_schema()
 
 
-def _flatten_metrics_payload(content: bytes, fmt: str):
-    """payload bytes -> [(per_type rows, skipped counters)]. pb takes the
-    fused wire walker (otel/fast_wire.py), JSON formats the fused JSON
-    walker (otel/fast_flatten.py) — completing the fused decode matrix:
-    every (signal x format) hot path is single-pass, each differentially
-    verified against its two-step authority."""
-    content = _gunzip(content)
-    if fmt == "pb":
-        return [fast_wire.flatten_metrics_pb(content)]
-    if fmt == "json":
-        return [fast_flatten.flatten_metrics_request_json(content)]
-    return fast_flatten.flatten_metrics_request_jsonl(content)
-
-
 def _metrics_union_rows(content: bytes, fmt: str) -> list[dict[str, Any]]:
     """payload bytes -> union-frame rows: one per data point tagged with its
     MetricType, plus one 'skipped' row per non-zero skip counter."""
     rows: list[dict[str, Any]] = []
-    for per_type, skipped in _flatten_metrics_payload(content, fmt):
+    for per_type, skipped in _flatten_payload(content, fmt, "metrics"):
         for mtype, trows in per_type.items():
             rows.extend(r | {"MetricType": mtype} for r in trows)
         rows.extend(
@@ -531,21 +496,11 @@ def _metrics_union_rows(content: bytes, fmt: str) -> list[dict[str, Any]]:
 
 
 def decode_metrics_union(
-    payloads: DataFrame,
-    decode_counter=None,
-    quarantine_dir: str | None = None,
-    quarantine_counter=None,
+    payloads: DataFrame, quarantine_dir: str | None = None
 ) -> DataFrame:
-    """One decode pass over metrics payloads -> tagged union DataFrame.
-
-    `decode_counter` (a SparkContext accumulator) counts payload decodes —
-    used by tests to prove the fan-out runs exactly one decode job.
-    `quarantine_counter` counts quarantined payloads."""
+    """One decode pass over metrics payloads -> tagged union DataFrame."""
     return payloads.mapInArrow(
-        _decode_kernel(
-            _metrics_union_rows, METRICS_UNION_SCHEMA, quarantine_dir,
-            quarantine_counter, decode_counter,
-        ),
+        _decode_kernel(_metrics_union_rows, METRICS_UNION_SCHEMA, quarantine_dir),
         METRICS_UNION_SCHEMA,
     )
 
@@ -553,10 +508,9 @@ def decode_metrics_union(
 def metrics_table(union_df: DataFrame, metric_type: str) -> DataFrame:
     """Project one persisted metric table out of the union frame."""
     table = schemas.METRIC_TABLES[metric_type]
-    raw = union_df.filter(F.col("MetricType") == metric_type).select(
-        *[f.name for f in schemas.raw_spark_schema(table).fields]
+    return union_df.filter(F.col("MetricType") == metric_type).select(
+        *schemas.spark_schema(table).fieldNames()
     )
-    return finalize(raw, table)
 
 
 def skipped_metrics(union_df: DataFrame) -> DataFrame:
@@ -579,32 +533,6 @@ def split_metrics(union_df: DataFrame) -> dict[str, DataFrame]:
 
 
 # ---------------------------------------------------------------------------
-# Ingest observability + response accounting (D26/D27)
-
-
-def observed(df: DataFrame, name: str):
-    """Attach a zero-cost metrics probe to a decoded frame (D26 twin of the
-    reference's `otlp.ingest.records` counter + timestamp histogram range,
-    src/handlers.rs:102-103).
-
-    Returns (df, Observation): the metrics ride the caller's own action (the
-    partitioned write, a count, ...) — no second job.
-    `Observation.get` blocks until that action completes.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    out = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("records"),
-        F.min("Timestamp").alias("min_ts"),
-        F.max("Timestamp").alias("max_ts"),
-        F.approx_count_distinct("ServiceName").alias("approx_services"),
-    )
-    return out, obs
-
-
-# ---------------------------------------------------------------------------
 # Signal dispatch: the one place batch, streaming and CLI ingest map a
 # signal to its decoded frames
 
@@ -612,9 +540,7 @@ def observed(df: DataFrame, name: str):
 def decode_signal(
     payloads: DataFrame,
     signal: str,
-    decode_counter=None,
     quarantine_dir: str | None = None,
-    quarantine_counter=None,
 ) -> dict[str, DataFrame]:
     """Landing payloads -> {table_name: decoded frame} for one signal.
 
@@ -629,15 +555,9 @@ def decode_signal(
     invalid payloads + typed-reason sidecars land in the bad-input dir while
     the pipeline continues (D25)."""
     if signal in ("logs", "traces"):
-        return {
-            f"otel_{signal}": _decode_table(
-                payloads, signal, quarantine_dir, quarantine_counter
-            )
-        }
+        return {f"otel_{signal}": _decode_table(payloads, signal, quarantine_dir)}
     if signal == "metrics":
-        union_df = decode_metrics_union(
-            payloads, decode_counter, quarantine_dir, quarantine_counter
-        )
+        union_df = decode_metrics_union(payloads, quarantine_dir)
         if not payloads.isStreaming:
             union_df = union_df.persist(StorageLevel.MEMORY_AND_DISK)
         skipped = skipped_metrics(union_df)
@@ -651,20 +571,19 @@ def ingest_directory(
     signal: str,
     *,
     max_payload_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
-    decode_counter=None,
     quarantine_dir: str | None = None,
-    quarantine_counter=None,
 ) -> dict[str, DataFrame]:
     """End-to-end decode of a landing dir for one signal.
 
     Returns `decode_signal`'s frames — {table_name: DataFrame}; metrics add
     '_skipped' and the persisted '_union', which callers unpersist after
-    their actions complete — plus the '_rejected' admission side-output.
-    The reader is `read_landing_auto` (payload-locality lane for local/posix
-    sources, content lane for object stores)."""
-    payloads, rejected = read_landing_auto(
-        spark, landing_dir, max_payload_bytes=max_payload_bytes
-    )
-    out = decode_signal(payloads, signal, decode_counter, quarantine_dir, quarantine_counter)
+    their actions complete — plus the '_rejected' admission side-output and
+    '_landing', the Observation of its counts by reason that the first
+    action over the tables fills. The reader is `read_landing_auto`
+    (payload-locality lane for local/posix sources, content lane for object
+    stores)."""
+    payloads, rejected, landing = _auto_scan(spark, landing_dir, max_payload_bytes)
+    out = decode_signal(payloads, signal, quarantine_dir)
     out["_rejected"] = rejected
+    out["_landing"] = landing
     return out

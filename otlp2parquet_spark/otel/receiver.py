@@ -258,33 +258,3 @@ def serve_background(server: ThreadingHTTPServer) -> threading.Thread:
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     return t
-
-
-def main(argv: list[str] | None = None) -> int:
-    import argparse
-
-    p = argparse.ArgumentParser(prog="otlp2parquet-spark-receiver")
-    p.add_argument("landing_root", help="directory the Spark side ingests from")
-    p.add_argument("--host", default="0.0.0.0")
-    p.add_argument("--port", type=int, default=4318)  # OTLP/HTTP default port
-    p.add_argument("--max-payload-bytes", type=int, default=DEFAULT_MAX_PAYLOAD_BYTES)
-    args = p.parse_args(argv)
-    srv = make_server(
-        args.landing_root,
-        args.host,
-        args.port,
-        max_payload_bytes=args.max_payload_bytes,
-        quiet=False,
-    )
-    print(f"listening on {args.host}:{srv.server_address[1]}, landing -> {args.landing_root}")
-    try:
-        srv.serve_forever()
-    except KeyboardInterrupt:
-        pass
-    finally:
-        srv.server_close()
-    return 0
-
-
-if __name__ == "__main__":
-    raise SystemExit(main())

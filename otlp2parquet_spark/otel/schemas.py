@@ -7,7 +7,9 @@ column spec and projected into:
 - a pyarrow schema with `PARQUET:field_id` on every field + the versioned
   footer metadata (`otlp2parquet.schema_version` etc.) — used by the
   byte-parity writer and the golden-file tests;
-- a Spark ``StructType`` — used by the decode pipeline. Spark has no unsigned
+- a Spark ``StructType`` — the decode kernels' output schema: the walkers'
+  epoch-µs ints go straight into its `timestamp[us, UTC]` Arrow columns,
+  so decoded frames carry the golden types. Spark has no unsigned
   types, so the logs `TraceFlags uint32` column is LongType in Spark and is
   cast back to uint32 by the pyarrow sink (documented deviation, SURVEY §7
   hard-part 1).
@@ -229,38 +231,3 @@ def spark_schema(table: str) -> StructType:
             for name, typ, nullable in TABLE_COLUMNS[table]
         ]
     )
-
-
-def raw_spark_schema(table: str) -> StructType:
-    """Decode-side schema: timestamps carried as int64 microseconds.
-
-    The Python codec emits epoch-µs longs (exact ns->µs div by 1000, SURVEY
-    §1.3.1); the JVM side converts with `timestamp_micros()` — this keeps the
-    Python/Arrow boundary free of tz-naive/aware pandas pitfalls.
-    """
-
-    def conv(t: pa.DataType):
-        if t == TS:
-            return LongType()
-        if pa.types.is_list(t):
-            inner = t.value_field
-            return ArrayType(conv(inner.type), containsNull=inner.nullable)
-        return _spark_type(t)
-
-    return StructType(
-        [
-            StructField(name, conv(typ), nullable)
-            for name, typ, nullable in TABLE_COLUMNS[table]
-        ]
-    )
-
-
-def timestamp_columns(table: str) -> list[tuple[str, bool]]:
-    """(column, is_list) pairs that carry µs-epoch longs in the raw schema."""
-    out = []
-    for name, typ, _ in TABLE_COLUMNS[table]:
-        if typ == TS:
-            out.append((name, False))
-        elif pa.types.is_list(typ) and typ.value_field.type == TS:
-            out.append((name, True))
-    return out

@@ -32,7 +32,7 @@ from datetime import datetime, timezone
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
@@ -266,25 +266,29 @@ def write_table(
     The count rides the write action itself: no extra job, and only this
     write's rows, never earlier runs' under `root`. Parity sums its
     accounting frame (one row per file); native counts through an
-    `ingest.observed` probe. `bucket` and `run_tag` apply to parity only
-    (see write_partitioned)."""
+    Observation on the written frame (the D26 `otlp.ingest.records` twin,
+    reference src/handlers.rs:102). `bucket` and `run_tag` apply to parity
+    only (see write_partitioned)."""
     if layout == "parity":
         acct = write_partitioned(
             df, table, root, bucket=bucket, max_rows_per_file=max_rows_per_file,
             run_tag=run_tag,
         )
         return sum(r["rows"] for r in acct.collect())
-    # imported here: parity write tasks unpickle this module and need no codecs
-    from otlp2parquet_spark.otel.ingest import observed
-
-    df, obs = observed(df, f"ingest-{table}")
+    obs = Observation(f"ingest-{table}")
+    df = df.observe(obs, F.count(F.lit(1)).alias("records"))
     write_native(df, table, root, max_rows_per_file=max_rows_per_file)
-    # A frame the planner proves empty runs no probe: its observation
-    # completes with an empty row, which `Observation.get` cannot convert.
-    # Any frame with rows runs the probe, so the empty row means 0.
+    return int(observation_row(obs).get("records", 0))
+
+
+def observation_row(obs: Observation) -> dict:
+    """An Observation's metrics once an action over its frame completed.
+    A frame the planner proves empty runs no probe: its observation
+    completes with an empty row, which `Observation.get` cannot convert.
+    Any frame with rows runs the probe, so the empty row reads as {}."""
     if obs._jo.getRow().length() == 0:
-        return 0
-    return int(obs.get["records"])
+        return {}
+    return obs.get
 
 
 def read_table(spark, root: str, table: str, *, layout: str = "parity") -> DataFrame:

@@ -305,34 +305,6 @@ def test_knn_join_bucketed_equivalence_with_zero_norm_vectors(spark, tmp_path):
         SPECS["x3_knn_join_bucketed"].build(spark, sf_dir).collect()
 
 
-def test_kmeans_iterate_converges_and_recovers_components(spark, tmp_path):
-    """The multi-round Lloyd loop must (a) converge before the round cap on
-    clustered geometry, (b) be deterministic run-to-run, and (c) recover
-    the mixture components (majority-component purity > 0.9) when k equals
-    the true component count and seeds land one per component."""
-    from otlp2parquet_spark.extensions.similarity import kmeans_iterate
-    from otlp2parquet_spark.queries.registry import T
-
-    sf_dir = str(tmp_path / "mogk")
-    _write_mog_embeddings(sf_dir, n=1200, n_components=6, noise=0.08)
-    e = T(spark, sf_dir, "embeddings")
-    a1, c1, r1 = kmeans_iterate(e, k=6, max_iters=12)
-    a2, c2, r2 = kmeans_iterate(e, k=6, max_iters=12)
-    assert r1 == r2 and c1 == c2
-    assert r1 < 12, "did not converge before the round cap"
-    rows = a1.collect()
-    assert sorted(map(tuple, rows)) == sorted(map(tuple, a2.collect()))
-    # purity: vec_id % 6 is the true component (fixture interleaves them)
-    from collections import Counter, defaultdict
-
-    by_cluster = defaultdict(Counter)
-    for r in rows:
-        by_cluster[r.cluster_id][r.vec_id % 6] += 1
-    n_major = sum(c.most_common(1)[0][1] for c in by_cluster.values())
-    purity = n_major / len(rows)
-    assert purity > 0.9, f"purity {purity:.2f}"
-
-
 def test_avi_decode_is_real_and_null_safe(spark):
     """x5_avi_meta's kernel must actually walk the RIFF tree: corrupting
     the avih geometry must change the decoded values (payload-derived, not

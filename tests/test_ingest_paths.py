@@ -362,5 +362,5 @@ def test_jsonl_line_split_matches_file_payload(spark, landing, signal):
     table = SIGNAL_TABLES[signal][0]
     lines = table_hash(ingest.ingest_jsonl_fast(spark, src, signal), table)
     payloads, _ = ingest.read_landing_auto(spark, src)
-    decode = ingest.decode_logs if signal == "logs" else ingest.decode_traces
-    assert lines == table_hash(decode(payloads), table) == PINNED_JSONL[table]
+    decoded = ingest.decode_signal(payloads, signal)[table]
+    assert lines == table_hash(decoded, table) == PINNED_JSONL[table]

@@ -21,6 +21,9 @@ import random
 import struct as _struct
 from collections import Counter
 
+import pyarrow as pa
+from pyspark.sql.pandas.types import to_arrow_schema
+
 from otlp2parquet_spark.otel import flatten, ingest, schemas, wire
 
 from test_wire_property import _enc_varint, encode_message
@@ -305,14 +308,10 @@ def test_exotic_metrics_frame_matches_slow_pair(spark):
         slow_skipped.update(skipped)
 
     for mt in ("gauge", "sum", "histogram", "exponential_histogram"):
-        table = schemas.METRIC_TABLES[mt]
-        raw = schemas.raw_spark_schema(table)
-        slow = ingest.finalize(
-            spark.createDataFrame(
-                [tuple(r.get(f.name) for f in raw.fields) for r in slow_rows[mt]], raw
-            ),
-            table,
-        )
+        # the golden schema's Arrow form takes the slow pair's epoch-µs ints
+        # as timestamps, as the decode kernel's batches do
+        schema = to_arrow_schema(schemas.spark_schema(schemas.METRIC_TABLES[mt]))
+        slow = spark.createDataFrame(pa.Table.from_pylist(slow_rows[mt], schema=schema))
         a = sorted(map(tuple, ingest.metrics_table(union, mt).collect()), key=repr)
         b = sorted(map(tuple, slow.collect()), key=repr)
         assert a == b, f"{mt}: Spark frame path diverges from wire + flatten"

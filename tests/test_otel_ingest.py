@@ -13,18 +13,27 @@ from __future__ import annotations
 
 import glob
 import gzip
+import json
 import math
 import os
+import re
 import shutil
+import sys
 
 import duckdb
 import pandas as pd
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from otlp2parquet_spark import cli
 from otlp2parquet_spark.otel import flatten, ingest, otlp_json, schemas, wire, writer
 from otlp2parquet_spark.otel.wire import OtlpDecodeError
 from otlp_fixtures import REFERENCE_TESTDATA, testdata_dir
+
+sys.path.append(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench"))
+
+import gen  # noqa: E402
 
 TD = testdata_dir()
 GOLDEN_DIR = f"{REFERENCE_TESTDATA}/parquet"
@@ -88,9 +97,20 @@ def _golden_cell(ref, is_ts: bool, is_ts_list: bool):
     return ref
 
 
+def _timestamp_columns(table: str) -> dict[str, bool]:
+    """{column: is_list} for the golden timestamp and list<timestamp> columns."""
+    out = {}
+    for name, typ, _ in schemas.TABLE_COLUMNS[table]:
+        if typ == schemas.TS:
+            out[name] = False
+        elif pa.types.is_list(typ) and typ.value_field.type == schemas.TS:
+            out[name] = True
+    return out
+
+
 def _assert_rows_match_golden(rows: list[dict], golden_stem: str, table: str):
     g = pq.read_table(f"{GOLDEN_DIR}/{golden_stem}.parquet").to_pandas()
-    ts_cols = dict(schemas.timestamp_columns(table))
+    ts_cols = _timestamp_columns(table)
     assert len(rows) == len(g), f"row count {len(rows)} != {len(g)}"
     for i, row in enumerate(rows):
         for col in g.columns:
@@ -254,7 +274,7 @@ def test_spark_ingest_metrics_split_and_skips(spark, landing):
 def test_write_read_roundtrip(spark, landing, tmp_path, layout):
     """Decode -> partitioned write -> Spark + DuckDB read-back (smoke twin)."""
     payloads, _ = ingest.read_landing(spark, str(landing / "traces"))
-    df = ingest.decode_traces(payloads)
+    df = ingest.decode_signal(payloads, "traces")["otel_traces"]
     root = str(tmp_path / layout)
     if layout == "parity":
         acct = writer.write_partitioned(df, "otel_traces", root).collect()
@@ -284,6 +304,7 @@ def test_write_read_roundtrip(spark, landing, tmp_path, layout):
         assert "service" in [f.name for f in back.schema.fields]
         svc = back.filter(back.service == "product-catalog")
         plan = svc._jdf.queryExecution().executedPlan().toString()
+        assert re.search(r"PartitionFilters: \[[^\]]*\(service#\d+ = product-catalog\)", plan), plan
         assert svc.count() > 0
 
 
@@ -347,19 +368,6 @@ def test_jsonl_line_split_ingest(spark, tmp_path):
     assert a == b
 
 
-def test_observed_metrics_ride_the_write(spark, landing, tmp_path):
-    """D26/D27: Observation metrics come back from the SAME job as the
-    partitioned write — no second pass over the data."""
-    payloads, _ = ingest.read_landing(spark, str(landing / "logs"))
-    df = ingest.decode_logs(payloads.filter(payloads.path.endswith("logs.pb")))
-    df, obs = ingest.observed(df, "ingest_logs")
-    acct = writer.write_partitioned(df, "otel_logs", str(tmp_path / "obs")).collect()
-    m = obs.get
-    assert m["records"] == 81 == sum(r.rows for r in acct)
-    assert m["min_ts"].year == 2025 and m["max_ts"] >= m["min_ts"]
-    assert m["approx_services"] >= 5
-
-
 def test_generate_parquet_path_deterministic_sentinel():
     """ADVICE r1: with a deterministic file_id, ts<=0 must NOT fall back to
     now() — a replayed task re-derives the same 1970-sentinel path."""
@@ -377,7 +385,7 @@ def test_parity_writer_reexecution_idempotent(spark, landing, tmp_path):
     accounting frame (== a retried/speculative task) overwrites the same
     deterministic paths instead of duplicating files."""
     payloads, _ = ingest.read_landing(spark, str(landing / "traces"))
-    df = ingest.decode_traces(payloads)
+    df = ingest.decode_signal(payloads, "traces")["otel_traces"]
     root = str(tmp_path / "idem")
     acct = writer.write_partitioned(df, "otel_traces", root)
     first = sorted(r.path for r in acct.collect())
@@ -394,7 +402,7 @@ def test_parity_writer_file_uri_root(spark, landing, tmp_path):
     """D24: an object-store-style URI root routes through pyarrow.fs on the
     executors (file:// stands in for s3:// — same code path)."""
     payloads, _ = ingest.read_landing(spark, str(landing / "traces"))
-    df = ingest.decode_traces(payloads)
+    df = ingest.decode_signal(payloads, "traces")["otel_traces"]
     root_dir = tmp_path / "uri_root"
     acct = writer.write_partitioned(df, "otel_traces", f"file://{root_dir}").collect()
     assert sum(r.rows for r in acct) == df.count() > 0
@@ -405,22 +413,31 @@ def test_parity_writer_file_uri_root(spark, landing, tmp_path):
     assert back.count() == df.count()
 
 
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a physical plan, not descending into the plan a cached
+    relation was built from (an inner child, not a child)."""
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    children = plan.children()
+    names = [plan.nodeName()]
+    for i in range(children.size()):
+        names += _plan_nodes(children.apply(i))
+    return names
+
+
 def test_metrics_fanout_single_decode_job(spark, landing):
-    """The 5-way metrics fan-out (4 table counts + skip accounting) must run
-    ONE decode pass over the payloads — the union frame is persisted inside
-    ingest_directory, mirroring the streaming micro-batch persist."""
-    n_payloads = len(
-        [p for p in (landing / "metrics").iterdir() if p.suffix in (".pb", ".json", ".jsonl")]
-    )
-    counter = spark.sparkContext.accumulator(0)
-    out = ingest.ingest_directory(
-        spark, str(landing / "metrics"), "metrics", decode_counter=counter
-    )
-    for name, df in out.items():
-        if name != "_union":
-            df.count()  # one action per consumer, like the CLI write loop
+    """The 5-way metrics fan-out (4 tables + skip accounting) must run ONE
+    decode pass over the payloads: the union frame is persisted inside
+    ingest_directory, mirroring the streaming micro-batch persist, so each
+    consumer's plan reads the cached union and runs no decode of its own."""
+    out = ingest.ingest_directory(spark, str(landing / "metrics"), "metrics")
+    consumers = [df for name, df in out.items() if not name.startswith("_")] + [out["_skipped"]]
+    assert len(consumers) == 5
+    for df in consumers:
+        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScan" in nodes and "MapInArrow" not in nodes, nodes
+        df.count()  # one action per consumer, like the CLI write loop
     assert out["_union"].is_cached
-    assert counter.value == n_payloads > 0
     out["_union"].unpersist()
 
 
@@ -467,25 +484,6 @@ def test_quarantine_invalid_corpus(spark, tmp_path):
             out["_union"].unpersist()
 
 
-def test_quarantine_counter_observability(spark, tmp_path):
-    """ADVICE r6: the broad decode guard means a parser regression drains
-    payloads into quarantine silently — the quarantine_counter accumulator
-    makes the drop RATE observable driver-side without scanning the
-    quarantine dir. One action, N bad payloads -> counter == N."""
-    d = tmp_path / "landing"
-    d.mkdir()
-    shutil.copy(f"{TD}/log.json", d / "log.json")
-    shutil.copy(f"{INVALID_TD}/log_invalid_severity.json", d / "bad1.json")
-    shutil.copy(f"{INVALID_TD}/malformed.json", d / "bad2.json")
-    qdir = str(tmp_path / "q")
-    counter = spark.sparkContext.accumulator(0)
-    out = ingest.ingest_directory(
-        spark, str(d), "logs", quarantine_dir=qdir, quarantine_counter=counter
-    )
-    assert out["otel_logs"].count() > 0
-    assert counter.value == 2
-
-
 def test_quarantine_same_basename_no_clobber(tmp_path):
     """ADVICE r2: two bad payloads with the same basename in different
     source subdirectories must land as distinct quarantine files."""
@@ -505,20 +503,14 @@ def test_quarantine_same_basename_no_clobber(tmp_path):
 
 
 def test_decode_error_raises_without_quarantine_dir(tmp_path):
-    """No quarantine dir: the payload's error propagates, nothing is
-    counted. With one: it is quarantined and counted, not raised."""
-    class Counter:  # the accumulator's one method
-        value = 0
-
-        def add(self, n):
-            self.value += n
-
-    err, counter = wire.OtlpDecodeError("x"), Counter()
+    """No quarantine dir: the payload's error propagates and nothing is
+    written. With one: it is quarantined, not raised."""
+    err = wire.OtlpDecodeError("x")
     with pytest.raises(wire.OtlpDecodeError) as raised:
-        ingest._handle_decode_error(err, None, "p", b"", counter)
-    assert raised.value is err and counter.value == 0
-    ingest._handle_decode_error(err, str(tmp_path), "p", b"", counter)
-    assert counter.value == 1 and os.listdir(tmp_path)
+        ingest._handle_decode_error(err, None, "p", b"")
+    assert raised.value is err and not os.listdir(tmp_path)
+    ingest._handle_decode_error(err, str(tmp_path), "p", b"")
+    assert os.listdir(tmp_path)
 
 
 def test_locality_lane_matches_content_lane(spark, landing):
@@ -657,3 +649,28 @@ def test_payload_format_col_equals_python_twin(spark):
         .collect()
     ]
     assert got == want, list(zip(paths, got, want))
+
+
+def test_cli_ingest_summary_counts_rejected_and_skipped(spark, tmp_path, monkeypatch, capsys):
+    """`cli ingest` says what it did not write: the landing files the
+    admission rule rejected (over the configured request.max_payload_bytes,
+    unknown format) and the metrics data points it skipped (summaries)."""
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    _, tree = gen.RequestFactory(11).metrics(1)  # one point of each of the 5 types
+    (landing / "small.pb").write_bytes(gen.render(tree, "metrics", "pb"))
+    _, tree = gen.RequestFactory(12).metrics(20)
+    (landing / "big.pb").write_bytes(gen.render(tree, "metrics", "pb"))
+    (landing / "notes.txt").write_bytes(b"not otlp")
+    limit = 4096
+    assert os.path.getsize(landing / "small.pb") <= limit < os.path.getsize(landing / "big.pb")
+    monkeypatch.setenv("OTLP2PARQUET_CONFIG_CONTENT", f"[request]\nmax_payload_bytes = {limit}\n")
+
+    argv = ["--output", str(tmp_path / "out"), "ingest", str(landing), "metrics"]
+    assert cli.main(argv) == 0
+    resp = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert resp["written"] == dict.fromkeys(
+        (schemas.METRIC_TABLES[t] for t in schemas.PERSISTED_METRIC_TYPES), 1
+    )
+    assert resp["rejected"] == {"payload too large": 1, "unknown format": 1}
+    assert resp["skipped"] == {"summaries": 1}
