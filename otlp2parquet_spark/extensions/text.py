@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from otlp2parquet_spark.extensions.dedup import (
+    QUALITY_STOPWORDS,
     SQL_NORM,
     SQL_QUALITY_FEAT,
     SQL_QUALITY_PASSES,
@@ -1867,7 +1868,6 @@ _QC_DOCS_PER_SHARD = 2500  # per-shard sequential-epoch budget: within a
 # this constant is the training-time critical path — corpus growth beyond
 # it is absorbed by MORE shards (more cores), not longer loops (the
 # _semantic_k corpus-derived-parameter medicine applied to IPM sharding)
-_QC_STOP = ("the", "a", "and", "of", "to")  # the x4_quality_score stop set
 
 
 def qc_shards_for(n_docs: int) -> int:
@@ -1906,7 +1906,7 @@ def _qc_features(docs: DataFrame, shards: int = _QC_SHARDS) -> DataFrame:
         F.coalesce(F.col("toks"), F.array().cast("array<string>")),
         lambda t: F.length(t) > 0,
     )
-    stop_arr = F.array(*[F.lit(s) for s in _QC_STOP])
+    stop_arr = F.array(*[F.lit(s) for s in QUALITY_STOPWORDS])
     base = tok.select(
         "doc_id",
         F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t))).alias(

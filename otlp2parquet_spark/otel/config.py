@@ -7,24 +7,20 @@ env (``OTLP2PARQUET_*``) > TOML file (explicit path, ``OTLP2PARQUET_CONFIG``,
 actionable messages (src/config/validation.rs:9-188).
 
 Storage backends (D24, src/writer/storage.rs): `fs` maps to a plain path;
-`s3`/`r2` map to `s3a://` URLs plus the Hadoop confs Spark needs
-(endpoint / region / path-style) — applied by `apply_storage_conf`.
+`s3`/`r2` map to `s3a://` URLs plus the Hadoop confs Spark needs and the
+`AWS_*` variables the parity writer's pyarrow reads (endpoint / region /
+keys) — applied by `apply_storage_conf`.
 """
 
 from __future__ import annotations
 
 import os
 import tomllib
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, field
 from typing import Any
 
 DEFAULTS = {
-    "batch": {
-        "enabled": True,
-        "max_rows": 200_000,  # platform.rs:16
-        "max_bytes": 128 * 1024 * 1024,  # platform.rs:17
-        "max_age_secs": 10,  # platform.rs:18
-    },
+    "batch": {"max_rows": 200_000},  # platform.rs:16
     "request": {"max_payload_bytes": 8 * 1024 * 1024},  # platform.rs:19
     "storage": {
         "backend": "fs",  # fs | s3 | r2
@@ -38,7 +34,7 @@ DEFAULTS = {
         "secret_access_key": "",
         "path_style": True,
     },
-    "server": {"port": 4318, "log_level": "info"},
+    "server": {"port": 4318},
     "engine": {"layout": "parity"},
 }
 
@@ -77,10 +73,7 @@ def _deep_merge(base: dict, over: dict) -> dict:
 
 # env var -> (section, key, type); mirrors reference env_overrides.rs:17-197
 _ENV_MAP = {
-    "OTLP2PARQUET_BATCH_ENABLED": ("batch", "enabled", bool),
     "OTLP2PARQUET_BATCH_MAX_ROWS": ("batch", "max_rows", int),
-    "OTLP2PARQUET_BATCH_MAX_BYTES": ("batch", "max_bytes", int),
-    "OTLP2PARQUET_BATCH_MAX_AGE_SECS": ("batch", "max_age_secs", int),
     "OTLP2PARQUET_MAX_PAYLOAD_BYTES": ("request", "max_payload_bytes", int),
     "OTLP2PARQUET_STORAGE_BACKEND": ("storage", "backend", str),
     "OTLP2PARQUET_OUTPUT": ("storage", "output", str),
@@ -92,19 +85,11 @@ _ENV_MAP = {
     "OTLP2PARQUET_ACCESS_KEY_ID": ("storage", "access_key_id", str),
     "OTLP2PARQUET_SECRET_ACCESS_KEY": ("storage", "secret_access_key", str),
     "OTLP2PARQUET_PORT": ("server", "port", int),
-    "OTLP2PARQUET_LOG_LEVEL": ("server", "log_level", str),
     "OTLP2PARQUET_LAYOUT": ("engine", "layout", str),
 }
 
 
 def _coerce(raw: str, typ: type, var: str) -> Any:
-    if typ is bool:
-        low = raw.strip().lower()
-        if low in ("1", "true", "yes", "on"):
-            return True
-        if low in ("0", "false", "no", "off"):
-            return False
-        raise ConfigError(f"{var}: expected a boolean, got {raw!r}")
     if typ is int:
         try:
             return int(raw)
@@ -134,13 +119,8 @@ def _load_toml(explicit_path: str | None, env: dict[str, str]) -> dict:
 
 def validate(cfg: RuntimeConfig) -> RuntimeConfig:
     """Actionable validation errors (reference validation.rs:9-188)."""
-    b = cfg.batch
-    if b["max_rows"] <= 0:
+    if cfg.batch["max_rows"] <= 0:
         raise ConfigError("batch.max_rows must be > 0 (e.g. 200000)")
-    if b["max_bytes"] <= 0:
-        raise ConfigError("batch.max_bytes must be > 0 (e.g. 134217728 for 128 MiB)")
-    if b["max_age_secs"] <= 0:
-        raise ConfigError("batch.max_age_secs must be > 0 (e.g. 10)")
     if cfg.request["max_payload_bytes"] <= 0:
         raise ConfigError("request.max_payload_bytes must be > 0 (e.g. 8388608 for 8 MiB)")
     s = cfg.storage
@@ -193,22 +173,28 @@ def load_config(
 
 
 def apply_storage_conf(spark, cfg: RuntimeConfig) -> None:
-    """Hadoop confs for the s3/r2 backends (D24 twin of storage.rs:12-104);
-    fs backend needs nothing. R2 endpoint = `https://{account}.r2.cloudflarestorage.com`."""
+    """The s3/r2 backend's `storage` section, handed to both writers (D24
+    twin of storage.rs:12-104): Hadoop `fs.s3a.*` confs for the native
+    layout's Spark sink, and the `AWS_*` variables pyarrow reads for the
+    parity writer, put in `sparkContext.environment`, which PySpark ships
+    with every Python function to the executors. The fs backend needs
+    nothing. R2 endpoint = `https://{account}.r2.cloudflarestorage.com`."""
     s = cfg.storage
     if s["backend"] == "fs":
         return
-    hconf = spark.sparkContext._jsc.hadoopConfiguration()
+    sc = spark.sparkContext
+    hconf = sc._jsc.hadoopConfiguration()
     endpoint = s["endpoint"]
     if s["backend"] == "r2" and not endpoint:
         endpoint = f"https://{s['account_id']}.r2.cloudflarestorage.com"
-    if endpoint:
-        hconf.set("fs.s3a.endpoint", endpoint)
-    if s["region"]:
-        hconf.set("fs.s3a.endpoint.region", s["region"])
-    if s["access_key_id"]:
-        hconf.set("fs.s3a.access.key", s["access_key_id"])
-    if s["secret_access_key"]:
-        hconf.set("fs.s3a.secret.key", s["secret_access_key"])
+    for hadoop_key, env_var, value in (
+        ("fs.s3a.endpoint", "AWS_ENDPOINT_URL", endpoint),
+        ("fs.s3a.endpoint.region", "AWS_REGION", s["region"]),
+        ("fs.s3a.access.key", "AWS_ACCESS_KEY_ID", s["access_key_id"]),
+        ("fs.s3a.secret.key", "AWS_SECRET_ACCESS_KEY", s["secret_access_key"]),
+    ):
+        if value:
+            hconf.set(hadoop_key, value)
+            sc.environment[env_var] = value
     if s["path_style"]:
         hconf.set("fs.s3a.path.style.access", "true")

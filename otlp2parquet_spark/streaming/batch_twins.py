@@ -16,6 +16,11 @@ from pyspark.sql import functions as F
 from otlp2parquet_spark.extensions.dedup import SQL_NORM
 from otlp2parquet_spark.queries.registry import T, query
 from otlp2parquet_spark.queries.relational import davg, dsum, sql_davg, sql_dsum
+from otlp2parquet_spark.streaming.pipeline import (
+    CAPPED_SESSION_GAP_US,
+    CAPPED_SESSION_MAX_EVENTS,
+    SAMPLE_K,
+)
 
 
 @query(
@@ -496,9 +501,7 @@ def t9_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # composite close rule needs custom per-key sequential state — the live form
 # is applyInPandasWithState (streaming/pipeline.py capped_sessions); this
 # batch twin re-derives identical segments with two stacked window passes
-# over ONE per-user sort.
-CAPPED_SESSION_GAP_US = 600 * 1_000_000
-CAPPED_SESSION_MAX_EVENTS = 20
+# over ONE per-user sort, with the live form's gap and event budget.
 
 
 @query(
@@ -1095,8 +1098,6 @@ def t22_budget_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # T23: streaming bounded-state uniform sample (r12)
 
-_SAMPLE_K = 64
-
 
 @query(
     "t23_stream_sample",
@@ -1105,13 +1106,13 @@ _SAMPLE_K = 64
            md5(CAST(doc_id AS VARCHAR)) AS hv
     FROM documents
     ORDER BY hv, doc_id
-    LIMIT {_SAMPLE_K}
+    LIMIT {SAMPLE_K}
     """,
     tags=("T23", "O1", "O2", "F6"),
 )
 def t23_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T23 batch twin: a deterministic UNIFORM sample of the whole corpus —
-    the K = _SAMPLE_K (64) docs with the smallest (md5(doc_id), doc_id)
+    the K = SAMPLE_K (64) docs with the smallest (md5(doc_id), doc_id)
     keys. The
     content-addressed hash order makes the sample a pure FUNCTION of the
     corpus (same docs -> same sample, any engine, any partitioning, any
@@ -1131,5 +1132,5 @@ def t23_stream_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id", F.md5(F.col("doc_id").cast("string")).alias("hv")
         )
         .orderBy("hv", "doc_id")
-        .limit(_SAMPLE_K)
+        .limit(SAMPLE_K)
     )

@@ -396,8 +396,11 @@ def _micro_to_4dp(m: int):
     q = (abs(m) + 50) // 100
     return (q if m >= 0 else -q) / 10000.0
 
-_CAPPED_GAP_US = 600 * 1_000_000
-_CAPPED_MAX_EVENTS = 20
+
+# T10's close rule (idle gap, event budget); the batch twin
+# batch_twins.t10_capped_session reads the same two constants
+CAPPED_SESSION_GAP_US = 600 * 1_000_000
+CAPPED_SESSION_MAX_EVENTS = 20
 
 
 def capped_sessions(stream: DataFrame, watermark: str = "10 seconds") -> DataFrame:
@@ -463,7 +466,7 @@ def capped_sessions(stream: DataFrame, watermark: str = "10 seconds") -> DataFra
         # state is 5 scalars.
         st = state.get if state.exists else None
         for ts_us, _eid, m, k in rows:
-            if st is not None and ts_us - st[1] > _CAPPED_GAP_US:
+            if st is not None and ts_us - st[1] > CAPPED_SESSION_GAP_US:
                 if st[3] > 0:
                     closed.append(close_row(user, st))
                 st = None  # anchor beyond the gap expires silently
@@ -480,7 +483,7 @@ def capped_sessions(stream: DataFrame, watermark: str = "10 seconds") -> DataFra
                 # clamp last_ts so a late row never moves the gap/timeout
                 # baseline backward
                 st = (st[0], max(st[1], ts_us), st[2], st[3] + 1, st[4] + m, st[5] + k)
-            if st[3] >= _CAPPED_MAX_EVENTS:
+            if st[3] >= CAPPED_SESSION_MAX_EVENTS:
                 closed.append(close_row(user, st))
                 st = (st[1], st[1], st[2] + 1, 0, 0, 0)
         if st is None:
@@ -489,7 +492,7 @@ def capped_sessions(stream: DataFrame, watermark: str = "10 seconds") -> DataFra
         else:
             state.update(st)
             # flush (or expire the anchor) once event time passes last + gap
-            state.setTimeoutTimestamp((st[1] + _CAPPED_GAP_US) // 1000)
+            state.setTimeoutTimestamp((st[1] + CAPPED_SESSION_GAP_US) // 1000)
         if closed:
             yield pd.DataFrame(closed)
 
@@ -2033,7 +2036,7 @@ def budget_admit_stream(
 # T23: streaming bounded-state uniform sample (r12)
 # ---------------------------------------------------------------------------
 
-SAMPLE_K = 64
+SAMPLE_K = 64  # also the batch twin's (batch_twins.t23_stream_sample) LIMIT
 
 
 def make_sample_flush(spark: SparkSession, state_dir: str, k: int = SAMPLE_K):

@@ -64,6 +64,7 @@ def s3stub():
     """The session S3 endpoint, with a clean bucket per test."""
     for bucket in list(_S3_STUB.server.store):
         _S3_STUB.server.store[bucket] = {}
+    _S3_STUB.access_keys.clear()
     yield _S3_STUB
 
 

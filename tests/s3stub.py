@@ -18,7 +18,9 @@ touches for our writer + read-back flow:
 - DELETE /bucket/key[?uploadId]      DeleteObject / AbortMultipartUpload
 - POST  /bucket?delete               DeleteObjects (batch; DeleteDir uses it)
 
-Auth headers are accepted and ignored (the SDK signs; the stub trusts).
+Auth headers are accepted without checking the signature (the SDK signs;
+the stub trusts); the access-key id of each SigV4 `Credential=` is recorded
+in `access_keys`, so a test can tell which credentials reached the store.
 State is a plain dict — one stub per test, no persistence.
 """
 
@@ -75,6 +77,14 @@ class _S3Handler(BaseHTTPRequestHandler):
 
     def log_message(self, fmt, *args):
         pass
+
+    def parse_request(self) -> bool:
+        ok = super().parse_request()
+        if ok:
+            m = re.search(r"Credential=([^/,\s]+)/", self.headers.get("Authorization", ""))
+            if m:
+                self.server.access_keys.add(m.group(1))
+        return ok
 
     # -- plumbing ----------------------------------------------------------
     @property
@@ -318,6 +328,7 @@ class S3Stub:
         self.server = ThreadingHTTPServer(("127.0.0.1", 0), _S3Handler)
         self.server.store = {b: {} for b in buckets}
         self.server.uploads = {}
+        self.server.access_keys = set()
         self.thread: threading.Thread | None = None
 
     @property
@@ -337,6 +348,11 @@ class S3Stub:
 
     def objects(self, bucket: str) -> dict[str, bytes]:
         return self.server.store[bucket]
+
+    @property
+    def access_keys(self) -> set[str]:
+        """Access-key ids of the signed requests received so far."""
+        return self.server.access_keys
 
     def __enter__(self) -> "S3Stub":
         self.thread = threading.Thread(target=self.server.serve_forever, daemon=True)

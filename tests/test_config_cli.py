@@ -19,8 +19,6 @@ from otlp_fixtures import testdata_dir
 def test_defaults():
     cfg = load_config(env={})
     assert cfg.batch["max_rows"] == 200_000
-    assert cfg.batch["max_bytes"] == 128 * 1024 * 1024
-    assert cfg.batch["max_age_secs"] == 10
     assert cfg.request["max_payload_bytes"] == 8 * 1024 * 1024
     assert cfg.storage["backend"] == "fs"
     assert cfg.output_root() == "./data"

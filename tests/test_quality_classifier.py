@@ -10,12 +10,12 @@ from __future__ import annotations
 import hashlib
 import re
 
+from otlp2parquet_spark.extensions.dedup import QUALITY_STOPWORDS
 from otlp2parquet_spark.extensions.text import (
     _QC_B,
     _QC_DOCS_PER_SHARD,
     _QC_ROUNDS,
     _QC_SHARDS,
-    _QC_STOP,
     _qc_trunc_div,
     qc_shards_for,
 )
@@ -43,7 +43,7 @@ def _py_docs(rows):
         for t in toks:
             b = _py_bucket(t)
             cnts[b] = cnts.get(b, 0) + 1
-        n_stop = sum(1 for t in toks if t in _QC_STOP)
+        n_stop = sum(1 for t in toks if t in QUALITY_STOPWORDS)
         y = 1 if 10 * n_stop >= len(toks) else 0
         out.append((doc_id, cnts, y))
     return out

@@ -8,6 +8,7 @@ ranged GETs), inside real executor tasks — not a mocked filesystem object.
 
 from __future__ import annotations
 
+import json
 import posixpath
 
 import pyarrow.parquet as pq
@@ -118,6 +119,42 @@ def test_q10_rowcount_verify_against_s3(spark, s3stub, tmp_path):
         t = pq.read_table(f"test-bucket/{key}", filesystem=fs, columns=["Timestamp"])
         per_service_read[service] = per_service_read.get(service, 0) + t.num_rows
     assert per_service_acct == per_service_read
+
+
+def test_cli_ingest_storage_section_reaches_parity_writer(
+    spark, s3stub, tmp_path, monkeypatch, capsys
+):
+    """A parity `cli ingest` to s3 configured only through OTLP2PARQUET_*
+    writes with the configured key, not the AWS_* environment the session
+    started with: apply_storage_conf hands the storage section to pyarrow
+    on the executors."""
+    from otlp2parquet_spark import cli
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "logs.jsonl").write_bytes(open(f"{TD}/logs.jsonl", "rb").read())
+    for var, value in {
+        "OTLP2PARQUET_STORAGE_BACKEND": "s3",
+        "OTLP2PARQUET_BUCKET": "test-bucket",
+        "OTLP2PARQUET_PREFIX": "cfg",
+        "OTLP2PARQUET_ENDPOINT": s3stub.endpoint,
+        "OTLP2PARQUET_REGION": "us-east-1",
+        "OTLP2PARQUET_ACCESS_KEY_ID": "cfg-access-key",
+        "OTLP2PARQUET_SECRET_ACCESS_KEY": "cfg-secret-key",
+    }.items():
+        monkeypatch.setenv(var, value)
+    env = spark.sparkContext.environment
+    saved = dict(env)
+    try:
+        assert cli.main(["ingest", str(landing), "logs"]) == 0
+    finally:
+        env.clear()
+        env.update(saved)
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["output"] == "s3a://test-bucket/cfg"
+    keys = [k for k in s3stub.objects("test-bucket") if k.endswith(".parquet")]
+    assert keys and all(k.startswith("cfg/logs/") for k in keys)
+    assert s3stub.access_keys == {"cfg-access-key"}
 
 
 def _spark_has_s3a(spark) -> bool:
