@@ -320,13 +320,13 @@ def _ingest(a, cfg) -> dict:
     return resp
 
 
-def _stream(a, cfg) -> int:
+def _stream(a, cfg) -> dict | int:
     from otlp2parquet_spark.otel.config import apply_storage_conf
     from otlp2parquet_spark.streaming.ingest import stream_ingest
 
     spark = _spark(a)
     apply_storage_conf(spark, cfg)
-    stream_ingest(
+    query = stream_ingest(
         spark,
         a.landing_dir,
         a.signal,
@@ -338,8 +338,17 @@ def _stream(a, cfg) -> int:
         max_rows_per_file=cfg.batch["max_rows"],
         quarantine_dir=a.quarantine,
         max_payload_bytes=cfg.request["max_payload_bytes"],
-    ).awaitTermination()
-    return 0
+    )
+    query.awaitTermination()
+    if not a.available_now:
+        return 0
+    # the drain's totals, from its progress events' observed metrics (a
+    # handle without progress events reports zeros)
+    seen = [p["observedMetrics"] for p in getattr(query, "recentProgress", ())]
+    return {
+        "records": sum(m["ingest"]["records"] for m in seen if "ingest" in m),
+        "rejected": sum(m["landing"]["rejected"] for m in seen if "landing" in m),
+    }
 
 
 def _connect(a, _cfg) -> int:
@@ -375,6 +384,7 @@ def _serve(a, cfg) -> int:
 
 def _compact(a, cfg) -> dict | int:
     from otlp2parquet_spark.otel import compact
+    from otlp2parquet_spark.otel.config import apply_storage_conf
 
     # Non-atomic swap (see compact.py docstring): new files land before
     # fragment deletion, so a racing reader can see duplicated rows for
@@ -388,6 +398,7 @@ def _compact(a, cfg) -> dict | int:
         file=sys.stderr,
     )
     spark = _spark(a)
+    apply_storage_conf(spark, cfg)
     try:
         acct_df = compact.compact_table(
             spark,

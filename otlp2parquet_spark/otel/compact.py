@@ -14,13 +14,12 @@ executor-side pyarrow writes — so compaction scales exactly like the
 original write. Old-file deletion is a driver-side metadata pass over the
 pre-compaction listing (file ops, not data).
 
-Works against BOTH local filesystems and object stores: listing/deletion
-go through the same `writer._resolve_fs` pyarrow FileSystem lane the
-writer uses (so s3://, s3a:// and file:// roots behave identically), and
-on object-store roots the fragment READ is a distributed executor-side
-pyarrow read (`mapInArrow` over the file list) — no hadoop-aws jar
-needed, matching the writer's design of doing all object-store I/O in
-pyarrow. Local roots keep Spark's native parquet reader.
+Every file operation — listing, stat, the fragment read (an executor-side
+`mapInArrow` over the file list) and deletion — goes through the
+writer's one pyarrow FileSystem lane, `writer._resolve_fs`, so local,
+file://, s3:// and s3a:// roots run the same code, with no hadoop-aws
+jar. The driver-side calls read the process's AWS_* variables, which
+`config.apply_storage_conf` sets from the `storage` section.
 
 Crash-safety contract (documented, not transactional): new files land
 first (fresh deterministic run-tag names), originals are deleted after.
@@ -37,7 +36,6 @@ Reference context: src/writer/write.rs flush-per-batch file naming.
 
 from __future__ import annotations
 
-import os
 import posixpath
 from collections.abc import Iterable, Iterator
 
@@ -47,21 +45,11 @@ from otlp2parquet_spark.otel import schemas, writer
 
 
 def _list_parquet(root: str, table: str) -> list[str]:
-    """All parquet data files under the table root.
-
-    Local roots return absolute local paths; object-store roots return
-    fs-relative paths (the form pyarrow's FileSystem APIs consume)."""
-    fs, rel = writer._resolve_fs(root)
-    if fs is None:
-        base = os.path.join(rel, schemas.TABLE_PATH_SEGMENT[table])
-        out: list[str] = []
-        for dirpath, _dirs, files in os.walk(base):
-            out.extend(
-                os.path.join(dirpath, f) for f in files if f.endswith(".parquet")
-            )
-        return sorted(out)
+    """All parquet data files under the table root, as fs-relative paths
+    (the form pyarrow's FileSystem APIs consume)."""
     from pyarrow import fs as pafs
 
+    fs, rel = writer._resolve_fs(root)
     base = posixpath.join(rel, schemas.TABLE_PATH_SEGMENT[table])
     sel = pafs.FileSelector(base, recursive=True, allow_not_found=True)
     return sorted(
@@ -71,10 +59,11 @@ def _list_parquet(root: str, table: str) -> list[str]:
     )
 
 
-def _read_fragments_object_store(
+def _read_fragments(
     spark: SparkSession, root: str, rel_paths: list[str], table: str
 ) -> DataFrame:
-    """Distributed pyarrow read of fragment files on an object store.
+    """Distributed pyarrow read of fragment files, on a local root and an
+    object store alike.
 
     Each executor task resolves the filesystem from the root URI (+ AWS env
     vars, like the writer does) and streams its files' record batches, cast
@@ -121,8 +110,8 @@ def newest_data_file_age_sec(
     `files` skips the recursive listing when the caller already has one
     (compact_table lists once and probes from it — listing is THE
     object-store tax, module docstring). Files that vanish between listing
-    and stat (a concurrent compaction's deletions) are skipped, matching
-    the pyarrow branch's missing-mtime tolerance."""
+    and stat (a concurrent compaction's deletions) have no mtime and are
+    skipped: not evidence of activity."""
     import time
 
     if files is None:
@@ -130,19 +119,11 @@ def newest_data_file_age_sec(
     if not files:
         return None
     fs, _rel = writer._resolve_fs(root)
-    if fs is None:
-        stamps = []
-        for f in files:
-            try:
-                stamps.append(os.path.getmtime(f))
-            except OSError:
-                continue  # rotated/deleted mid-probe: not evidence of activity
-    else:
-        stamps = [
-            info.mtime.timestamp()
-            for info in fs.get_file_info(files)
-            if info.mtime is not None
-        ]
+    stamps = [
+        info.mtime.timestamp()
+        for info in fs.get_file_info(files)
+        if info.mtime is not None
+    ]
     if not stamps:
         return None  # nothing statable: caller decides (CLI warns)
     return max(0.0, time.time() - max(stamps))
@@ -185,7 +166,7 @@ def compact_table(
             )
     by_dir: dict[str, list[str]] = {}
     for f in old_files:
-        by_dir.setdefault(posixpath.dirname(f) if fs else os.path.dirname(f), []).append(f)
+        by_dir.setdefault(posixpath.dirname(f), []).append(f)
     frag_files = [
         f
         for files in by_dir.values()
@@ -199,10 +180,7 @@ def compact_table(
     # read ONLY the fragmented partitions' files; the (service, bucket)
     # regrouping inside write_partitioned re-derives the same partition
     # paths, so the rewrite lands exactly where the fragments were
-    if fs is None:
-        df = spark.read.parquet(*frag_files)
-    else:
-        df = _read_fragments_object_store(spark, root, frag_files, table)
+    df = _read_fragments(spark, root, frag_files, table)
     acct = writer.write_partitioned(
         df, table, root, bucket=bucket, max_rows_per_file=max_rows_per_file
     ).collect()
@@ -211,13 +189,6 @@ def compact_table(
 
 
 def _delete(fs, paths: Iterable[str]) -> None:
-    if fs is None:
-        for p in paths:
-            try:
-                os.remove(p)
-            except FileNotFoundError:
-                pass
-        return
     for p in paths:
         try:
             fs.delete_file(p)

@@ -8,7 +8,7 @@ actionable messages (src/config/validation.rs:9-188).
 
 Storage backends (D24, src/writer/storage.rs): `fs` maps to a plain path;
 `s3`/`r2` map to `s3a://` URLs plus the Hadoop confs Spark needs and the
-`AWS_*` variables the parity writer's pyarrow reads (endpoint / region /
+`AWS_*` variables the pyarrow FileSystem lane reads (endpoint / region /
 keys) — applied by `apply_storage_conf`.
 """
 
@@ -173,11 +173,13 @@ def load_config(
 
 
 def apply_storage_conf(spark, cfg: RuntimeConfig) -> None:
-    """The s3/r2 backend's `storage` section, handed to both writers (D24
-    twin of storage.rs:12-104): Hadoop `fs.s3a.*` confs for the native
-    layout's Spark sink, and the `AWS_*` variables pyarrow reads for the
-    parity writer, put in `sparkContext.environment`, which PySpark ships
-    with every Python function to the executors. The fs backend needs
+    """The s3/r2 backend's `storage` section, handed to both clients (D24
+    twin of storage.rs:12-104): Hadoop `fs.s3a.*` confs for Spark's
+    listing and the native layout's sink, and the `AWS_*` variables
+    pyarrow reads for every payload read, parity write, compaction and
+    quarantine file — put in `sparkContext.environment`, which PySpark
+    ships with every Python function to the executors, and in this
+    process's environment for the driver-side calls. The fs backend needs
     nothing. R2 endpoint = `https://{account}.r2.cloudflarestorage.com`."""
     s = cfg.storage
     if s["backend"] == "fs":
@@ -195,6 +197,6 @@ def apply_storage_conf(spark, cfg: RuntimeConfig) -> None:
     ):
         if value:
             hconf.set(hadoop_key, value)
-            sc.environment[env_var] = value
+            sc.environment[env_var] = os.environ[env_var] = value
     if s["path_style"]:
         hconf.set("fs.s3a.path.style.access", "true")

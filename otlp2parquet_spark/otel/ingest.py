@@ -4,7 +4,10 @@ Reference dataflow D1-D15 re-expressed Spark-first (SURVEY.md §3.1):
 
 - the HTTP receiver is out-of-engine (reference src/lib.rs:221 is an axum
   server); its semantic twin here is a *landing directory* of raw OTLP
-  payloads that Spark scans with `format("binaryFile")` (D1/S4);
+  payloads that Spark lists with `format("binaryFile")` (D1/S4). The scan
+  ships (path, length, fmt) only; each decode task reads its payloads'
+  bytes through `writer._resolve_fs`, the one pyarrow FileSystem lane that
+  also writes the parity layout and the quarantine dir;
 - gzip bodies are decompressed in the codec (D2, tower layer in reference);
 - format dispatch is by file extension — .pb / .json / .jsonl (+ .gz) —
   mirroring content-type dispatch (D3, reference src/handlers.rs:68);
@@ -27,7 +30,8 @@ from __future__ import annotations
 
 import functools
 import gzip
-import os
+import json
+import posixpath
 from collections.abc import Iterator
 from typing import Any
 
@@ -36,7 +40,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from otlp2parquet_spark.otel import fast_flatten, fast_wire, otlp_json, schemas, wire
+from otlp2parquet_spark.otel import fast_flatten, fast_wire, otlp_json, schemas, wire, writer
 from otlp2parquet_spark.otel.wire import OtlpDecodeError
 
 DEFAULT_MAX_PAYLOAD_BYTES = 8 * 1024 * 1024  # reference src/config/platform.rs:19
@@ -69,113 +73,42 @@ def payload_format_col(path_col) -> "F.Column":
     return F.when(ext == "", F.lit(None)).otherwise(ext)
 
 
-def _admission(df: DataFrame, max_payload_bytes: int, size_col, select_cols):
-    """The landing admission rule, shared by every landing scan (batch
-    content, batch locality and streaming), so none of them can drift:
-    tag each file's format (D3) and check the size guard (D4).
+def _admission(files: DataFrame, max_payload_bytes: int):
+    """The landing admission rule, shared by the batch and streaming scans
+    so they cannot drift: tag each binaryFile status row's format (D3) and
+    check the size guard (D4) on `length`, the pre-decompression byte size.
 
-    Returns (tagged frame, admitted predicate, reject reason)."""
-    df = df.select(*select_cols, payload_format_col(F.col("path")).alias("fmt"))
-    ok = (size_col <= F.lit(max_payload_bytes)) & F.col("fmt").isNotNull()
+    Returns ((path, length, fmt) frame, admitted predicate, reject reason)."""
+    df = files.select("path", "length", payload_format_col(F.col("path")).alias("fmt"))
+    ok = (F.col("length") <= F.lit(max_payload_bytes)) & F.col("fmt").isNotNull()
     reason = (
         F.when(F.col("fmt").isNull(), F.lit("unknown format"))
-        .when(size_col > F.lit(max_payload_bytes), F.lit("payload too large"))
+        .when(F.col("length") > F.lit(max_payload_bytes), F.lit("payload too large"))
     )
     return df, ok, reason
 
 
 def _landing_scan(
-    spark: SparkSession, path: str, max_payload_bytes: int, local: bool
+    spark: SparkSession, path: str, max_payload_bytes: int
 ) -> tuple[DataFrame, DataFrame, Observation]:
-    """Batch landing scan -> (accepted, rejected, landing). The content lane
-    ships (path, content, fmt); the locality lane (`local`) reads file
-    statuses only and ships (path, fmt).
+    """Batch landing scan -> (accepted, rejected, landing).
 
     `landing` observes the pre-filter frame: rejected files by reason
     (_REJECT_REASONS), filled by the first action over either side — the
     decode — so a summary of the rejections costs no job of its own (the
     batch twin of the streaming scan's `landing` observation)."""
-    size_col, cols = (
-        (F.col("length"), ("path", "length")) if local else (F.length("content"), ("path", "content"))
-    )
     df, ok, reason = _admission(
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*")
         .option("recursiveFileLookup", "true")
         .load(path),
         max_payload_bytes,
-        size_col,
-        cols,
     )
     landing = Observation()
     df = df.observe(landing, *[F.count_if(reason == r).alias(r) for r in _REJECT_REASONS])
     # binaryFile yields >= 1 scan partition per payload file, so the
     # CPU-bound decode already parallelizes across files; no repartition
-    # (shuffling raw payload bytes costs more than it buys — measured).
-    accepted = df.filter(ok).select("path", "fmt") if local else df.filter(ok)
-    return accepted, df.filter(~ok).select("path", reason.alias("reason")), landing
-
-
-def read_landing(
-    spark: SparkSession,
-    path: str,
-    *,
-    max_payload_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
-) -> tuple[DataFrame, DataFrame]:
-    """Scan a landing dir of OTLP payload files -> (accepted, rejected).
-
-    Returns binaryFile rows (path, content, fmt); `rejected` carries
-    oversized payloads (D4: HTTP 413 twin) and unknown-extension files.
-    """
-    return _landing_scan(spark, path, max_payload_bytes, local=False)[:2]
-
-
-def read_landing_meta(
-    spark: SparkSession,
-    path: str,
-    *,
-    max_payload_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
-) -> tuple[DataFrame, DataFrame]:
-    """Metadata-only landing scan: (path, fmt) rows WITHOUT the payload
-    bytes; the decode kernels open each payload executor-side instead.
-
-    Payload-locality variant of `read_landing` (D1/S4): binaryFile prunes
-    the `content` column when it is never selected, so the scan reads only
-    file statuses, and the payload bytes move straight from storage into
-    the Python worker that decodes them — never through the JVM row
-    channel. Measured on the pb bench protocol the JVM->Python transfer of
-    the payload column is the dominant wall cost once decode is fast
-    (BASELINE.md round 6), and at 100 TB it would double the I/O path.
-    This is the writer's executor-side pyarrow I/O lane in reverse; the
-    size guard (D4) uses binaryFile's `length` metadata (same semantics:
-    pre-decompression byte size)."""
-    return _landing_scan(spark, path, max_payload_bytes, local=True)[:2]
-
-
-def is_local_or_posix(path: str, default_fs_local: bool = True) -> bool:
-    """Lane routing predicate: `file:` URIs are local/posix mounts (the
-    payload is reachable with plain open() on every executor — the same
-    reachability binaryFile itself assumes); any explicit other scheme
-    (s3a://, s3://, abfs://, hdfs://) is an object store. BARE paths
-    resolve against Spark's default filesystem, which need not be local
-    (fs.defaultFS=hdfs://... makes '/landing' a remote path) — the caller
-    passes `default_fs_local` from the live Hadoop conf; only then does a
-    bare path count as posix."""
-    if path.startswith("file:"):
-        return True
-    if "://" in path:
-        return False
-    return default_fs_local
-
-
-def _default_fs_is_local(spark: SparkSession) -> bool:
-    """True when Spark's fs.defaultFS (what binaryFile resolves bare paths
-    against) is the local filesystem."""
-    fs = (
-        spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
-        or "file:///"
-    )
-    return fs.startswith("file:")
+    return df.filter(ok), df.filter(~ok).select("path", reason.alias("reason")), landing
 
 
 def read_landing_auto(
@@ -184,51 +117,27 @@ def read_landing_auto(
     *,
     max_payload_bytes: int = DEFAULT_MAX_PAYLOAD_BYTES,
 ) -> tuple[DataFrame, DataFrame]:
-    """The SHIPPED batch-ingest reader (judge r6 ask #8): payload-locality
-    lane for local/posix sources, content lane for object stores.
+    """Scan a landing dir of OTLP payload files -> (accepted, rejected).
 
-    On a posix source the binaryFile content column is pure overhead: the
-    bytes travel disk -> JVM row channel -> Arrow -> Python, and the bench
-    protocol measures that transfer (~2 s shipping 245 MB) dominating a
-    0.15 s decode. read_landing_meta scans file STATUSES only and each
-    Python worker opens its payloads directly (407-599k rows/s vs 334-470k
-    through the JVM channel, BASELINE.md round 6). Object stores keep the
-    content lane: there the Hadoop connector owns credentials/retries and
-    the bytes must cross the network once either way.
-
-    Bare paths route by Spark's LIVE fs.defaultFS (what binaryFile resolves
-    them against): with fs.defaultFS=hdfs://... a bare '/landing' is remote
-    and keeps the content lane."""
-    return _auto_scan(spark, path, max_payload_bytes)[:2]
-
-
-def _auto_scan(spark: SparkSession, path: str, max_payload_bytes: int):
-    """read_landing_auto's lane choice -> `_landing_scan`'s triple."""
-    local = is_local_or_posix(path, _default_fs_is_local(spark))
-    return _landing_scan(spark, path, max_payload_bytes, local)
+    `accepted` carries (path, length, fmt) rows: binaryFile prunes the
+    never-selected `content` column, so the scan reads file statuses only
+    and each decode task reads its payloads' bytes from their paths
+    (`_read_payload_bytes`), on a local dir and an object store alike.
+    `rejected` carries (path, reason) for oversized payloads (D4: HTTP 413
+    twin) and unknown-extension files."""
+    return _landing_scan(spark, path, max_payload_bytes)[:2]
 
 
 def _read_payload_bytes(path: str) -> bytes:
-    """Executor-side payload read for the locality lane. Handles the
-    `file:` URIs binaryFile emits, plain paths, and object-store URIs via
-    the writer's FileSystem resolution (one owner for s3a normalization +
-    credential handling). Read failures (file rotated away between the
-    listing scan and the decode task, transient object-store errors)
-    surface as OtlpDecodeError so quarantine keeps its one-payload blast
-    radius."""
-    from urllib.parse import unquote, urlparse
-
+    """Executor-side payload read, through the writer's pyarrow FileSystem
+    resolution for every scheme binaryFile emits. Read failures (file
+    rotated away between the listing scan and the decode task, transient
+    object-store errors) surface as OtlpDecodeError so quarantine keeps its
+    one-payload blast radius."""
     try:
-        if path.startswith("file:"):
-            with open(unquote(urlparse(path).path), "rb") as f:
-                return f.read()
-        if "://" in path:
-            from otlp2parquet_spark.otel.writer import _resolve_fs
-
-            fsys, rel = _resolve_fs(path)
-            with fsys.open_input_stream(rel) as f:
-                return f.read()
-        with open(path, "rb") as f:
+        fsys, rel = writer._resolve_fs(path)
+        # compression=None: a .gz body is inflated by _gunzip, not pyarrow
+        with fsys.open_input_stream(rel, compression=None) as f:
             return f.read()
     except OSError as e:
         raise OtlpDecodeError(f"payload read failed: {e}") from e
@@ -269,7 +178,8 @@ def _parse_payload(content: bytes, fmt: str, signal: str) -> list[dict[str, Any]
 def _write_quarantine(
     qdir: str, path: str, content: bytes | None, err: OtlpDecodeError
 ) -> None:
-    """Executor-side quarantine write: payload copy + error sidecar.
+    """Executor-side quarantine write: payload copy + error sidecar, through
+    `writer._resolve_fs`, so a local dir and an object-store URI both work.
 
     File names derive deterministically from the source path (content hash
     when the path is empty, e.g. line-split scans), so a retried or
@@ -277,40 +187,44 @@ def _write_quarantine(
     The name is basename + a short hash of the FULL path: two bad payloads
     named `a/x.pb` and `b/x.pb` must not clobber each other (ADVICE r2).
 
-    content=None means the payload bytes were never obtained (locality-lane
-    read failure): no payload copy is written — an empty file would make
+    content=None means the payload bytes were never obtained (read
+    failure): no payload copy is written — an empty file would make
     replay-from-quarantine silently lose the bytes (ADVICE r6) — and the
     sidecar records `payload_at` so replay knows where the original still
     lives."""
     import hashlib
-    import json as _json
 
     if path:
         suffix = hashlib.sha256(path.encode()).hexdigest()[:8]
-        base = f"{os.path.basename(path)}.{suffix}"
+        base = f"{posixpath.basename(path)}.{suffix}"
     else:
         base = hashlib.sha256(content or b"").hexdigest()[:16]
-    os.makedirs(qdir, exist_ok=True)
+    fs, where = writer._resolve_fs(qdir)
+    fs.create_dir(where, recursive=True)
     sidecar = {"path": path, "code": err.code, "error": str(err)}
     if content is None:
         sidecar["payload_at"] = path  # read failed; bytes never left the source
     else:
-        with open(os.path.join(qdir, base), "wb") as f:
+        with fs.open_output_stream(posixpath.join(where, base), compression=None) as f:
             f.write(content)
-    with open(os.path.join(qdir, base + ".error.json"), "w") as f:
-        _json.dump(sidecar, f)
+    with fs.open_output_stream(posixpath.join(where, base + ".error.json")) as f:
+        f.write(json.dumps(sidecar).encode())
 
 
 def read_quarantine(spark: SparkSession, qdir: str) -> DataFrame:
     """Quarantined payload accounting: (path, code, error) rows from the
-    sidecar files (D25/D27)."""
-    import glob
+    sidecar files (D25/D27), read on the driver — they are a few hundred
+    bytes each."""
+    from pyarrow import fs as pafs
 
-    schema = "path STRING, code STRING, error STRING"
-    files = glob.glob(os.path.join(qdir, "*.error.json"))
-    if not files:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).json(files)
+    fs, where = writer._resolve_fs(qdir)
+    rows = []
+    for info in fs.get_file_info(pafs.FileSelector(where, allow_not_found=True)):
+        if info.path.endswith(".error.json"):
+            with fs.open_input_stream(info.path) as f:
+                side = json.loads(f.read())
+            rows.append((side["path"], side["code"], side["error"]))
+    return spark.createDataFrame(rows, "path STRING, code STRING, error STRING")
 
 
 def _handle_decode_error(
@@ -328,7 +242,7 @@ def _handle_decode_error(
 def read_landing_lines(spark: SparkSession, path: str) -> DataFrame:
     """Line-splitting scan for large JSONL landing files (S3, `spark.read.text`).
 
-    `read_landing` treats one FILE as one payload — right for HTTP-captured
+    `read_landing_auto` treats one FILE as one payload — right for HTTP-captured
     bodies, wrong for bulk JSONL drops: a 10 GB JSONL file would decode as a
     single task (and trip the payload guard). The text source splits files at
     line boundaries across `maxPartitionBytes` ranges, so one big file
@@ -411,16 +325,16 @@ def _decode_kernel(rows_of, schema: StructType, quarantine_dir: str | None = Non
         for batch in batches:
             rows: list[dict[str, Any]] = []
             paths = batch.column("path")
-            # locality lane (read_landing_meta): no content column shipped —
-            # each payload is read executor-side, storage -> this worker
+            # only read_landing_lines ships the bytes; landing scans ship
+            # paths and each payload is read here, storage -> this worker
             contents = (
                 batch.column("content") if "content" in batch.schema.names else None
             )
             fmts = batch.column("fmt")
             for i in range(batch.num_rows):
-                # None until the bytes are in hand: a locality-lane read
-                # failure must quarantine WITHOUT a (misleading, empty)
-                # payload copy (ADVICE r6)
+                # None until the bytes are in hand: a read failure must
+                # quarantine WITHOUT a (misleading, empty) payload copy
+                # (ADVICE r6)
                 content: bytes | None = None
                 try:
                     content = (
@@ -579,10 +493,9 @@ def ingest_directory(
     '_skipped' and the persisted '_union', which callers unpersist after
     their actions complete — plus the '_rejected' admission side-output and
     '_landing', the Observation of its counts by reason that the first
-    action over the tables fills. The reader is `read_landing_auto`
-    (payload-locality lane for local/posix sources, content lane for object
-    stores)."""
-    payloads, rejected, landing = _auto_scan(spark, landing_dir, max_payload_bytes)
+    action over the tables fills. The reader is `read_landing_auto`'s
+    path-only scan."""
+    payloads, rejected, landing = _landing_scan(spark, landing_dir, max_payload_bytes)
     out = decode_signal(payloads, signal, quarantine_dir)
     out["_rejected"] = rejected
     out["_landing"] = landing

@@ -25,6 +25,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import uuid
 from collections.abc import Iterator
 from datetime import datetime, timezone
@@ -94,20 +95,23 @@ def generate_parquet_path(
 
 
 def _resolve_fs(path: str):
-    """(pyarrow FileSystem, fs-relative path) for an object-store URI, or
-    (None, path) for a plain local path (D24 twin of storage.rs:12-104).
+    """(pyarrow FileSystem, fs-relative path) for any path this package
+    reads or writes (D24 twin of storage.rs:12-104): the one I/O lane of
+    landing payloads, parity files, compaction and quarantine.
 
+    Bare paths and ``file:`` paths resolve to the local filesystem. A
+    ``file:`` path is taken raw, as Hadoop prints it (binaryFile's paths
+    keep spaces, ``#`` and ``%`` unescaped), so it is never URI-decoded.
     The Hadoop-style ``s3a://`` scheme used by `RuntimeConfig.output_root`
-    is normalized to pyarrow's ``s3://``; ``file://`` resolves to the local
-    filesystem (useful to exercise this branch in tests without S3). S3
-    credentials/region/endpoint come from the standard AWS env vars, which
-    pyarrow reads on each executor."""
-    if "://" not in path:
-        return None, path
+    is normalized to pyarrow's ``s3://``. S3 credentials/region/endpoint
+    come from the standard AWS env vars, which pyarrow reads in each
+    process (`config.apply_storage_conf` sets them)."""
     from pyarrow import fs as pafs
 
-    uri = path.replace("s3a://", "s3://", 1)
-    return pafs.FileSystem.from_uri(uri)
+    path = re.sub(r"^file:(//)?", "", path)
+    if "://" not in path:
+        return pafs.LocalFileSystem(), os.path.abspath(path)
+    return pafs.FileSystem.from_uri(path.replace("s3a://", "s3://", 1))
 
 
 # the accounting frame write_partitioned returns (D27 partitions[] twin)
@@ -180,10 +184,7 @@ def write_partitioned(
             min_ts_us = min_ts.value if min_ts.is_valid else 0
             path = generate_parquet_path(root, table, service, min_ts_us, f"{run_tag}-{gh}-{ci}")
             fs, where = _resolve_fs(path)
-            if fs is None:
-                os.makedirs(os.path.dirname(path), exist_ok=True)
-            else:
-                fs.create_dir(os.path.dirname(where), recursive=True)
+            fs.create_dir(os.path.dirname(where), recursive=True)
             pq.write_table(
                 _arrow_to_golden(chunk, table),
                 where,

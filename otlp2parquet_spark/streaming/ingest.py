@@ -19,8 +19,11 @@ src/lib.rs:244-305) onto Spark Structured Streaming (SURVEY.md §7 M5):
 |                                             | native one (see stream_ingest) |
 | per-request accounting D27                  | df.observe() + progress events |
 
-The micro-batch sink is the SAME parity/native writer the batch path uses
-(T7 foreachBatch), so layout and footer metadata are identical in both modes.
+The source is the batch landing scan's twin: binaryFile file statuses only
+(path, length), with each decode task reading its payloads' bytes through
+the writer's pyarrow FileSystem lane. The micro-batch sink is the SAME
+parity/native writer the batch path uses (T7 foreachBatch), so layout and
+footer metadata are identical in both modes.
 """
 
 from __future__ import annotations
@@ -55,8 +58,10 @@ def read_landing_stream(
     max_files_per_trigger: int | None = None,
     max_payload_bytes: int = ingest.DEFAULT_MAX_PAYLOAD_BYTES,
 ) -> DataFrame:
-    """Streaming twin of ingest.read_landing (S6), with the batch scan's
-    admission rule (size guard D4, format dispatch D3).
+    """Streaming twin of ingest.read_landing_auto (S6): the same admission
+    rule (size guard D4, format dispatch D3) over the same path-only rows,
+    (path, length, fmt) — the JVM never reads a payload's bytes; the
+    decode tasks read them from their paths.
 
     Rejected payloads are counted, not silently dropped: the pre-filter
     frame carries a `landing` observation whose `rejected` field rides each
@@ -73,9 +78,7 @@ def read_landing_stream(
     )
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    df, ok, _ = ingest._admission(
-        reader.load(landing_dir), max_payload_bytes, F.length("content"), ("path", "content")
-    )
+    df, ok, _ = ingest._admission(reader.load(landing_dir), max_payload_bytes)
     return df.observe("landing", F.count_if(~ok).alias("rejected")).filter(ok)
 
 

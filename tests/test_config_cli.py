@@ -140,8 +140,9 @@ def test_cli_batch_ingest_end_to_end(spark, tmp_path):
 
 
 @pytest.mark.full
-def test_cli_stream_available_now(spark, tmp_path):
-    """`stream` subcommand with --available-now drains the landing dir once."""
+def test_cli_stream_available_now(spark, tmp_path, capsys):
+    """`stream` subcommand with --available-now drains the landing dir once
+    and prints the drain's records and rejected landing files."""
     import shutil
 
     from otlp2parquet_spark import cli
@@ -150,6 +151,7 @@ def test_cli_stream_available_now(spark, tmp_path):
     landing = tmp_path / "landing"
     landing.mkdir()
     shutil.copy(f"{testdata_dir()}/traces.pb", landing / "traces.pb")
+    (landing / "notes.txt").write_text("not a payload")
     out = tmp_path / "out"
     rc = cli.main(
         [
@@ -161,6 +163,8 @@ def test_cli_stream_available_now(spark, tmp_path):
     )
     assert rc == 0
     assert writer.read_table(spark, str(out), "otel_traces").count() == 19
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary == {"records": 19, "rejected": 1}
 
 
 @pytest.mark.full

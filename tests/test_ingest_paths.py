@@ -11,9 +11,9 @@ hex and base64 ids, span enums, events and links.
 
 Each output table is reduced to an order-independent hash (sorted per-row
 sha256 of the golden columns as JSON), pinned below, and every path must
-reproduce it: `ingest_directory` on the payload-locality lane and on the
-content lane, `stream_ingest` with `available_now`, and `cli ingest` with
-the parity and the native layout. `ingest_jsonl_fast` (the line-split lane)
+reproduce it: `ingest_directory`, `stream_ingest` with `available_now`,
+and `cli ingest` with the parity and the native layout. Both landing scans
+ship paths only; the decode tasks read the bytes. `ingest_jsonl_fast` (the line-split lane)
 must give the same rows as the file-payload decode of the same JSONL files.
 """
 
@@ -283,17 +283,6 @@ def test_ingest_directory_locality_lane(spark, landing, tmp_path):
     assert _sidecar_codes(str(tmp_path / "q" / "metrics")) == {"truncated.pb": "E-PB"}
 
 
-def test_ingest_directory_content_lane(spark, landing, tmp_path, monkeypatch):
-    # bare paths resolve against fs.defaultFS; a non-local one routes the
-    # shipped reader to the binaryFile content lane
-    monkeypatch.setattr(ingest, "_default_fs_is_local", lambda spark: False)
-    assert "content" in ingest.read_landing_auto(spark, landing)[0].columns
-    got = _ingest_hashes(spark, landing, str(tmp_path / "q"))
-    _expect(got)
-    assert got["_rejected"] == [("notes.txt", "unknown format"), ("oversize.pb", "payload too large")]
-    assert _sidecar_codes(str(tmp_path / "q" / "metrics")) == {"truncated.pb": "E-PB"}
-
-
 STREAM_LAYOUT = {"logs": "parity", "traces": "parity", "metrics": "native"}
 
 
@@ -337,6 +326,21 @@ def test_stream_counts_rejected_payloads(streamed):
     assert rejected == {"logs": 2, "traces": 0, "metrics": 0}
     records = sum(p["observedMetrics"]["ingest"]["records"] for p in progress["logs"])
     assert records == PINNED["otel_logs"][0]
+
+
+def test_stream_scan_reads_no_content(spark, landing, tmp_path):
+    """The streaming landing scan plans a binaryFile FileScan that reads
+    file statuses only: `content` is not in its ReadSchema, so the JVM
+    never reads a payload's bytes."""
+    q = sing.stream_ingest(
+        spark, os.path.join(landing, "traces"), "traces", str(tmp_path / "out"),
+        str(tmp_path / "ckpt"), available_now=True,
+    )
+    q.awaitTermination(180)
+    q.stop()
+    plan = q._jsq.explainInternal(False)
+    (scan,) = [line for line in plan.splitlines() if "FileScan binaryFile" in line]
+    assert "ReadSchema: struct<path:string,length:bigint>" in scan, scan
 
 
 @pytest.mark.parametrize("layout", ["parity", "native"])

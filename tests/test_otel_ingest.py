@@ -245,11 +245,11 @@ def landing(tmp_path_factory):
 
 
 def test_spark_ingest_logs_counts(spark, landing):
-    payloads, rejected = ingest.read_landing(spark, str(landing / "logs"))
+    payloads, rejected = ingest.read_landing_auto(spark, str(landing / "logs"))
     # oversize.pb (9 MiB > default 8 MiB guard) and notes.txt rejected
     rej = {os.path.basename(r.path): r.reason for r in rejected.collect()}
     assert rej == {"oversize.pb": "payload too large", "notes.txt": "unknown format"}
-    payloads, _ = ingest.read_landing(spark, str(landing / "logs"))
+    payloads, _ = ingest.read_landing_auto(spark, str(landing / "logs"))
     df = ingest.decode_logs(payloads.filter(~payloads.path.contains("oversize")))
     # logs.pb + log.json? (not copied) + logs.jsonl + gz copy: 81 * 3
     assert df.count() == 81 * 3
@@ -273,7 +273,7 @@ def test_spark_ingest_metrics_split_and_skips(spark, landing):
 @pytest.mark.parametrize("layout", ["parity", "native"])
 def test_write_read_roundtrip(spark, landing, tmp_path, layout):
     """Decode -> partitioned write -> Spark + DuckDB read-back (smoke twin)."""
-    payloads, _ = ingest.read_landing(spark, str(landing / "traces"))
+    payloads, _ = ingest.read_landing_auto(spark, str(landing / "traces"))
     df = ingest.decode_signal(payloads, "traces")["otel_traces"]
     root = str(tmp_path / layout)
     if layout == "parity":
@@ -331,7 +331,7 @@ def test_parity_writer_matches_golden_bytes(spark, tmp_path):
     (uint32 TraceFlags preserved at the parquet level)."""
     (tmp_path / "in").mkdir()
     shutil.copy(f"{REFERENCE_TESTDATA}/logs.pb", tmp_path / "in" / "logs.pb")
-    payloads, _ = ingest.read_landing(spark, str(tmp_path / "in"))
+    payloads, _ = ingest.read_landing_auto(spark, str(tmp_path / "in"))
     df = ingest.decode_logs(payloads)
     root = str(tmp_path / "golden")
     writer.write_partitioned(df, "otel_logs", root).collect()
@@ -361,7 +361,7 @@ def test_jsonl_line_split_ingest(spark, tmp_path):
     whole_dir = tmp_path / "whole"
     whole_dir.mkdir()
     shutil.copy(big, whole_dir / "big.jsonl")
-    payloads, _ = ingest.read_landing(spark, str(whole_dir))
+    payloads, _ = ingest.read_landing_auto(spark, str(whole_dir))
     df2 = ingest.decode_logs(payloads)
     a = sorted((r.Timestamp, r.ServiceName, r.Body) for r in df.collect())
     b = sorted((r.Timestamp, r.ServiceName, r.Body) for r in df2.collect())
@@ -384,7 +384,7 @@ def test_parity_writer_reexecution_idempotent(spark, landing, tmp_path):
     """ADVICE r1: batch parity writes are task-retry-safe — re-evaluating the
     accounting frame (== a retried/speculative task) overwrites the same
     deterministic paths instead of duplicating files."""
-    payloads, _ = ingest.read_landing(spark, str(landing / "traces"))
+    payloads, _ = ingest.read_landing_auto(spark, str(landing / "traces"))
     df = ingest.decode_signal(payloads, "traces")["otel_traces"]
     root = str(tmp_path / "idem")
     acct = writer.write_partitioned(df, "otel_traces", root)
@@ -401,7 +401,7 @@ def test_parity_writer_reexecution_idempotent(spark, landing, tmp_path):
 def test_parity_writer_file_uri_root(spark, landing, tmp_path):
     """D24: an object-store-style URI root routes through pyarrow.fs on the
     executors (file:// stands in for s3:// — same code path)."""
-    payloads, _ = ingest.read_landing(spark, str(landing / "traces"))
+    payloads, _ = ingest.read_landing_auto(spark, str(landing / "traces"))
     df = ingest.decode_signal(payloads, "traces")["otel_traces"]
     root_dir = tmp_path / "uri_root"
     acct = writer.write_partitioned(df, "otel_traces", f"file://{root_dir}").collect()
@@ -513,63 +513,50 @@ def test_decode_error_raises_without_quarantine_dir(tmp_path):
     assert os.listdir(tmp_path)
 
 
-def test_locality_lane_matches_content_lane(spark, landing):
-    """read_landing_meta (payload-locality: bytes opened executor-side, no
-    content column through the JVM) must reject exactly what read_landing
-    rejects and decode to IDENTICAL rows."""
-    logs_dir = str(landing / "logs")
-    payloads, rejected = ingest.read_landing(spark, logs_dir)
-    meta, meta_rejected = ingest.read_landing_meta(spark, logs_dir)
-    assert "content" not in meta.columns  # nothing shipped
-    assert sorted(map(tuple, rejected.collect())) == sorted(
-        map(tuple, meta_rejected.collect())
-    )
-    a = sorted(map(tuple, ingest.decode_logs(payloads).collect()), key=repr)
-    b = sorted(map(tuple, ingest.decode_logs(meta).collect()), key=repr)
-    assert a == b and a
-
-
 def test_auto_lane_routes_by_source_and_matches_content_lane(spark, landing):
-    """read_landing_auto is the SHIPPED batch path (judge r6 ask #8):
-    local/posix sources take the payload-locality lane (no content column
-    through the JVM row channel), object-store URIs keep the binaryFile
-    content lane; the auto-decoded rows equal the content lane's."""
-    assert ingest.is_local_or_posix("/data/landing")
-    assert ingest.is_local_or_posix("file:/data/landing")
-    assert ingest.is_local_or_posix("file:///data/landing")
-    assert not ingest.is_local_or_posix("s3a://bucket/landing")
-    assert not ingest.is_local_or_posix("s3://bucket/landing")
-    assert not ingest.is_local_or_posix("abfs://c@a.dfs.core.windows.net/x")
-
+    """read_landing_auto is the shipped batch path: its scan ships no
+    content column (each payload is read from its path in the decode task),
+    and its decoded rows equal those of the same files' bytes handed to the
+    kernel as a content column."""
     logs_dir = str(landing / "logs")
     auto, _ = ingest.read_landing_auto(spark, logs_dir)
-    assert "content" not in auto.columns  # local source -> locality lane
-    content, _ = ingest.read_landing(spark, logs_dir)
+    assert "content" not in auto.columns
+    content = auto.join(
+        spark.read.format("binaryFile").load(logs_dir).select("path", "content"), "path"
+    )
     a = sorted(map(tuple, ingest.decode_logs(auto).collect()), key=repr)
     b = sorted(map(tuple, ingest.decode_logs(content).collect()), key=repr)
     assert a == b and a
 
 
 def test_locality_lane_quarantine_parity(spark, landing, tmp_path):
-    """A malformed payload quarantines identically through both lanes."""
+    """A malformed payload quarantines while the good one decodes."""
     bad_dir = tmp_path / "bad-landing"
     bad_dir.mkdir()
     shutil.copy(f"{TD}/logs.pb", bad_dir / "good.pb")
     (bad_dir / "bad.pb").write_bytes(b"\x0a\x03xx")  # truncated message
-    for reader, qname in (
-        (ingest.read_landing, "q_content"),
-        (ingest.read_landing_meta, "q_meta"),
-    ):
-        payloads, _ = reader(spark, str(bad_dir))
-        qdir = str(tmp_path / qname)
-        n = ingest.decode_logs(payloads, quarantine_dir=qdir).count()
-        assert n == 81  # the good payload decoded
-        qfiles = sorted(os.path.basename(p) for p in __import__("glob").glob(f"{qdir}/*"))
-        assert any(f.startswith("bad.pb") and f.endswith(".error.json") for f in qfiles), qfiles
+    payloads, _ = ingest.read_landing_auto(spark, str(bad_dir))
+    qdir = str(tmp_path / "q")
+    n = ingest.decode_logs(payloads, quarantine_dir=qdir).count()
+    assert n == 81  # the good payload decoded
+    qfiles = sorted(os.path.basename(p) for p in __import__("glob").glob(f"{qdir}/*"))
+    assert any(f.startswith("bad.pb") and f.endswith(".error.json") for f in qfiles), qfiles
+
+
+def test_payload_paths_are_read_raw(spark, tmp_path):
+    """binaryFile prints paths unescaped, so a payload named with a space,
+    `#` and `%41` is read from exactly that name, never URI-decoded."""
+    d = tmp_path / "land ing"
+    d.mkdir()
+    shutil.copy(f"{TD}/logs.pb", d / "a b#c%41.pb")
+    payloads, _ = ingest.read_landing_auto(spark, str(d))
+    qdir = str(tmp_path / "q")
+    assert ingest.decode_logs(payloads, quarantine_dir=qdir).count() == 81
+    assert not os.path.exists(qdir)
 
 
 def test_locality_read_failure_quarantines_without_empty_payload(spark, tmp_path):
-    """ADVICE r6 (ingest.py locality lane): when the payload file vanishes
+    """ADVICE r6 (ingest.py path-only scan): when the payload file vanishes
     between the listing scan and the decode task, the quarantine record must
     NOT be an empty payload copy (replay would silently lose the bytes) —
     sidecar only, with `payload_at` pointing at the original source path."""
@@ -578,7 +565,7 @@ def test_locality_read_failure_quarantines_without_empty_payload(spark, tmp_path
     shutil.copy(f"{TD}/logs.pb", d / "good.pb")
     doomed = d / "doomed.pb"
     doomed.write_bytes(open(f"{TD}/logs.pb", "rb").read())
-    meta, _ = ingest.read_landing_meta(spark, str(d))
+    meta, _ = ingest.read_landing_auto(spark, str(d))
     meta = meta.cache()
     assert meta.count() == 2  # listing done, bytes not yet read
     doomed.unlink()  # rotate the file away before the decode task runs
@@ -608,7 +595,7 @@ def test_corrupt_gzip_and_bad_utf8_quarantine_not_crash(spark, tmp_path):
     shutil.copy(f"{TD}/logs.pb", bad_dir / "good.pb")
     (bad_dir / "trunc.pb.gz").write_bytes(b"\x1f\x8b" + b"\x00" * 10)  # corrupt gzip
     (bad_dir / "bad_utf8.jsonl").write_bytes(b'{"resourceLogs": []}\n\xff\xfe{')
-    payloads, _ = ingest.read_landing(spark, str(bad_dir))
+    payloads, _ = ingest.read_landing_auto(spark, str(bad_dir))
     qdir = str(tmp_path / "quarantine")
     n = ingest.decode_logs(payloads, quarantine_dir=qdir).count()
     assert n == 81  # only the good payload's rows

@@ -235,7 +235,7 @@ def test_q11_partition_pruning_native(spark, tmp_path):
     landing = tmp_path / "l"
     landing.mkdir()
     sh.copy(f"{TD}/logs.pb", landing / "logs.pb")
-    p, _ = ingest.read_landing(spark, str(landing))
+    p, _ = ingest.read_landing_auto(spark, str(landing))
     df = ingest.decode_logs(p)
     root = str(tmp_path / "native")
     writer.write_native(df, "otel_logs", root)
@@ -255,7 +255,7 @@ def test_q12_data_filter_pushdown_and_projection(spark, tmp_path):
     landing = tmp_path / "l12"
     landing.mkdir()
     sh.copy(f"{TD}/logs.pb", landing / "logs.pb")
-    p, _ = ingest.read_landing(spark, str(landing))
+    p, _ = ingest.read_landing_auto(spark, str(landing))
     root = str(tmp_path / "native12")
     writer.write_native(ingest.decode_logs(p), "otel_logs", root)
     back = writer.read_table(spark, root, "otel_logs", layout="native")

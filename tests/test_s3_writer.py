@@ -9,6 +9,7 @@ ranged GETs), inside real executor tasks — not a mocked filesystem object.
 from __future__ import annotations
 
 import json
+import os
 import posixpath
 
 import pyarrow.parquet as pq
@@ -24,7 +25,7 @@ def _logs_df(spark, tmp_path):
     d = tmp_path / "landing"
     d.mkdir()
     (d / "logs.jsonl").write_bytes(open(f"{TD}/logs.jsonl", "rb").read())
-    payloads, _ = ingest.read_landing(spark, str(d))
+    payloads, _ = ingest.read_landing_auto(spark, str(d))
     return ingest.decode_logs(payloads)
 
 
@@ -121,18 +122,15 @@ def test_q10_rowcount_verify_against_s3(spark, s3stub, tmp_path):
     assert per_service_acct == per_service_read
 
 
-def test_cli_ingest_storage_section_reaches_parity_writer(
-    spark, s3stub, tmp_path, monkeypatch, capsys
-):
-    """A parity `cli ingest` to s3 configured only through OTLP2PARQUET_*
-    writes with the configured key, not the AWS_* environment the session
-    started with: apply_storage_conf hands the storage section to pyarrow
-    on the executors."""
-    from otlp2parquet_spark import cli
+_AWS_VARS = ("AWS_ENDPOINT_URL", "AWS_REGION", "AWS_ACCESS_KEY_ID", "AWS_SECRET_ACCESS_KEY")
 
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    (landing / "logs.jsonl").write_bytes(open(f"{TD}/logs.jsonl", "rb").read())
+
+@pytest.fixture
+def storage_section(spark, s3stub, monkeypatch):
+    """A `storage` section given only through OTLP2PARQUET_*: the stub's
+    endpoint, prefix `cfg`, access key `cfg-access-key`. Restores what
+    apply_storage_conf overwrites: the executors' environment and this
+    process's AWS_* variables."""
     for var, value in {
         "OTLP2PARQUET_STORAGE_BACKEND": "s3",
         "OTLP2PARQUET_BUCKET": "test-bucket",
@@ -144,17 +142,87 @@ def test_cli_ingest_storage_section_reaches_parity_writer(
     }.items():
         monkeypatch.setenv(var, value)
     env = spark.sparkContext.environment
-    saved = dict(env)
-    try:
-        assert cli.main(["ingest", str(landing), "logs"]) == 0
-    finally:
-        env.clear()
-        env.update(saved)
+    saved, saved_os = dict(env), {v: os.environ.get(v) for v in _AWS_VARS}
+    yield
+    env.clear()
+    env.update(saved)
+    for var, value in saved_os.items():
+        if value is None:
+            os.environ.pop(var, None)
+        else:
+            os.environ[var] = value
+
+
+def _parquet_keys(s3stub, prefix: str) -> list[str]:
+    return sorted(
+        k for k in s3stub.objects("test-bucket") if k.startswith(prefix) and k.endswith(".parquet")
+    )
+
+
+def test_cli_ingest_storage_section_reaches_parity_writer(
+    spark, s3stub, tmp_path, storage_section, capsys
+):
+    """A parity `cli ingest` to s3 configured only through OTLP2PARQUET_*
+    writes with the configured key, not the AWS_* environment the session
+    started with: apply_storage_conf hands the storage section to pyarrow
+    on the executors."""
+    from otlp2parquet_spark import cli
+
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    (landing / "logs.jsonl").write_bytes(open(f"{TD}/logs.jsonl", "rb").read())
+    assert cli.main(["ingest", str(landing), "logs"]) == 0
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert summary["output"] == "s3a://test-bucket/cfg"
     keys = [k for k in s3stub.objects("test-bucket") if k.endswith(".parquet")]
     assert keys and all(k.startswith("cfg/logs/") for k in keys)
     assert s3stub.access_keys == {"cfg-access-key"}
+
+
+def test_cli_compact_storage_section_reaches_every_request(
+    spark, s3stub, tmp_path, storage_section, capsys
+):
+    """`cli compact` on s3 configured only through OTLP2PARQUET_* lists,
+    reads, rewrites and deletes with the configured key: the driver-side
+    listing, quiesce probe and delete as well as the executors' read and
+    write."""
+    from otlp2parquet_spark import cli
+
+    df = _logs_df(spark, tmp_path)
+    n = df.count()
+    for _ in range(2):  # two runs: two fragments per (service, hour)
+        writer.write_partitioned(df, "otel_logs", "s3a://test-bucket/cfg").collect()
+    frags = _parquet_keys(s3stub, "cfg/logs/")
+    assert frags
+    s3stub.access_keys.clear()
+    assert cli.main(["compact", "otel_logs", "--force"]) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["rows"] == 2 * n and summary["output"] == "s3a://test-bucket/cfg"
+    merged = _parquet_keys(s3stub, "cfg/logs/")
+    assert merged and not set(merged) & set(frags)
+    assert s3stub.access_keys == {"cfg-access-key"}
+
+
+def test_quarantine_dir_on_object_store(spark, s3stub, tmp_path):
+    """A quarantine dir given as an s3a:// URI receives the payload copy and
+    its `.error.json` sidecar on the object store, and read_quarantine
+    reads the sidecar back from there."""
+    d = tmp_path / "landing"
+    d.mkdir()
+    (d / "good.pb").write_bytes(open(f"{TD}/logs.pb", "rb").read())
+    bad = b"\x0a\x03xx"  # truncated message
+    (d / "bad.pb").write_bytes(bad)
+    payloads, _ = ingest.read_landing_auto(spark, str(d))
+    qdir = "s3a://test-bucket/q"
+    assert ingest.decode_logs(payloads, quarantine_dir=qdir).count() == 81
+    objs = s3stub.objects("test-bucket")
+    copy, sidecar = sorted(k for k in objs if k.startswith("q/") and k != "q/")
+    assert copy.startswith("q/bad.pb.") and sidecar == copy + ".error.json"
+    assert objs[copy] == bad
+    codes = {
+        posixpath.basename(r.path): r.code for r in ingest.read_quarantine(spark, qdir).collect()
+    }
+    assert codes == {"bad.pb": "E-PB"}
 
 
 def _spark_has_s3a(spark) -> bool:
